@@ -106,7 +106,16 @@ def _bit_mask(pos: Column) -> Column:
 
 def _probe_positions(value: Column, *, m_bits: int, k: int) -> list[Column]:
     """The k Bloom probe positions of ``value`` (double hashing; build
-    and probe MUST both come through here so bit layouts agree)."""
+    and probe MUST both come through here so bit layouts agree).
+
+    LAYOUT VERSION 2 (the h2 = 1 + hash mod (m-1) form below; version 1
+    used h2 = hash mod m). Filters are built and probed in one session
+    and never persisted, so a layout change is safe today. Any future
+    persisted bloom sidecar MUST record this version (with the
+    ``bloomA:``/``bloomB:`` salts, m_bits and k) and refuse to probe a
+    filter written under another one: probing an old-layout filter with
+    new positions yields silent false negatives, missed contamination
+    that the verify join cannot recover."""
     # both hashes folded into [0, m) BEFORE the i·h2 step: i·h2 then
     # stays ≤ k·m (no ANSI long overflow) and the combination is the
     # standard double-hash family over Z_m. h2 uses the standard KM fix

@@ -2806,18 +2806,6 @@ def nsw_read_topk(
     return _merge_topk(cand, k, id_col, dist_col)
 
 
-# r13 bitpacked predicate masks (VERDICT r12 ask #3): 31 verdict bits
-# per BIGINT word — every partial sum of distinct powers of two up to
-# 2^30 stays inside a signed long. The refshape ladder (BENCH_LADDER
-# ``dense_predicate_cliff``) showed bitpack does NOT beat the column
-# transport at any distinct-mask count (both scale with the DISTINCT
-# EXPRESSION count once codegen falls back past janino's 64 KB line —
-# the packing trades projection width for CASE-sum arithmetic), so
-# 'auto' never packs: the real cliff fix is the ``match`` template
-# path (zero Catalyst expressions, flat in distinct values), and
-# 'bitpack' stays available as an explicit experimental transport.
-_MASK_PACK_BITS = 31
-_MASK_PACK_MIN_GROUPS = float("inf")
 # ops the zero-Catalyst template fast path can evaluate executor-side
 # (r14, VERDICT r13 ask #4) — §2.3's single-attribute grammar minus
 # nothing: exact + containment for strings, exact + the range ops for
@@ -2832,11 +2820,10 @@ class _DenseMaskPlan:
     """Shared predicate-mask planning for the dense serving kernels
     (``nsw_dense_topk`` and the r13 int8 two-phase variant): validates
     the predicate arguments, dedupes IDENTICAL per-query expressions
-    into shared mask groups (r12b), decides the mask TRANSPORT
-    (per-group boolean columns vs 31-bit-packed BIGINT words — r13,
-    VERDICT r12 ask #3), attaches the mask columns to the scan, and
-    hands the executor a PICKLABLE extractor (plain ints/dicts only —
-    the py4j Column objects never cross the closure boundary).
+    into shared mask groups (r12b), attaches one boolean mask column
+    per group to the scan, and hands the executor a PICKLABLE extractor
+    (plain ints/dicts only — the py4j Column objects never cross the
+    closure boundary).
 
     Dedupe is by the expression's canonical string — false negatives
     only (two distinct spellings of one predicate just keep their own
@@ -2848,7 +2835,7 @@ class _DenseMaskPlan:
     handing arbitrary Columns must keep the same contract or two
     stringify-identical trees would silently share one mask."""
 
-    def __init__(self, predicate, predicates, qids, mask_packing, match=None):
+    def __init__(self, predicate, predicates, qids, match=None):
         self.has_pred = predicate is not None
         self.predicate = predicate
         if self.has_pred and (predicates or match):
@@ -2907,11 +2894,6 @@ class _DenseMaskPlan:
                 f"queries {both} carry BOTH a predicate Column and a "
                 "match template — pick one per query"
             )
-        if mask_packing not in ("auto", "columns", "bitpack"):
-            raise ValueError(
-                "mask_packing must be 'auto', 'columns' or 'bitpack', "
-                f"got {mask_packing!r}"
-            )
         self.group_of: dict[int, int] = {}
         self.group_cols: list = []
         by_expr: dict[str, int] = {}
@@ -2923,39 +2905,11 @@ class _DenseMaskPlan:
                 self.group_cols.append(self.preds[q])
             self.group_of[q] = gi
         self.n_groups = len(self.group_cols)
-        # r13 transport decision (VERDICT r12 ask #3): past the dedupe,
-        # a batch where every query carries a DISTINCT predicate pays
-        # one boolean column per group — plan width, Arrow transfer and
-        # pandas extraction all scale with COLUMN COUNT. BITPACK folds
-        # the verdicts into ceil(G/31) BIGINT words (bit i%31 of word
-        # i//31 — 31 bits keeps every partial sum inside a signed
-        # long); same predicate arithmetic, same NULL-fails fold
-        # (WHEN c THEN bit ELSE 0 ≡ coalesce(c, false)),
-        # hash-identical results (pytest-pinned) — only the transport
-        # changes. 'auto' follows the measured BENCH_LADDER
-        # ``dense_predicate_cliff`` data: bitpack never wins, so auto
-        # stays on columns (_MASK_PACK_MIN_GROUPS = inf) and the
-        # heterogeneous-predicate fix is the ``match`` template path.
-        self.pack = mask_packing == "bitpack" or (
-            mask_packing == "auto" and self.n_groups > _MASK_PACK_MIN_GROUPS
-        )
 
     def attach(self, stored: DataFrame) -> "tuple[DataFrame, list[str]]":
         """Attach the mask column(s); returns (df, added column names)."""
         if self.has_pred:
             return stored.withColumn("_pass", self.predicate), ["_pass"]
-        if self.pred_qids and self.pack:
-            words = []
-            for w in range(0, self.n_groups, _MASK_PACK_BITS):
-                word = F.lit(0).cast("long")
-                for b, c in enumerate(
-                    self.group_cols[w:w + _MASK_PACK_BITS]
-                ):
-                    word = word + F.when(c, F.lit(1 << b)).otherwise(
-                        F.lit(0)
-                    ).cast("long")
-                words.append(word)
-            return stored.withColumn("_pass_w", F.array(*words)), ["_pass_w"]
         if self.pred_qids:
             return (
                 stored.withColumns(
@@ -2976,7 +2930,6 @@ class _DenseMaskPlan:
         pred_qids = list(self.pred_qids)
         group_of = dict(self.group_of)
         n_groups = self.n_groups
-        pack = self.pack
         match = dict(self.match)
 
         def extract(pdf):
@@ -3019,17 +2972,6 @@ class _DenseMaskPlan:
                             mm.fillna(False).to_numpy(dtype=bool)
                         )
                     masks[qid] = m
-            if pred_qids and pack:
-                # unpack ceil(G/31) words → n×G bool with vectorized
-                # shifts (word-major, bit-minor — the packing order)
-                words = np.asarray(list(pdf["_pass_w"]), dtype=np.int64)
-                bits = (
-                    (words[:, :, None] >> np.arange(_MASK_PACK_BITS)) & 1
-                ).astype(bool)
-                gm = bits.reshape(len(pdf), -1)[:, :n_groups]
-                for q in pred_qids:
-                    masks[q] = gm[:, group_of[q]]
-                return None, masks
             if pred_qids:
                 # ONE vectorized extraction for all group columns (r13):
                 # per-column pandas access costs ~2× at G=1024
@@ -3057,7 +2999,6 @@ def nsw_dense_topk(
     match=None,
     blocked: frozenset[int] | set[int] | None = None,
     query_block: int = 256,
-    mask_packing: str = "auto",
     id_col: str = "vec_id",
     dist_col: str = "dist",
 ) -> DataFrame:
@@ -3110,9 +3051,7 @@ def nsw_dense_topk(
     qids, qmat = _query_batch_matrix(queries)
     blocked_arr = np.asarray(sorted(int(b) for b in (blocked or ())), dtype=np.int64)
     out_schema = f"query_id long, {id_col} long, {dist_col} double"
-    mask_plan = _DenseMaskPlan(
-        predicate, predicates, qids, mask_packing, match=match
-    )
+    mask_plan = _DenseMaskPlan(predicate, predicates, qids, match=match)
     if query_block < 1:
         raise ValueError(f"query_block must be >= 1, got {query_block}")
 
@@ -3316,7 +3255,6 @@ def nsw_dense_topk_int8(
     match=None,
     blocked: frozenset[int] | set[int] | None = None,
     query_block: int = 256,
-    mask_packing: str = "auto",
     mode: str = "certified",
     rerank_width: int | None = None,
     rerank_isin_max: int = 4096,
@@ -3395,9 +3333,7 @@ def nsw_dense_topk_int8(
     from pyspark.sql.window import Window
 
     qids, qmat = _query_batch_matrix(queries)
-    mask_plan = _DenseMaskPlan(
-        predicate, predicates, qids, mask_packing, match=match
-    )
+    mask_plan = _DenseMaskPlan(predicate, predicates, qids, match=match)
     if query_block < 1:
         raise ValueError(f"query_block must be >= 1, got {query_block}")
     if mode not in ("certified", "rerank"):

@@ -140,6 +140,7 @@ def _memory_mb(spark) -> dict[str, float | None]:
 
 
 from tools._bench_common import job_floor_ms as _job_floor_ms  # noqa: E402
+from tools._bench_common import python_task_floor_ms  # noqa: E402
 
 from acorn_hybrid_vector_search_spark.operators import _cache  # noqa: E402
 from acorn_hybrid_vector_search_spark.sources import testdata  # noqa: E402
@@ -168,6 +169,7 @@ def main() -> None:
 
     loadavg0 = tuple(round(x, 2) for x in os.getloadavg())
     floor_before = _job_floor_ms(spark)
+    py_floor_before = python_task_floor_ms(spark)
 
     qfns = entrymod.queries()
     timings: dict[str, float] = {}
@@ -203,6 +205,7 @@ def main() -> None:
         timings[name] = round(samples[len(samples) // 2], 3)
 
     floor_after = _job_floor_ms(spark)
+    py_floor_after = python_task_floor_ms(spark)
 
     # r14 (VERDICT r13 ask #2): the gate-facing headline rows,
     # re-measured ISOLATED at battery end under the PLANS triage
@@ -240,6 +243,10 @@ def main() -> None:
         "mode": mode,
         "memory_mb": _memory_mb(spark),
         "job_floor_ms": {"before": floor_before, "after": floor_after},
+        "python_task_floor_ms": {
+            "before": py_floor_before,
+            "after": py_floor_after,
+        },
         "loadavg": {
             "before": loadavg0,
             "after": tuple(round(x, 2) for x in os.getloadavg()),

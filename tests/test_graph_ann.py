@@ -2681,6 +2681,11 @@ def test_dense_topk_float32_store_and_guards(spark, corpus, vectors, tmp_path):
         nsw_dense_topk(spark, path, qs, K, predicates={999: F.lit(True)})
     with pytest.raises(ValueError, match="query_block"):
         nsw_dense_topk(spark, path, qs, K, query_block=0)
+    # ragged batch → driver-side guard, not an executor numpy error
+    with pytest.raises(ValueError, match="share one dimension"):
+        nsw_dense_topk(
+            spark, path, [(0, [0.0, 1.0]), (1, [0.0, 1.0, 2.0])], K
+        )
 
 
 def test_dense_topk_tied_distances_deterministic(spark, tmp_path):
@@ -2709,67 +2714,6 @@ def test_dense_topk_tied_distances_deterministic(spark, tmp_path):
         for r in nsw_dense_topk(spark, path, [(1, [1.0, 1.0])], 7).collect()
     ]
     assert got2 == [1, 3, 5, 7, 9, 11, 13]
-
-
-def test_dense_mask_packing_parity(spark, corpus, vectors, tmp_path):
-    """r13 (VERDICT r12 ask #3): the bitpacked mask transport is a pure
-    TRANSPORT change — per-group boolean columns vs ceil(G/31) BIGINT
-    words give hash-identical results on heterogeneous per-query
-    predicates, the packed plan carries ONE _pass_w column however many
-    distinct groups exist, and the knob validates its input."""
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        nsw_dense_topk,
-    )
-
-    path = _store_from(
-        corpus.withColumn("label", (F.col("vec_id") % 5).cast("int")),
-        tmp_path,
-        name="gmp",
-        payload_cols=["label"],
-    )
-    qs = _queries(vectors)
-    # every query its own predicate → no dedupe help (the cliff shape)
-    per = {
-        qid: F.col("label") == (i + 1) for i, qid in enumerate(QUERY_IDS)
-    }
-
-    def rows(df):
-        return [
-            (int(r["query_id"]), int(r["vec_id"]), round(r["dist"], 9))
-            for r in df.orderBy("query_id", "dist", "vec_id").collect()
-        ]
-
-    cols_df = nsw_dense_topk(
-        spark, path, qs, K, predicates=per, mask_packing="columns"
-    )
-    pack_df = nsw_dense_topk(
-        spark, path, qs, K, predicates=per, mask_packing="bitpack"
-    )
-    want = rows(
-        nsw_read_topk(spark, path, qs, K, ef=10**6, predicates=per)
-    )
-    assert rows(cols_df) == want
-    assert rows(pack_df) == want
-    cols_plan = cols_df._jdf.queryExecution().executedPlan().toString()
-    pack_plan = pack_df._jdf.queryExecution().executedPlan().toString()
-    assert "_pass_g0" in cols_plan and "_pass_w" not in cols_plan
-    assert "_pass_w" in pack_plan and "_pass_g0" not in pack_plan
-    # auto follows the measured crossover: 3 distinct groups stay on
-    # the per-column transport
-    auto_plan = (
-        nsw_dense_topk(spark, path, qs, K, predicates=per)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "_pass_g0" in auto_plan
-    with pytest.raises(ValueError, match="mask_packing"):
-        nsw_dense_topk(
-            spark, path, qs, K, predicates=per, mask_packing="nope"
-        )
-    # ragged batch → driver-side guard, not an executor numpy error
-    with pytest.raises(ValueError, match="share one dimension"):
-        nsw_dense_topk(
-            spark, path, [(0, [0.0, 1.0]), (1, [0.0, 1.0, 2.0])], K
-        )
 
 
 def test_dense_int8_two_phase_exact(spark, corpus, vectors, tmp_path):
@@ -2917,7 +2861,7 @@ def test_dense_match_template_fast_path(spark, corpus, vectors, tmp_path):
     assert rows(got) == want
     # zero Catalyst mask columns in the template plan
     plan = got._jdf.queryExecution().executedPlan().toString()
-    assert "_pass_g" not in plan and "_pass_w" not in plan
+    assert "_pass_g" not in plan
     assert rows(
         nsw_dense_topk_int8(spark, path, qs, K, match=tmpl)
     ) == want
@@ -3016,7 +2960,7 @@ def test_dense_match_template_ops(spark, corpus, vectors, tmp_path):
         assert rows(got) == want
         # zero Catalyst mask columns in the template plan
         plan = got._jdf.queryExecution().executedPlan().toString()
-        assert "_pass_g" not in plan and "_pass_w" not in plan
+        assert "_pass_g" not in plan
         assert rows(
             nsw_dense_topk_int8(spark, path, qs, K, match=tmpl)
         ) == want

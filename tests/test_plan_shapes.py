@@ -306,6 +306,18 @@ def test_prepared_cache_evicts_dead_sessions(spark):
     assert all(k[0] != "app-dead-123" for k in m._PREPARED)
 
 
+def test_ivf_batch_index_repinned_after_invalidate(spark):
+    """_cache.invalidate() unpersists the batch IVF index pin; the next
+    call must rebuild and pin again, not hand out the unpinned index
+    (whose plan re-runs the cluster-assignment UDF per search)."""
+    import __spark_entry__ as m
+    from acorn_hybrid_vector_search_spark.operators import _cache
+
+    m._q_ivf_exact_batch_topk(spark, SF)
+    _cache.invalidate()
+    assert "InMemoryTableScan" in _plan(m._q_ivf_exact_batch_topk(spark, SF))
+
+
 def test_lsh_bucket_cap_no_window_on_bare_bucket_key(queries):
     """The LSH emission cap (VERDICT r6 ask #1) must never rank a whole
     band bucket in one window partition — the over-cap bucket IS the hot

@@ -23,12 +23,27 @@ def job_floor_ms(spark, n: int = 9, warmup: int = 20) -> float:
     the control was measuring JVM cold-start, not host state. Throwaway
     probes first make "floor ≲ 50 ms ⇒ settled" a statement about the
     BOX, which is what the idle-settle discipline checks."""
+    return _median_ms(lambda: spark.range(1).collect(), n, warmup)
+
+
+def python_task_floor_ms(spark, n: int = 9, warmup: int = 5) -> float:
+    """Median wall time in ms of a 1-task RDD map: ``job_floor_ms`` plus
+    the fixed cost of handing a task to a Python worker (socket to the
+    daemon, ``setup_spark_files``, command unpickle). The difference
+    between the two is what every Python UDF task pays before doing any
+    work; ``session.python_daemon_module`` exists to keep it small.
+    ``warmup`` lets the daemon fork its workers first."""
+    rdd = spark.sparkContext.parallelize([0], 1).map(lambda x: x)
+    return _median_ms(rdd.collect, n, warmup)
+
+
+def _median_ms(run, n: int, warmup: int) -> float:
     for _ in range(warmup):
-        spark.range(1).collect()
+        run()
     s = []
     for _ in range(n):
         t0 = time.perf_counter()
-        spark.range(1).collect()
+        run()
         s.append((time.perf_counter() - t0) * 1000.0)
     s.sort()
     return round(s[len(s) // 2], 1)

@@ -7,18 +7,20 @@ measures ``nsw_dense_topk`` at |Q|=1024 over the reference shape
 (123,020 × 2048 float32 — the same store the
 ``acorn_amortized_refshape_dense_f32_q1024`` row uses) with
 |distinct| ∈ {1, 16, 256, 1024} (predicates ``label == i % distinct``
-— same §2.3 shape as the amortized rows), in BOTH mask transports:
+— same §2.3 shape as the amortized rows), on both mask paths:
 
 - ``columns``: one boolean column per distinct group (the r12 path,
   plus the r13 one-shot ``pdf[cols].to_numpy`` extraction);
-- ``bitpack``: ceil(G/31) BIGINT words, 31 verdict bits each — plan
-  width flat in G, executor unpacks with vectorized shifts;
 - ``match``: the r13 template fast path — the SAME §2.3 exact
   predicates handed as ``match={qid: (attr, value)}``, evaluated
   executor-side from the raw payload column with ZERO Catalyst
-  expressions (the fix the cliff data motivates: both Catalyst
-  transports scale with distinct-expression count once codegen falls
+  expressions (the fix the cliff data motivates: the Catalyst
+  transport scales with distinct-expression count once codegen falls
   back past the janino 64 KB line; the template path is flat).
+
+An earlier ``bitpack`` transport (ceil(G/31) BIGINT words) never beat
+``columns`` at any rung and was removed; its committed samples stay in
+BENCH_LADDER.json as history.
 
 Protocol: job-floor control sampled before/after (the r12 discipline
 — commit nothing captured in a host stall), loadavg at launch, one
@@ -53,7 +55,7 @@ from tools.bench_acorn_amortized import _synth_corpus  # noqa: E402
 
 K = 10
 DISTINCTS = (1, 16, 256, 1024)
-MODES = ("columns", "bitpack", "match")
+MODES = ("columns", "match")
 
 
 def main() -> None:
@@ -104,8 +106,7 @@ def main() -> None:
                         spark, path, queries, K, match=tmpl,
                     ).count()
                 return nsw_dense_topk(
-                    spark, path, queries, K,
-                    predicates=preds, mask_packing=mode,
+                    spark, path, queries, K, predicates=preds,
                 ).count()
 
             t0 = time.time()

@@ -1597,15 +1597,14 @@ def _dense_predicate_cliff_section() -> None:
         "  and past ~hundreds of expressions janino aborts codegen\n"
         "  (64 KB method limit, observed in the ladder logs) so the\n"
         "  interpreted projection cost scales with rows × expressions\n"
-        "  either way. `mask_packing='auto'` therefore stays on columns\n"
-        "  (_MASK_PACK_MIN_GROUPS = inf); bitpack remains an explicit\n"
-        "  experimental knob.\n"
+        "  either way. The bitpack transport was therefore removed;\n"
+        "  the column transport is the only Catalyst mask path.\n"
         "- **The structural fix is the `match` template path** (r13):\n"
         "  single-attribute exact predicates — the serving workload's\n"
         "  shape, label == v — hand the kernel `(attr, value)` pairs\n"
         "  and the mask evaluates executor-side from the raw payload\n"
         "  column: ZERO Catalyst expressions at any distinct count\n"
-        "  (plan-pinned: no _pass_g/_pass_w columns), §2.3 semantics\n"
+        "  (plan-pinned: no _pass_g columns), §2.3 semantics\n"
         "  preserved (present ∧ col = value, NULL fails; pytest pins\n"
         "  match ≡ predicates ≡ brute on both dense kernels, mixed\n"
         "  batches included). `ann_search_batch` routes flat exact\n"
