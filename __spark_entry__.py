@@ -43,21 +43,15 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
 
-_QVEC_CACHE: dict[tuple[str, int], list] = {}
-
-
 def _query_vec(spark: SparkSession, sf_dir: str, vec_id: int = 0):
     """Deterministic query vector: the embedding of row ``vec_id`` (the
     self-query convention of FIXTURES.md §2 / reference README.md:236).
     Memoized — it is a query *parameter*, not part of the measured plan."""
-    key = (sf_dir, vec_id)
-    if key not in _QVEC_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _QVEC_CACHE[key] = emb.filter(F.col("vec_id") == vec_id).select("embedding").head()[0]
-    return _QVEC_CACHE[key]
-
-
-_QVECS_CACHE: dict[tuple[str, int], dict] = {}
+    return _cache.memo(
+        spark, ("qvec", sf_dir, vec_id),
+        lambda: _t(spark, sf_dir, "embeddings")
+        .filter(F.col("vec_id") == vec_id).select("embedding").head()[0],
+    )
 
 
 def _query_vecs(spark: SparkSession, sf_dir: str, n: int) -> dict:
@@ -65,37 +59,19 @@ def _query_vecs(spark: SparkSession, sf_dir: str, n: int) -> dict:
     ``_query_vec``. Memoized for the same reason (r14): the vectors are
     query *parameters*, and the inline per-call collect was a fixed
     job on every invocation of each batch/int8 row."""
-    key = (sf_dir, n)
-    if key not in _QVECS_CACHE:
-        emb = _t(spark, sf_dir, "embeddings")
-        _QVECS_CACHE[key] = {
+    return _cache.memo(
+        spark, ("qvecs", sf_dir, n),
+        lambda: {
             r["vec_id"]: r["embedding"]
-            for r in emb.filter(F.col("vec_id") < n)
+            for r in _t(spark, sf_dir, "embeddings")
+            .filter(F.col("vec_id") < n)
             .select("vec_id", "embedding")
             .collect()
-        }
-    return _QVECS_CACHE[key]
+        },
+    )
 
 
 _R = 6  # rounding for float-accumulation columns (both engines)
-
-
-_PREPARED: dict[tuple[str, str, str], DataFrame] = {}
-
-# r15 (ADVICE r14): _PREPARED_WIDE includes store-probing queries
-# (minhash_store_persisted, *_incremental_*), so a mid-session store
-# rewrite must clear prepared plans exactly like the memoized reads —
-# otherwise a prepared DataFrame keeps the pre-rewrite file listing.
-# Store writers all call _cache.invalidate(); wiring _PREPARED into it
-# makes the staleness contract one mechanism. Cost: a rebuild is pure
-# plan construction (zero jobs for every _PREPARED_WIDE member), paid
-# at most once per query after a store write, outside any timed region
-# that matters (bench warm-ups rebuild before timing).
-_cache.register_clearer(_PREPARED.clear)
-# the query-vector memos too: after invalidate() (a store rewrite, or
-# the bench's uncached first-exec probe) they re-collect from the inputs
-_cache.register_clearer(_QVEC_CACHE.clear)
-_cache.register_clearer(_QVECS_CACHE.clear)
 
 
 def _prepared(fn):
@@ -122,22 +98,20 @@ def _prepared(fn):
     _PREPARED_WIDE, applied at registry assembly). Queries whose
     construction does per-call jobs — streams, store writes, training /
     propagation loops, two-phase searches — stay unprepared.
+
+    The plan is a ``_cache.memo``: every store writer's
+    ``_cache.invalidate()`` drops it, so a prepared DataFrame never
+    keeps a store's pre-rewrite file listing. A rebuild is pure plan
+    construction (zero jobs for every prepared query).
     """
     import functools
 
     @functools.wraps(fn)
     def wrap(spark: SparkSession, sf_dir: str) -> DataFrame:
-        app_id = spark.sparkContext.applicationId
-        # evict plans built under a dead SparkSession: a long-lived
-        # process that restarts its session (or runs many sf dirs)
-        # must not accumulate unusable DataFrames (r4 verdict §wrong 2b)
-        for stale in [k for k in _PREPARED if k[0] != app_id]:
-            del _PREPARED[stale]
-        key = (app_id, sf_dir, fn.__name__)
-        df = _PREPARED.get(key)
-        if df is None:
-            df = _PREPARED[key] = fn(spark, sf_dir)
-        return df
+        return _cache.memo(
+            spark, ("prepared", sf_dir, fn.__name__),
+            lambda: fn(spark, sf_dir),
+        )
 
     wrap._is_prepared = True  # introspection hook for the plan-shape guard
     return wrap
@@ -494,28 +468,19 @@ def _q_minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_near_dups(d, num_hashes=16, bands=8, verify_threshold=0.5)
 
 
-_MINHASH_STORE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _minhash_store_path(spark: SparkSession, sf_dir: str) -> str:
     """Persisted MinHash signature store over the 'existing corpus'
     split (doc_id % 3 != 0), written once per (session, sf_dir) — the
     nsw_write pattern for dedup: ingest pays the text scan once, every
     later batch probes the parquet store."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.dedup import minhash_write
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _MINHASH_STORE_CACHE if k[0] != key[0]]:
-        del _MINHASH_STORE_CACHE[stale]
-    path = _MINHASH_STORE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_minhash_") + "/store"
+    def build(root: str) -> str:
         d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 != 0)
-        minhash_write(d, path, num_hashes=16)
-        _MINHASH_STORE_CACHE[key] = path
-    return path
+        minhash_write(d, root + "/store", num_hashes=16)
+        return root + "/store"
+
+    return _cache.store(spark, ("minhash", sf_dir), build)
 
 
 def _q_minhash_store_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -589,27 +554,18 @@ def _q_winnow_fingerprint_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_WINNOW_STORE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _winnow_store_path(spark: SparkSession, sf_dir: str) -> str:
     """Persisted winnow fingerprint store for the 'existing corpus'
     split (doc_id % 3 != 0), built once per (session, sf_dir) — the
     minhash store pattern applied to the passage rung."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.dedup import winnow_write
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [s for s in _WINNOW_STORE_CACHE if s[0] != key[0]]:
-        del _WINNOW_STORE_CACHE[stale]
-    path = _WINNOW_STORE_CACHE.get(key)
-    if path is None:
+    def build(root: str) -> str:
         d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") % 3 != 0)
-        path = tempfile.mkdtemp(prefix="acorn_winnow_") + "/store"
-        winnow_write(d, path, k=4, window=4)
-        _WINNOW_STORE_CACHE[key] = path
-    return path
+        winnow_write(d, root + "/store", k=4, window=4)
+        return root + "/store"
+
+    return _cache.store(spark, ("winnow", sf_dir), build)
 
 
 def _q_winnow_store_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,10 +715,6 @@ def _q_simhash_cap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_near_dups(d, max_hamming=3, bucket_cap=8, cap_stats=True)
 
 
-_NDC_PAIRS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_cache.register_clearer(_NDC_PAIRS_CACHE.clear)
-
-
 def _q_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup CLUSTER COLLAPSE: MinHash pair detection → connected
     components (min-label propagation) → (doc_id, component) for the
@@ -776,14 +728,12 @@ def _q_near_dup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r14 — ~1 s of py4j expression construction per call otherwise);
     # the connected-components computation itself (counts, edge collect
     # or propagation rounds) still runs on every call
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NDC_PAIRS_CACHE if k[0] != key[0]]:
-        del _NDC_PAIRS_CACHE[stale]
-    pairs = _NDC_PAIRS_CACHE.get(key)
-    if pairs is None:
-        pairs = _NDC_PAIRS_CACHE[key] = minhash_near_dups(
+    pairs = _cache.memo(
+        spark, ("ndc_pairs", sf_dir),
+        lambda: minhash_near_dups(
             d, num_hashes=16, bands=8, verify_threshold=0.5
-        )
+        ),
+    )
     return near_dup_components(d, pairs)
 
 
@@ -1038,9 +988,6 @@ def _q_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return contamination_stats(corpus, bench, n=3, min_overlap=1)
 
 
-_DECONTAM_STREAM_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_stream_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ingestion-time decontamination (streaming/pipeline.py
     stream_decontaminate — VERDICT r6 ask #4): the corpus split
@@ -1053,8 +1000,6 @@ def _q_stream_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     contamination_stats oracle (_decontam_sql at mod=103) — stream ≡
     batch on the correctness gate, the same parity contract as
     stream_scd2_orders / stream_hourly_rollup."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.streaming.pipeline import (
         stream_decontaminate,
     )
@@ -1064,12 +1009,8 @@ def _q_stream_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = d.filter(F.col("doc_id") % 103 != 0)
     # source dir cached per (session, sf_dir): re-invocations (bench
     # repeat loops) replay the STREAM, not the corpus re-write
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _DECONTAM_STREAM_CACHE if k[0] != key[0]]:
-        del _DECONTAM_STREAM_CACHE[stale]
-    src = _DECONTAM_STREAM_CACHE.get(key)
-    if src is None:
-        src = tempfile.mkdtemp(prefix="acorn_decontam_stream_")
+    def build(root: str) -> str:
+        src = root + "/src"
         # two files → two micro-batches (the multi-batch path is the point)
         corpus.filter(F.col("doc_id") % 2 == 0).coalesce(1).write.mode(
             "overwrite"
@@ -1077,7 +1018,9 @@ def _q_stream_decontaminate_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus.filter(F.col("doc_id") % 2 == 1).coalesce(1).write.mode(
             "append"
         ).parquet(src)
-        _DECONTAM_STREAM_CACHE[key] = src
+        return src
+
+    src = _cache.store(spark, ("decontam_stream", sf_dir), build)
     stream = (
         spark.readStream.schema(corpus.schema)
         .option("maxFilesPerTrigger", 1)
@@ -1516,9 +1459,6 @@ def _q_postfilter_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ROUTED_BATCH_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_routed_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched K5 (hybrid.py::routed_search_batch): queries constraining
     the sparse nested model_year attribute answer from the MATERIALIZED
@@ -1530,8 +1470,6 @@ def _q_routed_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     match — so the oracle runs every query against the FULL table and
     equality proves routing is result-invariant (the
     nested_routed_model_year argument, batched)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         abo_accessors,
     )
@@ -1543,21 +1481,16 @@ def _q_routed_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     acc = abo_accessors()
     joined = _abo_joined(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _ROUTED_BATCH_CACHE if k[0] != key[0]]:
-        del _ROUTED_BATCH_CACHE[stale]
-    sub_path = _ROUTED_BATCH_CACHE.get(key)
-    if sub_path is None:
-        sub_path = tempfile.mkdtemp(prefix="acorn_rtb_") + "/subset"
-        materialize_attribute_subset(
-            joined, attribute_presence_cond(["model_year"], acc), sub_path
-        )
-        _ROUTED_BATCH_CACHE[key] = sub_path
-    from acorn_hybrid_vector_search_spark.operators._cache import (
-        read_parquet as _rp,
-    )
 
-    subset = _rp(spark, sub_path)
+    def build(root: str) -> str:
+        materialize_attribute_subset(
+            joined, attribute_presence_cond(["model_year"], acc),
+            root + "/subset",
+        )
+        return root + "/subset"
+
+    sub_path = _cache.store(spark, ("routed_batch", sf_dir), build)
+    subset = _cache.read_parquet(spark, sub_path)
     vecs = _query_vecs(spark, sf_dir, 3)
     batch = [
         (0, vecs[0], None),                                   # full table
@@ -1936,9 +1869,6 @@ def _q_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_STATS_CACHE: dict[str, object] = {}
-
-
 @_prepared
 def _q_routed_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strategy-routed hybrid search: the router estimates selectivity from
@@ -1949,10 +1879,9 @@ def _q_routed_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     from acorn_hybrid_vector_search_spark.plans.router import StrategyRouter, collect_stats
 
     emb = _t(spark, sf_dir, "embeddings")
-    stats = _STATS_CACHE.get(sf_dir)
-    if stats is None:
-        stats = collect_stats(emb, ["label"])
-        _STATS_CACHE[sf_dir] = stats
+    stats = _cache.store(
+        spark, ("stats", sf_dir), lambda _root: collect_stats(emb, ["label"])
+    )
     router = StrategyRouter(stats, default_large_k=50)
     res = router.search(emb, _query_vec(spark, sf_dir), {"label": ["exact", 3]}, k=10)
     return res.select("vec_id", "label", F.round("dist", _R).alias("dist"))
@@ -2250,10 +2179,8 @@ def _q_orc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint, string, double, timestamp). ORC is the other built-in
     columnar format a lakehouse migration actually encounters; the
     scan supports the same pushdown/pruning contracts as parquet."""
-    import tempfile
-
     o = _t(spark, sf_dir, "orders")
-    d = tempfile.mkdtemp(prefix="orc_rt_")
+    d = _cache.scratch_dir(spark, "orc_rt")
     o.write.mode("overwrite").orc(d)
     back = spark.read.orc(d)
     return back.groupBy("o_orderstatus").agg(
@@ -2264,63 +2191,50 @@ def _q_orc_roundtrip_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _BPE_MERGES = 10
-# learned merge tables per (session, sf_dir) — the train-once/apply-many
-# split: bpe_merges (the TRAINING query) always retrains and repopulates
-# this; bpe_subword_vocab (the APPLICATION query) applies the fixed
-# tokenizer, which is what applying a tokenizer means. Same lifecycle
-# analogy as _prepared / the reference's build-vs-search split.
-_BPE_CACHE: dict[tuple[str, str, int], list] = {}
-# persisted tokenizer artifacts per (session, sf_dir): <root>/words is
-# the pre-training word-frequency state (bpe_word_state — the one
-# corpus scan, paid at build time), <root>/state the post-training
-# final segmentation (the shipped tokenizer file). The nsw_write
-# pattern applied to tokenizer training (r5 verdict ask #7): cold
-# tokenizer application reads the vocab-scaled parquet instead of
-# re-deriving the fold chain from a corpus scan.
-_BPE_STATE_CACHE: dict[tuple[str, str], str] = {}
 
 
-def _bpe_artifacts(spark: SparkSession, sf_dir: str) -> str:
-    """Artifact root per (session, sf_dir); first use writes the
-    word-frequency state parquet."""
-    import tempfile
-
+def _bpe_artifacts(spark: SparkSession, sf_dir: str) -> dict:
+    """The tokenizer store per (session, sf_dir): ``root`` holds
+    <root>/words, the pre-training word-frequency state (bpe_word_state
+    — the one corpus scan, paid at build time), and <root>/state, the
+    post-training final segmentation (the shipped tokenizer file);
+    ``merges`` is the learned merge table. The nsw_write pattern
+    applied to tokenizer training (r5 verdict ask #7): cold tokenizer
+    application reads the vocab-scaled parquet instead of re-deriving
+    the fold chain from a corpus scan."""
     from acorn_hybrid_vector_search_spark.operators.bpe import (
         bpe_state_write,
         bpe_word_state,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _BPE_STATE_CACHE if k[0] != key[0]]:
-        del _BPE_STATE_CACHE[stale]
-    root = _BPE_STATE_CACHE.get(key)
-    if root is None:
-        root = tempfile.mkdtemp(prefix="acorn_bpe_")
+    def build(root: str) -> dict:
         bpe_state_write(
             bpe_word_state(_t(spark, sf_dir, "documents")), root + "/words"
         )
-        _BPE_STATE_CACHE[key] = root
-    return root
+        return {"root": root, "merges": None}
+
+    return _cache.store(spark, ("bpe", sf_dir), build)
 
 
 def _bpe_trained(spark: SparkSession, sf_dir: str, *, force: bool = False):
+    """The train-once/apply-many split: bpe_merges (the TRAINING query)
+    passes ``force`` and always retrains; bpe_subword_vocab (the
+    APPLICATION query) applies the stored tokenizer, which is what
+    applying a tokenizer means."""
     from acorn_hybrid_vector_search_spark.operators.bpe import (
         bpe_state_read,
         bpe_state_write,
         bpe_train,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, _BPE_MERGES)
-    for stale in [k for k in _BPE_CACHE if k[0] != key[0]]:
-        del _BPE_CACHE[stale]
-    if force or key not in _BPE_CACHE:
-        root = _bpe_artifacts(spark, sf_dir)
-        words = bpe_state_read(spark, root + "/words")
+    art = _bpe_artifacts(spark, sf_dir)
+    if force or art["merges"] is None:
+        words = bpe_state_read(spark, art["root"] + "/words")
         merges, final_state = bpe_train(None, _BPE_MERGES, state=words)
-        bpe_state_write(final_state, root + "/state")
+        bpe_state_write(final_state, art["root"] + "/state")
         final_state.unpersist()
-        _BPE_CACHE[key] = merges
-    return _BPE_CACHE[key]
+        art["merges"] = merges
+    return art["merges"]
 
 
 def _q_stream_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2334,15 +2248,13 @@ def _q_stream_scd2_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch on the correctness gate, the same parity contract as
     stream_hourly_rollup / stream_audio_decode / stream_images_decode.
     Multi-batch sequencing is pytest-pinned (tests/test_scd.py)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.streaming.pipeline import (
         scd2_stream_apply,
         stream_from_parquet_dir,
     )
 
     history, batch = _scd2_inputs(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="scd2cdc_")
+    d = _cache.scratch_dir(spark, "scd2cdc")
     batch.coalesce(1).write.mode("overwrite").parquet(d)
     cdc = stream_from_parquet_dir(spark, d, schema=batch.schema)
     q, current = scd2_stream_apply(
@@ -2401,7 +2313,7 @@ def _q_bpe_subword_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     merges = _bpe_trained(spark, sf_dir)
-    root = _BPE_STATE_CACHE[(spark.sparkContext.applicationId, sf_dir)]
+    root = _bpe_artifacts(spark, sf_dir)["root"]
     seg = bpe_segment(
         docs, merges, seg_state=bpe_state_read(spark, root + "/state")
     )
@@ -2423,7 +2335,7 @@ def _q_bpe_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from acorn_hybrid_vector_search_spark.operators.bpe import bpe_state_read
 
     _bpe_trained(spark, sf_dir)  # ensure artifacts exist
-    root = _BPE_STATE_CACHE[(spark.sparkContext.applicationId, sf_dir)]
+    root = _bpe_artifacts(spark, sf_dir)["root"]
     st = bpe_state_read(spark, root + "/state")
     return st.select(
         "word",
@@ -2579,9 +2491,6 @@ def _rp_sql(k: int = 10) -> str:
     """
 
 
-_IVF_EXACT_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _q_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROVABLY EXACT pruned ANN: ball-bound (triangle-inequality) cluster
     pruning over the radii-annotated IVF index — exact results with a
@@ -2591,8 +2500,6 @@ def _q_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-3 verdict item #8): this driver-window oracle row therefore
     proves the PERSISTED index — cluster-partitioned lists + codebook
     with radii — answers exactly."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.ann import (
         ivf_build,
         ivf_read,
@@ -2600,16 +2507,14 @@ def _q_ann_ivf_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVF_EXACT_CACHE.get(key)
-    if idx is None:
+    def build(root: str):
         built = ivf_build(
             _t(spark, sf_dir, "embeddings"), n_clusters=16, with_radii=True
         )
-        path = tempfile.mkdtemp(prefix="acorn_ivfx_idx_") + "/ivf"
-        ivf_write(built, path)
-        idx = ivf_read(spark, path)
-        _IVF_EXACT_CACHE[key] = idx
+        ivf_write(built, root + "/ivf")
+        return ivf_read(spark, root + "/ivf")
+
+    idx = _cache.store(spark, ("ivf_exact", sf_dir), build)
     res = ivf_search_exact(idx, _query_vec(spark, sf_dir, vec_id=2), k=10)
     return res.select("vec_id", "label", F.round("dist", _R).alias("dist"))
 
@@ -3166,9 +3071,6 @@ def _q_items_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _ivf_index(spark: SparkSession, sf_dir: str):
     """Session-cached PERSISTED IVF index: first call per (session,
     sf_dir) builds and round-trips it through ``ivf_write``/``ivf_read``
@@ -3177,23 +3079,18 @@ def _ivf_index(spark: SparkSession, sf_dir: str):
     cluster-partitioned lists, so nprobe pruning is a file skip), later
     calls reuse the loaded index. The reference instead rebuilds its
     index every process (/root/reference/acorn.py:274-277)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.ann import (
         ivf_build,
         ivf_read,
         ivf_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    idx = _IVF_CACHE.get(key)
-    if idx is None:
+    def build(root: str):
         built = ivf_build(_t(spark, sf_dir, "embeddings"), n_clusters=16)
-        path = tempfile.mkdtemp(prefix="acorn_ivf_idx_") + "/ivf"
-        ivf_write(built, path)
-        idx = ivf_read(spark, path)
-        _IVF_CACHE[key] = idx
-    return idx
+        ivf_write(built, root + "/ivf")
+        return ivf_read(spark, root + "/ivf")
+
+    return _cache.store(spark, ("ivf", sf_dir), build)
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3227,9 +3124,6 @@ def _q_nsw_exact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_COMPACTED_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_compacted_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintenance ops with oracle-gated evidence (round-3 verdict item
     #8): first call per (session, sf_dir) simulates streaming-ingest
@@ -3241,14 +3135,10 @@ def _q_compacted_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     POST-COMPACTION table; the DuckDB oracle aggregates the ORIGINAL
     parquet ×3, proving compaction was a pure layout change (row- and
     value-exact) while the scan now opens ~1 file per partition."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.plans.compact import compact_partitioned
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _COMPACTED_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_compact_") + "/events"
+    def build(root: str) -> str:
+        path = root + "/events"
         ev = _t(spark, sf_dir, "events").select(
             "event_id", "user_id", "value", "event_type"
         )
@@ -3257,7 +3147,9 @@ def _q_compacted_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         done = compact_partitioned(spark, path, "event_type", target_bytes=1 << 30)
         if not done:
             raise RuntimeError("expected fragmented partitions to compact")
-        _COMPACTED_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("compacted", sf_dir), build)
     return (
         spark.read.parquet(path)
         .groupBy("event_type")
@@ -3271,9 +3163,6 @@ def _q_compacted_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NSW_INDEX_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Build-once/query-many NSW: the first call per (session, sf_dir)
     builds the per-partition graphs and persists them via ``nsw_write``
@@ -3283,25 +3172,19 @@ def _q_nsw_persisted_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``nsw_read_topk``, ZERO rebuild. Run at full beam so the DuckDB
     brute-force oracle gates it exactly (query vec 7, distinct from
     nsw_exact_topk's vec 3)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _NSW_INDEX_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_idx_") + "/graph"
-        nsw_write(_t(spark, sf_dir, "embeddings"), path)
-        _NSW_INDEX_CACHE[key] = path
+    def build(root: str) -> str:
+        nsw_write(_t(spark, sf_dir, "embeddings"), root + "/graph")
+        return root + "/graph"
+
+    path = _cache.store(spark, ("nsw_index", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=7)
     res = nsw_read_topk(spark, path, [(7, list(q))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
-
-
-_NSW_INCR_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_nsw_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3313,28 +3196,23 @@ def _q_nsw_incremental_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rebuild of existing graphs — and search the union at full beam, so
     the DuckDB brute-force oracle over ALL embeddings gates it exactly
     (query vec 5, distinct from the other NSW queries)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_append,
         nsw_read_topk,
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _NSW_INCR_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_incr_") + "/graph"
+    def build(root: str) -> str:
+        path = root + "/graph"
         emb = _t(spark, sf_dir, "embeddings")
         nsw_write(emb.filter(F.col("vec_id") % 3 != 0), path)
         nsw_append(emb.filter(F.col("vec_id") % 3 == 0), path)
-        _NSW_INCR_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("nsw_incr", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=5)
     res = nsw_read_topk(spark, path, [(5, list(q))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
-
-
-_NSW_COMPACT_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_nsw_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3348,8 +3226,6 @@ def _q_nsw_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-sharding), while the shard count drops from the append
     history's to the compaction target (asserted here: compaction
     really happened)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_append,
         nsw_compact,
@@ -3357,10 +3233,8 @@ def _q_nsw_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _NSW_COMPACT_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_cmp_") + "/graph"
+    def build(root: str) -> str:
+        path = root + "/graph"
         emb = _t(spark, sf_dir, "embeddings")
         nsw_write(emb.filter(F.col("vec_id") % 4 == 0), path)
         for r in (1, 2, 3):
@@ -3377,13 +3251,30 @@ def _q_nsw_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         # empty partition (_nsw_nodes drops empties) — tolerate that and
         # assert only that compaction actually reduced the shard count
         assert after <= target and after < before, (before, target, after)
-        _NSW_COMPACT_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("nsw_compact", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=9)
     res = nsw_read_topk(spark, path, [(9, list(q))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_PQ_CACHE: dict[tuple[str, str], tuple] = {}
+def _pq_state(spark: SparkSession, sf_dir: str) -> tuple:
+    """(codebook, pinned encoded table) per (session, sf_dir) — the PQ
+    build artifacts, shared by pq_ann_topk and pq_state_persisted."""
+    from acorn_hybrid_vector_search_spark.operators.pq import (
+        pq_encode,
+        pq_train,
+    )
+
+    def build(_root: str) -> tuple:
+        emb = _t(spark, sf_dir, "embeddings")
+        cb = pq_train(emb, m=8, k=32)
+        enc = pq_encode(emb, cb).select("vec_id", "pq_code").cache()
+        enc.count()
+        return cb, enc
+
+    return _cache.store(spark, ("pq", sf_dir), build)
 
 
 def _q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3396,26 +3287,11 @@ def _q_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     are legitimately non-portable → rows-only, with the exactness gate
     (overcomplete codebook == brute force) and cluster-accuracy floor in
     tests/test_pq.py."""
-    from acorn_hybrid_vector_search_spark.operators.pq import (
-        pq_encode,
-        pq_topk,
-        pq_train,
-    )
+    from acorn_hybrid_vector_search_spark.operators.pq import pq_topk
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _PQ_CACHE.get(key)
-    if cached is None:
-        emb = _t(spark, sf_dir, "embeddings")
-        cb = pq_train(emb, m=8, k=32)
-        enc = pq_encode(emb, cb).select("vec_id", "pq_code").cache()
-        enc.count()
-        _PQ_CACHE[key] = cached = (cb, enc)
-    cb, enc = cached
+    cb, enc = _pq_state(spark, sf_dir)
     res = pq_topk(enc, cb, _query_vec(spark, sf_dir, vec_id=1), 10)
     return res.select("vec_id", F.round("pq_dist", _R).alias("pq_dist"))
-
-
-_NSW_STREAM_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_stream_nsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3431,8 +3307,6 @@ def _q_stream_nsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     store is searched at FULL beam, so the DuckDB brute-force oracle
     over ALL embeddings gates it exactly — stream-grown ≡ batch, the
     nsw_compact_topk contract extended to streaming ingest."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_write,
@@ -3441,12 +3315,7 @@ def _q_stream_nsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_nsw_append,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_STREAM_CACHE if k[0] != key[0]]:
-        del _NSW_STREAM_CACHE[stale]
-    path = _NSW_STREAM_CACHE.get(key)
-    if path is None:
-        root = tempfile.mkdtemp(prefix="acorn_nsw_stream_")
+    def build(root: str) -> str:
         path = root + "/graph"
         emb = _t(spark, sf_dir, "embeddings")
         # 8-shard seed + 12-file micro-batches: batch 1 opens at 8+12=20
@@ -3480,36 +3349,30 @@ def _q_stream_nsw_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         low = [p for p in parts if p < 4096]
         assert low and len(low) <= 4, sorted(parts)
         assert any(p >= 2 * 4096 for p in parts), sorted(parts)
-        _NSW_STREAM_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("nsw_stream", sf_dir), build)
     q2 = _query_vec(spark, sf_dir, vec_id=9)
     res = nsw_read_topk(spark, path, [(9, list(q2))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
-
-
-_NSW_HYBRID_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _nsw_hybrid_store(spark: SparkSession, sf_dir: str) -> str:
     """Build-or-reuse the label-payload covering-index store over the
     raw embeddings table (shared by the hybrid walk and the r13 routed
     dense-serving stream)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_HYBRID_CACHE if k[0] != key[0]]:
-        del _NSW_HYBRID_CACHE[stale]
-    path = _NSW_HYBRID_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_hyb_") + "/graph"
+    def build(root: str) -> str:
         nsw_write(
-            _t(spark, sf_dir, "embeddings"), path, payload_cols=["label"]
+            _t(spark, sf_dir, "embeddings"), root + "/graph",
+            payload_cols=["label"],
         )
-        _NSW_HYBRID_CACHE[key] = path
-    return path
+        return root + "/graph"
+
+    return _cache.store(spark, ("nsw_hybrid", sf_dir), build)
 
 
 def _q_nsw_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3535,9 +3398,6 @@ def _q_nsw_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_ACORN_GAMMA_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_acorn_gamma_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ACORN-γ over the persisted store (r8b, graph_ann.py
     NswGraph._search_subgraph + nsw_write(gamma=4)): the namesake
@@ -3552,24 +3412,19 @@ def _q_acorn_gamma_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     BENCH_LADDER `acorn_gamma`). At full beam the subgraph walk
     answers the exact pre-filter oracle over the stored rows — this
     gate, hash-exact."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _ACORN_GAMMA_CACHE if k[0] != key[0]]:
-        del _ACORN_GAMMA_CACHE[stale]
-    path = _ACORN_GAMMA_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_gamma_") + "/graph"
+    def build(root: str) -> str:
         nsw_write(
-            _t(spark, sf_dir, "embeddings"), path, gamma=4,
+            _t(spark, sf_dir, "embeddings"), root + "/graph", gamma=4,
             payload_cols=["label"],
         )
-        _ACORN_GAMMA_CACHE[key] = path
+        return root + "/graph"
+
+    path = _cache.store(spark, ("acorn_gamma", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=7)
     res = nsw_read_topk(
         spark, path, [(7, list(q))], k=10, ef=1_000_000,
@@ -3578,27 +3433,17 @@ def _q_acorn_gamma_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_NSW_HYBRID_BATCH_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _nsw_hybrid_batch_store(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per session) the covering-index graph store the
     batched/streamed hybrid serving queries share: flat-EXTRACTED
     attribute projections (brand → first-element value under §2.3
     missing/empty rejection) persisted as payload columns beside each
     node's vector and adjacency."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_HYBRID_BATCH_CACHE if k[0] != key[0]]:
-        del _NSW_HYBRID_BATCH_CACHE[stale]
-    path = _NSW_HYBRID_BATCH_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_hyb_batch_") + "/graph"
+    def build(root: str) -> str:
         nodes = _abo_joined(spark, sf_dir).select(
             "vec_id",
             "embedding",
@@ -3610,10 +3455,12 @@ def _nsw_hybrid_batch_store(spark: SparkSession, sf_dir: str) -> str:
             ).alias("brand_val"),
         )
         nsw_write(
-            nodes, path, payload_cols=["label", "country", "brand_val"]
+            nodes, root + "/graph",
+            payload_cols=["label", "country", "brand_val"],
         )
-        _NSW_HYBRID_BATCH_CACHE[key] = path
-    return path
+        return root + "/graph"
+
+    return _cache.store(spark, ("nsw_hybrid_batch", sf_dir), build)
 
 
 def _q_nsw_hybrid_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3707,9 +3554,6 @@ def _q_nsw_dense_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_NSW_INT8_CODES: set[tuple[str, str]] = set()
-
-
 def _q_nsw_dense_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r13 (VERDICT r12 ask #4): the INT8 serving rung — the same
     four-predicate-class batch as nsw_dense_batch_topk over the same
@@ -3735,10 +3579,11 @@ def _q_nsw_dense_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     path = _nsw_hybrid_batch_store(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NSW_INT8_CODES:
-        nsw_write_int8(spark, path)
-        _NSW_INT8_CODES.add(key)
+    # the int8 code sidecar is written once per store
+    _cache.store(
+        spark, ("nsw_int8_codes", sf_dir),
+        lambda _root: nsw_write_int8(spark, path),
+    )
     vecs = _query_vecs(spark, sf_dir, 4)
     acc = flat_accessors(
         {"label": "bigint", "country": "string", "brand_val": "string"}
@@ -3760,34 +3605,25 @@ def _q_nsw_dense_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_INT8_RERANK_STORE: dict[tuple[str, str], str] = {}
-_ROUTED_INT8_PINNED: set[tuple[str, str]] = set()
-
-
 def _int8_rerank_store(spark: SparkSession, sf_dir: str) -> str:
     """Build-or-reuse the label-payload store + int8 code sidecar the
     two r14 int8 rows share (their OWN store — the shared serving
     stores stay sidecar-free so the ``dense_dtype="auto"`` default
     never flips another row's kernel mid-session)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_write,
         nsw_write_int8,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _INT8_RERANK_STORE if k[0] != key[0]]:
-        del _INT8_RERANK_STORE[stale]
-    path = _INT8_RERANK_STORE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_int8_rr_") + "/graph"
+    def build(root: str) -> str:
+        path = root + "/graph"
         nsw_write(
             _t(spark, sf_dir, "embeddings"), path, payload_cols=["label"]
         )
         nsw_write_int8(spark, path)
-        _INT8_RERANK_STORE[key] = path
-    return path
+        return path
+
+    return _cache.store(spark, ("int8_rerank", sf_dir), build)
 
 
 def _q_nsw_dense_int8_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3869,8 +3705,7 @@ def _q_routed_dense_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan pin ONCE per (session, sf_dir) — the pin is an assertion
     # about the resolved plan shape, not part of the result; repeating
     # the full routing pass per call doubled the query's work (r14)
-    pin_key = (spark.sparkContext.applicationId, sf_dir)
-    if pin_key not in _ROUTED_INT8_PINNED:
+    def pin(_root: str) -> None:
         routes = router.route_ann_batch(
             corpus, batch, 10, nsw_path=path, min_recall=0.9, accessors=acc
         )
@@ -3880,16 +3715,14 @@ def _q_routed_dense_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert [(d.arm, d.kernel) for d in plan] == [
             ("nsw", "nsw_dense_int8")
         ], plan
-        _ROUTED_INT8_PINNED.add(pin_key)
+
+    _cache.store(spark, ("routed_int8_pin", sf_dir), pin)
     res = router.ann_search_batch(
         corpus, batch, 10, nsw_path=path, min_recall=0.9, accessors=acc
     )
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
     )
-
-
-_STREAM_SERVE_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3905,7 +3738,6 @@ def _q_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     IDENTICAL oracle as the static batch: stream-served ≡ batch ≡
     per-query, hash-exact."""
     import json as _json
-    import tempfile
 
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         AttributeAccessor,
@@ -3915,12 +3747,7 @@ def _q_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_hybrid_serve,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _STREAM_SERVE_CACHE if k[0] != key[0]]:
-        del _STREAM_SERVE_CACHE[stale]
-    out = _STREAM_SERVE_CACHE.get(key)
-    if out is None:
-        root = tempfile.mkdtemp(prefix="acorn_serve_")
+    def build(root: str) -> str:
         out = root + "/results"
         specs = {
             1: {"label": ["exact", 3]},
@@ -3977,14 +3804,13 @@ def _q_stream_hybrid_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in spark.read.parquet(out).select("_batch_id").distinct().collect()
         }
         assert len(parts) == 2, parts
-        _STREAM_SERVE_CACHE[key] = out
+        return out
+
+    out = _cache.store(spark, ("stream_serve", sf_dir), build)
     res = spark.read.parquet(out)
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
     )
-
-
-_STREAM_NSW_SERVE_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_stream_nsw_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4000,7 +3826,6 @@ def _q_stream_nsw_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle as the static graph batch: stream-served ≡ batch ≡ exact
     pre-filter, hash-exact."""
     import json as _json
-    import tempfile
 
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         flat_accessors,
@@ -4009,13 +3834,8 @@ def _q_stream_nsw_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_nsw_serve,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _STREAM_NSW_SERVE_CACHE if k[0] != key[0]]:
-        del _STREAM_NSW_SERVE_CACHE[stale]
-    out = _STREAM_NSW_SERVE_CACHE.get(key)
-    if out is None:
+    def build(root: str) -> str:
         store = _nsw_hybrid_batch_store(spark, sf_dir)
-        root = tempfile.mkdtemp(prefix="acorn_nsw_serve_")
         out = root + "/results"
         specs = {
             1: {"label": ["exact", 3]},
@@ -4068,14 +3888,13 @@ def _q_stream_nsw_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             for r in spark.read.parquet(out).select("_batch_id").distinct().collect()
         }
         assert len(parts) == 2, parts
-        _STREAM_NSW_SERVE_CACHE[key] = out
+        return out
+
+    out = _cache.store(spark, ("stream_nsw_serve", sf_dir), build)
     res = spark.read.parquet(out)
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
     )
-
-
-_PQ_STATE_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_pq_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4090,29 +3909,20 @@ def _q_pq_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     legitimately non-portable, the INVARIANT is portable). A lost
     codebook would orphan every stored code of a 100 TB encode — this
     gate is what makes the 32× table durable."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.pq import (
         pq_encode,
         pq_read,
-        pq_train,
         pq_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
     emb = _t(spark, sf_dir, "embeddings")
-    cached = _PQ_CACHE.get(key)
-    if cached is None:
-        cb = pq_train(emb, m=8, k=32)
-        enc = pq_encode(emb, cb).select("vec_id", "pq_code").cache()
-        enc.count()
-        _PQ_CACHE[key] = cached = (cb, enc)
-    cb, enc = cached
-    path = _PQ_STATE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_pq_cb_") + "/codebook"
-        pq_write(cb, spark, path)
-        _PQ_STATE_CACHE[key] = path
+    cb, enc = _pq_state(spark, sf_dir)
+
+    def build(root: str) -> str:
+        pq_write(cb, spark, root + "/codebook")
+        return root + "/codebook"
+
+    path = _cache.store(spark, ("pq_state", sf_dir), build)
     reread = pq_encode(emb, pq_read(spark, path)).select(
         "vec_id", F.col("pq_code").alias("pq_code_r")
     )
@@ -4122,9 +3932,6 @@ def _q_pq_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("pq_code") != F.col("pq_code_r"), 1).otherwise(0)
         ).alias("n_mismatch"),
     )
-
-
-_IVFPQ_STATE_CACHE: dict[tuple[str, str], tuple] = {}
 
 
 def _q_ivfpq_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4141,8 +3948,6 @@ def _q_ivfpq_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (k, 0). Without this, a 100 TB IVFPQ deployment that loses its
     driver would orphan both the stored codes AND the pruning lists —
     the pq_state_persisted argument, composed."""
-    import tempfile
-
     from pyspark.sql.window import Window
 
     from acorn_hybrid_vector_search_spark.operators.ann import (
@@ -4158,20 +3963,16 @@ def _q_ivfpq_state_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _IVFPQ_STATE_CACHE if k[0] != key[0]]:
-        del _IVFPQ_STATE_CACHE[stale]
-    cached = _IVFPQ_STATE_CACHE.get(key)
-    if cached is None:
+    def build(root: str) -> tuple:
         emb = _t(spark, sf_dir, "embeddings")
         cb = pq_train(emb, m=8, k=32)
         idx = ivf_build(emb, n_clusters=16)
         idx.df = pq_encode(idx.df, cb)
-        root = tempfile.mkdtemp(prefix="acorn_ivfpq_")
         ivf_write(idx, root + "/ivf")
         pq_write(cb, spark, root + "/codebook")
-        _IVFPQ_STATE_CACHE[key] = cached = (cb, idx, root)
-    cb, idx, root = cached
+        return cb, idx, root
+
+    cb, idx, root = _cache.store(spark, ("ivfpq_state", sf_dir), build)
     idx_r = ivf_read(spark, root + "/ivf")
     cb_r = pq_read(spark, root + "/codebook")
     q = _query_vec(spark, sf_dir, vec_id=5)
@@ -4334,9 +4135,6 @@ def _q_sql_user_funnel_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 # analogs) + clustered-shard ball-bound pruning
 
 
-_NSW_DELETE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_nsw_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tombstone deletion over the persisted NSW store
     (operators/graph_ann.py nsw_delete — the ``mark_deleted`` analog,
@@ -4349,33 +4147,26 @@ def _q_nsw_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly the LIVE subset (the same `% 7 <> 2` filter in SQL).
     Physical reclaim is nsw_compact's job (pinned in
     tests/test_graph_ann.py::test_nsw_compact_reclaims_tombstones)."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_delete,
         nsw_read_topk,
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_DELETE_CACHE if k[0] != key[0]]:
-        del _NSW_DELETE_CACHE[stale]
-    path = _NSW_DELETE_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_del_") + "/graph"
+    def build(root: str) -> str:
+        path = root + "/graph"
         emb = _t(spark, sf_dir, "embeddings")
         nsw_write(emb, path)
         nsw_delete(
             spark, path,
             emb.filter(F.col("vec_id") % 7 == 2).select("vec_id"),
         )
-        _NSW_DELETE_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("nsw_delete", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=10)  # 10 % 7 = 3 → live
     res = nsw_read_topk(spark, path, [(10, list(q))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
-
-
-_NSW_UPSERT_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_nsw_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4392,20 +4183,14 @@ def _q_nsw_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     UPDATED corpus: the CASE expression in SQL rebuilds the
     post-upsert table, so a stale old copy or a dead new copy would
     hash-mismatch immediately."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_upsert,
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_UPSERT_CACHE if k[0] != key[0]]:
-        del _NSW_UPSERT_CACHE[stale]
-    path = _NSW_UPSERT_CACHE.get(key)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="acorn_nsw_ups_") + "/graph"
+    def build(root: str) -> str:
+        path = root + "/graph"
         emb = _t(spark, sf_dir, "embeddings")
         nsw_write(emb.select("vec_id", "embedding"), path)
         moved = emb.filter(F.col("vec_id") % 5 == 1).select(
@@ -4415,13 +4200,14 @@ def _q_nsw_upsert_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             [(100_000, [0.5] * 64)], "vec_id long, embedding array<double>"
         )
         nsw_upsert(moved.unionByName(inserted), path)
-        _NSW_UPSERT_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("nsw_upsert", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=6)  # 6 % 5 = 1 → its OLD spot
     res = nsw_read_topk(spark, path, [(6, list(q))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_NSW_PRUNED_CACHE: dict[tuple[str, str], tuple] = {}
 _PRUNE_QIDS = (2, 4, 8)
 
 
@@ -4469,21 +4255,28 @@ def _q_nsw_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     brute-force oracle over the same derived corpus — the soundness
     proof run end to end. Corpus: ``_clustered_embeddings`` (the
     driver table is isotropic; see its docstring)."""
-    import tempfile
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
+        nsw_read_topk,
+    )
 
+    path, qs = _nsw_pruned_store(spark, sf_dir)
+    res = nsw_read_topk(spark, path, qs, k=10, ef=1_000_000, prune=True)
+    return res.select(
+        "query_id", "vec_id", F.round("dist", _R).alias("dist")
+    )
+
+
+def _nsw_pruned_store(spark: SparkSession, sf_dir: str) -> tuple:
+    """(path, query vectors) of the clustered store the whole pruning
+    family shares, built once per (session, sf_dir)."""
     import numpy as np
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         _prune_plan,
-        nsw_read_topk,
         nsw_write_clustered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_PRUNED_CACHE if k[0] != key[0]]:
-        del _NSW_PRUNED_CACHE[stale]
-    cached = _NSW_PRUNED_CACHE.get(key)
-    if cached is None:
+    def build(root: str) -> tuple:
         corpus = _clustered_embeddings(spark, sf_dir)
         # one collect fetches all query vectors (review r9: a head()
         # job per qid inflated every benched call of this row)
@@ -4494,7 +4287,7 @@ def _q_nsw_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         }
         qs = [(qid, by_id[qid]) for qid in _PRUNE_QIDS]
-        path = tempfile.mkdtemp(prefix="acorn_nsw_prn_") + "/graph"
+        path = root + "/graph"
         # ONE store serves the whole pruning family: label payload +
         # exact per-shard label counts enable the r9b predicate-aware
         # form (nsw_pruned_hybrid_topk), the r10 per-query batch form
@@ -4533,12 +4326,9 @@ def _q_nsw_pruned_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "clustered store failed to prune any shard",
             [len(kp) for kp in kept],
         )
-        _NSW_PRUNED_CACHE[key] = cached = (path, qs)
-    path, qs = cached
-    res = nsw_read_topk(spark, path, qs, k=10, ef=1_000_000, prune=True)
-    return res.select(
-        "query_id", "vec_id", F.round("dist", _R).alias("dist")
-    )
+        return path, qs
+
+    return _cache.store(spark, ("nsw_pruned", sf_dir), build)
 
 
 def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4568,9 +4358,7 @@ def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # build (or reuse) the shared clustered store + its query vectors
-    _q_nsw_pruned_topk(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     # mtime-memoized loads — a fresh collect per benched call would be
     # most of this row's latency (review r9b)
     parts, cents, radii, counts = _load_stats(spark, _stats_path(path))
@@ -4603,9 +4391,6 @@ def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_DELETE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tombstone deletion on the IVF store (ann.py ivf_delete — the
     graph store's mark_deleted sidecar contract applied to the flat
@@ -4615,8 +4400,6 @@ def _q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stays sound because radii upper-bound a SUPERSET of the live
     members — answers the brute-force oracle over exactly the live
     subset."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.ann import (
         ivf_build,
         ivf_delete,
@@ -4625,12 +4408,8 @@ def _q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _IVF_DELETE_CACHE if k[0] != key[0]]:
-        del _IVF_DELETE_CACHE[stale]
-    live = _IVF_DELETE_CACHE.get(key)
-    if live is None:
-        path = tempfile.mkdtemp(prefix="acorn_ivf_del_") + "/ivf"
+    def build(root: str):
+        path = root + "/ivf"
         emb = _t(spark, sf_dir, "embeddings")
         ivf_write(ivf_build(emb, n_clusters=8, with_radii=True), path)
         ivf_delete(
@@ -4639,13 +4418,12 @@ def _q_ivf_delete_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # the loaded handle is the prepared artifact (build-once/
         # query-many — the ann_ivf_exact_topk contract)
-        _IVF_DELETE_CACHE[key] = live = ivf_read(spark, path)
+        return ivf_read(spark, path)
+
+    live = _cache.store(spark, ("ivf_delete", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=20)  # 20 % 9 = 2 → live
     res = ivf_search_exact(live, list(q), 10)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
-
-
-_NSW_STREAM_UPS_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_stream_nsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4661,8 +4439,6 @@ def _q_stream_nsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus — a surviving old copy or dead new copy hash-mismatches.
     Stream ≡ batch ≡ the nsw_upsert_topk contract, extended to
     arrival."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_write,
@@ -4671,12 +4447,7 @@ def _q_stream_nsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_nsw_upsert,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_STREAM_UPS_CACHE if k[0] != key[0]]:
-        del _NSW_STREAM_UPS_CACHE[stale]
-    path = _NSW_STREAM_UPS_CACHE.get(key)
-    if path is None:
-        root = tempfile.mkdtemp(prefix="acorn_nsw_sups_")
+    def build(root: str) -> str:
         path = root + "/graph"
         # float32 at rest; the two update files must agree on DOUBLE
         # elements (the 0.5−x class promotes, the −x class would not)
@@ -4707,7 +4478,9 @@ def _q_stream_nsw_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         sq.processAllAvailable()
         sq.stop()
-        _NSW_STREAM_UPS_CACHE[key] = path
+        return path
+
+    path = _cache.store(spark, ("nsw_stream_upsert", sf_dir), build)
     q = _query_vec(spark, sf_dir, vec_id=13)  # 13 % 6 = 1 → its OLD spot
     res = nsw_read_topk(spark, path, [(13, list(q))], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
@@ -4827,9 +4600,7 @@ def _q_nsw_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_read_topk,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     parts, _, _, _ = _load_stats(spark, _stats_path(path))
     zones = _load_numeric_stats(spark, _numeric_stats_path(path))["weight"]
     verdicts = [
@@ -4845,7 +4616,6 @@ def _q_nsw_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_NSW_PRUNED_BATCH_QS: dict[tuple[str, str], list] = {}
 _PRUNE_BATCH_MATCHES = {2: 1, 4: 3, 8: 5}  # query_id → matched label
 
 
@@ -4866,20 +4636,17 @@ def _q_nsw_pruned_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_read_topk,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
-    for stale in [k for k in _NSW_PRUNED_BATCH_QS if k[0] != key[0]]:
-        del _NSW_PRUNED_BATCH_QS[stale]
-    batch_qs = _NSW_PRUNED_BATCH_QS.get(key)
-    if batch_qs is None:
+    path, qs = _nsw_pruned_store(spark, sf_dir)
+
+    def batch(_root: str) -> list:
         v16 = (
             _clustered_embeddings(spark, sf_dir)
             .filter(F.col("vec_id") == 16)
             .head()["embedding"]
         )
-        batch_qs = list(qs) + [(16, list(v16))]
-        _NSW_PRUNED_BATCH_QS[key] = batch_qs
+        return list(qs) + [(16, list(v16))]
+
+    batch_qs = _cache.store(spark, ("nsw_pruned_batch_qs", sf_dir), batch)
     res = nsw_read_topk(
         spark, path, batch_qs, k=10, ef=1_000_000,
         prune=True,
@@ -4919,9 +4686,7 @@ def _q_routed_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         TableStats,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     stats = TableStats(
         n_rows=10_000_000,
         attrs={
@@ -4948,9 +4713,6 @@ def _q_routed_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_IVF_MATCH_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _q_ivf_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF zone-map symmetry (r10 — VERDICT r9 ask #7: the tombstone
     contract was unified across both stores in r9; this round unifies
@@ -4965,8 +4727,6 @@ def _q_ivf_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest). The build asserts zero-passing lists exist over the
     clustered corpus. Answers the exact pre-filter oracle — the same
     brute force the graph-store rows answer."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.ann import (
         ivf_build,
         ivf_read,
@@ -4974,13 +4734,9 @@ def _q_ivf_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _IVF_MATCH_CACHE if k[0] != key[0]]:
-        del _IVF_MATCH_CACHE[stale]
-    cached = _IVF_MATCH_CACHE.get(key)
-    if cached is None:
+    def build(root: str) -> tuple:
         corpus = _clustered_embeddings(spark, sf_dir)
-        path = tempfile.mkdtemp(prefix="acorn_ivf_match_") + "/ivf"
+        path = root + "/ivf"
         ivf_write(
             ivf_build(
                 corpus, n_clusters=8, with_radii=True, stats_attrs=["label"]
@@ -4995,13 +4751,11 @@ def _q_ivf_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         qv = (
             corpus.filter(F.col("vec_id") == 2).head()["embedding"]
         )
-        _IVF_MATCH_CACHE[key] = cached = (live, list(qv))
-    live, qv = cached
+        return live, list(qv)
+
+    live, qv = _cache.store(spark, ("ivf_match", sf_dir), build)
     res = ivf_search_exact(live, qv, 10, match=("label", 3))
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
-
-
-_NSW_RECLUSTER_CACHE: dict[tuple[str, str], tuple] = {}
 
 
 def _q_nsw_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5018,8 +4772,6 @@ def _q_nsw_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the post-lifecycle corpus (original minus deleted, union the
     appended batch — all SQL-rebuildable), and the build asserts the
     prune plan actually drops shards again (prunability restored)."""
-    import tempfile
-
     import numpy as np
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
@@ -5033,14 +4785,10 @@ def _q_nsw_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         nsw_write_clustered,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_RECLUSTER_CACHE if k[0] != key[0]]:
-        del _NSW_RECLUSTER_CACHE[stale]
-    cached = _NSW_RECLUSTER_CACHE.get(key)
-    if cached is None:
+    def build(root: str) -> tuple:
         corpus = _clustered_embeddings(spark, sf_dir)
         qv = list(corpus.filter(F.col("vec_id") == 2).head()["embedding"])
-        path = tempfile.mkdtemp(prefix="acorn_nsw_rcl_") + "/graph"
+        path = root + "/graph"
         nsw_write_clustered(
             corpus, path, n_shards=8,
             payload_cols=["label"], stats_attrs=["label"],
@@ -5064,8 +4812,9 @@ def _q_nsw_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             np.asarray([qv], dtype=np.float64), 10,
         )[0]
         assert len(kept) < n_new, (len(kept), n_new)
-        _NSW_RECLUSTER_CACHE[key] = cached = (path, qv)
-    path, qv = cached
+        return path, qv
+
+    path, qv = _cache.store(spark, ("nsw_recluster", sf_dir), build)
     res = nsw_read_topk(spark, path, [(2, qv)], k=10, ef=1_000_000, prune=True)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
@@ -5143,9 +4892,7 @@ def _q_routed_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         TableStats,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     stats = TableStats(
         n_rows=10_000_000,
         attrs={
@@ -5228,9 +4975,7 @@ def _q_routed_pruned_conj_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         pruned_range_attrs,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     router = _conj_router_stats()
     pred = {"label": ["exact", 3], "weight": ["<", 32]}
     route = router.route_ann(
@@ -5278,9 +5023,7 @@ def _q_routed_pruned_substr_conj_topk(
         pruned_range_attrs,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     router = _conj_router_stats()
     acc = flat_accessors(
         {"label": "int", "weight": "double", "tag": "string",
@@ -5322,9 +5065,7 @@ def _q_routed_batch_dispatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
         flat_accessors,
     )
 
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, qs = _NSW_PRUNED_CACHE[key]
+    path, qs = _nsw_pruned_store(spark, sf_dir)
     by_id = dict(qs)
     router = _conj_router_stats()
     acc = flat_accessors(
@@ -5355,9 +5096,6 @@ def _q_routed_batch_dispatch_topk(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-_STREAM_ROUTED_SERVE_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_stream_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12 (VERDICT r11 ask #2): the ROUTED serving surface a user
     actually deploys — ``stream_routed_serve`` (streaming/serving.py)
@@ -5378,7 +5116,6 @@ def _q_stream_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     the served stream answers it hash-exact. Reference anchor: this is
     the served form of acorn.py:289-302's query loop."""
     import json as _json
-    import tempfile
 
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         flat_accessors,
@@ -5387,24 +5124,9 @@ def _q_stream_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_routed_serve,
     )
 
-    import os as _os
-    import shutil as _shutil
-
-    _q_nsw_pruned_topk(spark, sf_dir)  # build/reuse the shared store
-    _q_ivf_exact_batch_topk(spark, sf_dir)  # build/reuse the IVF index
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _STREAM_ROUTED_SERVE_CACHE if k[0] != key[0]]:
-        # this cache owns a mkdtemp root (queries/ckpt/results) — drop
-        # the tree with the entry, like _NSW_F32_CACHE (r12 self-review)
-        _shutil.rmtree(
-            _os.path.dirname(_STREAM_ROUTED_SERVE_CACHE[stale]),
-            ignore_errors=True,
-        )
-        del _STREAM_ROUTED_SERVE_CACHE[stale]
-    out = _STREAM_ROUTED_SERVE_CACHE.get(key)
-    if out is None:
-        path, qs = _NSW_PRUNED_CACHE[key]
-        idx, _by = _IVF_BATCH_CACHE[key]
+    def build(root: str) -> str:
+        path, qs = _nsw_pruned_store(spark, sf_dir)
+        idx, _by = _ivf_batch_index(spark, sf_dir)
         router = _conj_router_stats()
         acc = flat_accessors(
             {"label": "int", "weight": "double", "vec_id": "bigint"}
@@ -5431,7 +5153,6 @@ def _q_stream_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert routes[8].strategy == "ivf_exact", routes
         # 99 carries a predicate → the dispatch arm is the exact
         # prefilter scan whatever the nominal route says
-        root = tempfile.mkdtemp(prefix="acorn_routed_serve_")
         out = root + "/results"
         qrows = spark.createDataFrame(
             [
@@ -5479,14 +5200,13 @@ def _q_stream_routed_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
         assert served == static, "stream-served != static batch dispatch"
-        _STREAM_ROUTED_SERVE_CACHE[key] = out
+        return out
+
+    out = _cache.store(spark, ("stream_routed_serve", sf_dir), build)
     res = spark.read.parquet(out)
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
     )
-
-
-_STREAM_DENSE_SERVE_CACHE: dict[tuple[str, str], str] = {}
 
 
 def _q_stream_dense_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5508,9 +5228,6 @@ def _q_stream_dense_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     knob-free). Reference anchor: the served default for
     acorn.py:289-302's query loop."""
     import json as _json
-    import os as _os
-    import shutil as _shutil
-    import tempfile
 
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         flat_accessors,
@@ -5519,15 +5236,7 @@ def _q_stream_dense_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_routed_serve,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _STREAM_DENSE_SERVE_CACHE if k[0] != key[0]]:
-        _shutil.rmtree(
-            _os.path.dirname(_STREAM_DENSE_SERVE_CACHE[stale]),
-            ignore_errors=True,
-        )
-        del _STREAM_DENSE_SERVE_CACHE[stale]
-    out = _STREAM_DENSE_SERVE_CACHE.get(key)
-    if out is None:
+    def build(root: str) -> str:
         path = _nsw_hybrid_store(spark, sf_dir)
         router = _conj_router_stats()
         acc = flat_accessors({"label": "bigint"})
@@ -5556,7 +5265,6 @@ def _q_stream_dense_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             assert [(d.arm, d.kernel) for d in plan] == [
                 ("nsw", "nsw_dense")
             ], plan
-        root = tempfile.mkdtemp(prefix="acorn_dense_serve_")
         out = root + "/results"
         qrows = spark.createDataFrame(
             [
@@ -5603,30 +5311,26 @@ def _q_stream_dense_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).collect()
         )
         assert served == static, "stream-served != static batch dispatch"
-        _STREAM_DENSE_SERVE_CACHE[key] = out
+        return out
+
+    out = _cache.store(spark, ("stream_dense_serve", sf_dir), build)
     res = spark.read.parquet(out)
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
     )
 
 
-_IVF_BATCH_CACHE: dict[tuple[str, str], object] = {}
-# invalidate() unpersists the index pin; dropping the entry with it
-# makes the next call rebuild AND re-pin instead of serving an index
-# whose df silently re-runs the assignment UDF on every search
-_cache.register_clearer(_IVF_BATCH_CACHE.clear)
-
-
 def _ivf_batch_index(spark: SparkSession, sf_dir: str):
     """Build-or-reuse the stats-covered batch IVF index (+ the probe
-    vectors) shared by _q_ivf_exact_batch_topk / _q_ivf_conj_topk."""
+    vectors) shared by _q_ivf_exact_batch_topk / _q_ivf_conj_topk.
+
+    A memo, not a store: invalidate() unpersists the index pin, and
+    dropping the entry with it makes the next call rebuild AND re-pin
+    instead of serving an index whose df silently re-runs the
+    assignment UDF on every search."""
     from acorn_hybrid_vector_search_spark.operators.ann import ivf_build
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _IVF_BATCH_CACHE if k[0] != key[0]]:
-        del _IVF_BATCH_CACHE[stale]
-    cached = _IVF_BATCH_CACHE.get(key)
-    if cached is None:
+    def build() -> tuple:
         corpus = _clustered_embeddings(spark, sf_dir).withColumn(
             "weight",
             (F.col("label") * 10 + F.col("vec_id") % 5).cast("double"),
@@ -5646,20 +5350,18 @@ def _ivf_batch_index(spark: SparkSession, sf_dir: str):
         # build-once/search-many contract every persisted ANN rung
         # already has; the bench's first_exec_sec column reports the
         # uncached cost honestly.
-        from acorn_hybrid_vector_search_spark.operators._cache import (
-            materialize,
-        )
         from dataclasses import replace as _dc_replace
 
-        idx = _dc_replace(idx, df=materialize(idx.df))
+        idx = _dc_replace(idx, df=_cache.materialize(idx.df))
         by_id = {
             r["vec_id"]: list(r["embedding"])
             for r in corpus.filter(
                 F.col("vec_id").isin([2, 4, 8])
             ).collect()
         }
-        _IVF_BATCH_CACHE[key] = cached = (idx, by_id)
-    return cached
+        return idx, by_id
+
+    return _cache.memo(spark, ("ivf_batch", sf_dir), build)
 
 
 def _q_ivf_exact_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5714,9 +5416,6 @@ def _q_ivf_conj_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
-_NSW_F32_CACHE: dict[tuple[str, str], str] = {}
-
-
 def _q_nsw_f32_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11 float32 store — the reference's OWN vector precision (its
     hnswlib index holds float32, bindings.cpp ``data_t = float``; the
@@ -5729,23 +5428,12 @@ def _q_nsw_f32_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (DuckDB replays the cast with ``CAST(… AS REAL)``): the
     hash gate proves the stored bytes are the quantized values and
     search is exact w.r.t. them. Query vec 11 (derived the same way)."""
-    import os
-    import shutil
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_write,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _NSW_F32_CACHE if k[0] != key[0]]:
-        # drop dead-session entries AND their orphaned temp stores
-        # (sibling caches only hold handles; this one owns a mkdtemp dir)
-        shutil.rmtree(os.path.dirname(_NSW_F32_CACHE[stale]), ignore_errors=True)
-        del _NSW_F32_CACHE[stale]
-    path = _NSW_F32_CACHE.get(key)
-    if path is None:
+    def build(root: str) -> str:
         third = F.lit(1.0) / F.lit(3.0)
         derived = _t(spark, sf_dir, "embeddings").select(
             "vec_id",
@@ -5753,9 +5441,10 @@ def _q_nsw_f32_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "embedding", lambda x: x.cast("double") + third
             ).alias("embedding"),
         )
-        path = tempfile.mkdtemp(prefix="acorn_nsw_f32_") + "/graph"
-        nsw_write(derived, path, vector_dtype="float32")
-        _NSW_F32_CACHE[key] = path
+        nsw_write(derived, root + "/graph", vector_dtype="float32")
+        return root + "/graph"
+
+    path = _cache.store(spark, ("nsw_f32", sf_dir), build)
     q = [float(v) + (1.0 / 3.0) for v in _query_vec(spark, sf_dir, vec_id=11)]
     res = nsw_read_topk(spark, path, [(11, q)], k=10, ef=1_000_000)
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
@@ -5817,9 +5506,6 @@ def _q_nsw_conj_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_RANGE_CACHE: dict[tuple[str, str], object] = {}
-
-
 def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r10b IVF numeric zone-map symmetry: per-list (vmin, vmax,
     n_present) — `_range_shard_verdict` shared verbatim with the
@@ -5828,8 +5514,6 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the predicate pushed into the parquet read; provably-failing
     lists asserted in-fn, write/read roundtrip in the build. Answers
     the same exact pre-filter range oracle as the graph-store row."""
-    import tempfile
-
     from acorn_hybrid_vector_search_spark.operators.ann import (
         ivf_build,
         ivf_read,
@@ -5840,16 +5524,12 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _range_shard_verdict,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    for stale in [k for k in _IVF_RANGE_CACHE if k[0] != key[0]]:
-        del _IVF_RANGE_CACHE[stale]
-    cached = _IVF_RANGE_CACHE.get(key)
-    if cached is None:
+    def build(root: str) -> tuple:
         corpus = _clustered_embeddings(spark, sf_dir).withColumn(
             "weight",
             (F.col("label") * 10 + F.col("vec_id") % 5).cast("double"),
         )
-        path = tempfile.mkdtemp(prefix="acorn_ivf_rng_") + "/ivf"
+        path = root + "/ivf"
         ivf_write(
             ivf_build(
                 corpus, n_clusters=8, with_radii=True,
@@ -5866,8 +5546,9 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             for c in range(live.n_clusters)
         ), "expected provably-failing lists for weight < 23"
         qv = corpus.filter(F.col("vec_id") == 2).head()["embedding"]
-        _IVF_RANGE_CACHE[key] = cached = (live, list(qv))
-    live, qv = cached
+        return live, list(qv)
+
+    live, qv = _cache.store(spark, ("ivf_range", sf_dir), build)
     res = ivf_search_exact(live, qv, 10, range_pred=("weight", "<", 23))
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
@@ -5909,8 +5590,8 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # routed_batch_dispatch 0.449 s build/0 jobs, routed_pruned_* 0.20-0.28,
 # nsw_* store rows 0.04-0.15 — ~2.6 s of pure py4j construction per
 # battery pass). Their search work (3-6 collect jobs) runs per
-# execution as before. Store-write staleness is covered: every store
-# writer's _cache.invalidate() now also clears _PREPARED (r15).
+# execution as before. Store-write staleness is covered: prepared plans
+# are _cache memos, which every store writer's _cache.invalidate() drops.
 _PREPARED_WIDE = frozenset({
     "acorn_gamma_topk", "nsw_compact_topk", "nsw_delete_topk",
     "nsw_dense_batch_topk", "nsw_f32_topk", "nsw_hybrid_batch_topk",

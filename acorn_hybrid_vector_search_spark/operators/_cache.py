@@ -1,36 +1,53 @@
-"""Session-scoped pinned materialization for relations consumed by
-multiple plan subtrees (self-join sides, count-then-probe patterns).
+"""Session-scoped caches, with one staleness contract.
 
-Spark's exchange reuse does not fire across two consumers of the same
-subtree when the consuming joins carry extra conjuncts or sit in
-different stages, so an expensive shared relation (signature table,
-tokenized corpus) would be computed once PER CONSUMER. Persisting and
-eagerly materializing it restores compute-once; at production scale the
-same relation is what a pipeline writes to an intermediate table, and
-persist is the in-session equivalent (MEMORY_AND_DISK — these relations
-are row-scaled).
+Every entry belongs to the SparkSession that built it (its
+``applicationId``). When a different session next looks a cache up, that
+cache drops the old session's entries, so a process that restarts its
+session never serves a DataFrame bound to a dead one. Within a session
+an entry has one of two lifetimes:
 
-A small LRU bounds the pinned set: repeated operator calls (bench loops,
-notebooks) would otherwise accumulate cache entries without limit and
-degrade the whole session. Evicting an entry a caller still holds only
-costs recompute on next use — never correctness.
+* **memo** — an in-memory value (a prepared plan, a collected query
+  vector, a pinned index). ``invalidate()``, which every store writer
+  calls, drops it: a rewritten store must not be served from a plan or
+  pin that embeds the pre-rewrite file listing. ``memo(spark, key,
+  build)``, ``materialize``, ``probe_memo`` and ``read_parquet`` have
+  this lifetime.
+* **store** — a build-once artifact: ``store(spark, key, build)`` calls
+  ``build(dir)`` with a fresh directory under the session's root
+  directory, which the registry owns. The entry survives
+  ``invalidate()`` (it is the index the queries search, like the
+  reference's build-once HNSW). It is dropped and its directory deleted
+  when another session looks something up, on ``reset()``, and at
+  interpreter exit. ``scratch_dir(spark, name)`` gives a single call a
+  fresh directory inside the store ``(name,)``, for per-call outputs
+  whose lazy frames must still read their files after the call.
 
-Entries are DEDUPED BY PLAN SEMANTICS (r7): a repeated operator call
-builds a fresh DataFrame with an identical logical plan, and the old
-behavior appended the twin and then LRU-evicted (unpersisted) the
-original — self-eviction that turned every repeat call into a full
-recompute + re-pin (the documented bench churn). ``semanticHash`` +
-``sameSemantics`` lookup returns the already-pinned frame instead,
-which is the materialize-once contract a real pipeline has: the
-intermediate table is written once, not once per downstream query.
+``reset()`` is ``invalidate()`` plus dropping every store: the next call
+rebuilds from the inputs (the bench's uncached first-execution probe).
+
+``materialize`` exists because Spark's exchange reuse does not fire
+across two consumers of the same subtree when the consuming joins carry
+extra conjuncts or sit in different stages: an expensive shared
+relation (signature table, tokenized corpus) would be computed once per
+consumer. Pins are deduplicated by plan semantics (``semanticHash`` +
+``sameSemantics``), so a repeated operator call returns the pinned
+frame instead of pinning a twin, and a small LRU bounds the pinned set —
+evicting a pin only costs recompute, never correctness.
 """
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-__all__ = ["invalidate", "materialize", "probe_memo", "read_parquet"]
+__all__ = [
+    "invalidate", "materialize", "memo", "probe_memo", "read_parquet",
+    "reset", "scratch_dir", "store",
+]
 
 # insertion-ordered: index 0 is the LRU victim; entries carry the owning
 # SparkContext's applicationId so a session restart can't serve a frame
@@ -97,21 +114,6 @@ def probe_memo(df: DataFrame, extra_key, compute):
 _READS: list[tuple[str | None, str, DataFrame]] = []
 _READS_MAX = 32
 
-# external plan caches that must share the staleness contract: a store
-# rewrite invalidates not just memoized reads but any PREPARED plan that
-# may embed a store's file listing (r15, ADVICE r14: _PREPARED_WIDE
-# includes store-probing queries, so a mid-session rewrite would leave a
-# prepared DataFrame holding the pre-rewrite listing — the same stale-pin
-# class the r7 fix covered for dead sessions). Registrants supply a
-# zero-arg clearer (e.g. dict.clear).
-_EXTERNAL_CLEARERS: list = []
-
-
-def register_clearer(fn) -> None:
-    """Register a zero-arg callable to be invoked by ``invalidate()``."""
-    if fn not in _EXTERNAL_CLEARERS:
-        _EXTERNAL_CLEARERS.append(fn)
-
 
 def read_parquet(spark, path: str) -> DataFrame:
     """``spark.read.parquet(path)`` memoized per (session, path)."""
@@ -132,8 +134,78 @@ def read_parquet(spark, path: str) -> DataFrame:
     return df
 
 
+# the session registry: (applicationId, *key) -> (value, directory);
+# a memo's directory is None. _ROOTS maps an applicationId to the root
+# directory its stores live under; _APP is the session of the last lookup.
+_ENTRIES: dict[tuple, tuple[object, str | None]] = {}
+_ROOTS: dict[str, str] = {}
+_APP: str | None = None
+
+
+def _drop_sessions(keep: str | None = None) -> None:
+    """Drop every registry entry and store root not owned by ``keep``."""
+    for k in [k for k in _ENTRIES if k[0] != keep]:
+        del _ENTRIES[k]
+    for app in [a for a in _ROOTS if a != keep]:
+        shutil.rmtree(_ROOTS.pop(app), ignore_errors=True)
+
+
+def _session_key(spark, key: tuple) -> tuple:
+    global _APP
+    app = spark.sparkContext.applicationId
+    if app != _APP:
+        _drop_sessions(keep=app)
+        _APP = app
+    return (app, *key)
+
+
+def memo(spark, key: tuple, build):
+    """Return ``build()`` memoized per (session, *key) until the next
+    ``invalidate()``."""
+    k = _session_key(spark, key)
+    if k not in _ENTRIES:
+        _ENTRIES[k] = (build(), None)
+    return _ENTRIES[k][0]
+
+
+def store(spark, key: tuple, build):
+    """Return ``build(dir)`` memoized per (session, *key). ``dir`` is a
+    fresh directory the registry deletes with the entry; the entry
+    survives ``invalidate()``."""
+    k = _session_key(spark, key)
+    if k not in _ENTRIES:
+        root = _ROOTS.get(k[0])
+        if root is None:
+            root = _ROOTS[k[0]] = tempfile.mkdtemp(prefix="acorn_session_")
+        d = tempfile.mkdtemp(prefix=f"{key[0]}_", dir=root)
+        try:
+            value = build(d)
+        except BaseException:
+            shutil.rmtree(d, ignore_errors=True)
+            raise
+        _ENTRIES[k] = (value, d)
+    return _ENTRIES[k][0]
+
+
+def scratch_dir(spark, name: str) -> str:
+    """A fresh directory for one call's output, under the directory of
+    the store ``(name,)``: deleted when that store is dropped."""
+    return tempfile.mkdtemp(dir=store(spark, (name,), lambda d: d))
+
+
+def reset() -> None:
+    """``invalidate()``, then drop every store and delete its directory:
+    the next lookup rebuilds from the inputs."""
+    invalidate()
+    _drop_sessions()
+
+
+atexit.register(_drop_sessions)
+
+
 def invalidate() -> None:
-    """Unpersist every pinned relation. Store WRITERS (minhash_write,
+    """Unpersist every pinned relation and drop every memo (stores
+    stay). Store WRITERS (minhash_write,
     winnow_write, nsw_write/append/compact, …) call this: semantic
     dedup compares canonicalized plans, and two reads of the same
     parquet root are semantically equal EVEN AFTER the files were
@@ -143,8 +215,8 @@ def invalidate() -> None:
     test_materialize_invalidated_on_store_rewrite)."""
     _PROBE.clear()
     _READS.clear()
-    for fn in _EXTERNAL_CLEARERS:
-        fn()
+    for k in [k for k, (_, d) in _ENTRIES.items() if d is None]:
+        del _ENTRIES[k]
     while _PINNED:
         try:
             _PINNED.pop()[2].unpersist()

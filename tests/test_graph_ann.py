@@ -2326,7 +2326,7 @@ def test_conj_decisions_relation_matches_helper(spark):
         assert int(lb[i]) == want_lb, p
 
 
-def test_prune_conj_substring_exact_counts(spark, conj_store):
+def test_prune_conj_substring_exact_counts(spark, conj_store, tmp_path):
     """r11b: substring constraints are EXACTLY decidable from the
     per-shard distinct-value counts (sum over keys containing the
     needle) — the reference's literal class-2 flagship shape
@@ -2353,9 +2353,7 @@ def test_prune_conj_substring_exact_counts(spark, conj_store):
         "vec_id long, embedding array<double>, label int, "
         "weight double, tag string",
     )
-    import tempfile
-
-    tpath = tempfile.mkdtemp(prefix="acorn_conj_sub_") + "/g"
+    tpath = str(tmp_path / "g")
     nsw_write_clustered(
         df, tpath, n_shards=8,
         payload_cols=["weight", "tag"],

@@ -296,14 +296,20 @@ def test_prepared_queries_are_not_driver_local(spark):
 
 
 def test_prepared_cache_evicts_dead_sessions(spark):
-    """_PREPARED entries keyed by a dead applicationId must be evicted on
+    """Prepared plans keyed by a dead applicationId must be evicted on
     the next decorated call (VERDICT r4 'what's wrong' #2b: unbounded
     growth across session restarts)."""
-    import __spark_entry__ as m
+    import types
 
-    m._PREPARED[("app-dead-123", SF, "_q_pure_topk")] = None
+    import __spark_entry__ as m
+    from acorn_hybrid_vector_search_spark.operators import _cache
+
+    dead = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(applicationId="app-dead-123")
+    )
+    _cache.memo(dead, ("prepared", SF, "_q_pure_topk"), lambda: None)
     m._q_pure_topk(spark, SF)
-    assert all(k[0] != "app-dead-123" for k in m._PREPARED)
+    assert all(k[0] != "app-dead-123" for k in _cache._ENTRIES)
 
 
 def test_ivf_batch_index_repinned_after_invalidate(spark):

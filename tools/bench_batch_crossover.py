@@ -71,11 +71,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
 
     # build/reuse the shared pruned store + IVF index the registry rows use
-    entry._q_nsw_pruned_topk(spark, sf_dir)
-    entry._q_ivf_exact_batch_topk(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path, _qs = entry._NSW_PRUNED_CACHE[key]
-    idx, _by = entry._IVF_BATCH_CACHE[key]
+    path, _qs = entry._nsw_pruned_store(spark, sf_dir)
+    idx, _by = entry._ivf_batch_index(spark, sf_dir)
     router = entry._conj_router_stats()
     acc = flat_accessors(
         {"label": "int", "weight": "double", "vec_id": "bigint"}
