@@ -3049,14 +3049,14 @@ def _q_items_etl(spark: SparkSession, sf_dir: str) -> DataFrame:
     CSV mappings → correlation join (first-match-wins: main beats other,
     then lowest listing key, /root/reference/parse-json.py:41-61) → dense
     ids in (filename, image_id) order → first-element projection. The
-    oracle reproduces the whole pipeline in SQL from the same raw files."""
+    oracle reproduces the whole pipeline in SQL from the same raw files:
+    each fixture directory holds exactly the files the oracle's globs name.
+    A glob path would make Spark log a FileNotFoundException trace from
+    its metadata-directory probe on every read."""
     from acorn_hybrid_vector_search_spark.sources.listings import build_items
 
     items = build_items(
-        spark,
-        f"{ABO_FIXTURE}/listings/listings_*.json",
-        f"{ABO_FIXTURE}/mappings/map*.csv",
-        order_col="item_id",
+        spark, f"{ABO_FIXTURE}/listings", f"{ABO_FIXTURE}/mappings", order_col="item_id"
     )
     return items.select(
         "item_id",
@@ -4312,7 +4312,7 @@ def _nsw_pruned_store(spark: SparkSession, sf_dir: str) -> tuple:
             payload_cols=["label", "weight", "tag"],
             stats_attrs=["label", "tag"], numeric_stats_attrs=["weight"],
         )
-        srows = spark.read.parquet(path + "/_shard_stats").collect()
+        srows = _cache.read_sidecar(spark, path + "/_shard_stats").collect()
         parts = np.asarray([r["part_id"] for r in srows], dtype=np.int64)
         cents = np.asarray([list(r["centroid"]) for r in srows], np.float64)
         radii = np.asarray([r["radius"] for r in srows], np.float64)

@@ -1,19 +1,12 @@
 """Vector distance / similarity as JVM-side Column expressions.
 
-The reference computes squared-L2 row-by-row in Python
-(/root/reference/pre-filter.py:63-95) or inside hnswlib's SIMD kernels
-(hnswlib/hnswlib/space_l2.h). Here the distance is a Catalyst higher-order
-function expression (``zip_with`` + ``aggregate``): it runs inside
-whole-stage codegen on the JVM, is vectorizable by Tungsten, and never
-crosses the Python boundary — the correct hot path for a 100 TB scan.
-
-All arithmetic is done in DOUBLE with strict left-to-right accumulation so
-results are bit-reproducible and comparable against a DuckDB oracle that
-sums in the same order.
-
-For very high dimensions where an Arrow/NumPy BLAS kernel wins, see
-``operators/similarity.py``'s pandas-UDF variant; measure before switching
-(SURVEY.md §7 risk 2).
+Each is a Catalyst ``zip_with`` + ``aggregate`` expression summing in
+DOUBLE, strictly left to right, so results are bit-reproducible and match
+a DuckDB oracle that sums in the same order. A literal query vector puts
+one plan node per dimension into the plan. Use these where a distance
+feeds further JVM expressions (``centroids``, ``mining``, ``ann``'s IVF
+cross joins, ``knn_batch``, the ``*_search_batch`` joins); single-query
+top-k runs ``operators/knn.py``'s Arrow kernel, which returns the same bits.
 """
 
 from __future__ import annotations

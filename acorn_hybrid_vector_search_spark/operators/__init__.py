@@ -36,7 +36,6 @@ from acorn_hybrid_vector_search_spark.operators.hybrid import (
 from acorn_hybrid_vector_search_spark.operators.knn import knn_batch, knn_exact
 from acorn_hybrid_vector_search_spark.operators.similarity import (
     knn_batch_blas,
-    knn_exact_blas,
     lsh_near_dup_pairs,
     with_lsh_bucket,
 )
@@ -73,7 +72,6 @@ __all__ = [
     "knn_batch",
     "knn_batch_blas",
     "knn_exact",
-    "knn_exact_blas",
     "lsh_near_dup_pairs",
     "with_lsh_bucket",
 ]

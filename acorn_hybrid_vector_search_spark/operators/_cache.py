@@ -38,6 +38,7 @@ evicting a pin only costs recompute, never correctness.
 from __future__ import annotations
 
 import atexit
+import os
 import shutil
 import tempfile
 
@@ -115,8 +116,22 @@ _READS: list[tuple[str | None, str, DataFrame]] = []
 _READS_MAX = 32
 
 
+def read_sidecar(spark, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, reading a local ``_``-prefixed sidecar
+    directory through its visible entries under ``basePath``. Spark treats
+    such names as hidden and logs "All paths were ignored" on every read
+    of one. An emptied sidecar raises UNABLE_TO_INFER_SCHEMA, as before."""
+    name = os.path.basename(path.rstrip("/"))
+    if "://" in path or not name.startswith("_"):
+        return spark.read.parquet(path)
+    kids = sorted(
+        os.path.join(path, n) for n in os.listdir(path) if not n.startswith((".", "_"))
+    )
+    return spark.read.option("basePath", path).parquet(*kids)
+
+
 def read_parquet(spark, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` memoized per (session, path)."""
+    """``read_sidecar(spark, path)`` memoized per (session, path)."""
     try:
         app = spark.sparkContext.applicationId
     except Exception:
@@ -127,7 +142,7 @@ def read_parquet(spark, path: str) -> DataFrame:
         if rp == path:
             _READS.append(_READS.pop(i))  # LRU refresh
             return rdf
-    df = spark.read.parquet(path)
+    df = read_sidecar(spark, path)
     _READS.append((app, path, df))
     while len(_READS) > _READS_MAX:
         _READS.pop(0)

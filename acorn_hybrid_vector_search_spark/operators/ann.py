@@ -687,11 +687,6 @@ def ivf_search_exact(
                 index, (attr, c_op, c_val)
             ).astype(np.int64)
         pred = _conj_pred_col(normalized)
-        if not (passing > 0).any():
-            return knn_exact(
-                index.df.filter(F.lit(False)), list(query_vec), k,
-                vec_col=index.vec_col, id_col=index.id_col,
-            )
     if range_pred is not None:
         r_attr, r_op_raw, r_val = range_pred
         r_op = _RANGE_OPS.get(r_op_raw)
@@ -727,11 +722,6 @@ def ivf_search_exact(
             ">": col > F.lit(r_val),
             ">=": col >= F.lit(r_val),
         }[r_op]
-        if not (passing > 0).any():
-            return knn_exact(
-                index.df.filter(F.lit(False)), list(query_vec), k,
-                vec_col=index.vec_col, id_col=index.id_col,
-            )
     if match is not None:
         m_attr, m_val = match
         if not index.attr_counts or m_attr not in index.attr_counts:
@@ -754,11 +744,11 @@ def ivf_search_exact(
             dtype=np.int64,
         )
         pred = F.col(m_attr) == F.lit(m_val)
-        if not (passing > 0).any():
-            return knn_exact(
-                index.df.filter(F.lit(False)), list(query_vec), k,
-                vec_col=index.vec_col, id_col=index.id_col,
-            )
+    if passing is not None and not (passing > 0).any():
+        return knn_exact(
+            index.df.filter(F.lit(False)), query_vec, k,
+            vec_col=index.vec_col, id_col=index.id_col,
+        )
     q = np.asarray(list(query_vec), dtype=np.float64)
     dc = np.sqrt(((index.centroids - q[None, :]) ** 2).sum(axis=1))  # (C,) L2
     order = np.argsort(dc, kind="stable")

@@ -59,6 +59,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from acorn_hybrid_vector_search_spark.operators._cache import read_sidecar
+
 __all__ = [
     "NswGraph",
     "nsw_batch_topk",
@@ -1456,7 +1458,7 @@ def _load_stats(spark, spath: str):
         hit = _STATS_MEMO.get(key)
         if hit is not None:
             return hit
-    srows = spark.read.parquet(spath).collect()
+    srows = read_sidecar(spark, spath).collect()
     out = (
         np.asarray([int(r["part_id"]) for r in srows], dtype=np.int64),
         np.asarray([list(r["centroid"]) for r in srows], np.float64),
@@ -1487,7 +1489,7 @@ def _load_attr_stats(spark, apath: str) -> dict:
         if hit is not None:
             return hit
     out: dict = {}
-    for r in spark.read.parquet(apath).collect():
+    for r in read_sidecar(spark, apath).collect():
         out.setdefault(r["attr"], {}).setdefault(int(r["part_id"]), {})[
             r["value"]
         ] = int(r["n"])
@@ -1514,7 +1516,7 @@ def _load_numeric_stats(spark, npath: str) -> dict:
         if hit is not None:
             return hit
     out: dict = {}
-    for r in spark.read.parquet(npath).collect():
+    for r in read_sidecar(spark, npath).collect():
         out.setdefault(r["attr"], {})[int(r["part_id"])] = (
             r["vmin"], r["vmax"], int(r["n_present"]),
         )
@@ -1851,7 +1853,7 @@ def nsw_stats_write(
         if fps is not None:
             _record_store_fp(path, _numeric_stats_path(path), fps, ver)
     invalidate()
-    return spark.read.parquet(_stats_path(path)).count()
+    return read_sidecar(spark, _stats_path(path)).count()
 
 
 def _prune_plan(

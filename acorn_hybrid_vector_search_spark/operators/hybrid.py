@@ -70,7 +70,7 @@ def _resolve_predicate(
 
 def prefilter_search(
     df: DataFrame,
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     predicates: Predicates | Column | None,
     k: int,
     *,
@@ -88,7 +88,7 @@ def prefilter_search(
 
 def postfilter_search(
     df: DataFrame,
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     predicates: Predicates | Column | None,
     k: int,
     *,
@@ -106,14 +106,14 @@ def postfilter_search(
     May legitimately return fewer than k rows — that IS the post-filter
     failure mode the reference studies.
     """
+    cond = _resolve_predicate(df, predicates, accessors)
     cand = knn_exact(df, query_vec, large_k, vec_col=vec_col, id_col=id_col, dist_col=dist_col)
-    cond = _resolve_predicate(cand, predicates, accessors)
     return cand.filter(cond).orderBy(F.col(dist_col).asc(), F.col(id_col).asc()).limit(k)
 
 
 def acorn_search(
     df: DataFrame,
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     predicates: Predicates | Column | None,
     k: int,
     *,
@@ -174,6 +174,24 @@ def acorn_search(
     ).search()
 
 
+def _acorn_candidates(
+    df: DataFrame, query_vec: Sequence[float], cond: Column, max_large_k: int,
+    vec_col: str, id_col: str, dist_col: str, payload_cols: Sequence[str] | None,
+) -> DataFrame:
+    """K4's distance-first candidate set: the top ``max_large_k`` rows of
+    ``df`` by (dist, id), each with its predicate verdict ``_passes``,
+    projected to ``payload_cols`` (plus id and dist) when given."""
+    if payload_cols is not None:
+        keep = list(dict.fromkeys([id_col, *payload_cols]))
+        df = df.select(*dict.fromkeys([*keep, vec_col]))
+    cand = knn_exact(
+        df, query_vec, max_large_k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
+    ).withColumn("_passes", cond)
+    if payload_cols is not None and vec_col not in keep:
+        cand = cand.drop(vec_col)
+    return cand
+
+
 class AcornPrepared:
     """The build/search split of the K4 escalation, mirroring the
     reference's lifecycle exactly (acorn.py:274-277 builds the index
@@ -218,7 +236,7 @@ class AcornPrepared:
 
 def acorn_search_plan(
     df: DataFrame,
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     predicates: Predicates | Column | None,
     k: int,
     *,
@@ -263,18 +281,10 @@ def acorn_search_plan(
     from pyspark.sql.window import Window
 
     cond = _resolve_predicate(df, predicates, accessors)
-    if payload_cols is None:
-        proj, drop_vec = df, False
-    else:
-        keep = list(dict.fromkeys([id_col, *payload_cols]))
-        drop_vec = vec_col not in keep
-        proj = df.select(*dict.fromkeys([*keep, vec_col]))
     max_large_k = initial_oversample * (4 ** (max_rounds - 1)) * k
-    cand = knn_exact(
-        proj, query_vec, max_large_k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
-    ).withColumn("_passes", cond)
-    if payload_cols is not None and drop_vec:
-        cand = cand.drop(vec_col)
+    cand = _acorn_candidates(
+        df, query_vec, cond, max_large_k, vec_col, id_col, dist_col, payload_cols
+    )
 
     order = [F.col(dist_col).asc(), F.col(id_col).asc()]
     w = Window.orderBy(*order)
@@ -324,7 +334,7 @@ def acorn_search_plan(
 
 def acorn_prepare(
     df: DataFrame,
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     predicates: Predicates | Column | None,
     k: int,
     *,
@@ -338,18 +348,10 @@ def acorn_prepare(
 ) -> AcornPrepared:
     """Build the K4 plans once (see AcornPrepared)."""
     cond = _resolve_predicate(df, predicates, accessors)
-    if payload_cols is None:
-        proj, drop_vec = df, False
-    else:
-        keep = list(dict.fromkeys([id_col, *payload_cols]))
-        drop_vec = vec_col not in keep
-        proj = df.select(*dict.fromkeys([*keep, vec_col]))
     max_large_k = initial_oversample * (4 ** (max_rounds - 1)) * k
-    cand = knn_exact(
-        proj, query_vec, max_large_k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
-    ).withColumn("_passes", cond)
-    if payload_cols is not None and drop_vec:
-        cand = cand.drop(vec_col)
+    cand = _acorn_candidates(
+        df, query_vec, cond, max_large_k, vec_col, id_col, dist_col, payload_cols
+    )
     fallback = prefilter_search(
         df, query_vec, cond, k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
     )
@@ -825,7 +827,7 @@ def attribute_partitioned_search(
     df: DataFrame,
     subset_df: DataFrame,
     subset_attrs: frozenset[str] | set[str],
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     predicates: Predicates | None,
     k: int,
     *,

@@ -1,24 +1,37 @@
 """K1/T1 — exact brute-force k-NN as a DataFrame plan.
 
 The reference's ``ann_naive`` (/root/reference/pre-filter.py:63-95) is a
-single-threaded Python loop: per-row squared-L2, full sort, truncate. The
-Spark-native plan is a distance projection followed by
-``ORDER BY dist LIMIT k`` — Catalyst compiles that to
-**TakeOrderedAndProject**: each partition keeps only its local top-k heap
-and the driver merges P·k rows, so no global sort and no full shuffle ever
-happens. That is the shape that survives a 100 TB scan: work is
-O(rows · dim) map-side + O(P·k) merge.
+single-threaded Python loop: per-row squared-L2, full sort, truncate. Here
+``knn_exact`` is one scalar Arrow distance kernel under ``ORDER BY dist, id
+LIMIT k``, which Catalyst compiles to **TakeOrderedAndProject**: O(rows ·
+dim) map-side work, an O(P·k) driver merge, no global sort, no shuffle.
 
-Determinism: ties broken by ``(dist, id)`` ascending (SURVEY.md §7 risk 3)
-so results are stable for hash-based oracle comparison.
+Per Arrow batch the kernel reads the vectors with ``flatten().to_numpy()``
+and sums squared differences in float64 one dimension at a time, left to
+right (``acc = acc + d*d``). That is the order of ``functions.distance``'s
+``zip_with`` + ``aggregate`` expression and of the oracle, so ``dist`` is
+bit-identical to both; a BLAS dot or ``einsum`` reorders the sum and is
+not. Only the vector column crosses to Python and one double per row comes
+back, so Catalyst still prunes unread (nested) columns from the scan and
+the JVM keeps the top k. The query vector rides in the kernel's closure,
+so the plan does not grow with the dimension.
+
+A NULL vector, or one holding a NULL element, has no distance and is never
+returned. A vector whose length differs from the query's raises
+``ValueError`` naming both dimensions (on the driver, a
+``PythonException`` carrying that message).
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType
 from pyspark.sql.window import Window
 
 from acorn_hybrid_vector_search_spark.functions.distance import l2_sq_distance
@@ -26,7 +39,7 @@ from acorn_hybrid_vector_search_spark.functions.distance import l2_sq_distance
 
 def knn_exact(
     df: DataFrame,
-    query_vec: Column | Sequence[float],
+    query_vec: Sequence[float],
     k: int,
     *,
     vec_col: str = "embedding",
@@ -36,16 +49,47 @@ def knn_exact(
 ) -> DataFrame:
     """Exact top-k nearest rows of ``df`` to ``query_vec``.
 
-    Returns ``df``'s columns plus ``dist_col``, ordered (dist, id) asc.
+    Returns ``df``'s columns plus ``dist_col`` (squared L2, or L2 for
+    ``metric="l2"``), ordered (dist, id) asc.
     """
-    if metric == "l2_sq":
-        d = l2_sq_distance(F.col(vec_col), query_vec)
-    elif metric == "l2":
-        d = F.sqrt(l2_sq_distance(F.col(vec_col), query_vec))
-    else:
+    if metric not in ("l2_sq", "l2"):
         raise ValueError(f"unsupported metric {metric!r}")
+    q = np.asarray(query_vec, dtype=np.float64)
+    dim = len(q)
+
+    # a nested function using only numpy and pyarrow pickles by value, so
+    # the Python workers need not import this package
+    def dist(vecs: pa.Array) -> pa.Array:
+        lens = pc.list_value_length(vecs).to_numpy(zero_copy_only=False)
+        rows = np.flatnonzero(~np.isnan(lens))  # NULL vectors get no distance
+        wrong = lens[rows] != dim
+        if wrong.any():
+            raise ValueError(
+                f"vector dimension {int(lens[rows][wrong][0])} does not "
+                f"match query dimension {dim}"
+            )
+        flat = vecs.flatten()
+        x = flat.to_numpy(zero_copy_only=False).reshape(len(rows), dim)
+        if flat.null_count:
+            full = ~flat.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(1)
+            rows, x = rows[full], x[full]
+        xt = np.ascontiguousarray(x.T, dtype=np.float64)
+        acc = np.zeros(len(rows))
+        for j in range(dim):
+            d = xt[j] - q[j]
+            acc = acc + d * d
+        out = np.zeros(len(vecs))
+        out[rows] = np.sqrt(acc) if metric == "l2" else acc
+        missing = np.ones(len(vecs), dtype=bool)
+        missing[rows] = False
+        return pa.array(out, mask=missing)
+
+    # nondeterministic keeps the optimizer from pushing the NOT NULL filter
+    # below the projection, which would run the kernel twice
+    kernel = F.arrow_udf(dist, DoubleType()).asNondeterministic()
     return (
-        df.withColumn(dist_col, d)
+        df.withColumn(dist_col, kernel(F.col(vec_col)))
+        .where(F.col(dist_col).isNotNull())
         .orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
         .limit(k)
     )

@@ -1,20 +1,12 @@
-"""Similarity search kernels: Arrow/BLAS distance path + LSH bucketing.
+"""Similarity search kernels: batch multi-query BLAS top-k, LSH bucketing
+and Johnson-Lindenstrauss random projection.
 
-Two physical paths for vector distance (SURVEY.md §7 risk 2):
-
-- ``functions.distance`` — Catalyst higher-order functions, JVM-side,
-  whole-stage codegen. Wins for low dims / when the distance feeds other
-  JVM expressions (no Python boundary at all).
-- this module — Arrow-batched pandas UDFs over NumPy: one BLAS matmul per
-  ~10k-row batch. Wins for high dims (the reference's 2048-d ResNet
-  vectors): ~dim/8 fewer interpreter-visible ops per row, the same role
-  hnswlib's hand-SIMD kernels play in the reference
-  (hnswlib/hnswlib/space_l2.h).
-
-Plus **random-hyperplane LSH** (SimHash-for-vectors): a deterministic
-bucket id per row; near-duplicate / top-k search joins only inside a
-bucket (optionally multi-probed). This is the scale path when even one
-exact scan per query is too much and no IVF index is materialized.
+``knn_batch_blas`` ranks a query batch with one BLAS matmul per Arrow
+batch; its ``x @ q`` reorders the float sum, so unlike ``knn_exact`` its
+distances are not bit-identical to the oracle. **Random-hyperplane LSH**
+(SimHash-for-vectors) gives each row a deterministic bucket id, so
+near-duplicate / top-k search joins only inside a bucket: the scale path
+when even one exact scan per query is too much and no IVF index exists.
 """
 
 from __future__ import annotations
@@ -25,57 +17,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import DoubleType, LongType
-
-from acorn_hybrid_vector_search_spark.operators.knn import knn_exact  # noqa: F401 (re-export)
-
-
-def l2_sq_distance_blas(vec_col, query_vec: Sequence[float]):
-    """Column: squared-L2 distance to a fixed query via NumPy batches."""
-    q = np.asarray(list(query_vec), dtype=np.float64)
-
-    @F.pandas_udf(DoubleType())
-    def dist(v: pd.Series) -> pd.Series:
-        x = np.asarray(list(v), dtype=np.float64)
-        d = x - q[None, :]
-        return pd.Series(np.einsum("ij,ij->i", d, d))
-
-    return dist(vec_col)
-
-
-def cosine_similarity_blas(vec_col, query_vec: Sequence[float]):
-    """Column: cosine similarity to a fixed query via NumPy batches.
-    Zero-norm rows yield NULL (matches functions.distance semantics)."""
-    q = np.asarray(list(query_vec), dtype=np.float64)
-    qn = float(np.sqrt((q**2).sum()))
-
-    @F.pandas_udf(DoubleType())
-    def sim(v: pd.Series) -> pd.Series:
-        x = np.asarray(list(v), dtype=np.float64)
-        norms = np.sqrt(np.einsum("ij,ij->i", x, x)) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = (x @ q) / norms
-        return pd.Series(np.where(norms == 0.0, np.nan, out))
-
-    return sim(vec_col)
-
-
-def knn_exact_blas(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    k: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dist_col: str = "dist",
-) -> DataFrame:
-    """knn_exact with the BLAS distance kernel. Same TakeOrderedAndProject
-    plan shape — only the distance projection differs."""
-    return (
-        df.withColumn(dist_col, l2_sq_distance_blas(F.col(vec_col), query_vec))
-        .orderBy(F.col(dist_col).asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+from pyspark.sql.types import LongType
 
 
 def knn_batch_blas(

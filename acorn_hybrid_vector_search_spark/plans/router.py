@@ -31,7 +31,7 @@ from collections.abc import Mapping, Sequence
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from acorn_hybrid_vector_search_spark.functions.predicates import (
@@ -578,7 +578,7 @@ class StrategyRouter:
     def search(
         self,
         df: DataFrame,
-        query_vec: Column | Sequence[float],
+        query_vec: Sequence[float],
         predicates: Predicates | None,
         k: int,
         **kw: Any,

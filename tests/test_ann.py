@@ -20,7 +20,6 @@ from acorn_hybrid_vector_search_spark.operators.dedup import embedding_near_dups
 from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
 from acorn_hybrid_vector_search_spark.sources.testdata import load_table
 from acorn_hybrid_vector_search_spark.operators.similarity import (
-    knn_exact_blas,
     lsh_near_dup_pairs,
     with_lsh_bucket,
 )
@@ -122,18 +121,6 @@ def test_ivf_persist_roundtrip_and_partition_pruning(index, emb, qvec, tmp_path)
     )
     assert "PartitionFilters" in plan
     assert "cluster_id" in plan.split("PartitionFilters", 1)[1][:120]
-
-
-# ---------------------------------------------------------------------------
-# BLAS kernels
-
-
-def test_knn_blas_matches_expression_kernel(emb, qvec):
-    a = knn_exact(emb, qvec, 10).collect()
-    b = knn_exact_blas(emb, qvec, 10).collect()
-    assert [r["vec_id"] for r in a] == [r["vec_id"] for r in b]
-    for ra, rb in zip(a, b):
-        assert ra["dist"] == pytest.approx(rb["dist"], abs=1e-9)
 
 
 # ---------------------------------------------------------------------------

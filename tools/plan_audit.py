@@ -18,8 +18,10 @@ from acorn_hybrid_vector_search_spark.session import get_spark  # noqa: E402
 
 # query → the plan features that make it scale (checked + printed)
 AUDIT: dict[str, list[str]] = {
-    "prefilter_exact": ["TakeOrderedAndProject", "PushedFilters"],
-    "nested_prefilter_weight_brand": ["TakeOrderedAndProject", "PushedFilters", "ReadSchema"],
+    # single-query top-k: the Arrow distance kernel under a TakeOrdered
+    "prefilter_exact": ["TakeOrderedAndProject", "PushedFilters", "ArrowEvalPython"],
+    "nested_prefilter_weight_brand": [
+        "TakeOrderedAndProject", "PushedFilters", "ReadSchema", "ArrowEvalPython"],
     "join_revenue_by_nation": ["BroadcastHashJoin", "HashAggregate"],
     "agg_lineitem_pricing": ["HashAggregate", "Exchange"],
     "bm25_topk_docs": ["BroadcastNestedLoopJoin", "TakeOrderedAndProject"],
