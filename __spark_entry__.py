@@ -3248,7 +3248,7 @@ def _q_nsw_compact_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         target = max(1, min(8, (before + 1) // 2))
         after = nsw_compact(spark, path, n_shards=target)
         # after may fall short of target when hash-partitioning leaves an
-        # empty partition (_nsw_nodes drops empties) — tolerate that and
+        # empty partition (nsw_nodes drops empties) — tolerate that and
         # assert only that compaction actually reduced the shard count
         assert after <= target and after < before, (before, target, after)
         return path
@@ -4272,8 +4272,12 @@ def _nsw_pruned_store(spark: SparkSession, sf_dir: str) -> tuple:
     import numpy as np
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _prune_plan,
         nsw_write_clustered,
+        prune_plan,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        load_stats,
+        stats_path,
     )
 
     def build(root: str) -> tuple:
@@ -4312,12 +4316,8 @@ def _nsw_pruned_store(spark: SparkSession, sf_dir: str) -> tuple:
             payload_cols=["label", "weight", "tag"],
             stats_attrs=["label", "tag"], numeric_stats_attrs=["weight"],
         )
-        srows = _cache.read_sidecar(spark, path + "/_shard_stats").collect()
-        parts = np.asarray([r["part_id"] for r in srows], dtype=np.int64)
-        cents = np.asarray([list(r["centroid"]) for r in srows], np.float64)
-        radii = np.asarray([r["radius"] for r in srows], np.float64)
-        counts = np.asarray([r["n"] for r in srows], dtype=np.int64)
-        kept = _prune_plan(
+        parts, cents, radii, counts = load_stats(spark, stats_path(path))
+        kept = prune_plan(
             parts, cents, radii, counts,
             np.asarray([v for _, v in qs], dtype=np.float64), 10,
         )
@@ -4349,27 +4349,29 @@ def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _attr_stats_path,
-        _load_attr_stats,
-        _load_stats,
-        _prune_plan,
-        _stats_path,
         nsw_read_topk,
+        prune_plan,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        attr_stats_path,
+        load_attr_stats,
+        load_stats,
+        stats_path,
     )
 
     # build (or reuse) the shared clustered store + its query vectors
     path, qs = _nsw_pruned_store(spark, sf_dir)
     # mtime-memoized loads — a fresh collect per benched call would be
     # most of this row's latency (review r9b)
-    parts, cents, radii, counts = _load_stats(spark, _stats_path(path))
-    ac = _load_attr_stats(spark, _attr_stats_path(path))
+    parts, cents, radii, counts = load_stats(spark, stats_path(path))
+    ac = load_attr_stats(spark, attr_stats_path(path))
     pc = np.asarray(
         [ac["label"].get(int(p), {}).get("3", 0) for p in parts],
         dtype=np.int64,
     )
     qmat = np.asarray([v for _, v in qs], dtype=np.float64)
-    plain = _prune_plan(parts, cents, radii, counts, qmat, 10)
-    match = _prune_plan(parts, cents, radii, pc, qmat, 10, skip_empty=True)
+    plain = prune_plan(parts, cents, radii, counts, qmat, 10)
+    match = prune_plan(parts, cents, radii, pc, qmat, 10, skip_empty=True)
     # never worse than plain pruning, and the zone-map property is
     # real: shards with zero passing members exist and are skippable
     # (at tiny sf plain pruning already keeps a single shard per
@@ -4503,7 +4505,7 @@ def _q_nsw_prune_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     12 dp and summed as DECIMAL(28,12), so centroids and distances
     are bit-identical regardless of aggregation order; the emitted
     lb/ub round to 6 dp. tests/test_graph_ann pins that this
-    relational twin agrees with the numpy `_prune_plan` the real
+    relational twin agrees with the numpy `prune_plan` the real
     prune path executes."""
     from pyspark.sql.window import Window
 
@@ -4592,19 +4594,21 @@ def _q_nsw_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _load_numeric_stats,
-        _load_stats,
-        _numeric_stats_path,
-        _range_shard_verdict,
-        _stats_path,
         nsw_read_topk,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        load_numeric_stats,
+        load_stats,
+        numeric_stats_path,
+        range_shard_verdict,
+        stats_path,
     )
 
     path, qs = _nsw_pruned_store(spark, sf_dir)
-    parts, _, _, _ = _load_stats(spark, _stats_path(path))
-    zones = _load_numeric_stats(spark, _numeric_stats_path(path))["weight"]
+    parts, _, _, _ = load_stats(spark, stats_path(path))
+    zones = load_numeric_stats(spark, numeric_stats_path(path))["weight"]
     verdicts = [
-        _range_shard_verdict(*zones[int(p)], "<", 23.0) for p in parts
+        range_shard_verdict(*zones[int(p)], "<", 23.0) for p in parts
     ]
     # the zone maps must PROVE failure somewhere (slabs 3-9 at weight
     # ≥ 30) or the rung is vacuous on this corpus
@@ -4775,14 +4779,16 @@ def _q_nsw_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _load_stats,
-        _prune_plan,
-        _stats_path,
         nsw_append,
         nsw_delete,
         nsw_read_topk,
         nsw_recluster,
         nsw_write_clustered,
+        prune_plan,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        load_stats,
+        stats_path,
     )
 
     def build(root: str) -> tuple:
@@ -4806,8 +4812,8 @@ def _q_nsw_recluster_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus.filter(F.col("vec_id") % 11 == 5).select("vec_id"),
         )
         n_new = nsw_recluster(spark, path, n_shards=8, stats_attrs=["label"])
-        parts, cents, radii, counts = _load_stats(spark, _stats_path(path))
-        kept = _prune_plan(
+        parts, cents, radii, counts = load_stats(spark, stats_path(path))
+        kept = prune_plan(
             parts, cents, radii, counts,
             np.asarray([qv], dtype=np.float64), 10,
         )[0]
@@ -4830,11 +4836,11 @@ def _q_nsw_range_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     {1,9} into straddlers, and 25 is the threshold at which all three
     verdict classes appear — pinned in pytest) —
     plus the certain-count (n_present on all-pass, else 0) and
-    may-pass flags `_prune_plan(possible=...)` consumes — derive from
+    may-pass flags `prune_plan(possible=...)` consumes — derive from
     the embeddings table alone in BOTH engines. Pure integer
     arithmetic in doubles (weight = label·10 + vec_id%5), so no
     float-order policy is needed. tests/test_graph_ann pins that this
-    relational twin agrees with the `_range_shard_verdict` the real
+    relational twin agrees with the `range_shard_verdict` the real
     prune path executes."""
     S, thresh = 8, 25
     emb = _clustered_embeddings(spark, sf_dir).withColumn(
@@ -5005,7 +5011,7 @@ def _q_routed_pruned_substr_conj_topk(
     ``item_weight < 2 ∧ brand substring Amazon`` (acorn.py:296-298) —
     through the planner: a range ∧ SUBSTRING conjunction. Substring is
     provable EXACTLY from the per-shard distinct-value counts (Σ counts
-    over keys containing the needle, `_substring_value_count`), so the
+    over keys containing the needle, `substring_value_count`), so the
     Bonferroni bound holds with exact per-constraint counts; the
     substring term routes only over a STRING-kind passthrough accessor
     (build_predicate ignores substring on numeric kinds — routing those
@@ -5369,8 +5375,8 @@ def _q_ivf_exact_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_search_exact_batch`` answers a three-query batch (per-query
     exact match, per-query range, unconstrained) from TWO list scans
     total: phase 1 hash-joins each query's nearest PASSING list (its
-    own zone-map verdicts — the same `_canon_value_count` /
-    `_range_shard_verdict` arithmetic as the single-query arms — skip
+    own zone-map verdicts — the same `canon_value_count` /
+    `range_shard_verdict` arithmetic as the single-query arms — skip
     provably-empty lists), one bounded ≤|Q|·k collect yields per-query
     d_k, and phase 2 equi-joins the exploded per-query ball-bound
     probe sets. Batch ≡ per-query loop is pytest-pinned; here each
@@ -5508,7 +5514,7 @@ def _q_nsw_conj_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r10b IVF numeric zone-map symmetry: per-list (vmin, vmax,
-    n_present) — `_range_shard_verdict` shared verbatim with the
+    n_present) — `range_shard_verdict` shared verbatim with the
     graph store — let ``ivf_search_exact(range_pred=('weight','<',23))``
     skip provably-failing lists while straddling/all-pass lists scan
     with the predicate pushed into the parquet read; provably-failing
@@ -5520,8 +5526,8 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_search_exact,
         ivf_write,
     )
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _range_shard_verdict,
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        range_shard_verdict,
     )
 
     def build(root: str) -> tuple:
@@ -5540,7 +5546,7 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         live = ivf_read(spark, path)
         zones = live.numeric_stats["weight"]
         assert any(
-            not _range_shard_verdict(
+            not range_shard_verdict(
                 *zones.get(c, (None, None, 0)), "<", 23.0
             )[1]
             for c in range(live.n_clusters)

@@ -35,7 +35,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
+from acorn_hybrid_vector_search_spark.operators._cache import invalidate
 from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
+from acorn_hybrid_vector_search_spark.operators.store import (
+    IVF,
+    RANGE_OPS,
+    bump_store_version,
+    canon_value_count,
+    clear_sidecars,
+    conj_pred_col,
+    data_root,
+    delete_ids,
+    ivf_attr_stats_path,
+    ivf_codebook_path,
+    ivf_numeric_stats_path,
+    live_rows,
+    normalize_conj,
+    range_pred_col,
+    range_shard_verdict,
+    replace_dir,
+    require_local,
+    substring_value_count,
+    tombstones_path,
+)
 
 
 @dataclass
@@ -167,6 +189,26 @@ def assign_clusters(
     return df.withColumn("cluster_id", assign(F.col(vec_col)))
 
 
+def train_assign(
+    df: DataFrame,
+    n_clusters: int,
+    *,
+    vec_col: str,
+    sample_rows: int,
+    n_iter: int,
+    seed: int,
+) -> tuple[np.ndarray, DataFrame]:
+    """(centroids, ``df`` + ``cluster_id``): k-means trained on a bounded
+    sample of ``df`` (all of it when it has at most ``sample_rows``
+    rows), then every row assigned to its nearest centroid."""
+    n = df.count()
+    frac = min(1.0, sample_rows / max(n, 1))
+    sample_df = df.select(vec_col) if frac >= 1.0 else df.select(vec_col).sample(frac, seed=seed)
+    sample = np.asarray([r[0] for r in sample_df.collect()], dtype=np.float64)
+    centroids = _kmeans(sample, n_clusters, n_iter, seed)
+    return centroids, assign_clusters(df, centroids, vec_col=vec_col)
+
+
 def ivf_build(
     df: DataFrame,
     n_clusters: int = 16,
@@ -200,12 +242,10 @@ def ivf_build(
     under §2.3 range ops, mirroring
     ``nsw_stats_write(numeric_attrs=...)``.
     """
-    n = df.count()
-    frac = min(1.0, sample_rows / max(n, 1))
-    sample_df = df.select(vec_col) if frac >= 1.0 else df.select(vec_col).sample(frac, seed=seed)
-    sample = np.asarray([r[0] for r in sample_df.collect()], dtype=np.float64)
-    centroids = _kmeans(sample, n_clusters, n_iter, seed)
-    assigned = assign_clusters(df, centroids, vec_col=vec_col)
+    centroids, assigned = train_assign(
+        df, n_clusters, vec_col=vec_col, sample_rows=sample_rows,
+        n_iter=n_iter, seed=seed,
+    )
     radii = None
     if with_radii:
         radii = _cluster_radii(assigned, centroids, vec_col=vec_col)
@@ -285,43 +325,19 @@ def ivf_write(index: IVFIndex, path: str) -> None:
     # sidecar while mode('overwrite') replaces only batch=-1 would let
     # old streaming lists/batch=<id> subtrees survive — resurrecting
     # ids whose tombstones were just wiped and duplicating every
-    # re-ingested id (review r9b); drop lists/ and the sidecar together.
-    # The cleanup is os-level and LOCAL-ONLY — on a remote store it
-    # cannot run, and silently skipping it would re-open exactly that
-    # resurrection/duplication window (ADVICE r9), so a remote REBUILD
-    # fails fast like every other lifecycle op: rebuild a remote index
-    # under a FRESH versioned prefix and flip a manifest pointer. A
-    # first write to a provably-absent remote prefix has nothing to
-    # pre-clean and proceeds (review r10 — creation must stay
-    # possible); unprovable existence fails fast conservatively.
-    import shutil
-
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _remote_path_exists,
-        _tombstones_path,
-    )
-
-    if "://" in path:
-        if _remote_path_exists(index.df.sparkSession, path):
-            raise ValueError(
-                f"ivf_write's rebuild pre-clean (stale lists/batch=<id> "
-                f"subtrees + the tombstone sidecar) is os-level and only "
-                f"supports local paths; got {path!r} — write a fresh "
-                f"versioned prefix and flip a manifest pointer on remote "
-                f"stores"
-            )
-    else:
-        shutil.rmtree(f"{path}/lists", ignore_errors=True)
-        shutil.rmtree(_tombstones_path(path), ignore_errors=True)
+    # re-ingested id; drop lists/ and the sidecars together (a remote
+    # rebuild fails fast: clear_sidecars)
+    spark = index.df.sparkSession
+    lists = data_root(path, IVF)
+    clear_sidecars(path, spark, also=(IVF.data,))
     # base rows live under batch=-1: streaming ingest appends sibling
     # batch=<id> directories (streaming/indexing.py), so every writer owns
     # exactly one subtree and a replayed micro-batch can overwrite its own
     # idempotently. Partition discovery needs consistent depth, hence the
     # level exists from the start.
     index.df.write.mode("overwrite").partitionBy("cluster_id").parquet(
-        f"{path}/lists/batch=-1"
+        f"{lists}/batch=-1"
     )
-    spark = index.df.sparkSession
     rows = [
         (
             i,
@@ -332,12 +348,9 @@ def ivf_write(index: IVFIndex, path: str) -> None:
     ]
     spark.createDataFrame(
         rows, "cluster_id INT, centroid ARRAY<DOUBLE>, radius DOUBLE"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/codebook")
+    ).coalesce(1).write.mode("overwrite").parquet(ivf_codebook_path(path))
     # r10: persist the per-list zone maps (same row shape as the graph
-    # store's _shard_attr_stats sidecar — one contract, two stores); a
-    # rebuild without stats must also DROP a stale sidecar (the
-    # _clear_sidecars rule)
-    shutil.rmtree(f"{path}/attr_stats", ignore_errors=True)
+    # store's _shard_attr_stats sidecar — one contract, two stores)
     if index.attr_counts:
         arows = [
             (int(c), a, v, int(n))
@@ -347,8 +360,7 @@ def ivf_write(index: IVFIndex, path: str) -> None:
         ]
         spark.createDataFrame(
             arows, "cluster_id INT, attr STRING, value STRING, n LONG"
-        ).coalesce(1).write.mode("overwrite").parquet(f"{path}/attr_stats")
-    shutil.rmtree(f"{path}/numeric_stats", ignore_errors=True)
+        ).coalesce(1).write.mode("overwrite").parquet(ivf_attr_stats_path(path))
     if index.numeric_stats:
         nrows = [
             (int(c), a, vmin, vmax, int(np_))
@@ -360,17 +372,12 @@ def ivf_write(index: IVFIndex, path: str) -> None:
             "cluster_id INT, attr STRING, vmin DOUBLE, vmax DOUBLE, "
             "n_present LONG",
         ).coalesce(1).write.mode("overwrite").parquet(
-            f"{path}/numeric_stats"
+            ivf_numeric_stats_path(path)
         )
     # store writers drop pinned materializations: a semantically-equal
     # read plan over this path must never serve the pre-rewrite
     # snapshot (the r7 rule every other writer already follows)
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
-    )
-
-    _bump_store_version(path)
+    bump_store_version(path)
     invalidate()
 
 
@@ -386,37 +393,24 @@ def ivf_read(
     per-search cost. Version-aware on the ``batch`` ownership level: a
     streaming micro-batch that re-adds a deleted id lands above the
     tombstone's ceiling and stays live (the graph store's part_ceiling
-    contract, graph_ann.py). Radii stay sound — they upper-bound a
+    contract, store.py). Radii stay sound — they upper-bound a
     superset of the live members."""
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _read_tombstones,
-        _tombstone_ceiling,
-    )
-
-    cb = spark.read.parquet(f"{path}/codebook").orderBy("cluster_id").collect()
+    cb = spark.read.parquet(ivf_codebook_path(path)).orderBy("cluster_id").collect()
     centroids = np.asarray([r["centroid"] for r in cb], dtype=np.float64)
     radii = None
     if cb and "radius" in cb[0].asDict() and cb[0]["radius"] is not None:
         radii = np.asarray([r["radius"] for r in cb], dtype=np.float64)
-    df = spark.read.parquet(f"{path}/lists")
-    tomb = _read_tombstones(spark, path, id_col)
-    if tomb is not None:
-        ceil = _tombstone_ceiling(tomb, id_col, ceiling_col="batch_ceiling")
-        df = (
-            df.join(F.broadcast(ceil), id_col, "left")
-            .filter(
-                F.col("_tomb_ceiling").isNull()
-                | (F.col("batch") > F.col("_tomb_ceiling"))
-            )
-            .drop("_tomb_ceiling")
-        )
+    df = live_rows(
+        spark, path, spark.read.parquet(data_root(path, IVF)), kind=IVF,
+        id_col=id_col,
+    )
     # `batch` is a writer-ownership detail (base load vs streaming
     # micro-batches) — drop it from the logical schema; cluster_id pruning
     # is unaffected (both are partition levels).
     has_extra_batches = _ivf_has_stream_batches(path)
     df = df.drop("batch")
     attr_counts = None
-    apath = f"{path}/attr_stats"
+    apath = ivf_attr_stats_path(path)
     if os.path.exists(apath):
         persisted_attrs = sorted(
             {r["attr"] for r in spark.read.parquet(apath).select("attr").distinct().collect()}
@@ -438,7 +432,7 @@ def ivf_read(
                     int(r["cluster_id"]), {}
                 )[r["value"]] = int(r["n"])
     numeric_stats = None
-    npath = f"{path}/numeric_stats"
+    npath = ivf_numeric_stats_path(path)
     if os.path.exists(npath):
         persisted_nums = sorted(
             {r["attr"] for r in spark.read.parquet(npath).select("attr").distinct().collect()}
@@ -466,7 +460,7 @@ def ivf_read(
 def _ivf_has_stream_batches(path: str) -> bool:
     """True when streaming ingest added lists/batch=<id> subtrees beyond
     the base batch=-1 (local stores only — ivf_write refuses remote)."""
-    lists = f"{path}/lists"
+    lists = data_root(path, IVF)
     if "://" in path or not os.path.isdir(lists):
         return False
     return any(
@@ -478,43 +472,13 @@ def ivf_delete(
     spark, path: str, ids, *, id_col: str = "vec_id", strict: bool = True
 ) -> None:
     """Mark ids deleted in a persisted IVF store — the same tombstone
-    sidecar contract as the graph store (graph_ann.py nsw_delete / the
+    sidecar contract as the graph store (store.delete_ids, the graph store's nsw_delete / the
     hnswlib mark_deleted analog): O(|ids|) sidecar rows appended, no
     list rewrite at any store size. The ceiling is the store's max
     ``batch`` ownership id, so a later streaming micro-batch re-adding
     the id stays live. ``ivf_read`` applies tombstones at load;
     ``ivf_reclaim`` is the physical delete."""
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _ids_frame,
-        _tombstones_path,
-    )
-
-    ids_df = _ids_frame(spark, ids, id_col)
-    lists = spark.read.parquet(f"{path}/lists")
-    ceiling = lists.agg(F.max("batch")).head()[0]
-    if strict:
-        miss = ids_df.join(lists.select(id_col), id_col, "left_anti")
-        sample_rows = miss.take(6)
-        if sample_rows:
-            sample = sorted(r[0] for r in sample_rows[:5])
-            more = " (and more)" if len(sample_rows) > 5 else ""
-            raise ValueError(
-                f"ivf_delete: id(s) not present in the store at {path} "
-                f"(first few: {sample}{more}); pass strict=False to "
-                f"tombstone regardless"
-            )
-    (
-        ids_df.withColumn("batch_ceiling", F.lit(int(ceiling)).cast("long"))
-        .write.mode("append")
-        .parquet(_tombstones_path(path))
-    )
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
-    )
-
-    _bump_store_version(path)
-    invalidate()
+    delete_ids(spark, path, ids, IVF, id_col=id_col, strict=strict, op="ivf_delete")
 
 
 def ivf_reclaim(spark, path: str, *, id_col: str = "vec_id") -> int:
@@ -525,43 +489,19 @@ def ivf_reclaim(spark, path: str, *, id_col: str = "vec_id") -> int:
     in nsw_compact: the collapsed rows land at batch=-1, below every
     ceiling). Returns the live row count. Local paths only (directory
     swap)."""
-    import shutil
-
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _swap_dir,
-        _tombstones_path,
-    )
-
-    if "://" in path:
-        raise ValueError(
-            f"ivf_reclaim swaps directories and only supports local "
-            f"paths; got {path!r}"
-        )
-    live = ivf_read(spark, path, id_col=id_col).df
+    require_local(path, "ivf_reclaim")
+    lists = data_root(path, IVF)
+    live = live_rows(
+        spark, path, spark.read.parquet(lists), kind=IVF, id_col=id_col,
+        op="ivf_reclaim",
+    ).drop("batch")
     n_live = live.count()
-    if n_live == 0:
-        raise ValueError(
-            f"ivf_reclaim would empty the store at {path}: every row is "
-            f"tombstoned — drop the store directory instead"
-        )
-    lists = f"{path}/lists"
-    tmp = lists + "__tmp"
-    try:
-        live.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            f"{tmp}/batch=-1"
-        )
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _swap_dir(lists, tmp)
-    shutil.rmtree(_tombstones_path(path), ignore_errors=True)
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
+    replace_dir(
+        path, lists,
+        lambda tmp: live.write.mode("overwrite").partitionBy("cluster_id")
+        .parquet(f"{tmp}/batch=-1"),
+        drop=(tombstones_path(path),),
     )
-
-    _bump_store_version(path)
-    invalidate()
     return int(n_live)
 
 
@@ -660,11 +600,6 @@ def ivf_search_exact(
     value counts, every range attr numeric zone maps. Mutually
     exclusive with ``match``/``range_pred``.
     """
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _RANGE_OPS,
-        _range_shard_verdict,
-    )
-
     if index.radii is None:
         raise ValueError("ivf_search_exact requires an index built with_radii=True")
     if sum(x is not None for x in (match, range_pred, conj)) > 1:
@@ -675,24 +610,19 @@ def ivf_search_exact(
     pred = None
     passing = None
     if conj is not None:
-        from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-            _conj_pred_col,
-            _normalize_conj,
-        )
-
-        normalized = _normalize_conj(conj)
+        normalized = normalize_conj(conj)
         passing = np.ones(index.n_clusters, dtype=np.int64)
         for attr, (c_op, c_val) in normalized.items():
             passing &= _ivf_passing_lists(
                 index, (attr, c_op, c_val)
             ).astype(np.int64)
-        pred = _conj_pred_col(normalized)
+        pred = conj_pred_col(normalized)
     if range_pred is not None:
         r_attr, r_op_raw, r_val = range_pred
-        r_op = _RANGE_OPS.get(r_op_raw)
+        r_op = RANGE_OPS.get(r_op_raw)
         if r_op is None:
             raise ValueError(
-                f"range_pred op must be one of {sorted(_RANGE_OPS)}, "
+                f"range_pred op must be one of {sorted(RANGE_OPS)}, "
                 f"got {r_op_raw!r}"
             )
         if not index.numeric_stats or r_attr not in index.numeric_stats:
@@ -707,7 +637,7 @@ def ivf_search_exact(
         passing = np.asarray(
             [
                 1
-                if _range_shard_verdict(
+                if range_shard_verdict(
                     *zones.get(c, (None, None, 0)), r_op, float(r_val)
                 )[1]
                 else 0
@@ -715,13 +645,7 @@ def ivf_search_exact(
             ],
             dtype=np.int64,
         )
-        col = F.col(r_attr)
-        pred = {
-            "<": col < F.lit(r_val),
-            "<=": col <= F.lit(r_val),
-            ">": col > F.lit(r_val),
-            ">=": col >= F.lit(r_val),
-        }[r_op]
+        pred = range_pred_col(r_attr, r_op, r_val)
     if match is not None:
         m_attr, m_val = match
         if not index.attr_counts or m_attr not in index.attr_counts:
@@ -731,14 +655,10 @@ def ivf_search_exact(
                 f"value counts for {m_attr!r} (covered: {covered}) — "
                 f"build with ivf_build(stats_attrs=[{m_attr!r}])"
             )
-        from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-            _canon_value_count,
-        )
-
         per = index.attr_counts[m_attr]
         passing = np.asarray(
             [
-                _canon_value_count(per.get(c, {}), m_val)
+                canon_value_count(per.get(c, {}), m_val)
                 for c in range(index.n_clusters)
             ],
             dtype=np.int64,
@@ -790,18 +710,11 @@ def _ivf_passing_lists(index: IVFIndex, constraint) -> np.ndarray:
     """Per-list may-hold-a-passing-member mask for ONE §2.3 constraint
     ``(attr, op, value)`` with op 'exact'/'substring' (per-list exact
     value counts — substring sums the distinct keys containing the
-    needle, exactly like the graph store's `_substring_value_count`)
+    needle, exactly like the graph store's `substring_value_count`)
     or a range spelling (numeric zone-map verdicts) — the single-query
     ``ivf_search_exact`` arms' verdict arithmetic, shaped for the r11
     conj/batch forms. Raises on uncovered attrs exactly like the
     single-query arms do (callers route only covered constraints)."""
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _RANGE_OPS,
-        _canon_value_count,
-        _range_shard_verdict,
-        _substring_value_count,
-    )
-
     attr, op, value = constraint
     if op in ("exact", "substring"):
         if not index.attr_counts or attr not in index.attr_counts:
@@ -813,7 +726,7 @@ def _ivf_passing_lists(index: IVFIndex, constraint) -> np.ndarray:
             )
         per = index.attr_counts[attr]
         counter = (
-            _canon_value_count if op == "exact" else _substring_value_count
+            canon_value_count if op == "exact" else substring_value_count
         )
         return np.asarray(
             [
@@ -822,10 +735,10 @@ def _ivf_passing_lists(index: IVFIndex, constraint) -> np.ndarray:
             ],
             dtype=bool,
         )
-    r_op = _RANGE_OPS.get(op)
+    r_op = RANGE_OPS.get(op)
     if r_op is None:
         raise ValueError(
-            f"batch range op must be one of {sorted(_RANGE_OPS)}, got {op!r}"
+            f"batch range op must be one of {sorted(RANGE_OPS)}, got {op!r}"
         )
     if not index.numeric_stats or attr not in index.numeric_stats:
         covered = sorted(index.numeric_stats or ())
@@ -837,7 +750,7 @@ def _ivf_passing_lists(index: IVFIndex, constraint) -> np.ndarray:
     zones = index.numeric_stats[attr]
     return np.asarray(
         [
-            _range_shard_verdict(
+            range_shard_verdict(
                 *zones.get(c, (None, None, 0)), r_op, float(value)
             )[1]
             for c in range(index.n_clusters)
@@ -865,8 +778,8 @@ def ivf_search_exact_batch(
 
     ``match`` / ``range_pred``: per-query mappings ``{query_id: (attr,
     value)}`` / ``{query_id: (attr, op, value)}`` — each query's own
-    zone-map verdicts (the SAME `_canon_value_count` /
-    `_range_shard_verdict` arithmetic as the single-query arms) skip
+    zone-map verdicts (the SAME `canon_value_count` /
+    `range_shard_verdict` arithmetic as the single-query arms) skip
     its provably-empty lists at every stage; a query in neither mapping
     probes on plain ball bounds; ``conj``: per-query CONJUNCTION dicts
     ``{query_id: {attr: (op, value)}}`` with exact / substring / range
@@ -938,9 +851,6 @@ def ivf_search_exact_batch(
     # normalizes to a conjunction dict {attr: (op, value)} — match and
     # range are its one-term special cases (the graph store's
     # prune_conj unification).
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _RANGE_OPS,
-    )
 
     def _spell_range(op: str) -> str:
         # canonicalize the range spelling to the §2.3 op the row-filter
@@ -948,11 +858,11 @@ def ivf_search_exact_batch(
         # parameter table silently ignores unsupported spellings, so an
         # un-normalized '<=' would prune lists by the zone maps but
         # never filter rows (review r11 — the single-query arm enforces
-        # every _RANGE_OPS spelling through its own Catalyst predicate)
-        canon = _RANGE_OPS.get(op)
+        # every RANGE_OPS spelling through its own Catalyst predicate)
+        canon = RANGE_OPS.get(op)
         if canon is None:
             raise ValueError(
-                f"batch range op must be one of {sorted(_RANGE_OPS)}, "
+                f"batch range op must be one of {sorted(RANGE_OPS)}, "
                 f"got {op!r}"
             )
         return {"<=": "leq", ">=": "geq", "<": "<", ">": ">"}[canon]

@@ -59,7 +59,41 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from acorn_hybrid_vector_search_spark.operators._cache import read_sidecar
+from acorn_hybrid_vector_search_spark.operators._cache import invalidate, read_parquet
+from acorn_hybrid_vector_search_spark.operators.store import (
+    NSW,
+    RANGE_OPS,
+    NswMeta,
+    apply_tombstones,
+    attr_stats_path,
+    bump_store_version,
+    canon_value_count,
+    check_stats_fresh,
+    clear_sidecars,
+    conj_pred_col,
+    delete_ids,
+    has_data,
+    ids_frame,
+    int8_path,
+    live_rows,
+    load_attr_stats,
+    load_numeric_stats,
+    load_stats,
+    normalize_conj,
+    numeric_stats_path,
+    range_pred_col,
+    range_shard_verdict,
+    read_nsw_meta,
+    read_store_version,
+    read_tombstones,
+    record_store_fp,
+    replace_dir,
+    require_local,
+    snapshot_store_fp,
+    stats_path,
+    substring_value_count,
+    tombstones_path,
+)
 
 __all__ = [
     "NswGraph",
@@ -71,6 +105,8 @@ __all__ = [
     "nsw_undelete",
     "nsw_upsert",
     "nsw_stats_write",
+    "nsw_nodes",
+    "prune_plan",
 ]
 
 
@@ -580,7 +616,7 @@ def nsw_write(
     [, payload...])`` (``payload_cols`` stores node metadata for
     predicate-filtered search, see ``nsw_read_topk(predicate=...)``) —
     written ``partitionBy(part_id)`` so each partition's graph is its
-    own directory (the ``ivf_write`` pattern, ann.py:176): a search
+    own directory (the ``ivf_write`` pattern): a search
     loads every graph in parallel, one task per directory, and a future
     partition-pruned variant can skip graphs wholesale. ``seq`` is the
     node's insertion position — local neighbor ids index into the
@@ -591,29 +627,17 @@ def nsw_write(
     semantically-equal read plan over the same path must never serve a
     pre-rewrite snapshot.
     """
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-
     invalidate()
-    _clear_sidecars(path, df.sparkSession)
-    _nsw_nodes(
+    clear_sidecars(path, df.sparkSession)
+    nsw_nodes(
         df, m=m, ef_construction=ef_construction, gamma=gamma,
         vec_col=vec_col, id_col=id_col, part_offset=0,
         payload_cols=payload_cols, vector_dtype=vector_dtype,
     ).write.mode("overwrite").partitionBy("part_id").parquet(path)
-    _bump_store_version(path)
+    bump_store_version(path)
 
 
-def _store_vector_dtype(stored: DataFrame) -> str:
-    """The store's persisted vector precision, read off the parquet
-    schema — maintenance ops (append/compact/recluster) pass it back
-    into ``_nsw_nodes`` so a float32 store never silently grows
-    mixed-precision shards (parquet would hold both, and the scan
-    would fail to merge ``array<float>`` with ``array<double>``)."""
-    el = stored.schema["vector"].dataType.elementType.simpleString()
-    return "float32" if el == "float" else "float64"
-
-
-def _nsw_nodes(
+def nsw_nodes(
     df: DataFrame,
     *,
     m: int,
@@ -740,172 +764,6 @@ def _nsw_nodes(
 # replace_deleted; FAISS remove_ids is the same rebuild-shaped cost).
 
 
-def _read_store(spark, path: str):
-    """Session-memoized parquet read for SEARCH-path store/sidecar scans
-    (r14, guide §2.4): re-reading a session-static store per call paid a
-    footer/schema job every time. Writers keep plain reads and all of
-    them call ``_cache.invalidate()`` after mutating a store, which
-    clears this memo too — the same staleness contract the stats memos
-    carry via their fingerprints."""
-    from acorn_hybrid_vector_search_spark.operators._cache import read_parquet
-
-    return read_parquet(spark, path)
-
-
-def _tombstones_path(path: str) -> str:
-    # "_"-prefixed so Hadoop's hidden-file filter keeps the sidecar out
-    # of every spark.read.parquet(path) over the store itself
-    return path.rstrip("/") + "/_tombstones"
-
-
-def _int8_path(path: str) -> str:
-    # the r13 int8 code sidecar ("_"-prefixed like every other sidecar)
-    return path.rstrip("/") + "/_int8_codes"
-
-
-def _remote_path_exists(spark, path: str) -> bool:
-    """Hadoop-FS existence probe for a remote URI (the public
-    FileSystem API through the session's JVM gateway). Any failure —
-    missing connector, bad credentials — reports True: the caller
-    treats 'cannot prove absent' as 'could exist' and fails fast."""
-    try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return bool(fs.exists(jpath))
-    except Exception:
-        return True
-
-
-def _clear_sidecars(path: str, spark=None) -> None:
-    """A store REBUILD must not inherit the old store's sidecars: under
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` the overwrite
-    replaces only ``part_id=`` directories, leaving ``_tombstones``
-    behind — whose ceilings cover the rebuilt store's 0-based shard
-    ids, silently deleting arbitrary rebuilt rows — and a stale
-    ``_shard_stats`` (review r9). The rmtree is os-level and
-    LOCAL-ONLY; a silent no-op on a remote path would leave exactly
-    those stale sidecars live (ADVICE r9), so a remote REBUILD fails
-    fast like nsw_compact / nsw_undelete / ivf_reclaim do — rebuild a
-    remote store under a FRESH versioned prefix and flip a manifest
-    pointer. A FIRST write to a remote prefix that provably does not
-    exist has nothing to clear and proceeds (review r10: the fail-fast
-    must not make remote store CREATION impossible — that was the
-    error message's own prescribed remedy); when existence cannot be
-    proven either way, it fails fast conservatively."""
-    import shutil
-
-    if "://" in path:
-        if spark is not None and not _remote_path_exists(spark, path):
-            return  # fresh prefix: nothing to clear, creation is sound
-        raise ValueError(
-            f"rebuilding over an existing store path requires clearing "
-            f"its sidecars (_tombstones/_shard_stats/...), an os-level "
-            f"local-only operation; got {path!r} — rebuild a remote "
-            f"store under a fresh versioned prefix and flip a manifest "
-            f"pointer instead"
-        )
-    for side in (
-        _tombstones_path(path),
-        _stats_path(path),
-        _attr_stats_path(path),
-        _numeric_stats_path(path),
-        _int8_path(path),
-    ):
-        shutil.rmtree(side, ignore_errors=True)
-
-
-def _swap_dir(live: str, tmp: str) -> None:
-    """Swap a fully-written ``tmp`` directory into ``live``'s place with
-    no loss window (the r7 compact crash discipline, extracted in r9 so
-    store and sidecar rewrites share ONE copy of it): move the live dir
-    aside, move tmp in, delete the old copy only after the new one is
-    in place; on any failure restore the live dir first and never
-    strand tmp. Local paths only — callers fail fast on '://'."""
-    import os
-    import shutil
-
-    old = live.rstrip("/") + "__old"
-    try:
-        if os.path.exists(old):
-            shutil.rmtree(old)
-        os.rename(live, old)
-        os.rename(tmp, live)
-    except BaseException:
-        if not os.path.exists(live) and os.path.exists(old):
-            os.rename(old, live)
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    shutil.rmtree(old)
-
-
-def _read_tombstones(spark, path: str, id_col: str) -> "DataFrame | None":
-    import os
-
-    from pyspark.errors import AnalysisException
-
-    tpath = _tombstones_path(path)
-    if "://" not in tpath and not os.path.exists(tpath):
-        return None
-    try:
-        return _read_store(spark, tpath)
-    except AnalysisException as e:
-        # ONLY the two legitimate no-sidecar shapes may read as "no
-        # deletions": the remote path not existing, and a sidecar dir
-        # emptied of files. Anything else (corrupt footer, permission,
-        # transient I/O) must propagate — swallowing it would silently
-        # resurrect deleted vectors (review r9)
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            return None
-        raise
-
-
-def _ids_frame(spark, ids, id_col: str) -> DataFrame:
-    if isinstance(ids, DataFrame):
-        return ids.select(F.col(id_col).cast("long").alias(id_col)).distinct()
-    return spark.createDataFrame(
-        [(int(i),) for i in ids], f"{id_col} long"
-    ).distinct()
-
-
-def _tombstone_ceiling(
-    tomb: DataFrame, id_col: str, ceiling_col: str = "part_ceiling"
-) -> DataFrame:
-    """One row per deleted id with its highest ceiling: an id deleted,
-    re-added (higher ownership id) and deleted again keeps the max
-    ceiling, which kills every copy that existed at the LAST delete.
-    ``ceiling_col`` names the store's ownership level — ``part_ceiling``
-    for graph shards, ``batch_ceiling`` for the IVF lists (one contract,
-    one implementation; review r9b)."""
-    return tomb.groupBy(id_col).agg(
-        F.max(ceiling_col).alias("_tomb_ceiling")
-    )
-
-
-def _apply_tombstones(
-    stored: DataFrame, tomb: "DataFrame | None", id_col: str
-) -> DataFrame:
-    """Tag each stored node with ``_deleted`` (never NULL). Broadcast
-    hash join on the id — the sidecar is small by contract (compact
-    folds it away); the store side never shuffles."""
-    if tomb is None:
-        return stored.withColumn("_deleted", F.lit(False))
-    bad = {"_deleted", "_tomb_ceiling"} & set(stored.columns)
-    if bad:
-        raise ValueError(f"store payload columns collide with {sorted(bad)}")
-    ceil = _tombstone_ceiling(tomb, id_col)
-    return (
-        stored.join(F.broadcast(ceil), id_col, "left")
-        .withColumn(
-            "_deleted",
-            F.col("_tomb_ceiling").isNotNull()
-            & (F.col("part_id") <= F.col("_tomb_ceiling")),
-        )
-        .drop("_tomb_ceiling")
-    )
-
-
 def nsw_delete(
     spark,
     path: str,
@@ -930,31 +788,7 @@ def nsw_delete(
     Reclaim + permanence: ``nsw_compact`` drops tombstoned rows and
     clears the sidecar (after which ``nsw_undelete`` can no longer
     restore them)."""
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-
-    ids_df = _ids_frame(spark, ids, id_col)
-    stored = spark.read.parquet(path)
-    ceiling = stored.agg(F.max("part_id")).head()[0]
-    if strict:
-        miss = ids_df.join(stored.select(id_col), id_col, "left_anti")
-        # one job answers both existence and the sample (review r9:
-        # count + limit-collect re-ran the anti-join twice)
-        sample_rows = miss.take(6)
-        if sample_rows:
-            sample = sorted(r[0] for r in sample_rows[:5])
-            more = " (and more)" if len(sample_rows) > 5 else ""
-            raise ValueError(
-                f"nsw_delete: id(s) not present in the store at {path} "
-                f"(first few: {sample}{more}) — hnswlib mark_deleted "
-                f"parity; pass strict=False to tombstone regardless"
-            )
-    (
-        ids_df.withColumn("part_ceiling", F.lit(int(ceiling)).cast("int"))
-        .write.mode("append")
-        .parquet(_tombstones_path(path))
-    )
-    _bump_store_version(path)
-    invalidate()
+    delete_ids(spark, path, ids, NSW, id_col=id_col, strict=strict, op="nsw_delete")
 
 
 def nsw_undelete(spark, path: str, ids, *, id_col: str = "vec_id") -> int:
@@ -969,41 +803,40 @@ def nsw_undelete(spark, path: str, ids, *, id_col: str = "vec_id") -> int:
     (the sidecar rewrite swaps directories)."""
     import shutil
 
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-
-    if "://" in path:
-        raise ValueError(
-            f"nsw_undelete swaps the sidecar via os.rename and only "
-            f"supports local paths; got {path!r}"
-        )
-    tomb = _read_tombstones(spark, path, id_col)
+    require_local(path, "nsw_undelete")
+    tomb = read_tombstones(spark, path)
     if tomb is None:
         return 0
-    ids_df = _ids_frame(spark, ids, id_col)
+    ids_df = ids_frame(spark, ids, id_col)
     restored = (
         tomb.join(ids_df, id_col, "left_semi").select(id_col).distinct().count()
     )
     if restored == 0:
         return 0
     keep = tomb.join(ids_df, id_col, "left_anti")
-    tpath = _tombstones_path(path)
+    tpath = tombstones_path(path)
     if keep.limit(1).count() == 0:
         # nothing left: drop the sidecar entirely so readers (and the
         # prune tombstone guard) see a tombstone-free store
         shutil.rmtree(tpath)
-        _bump_store_version(path)
+        bump_store_version(path)
         invalidate()
-        return int(restored)
-    tmp = tpath + "__tmp"
-    try:
-        keep.write.mode("overwrite").parquet(tmp)
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    _swap_dir(tpath, tmp)
-    _bump_store_version(path)
-    invalidate()
+    else:
+        replace_dir(path, tpath, lambda tmp: keep.write.mode("overwrite").parquet(tmp))
     return int(restored)
+
+
+def _check_payload(meta: NswMeta, path: str, id_col: str, payload_cols, verb: str) -> None:
+    """New shards must carry the SAME node columns as the store: a
+    payload mismatch would silently create a mixed-schema store whose
+    predicate-filtered searches see NULLs on half the shards."""
+    want = {id_col, "vector", *payload_cols}
+    have = set(meta.df.columns) - {"part_id", "seq", "neighbors", "gamma"}
+    if want != have:
+        raise ValueError(
+            f"payload mismatch vs store at {path}: store has "
+            f"{sorted(have)}, {verb} would write {sorted(want)}"
+        )
 
 
 def nsw_upsert(
@@ -1027,35 +860,23 @@ def nsw_upsert(
     scan), then append the batch as fresh shards past the ceiling, so
     searches return the NEW vector for every updated id. O(batch)
     cost, no store rewrite; ``nsw_compact`` later folds the
-    deleted-old-copy history away."""
+    deleted-old-copy history away. The store is read once; both
+    halves use that read."""
     spark = df.sparkSession
+    meta = read_nsw_meta(spark, path)
     # validate payload compatibility BEFORE the tombstone write: the
     # delete must not land if the append is doomed — a failed append
     # after the tombstones would leave the incoming ids' live copies
-    # silently invisible with no replacement written (review r9)
-    stored_cols = set(spark.read.parquet(path).columns)
-    want = {id_col, "vector", *payload_cols}
-    have = stored_cols - {"part_id", "seq", "neighbors", "gamma"}
-    if want != have:
-        raise ValueError(
-            f"payload mismatch vs store at {path}: store has "
-            f"{sorted(have)}, upsert would write {sorted(want)}"
-        )
-    nsw_delete(spark, path, df.select(id_col), id_col=id_col, strict=False)
-    nsw_append(
-        df, path, m=m, ef_construction=ef_construction, gamma=gamma,
+    # silently invisible with no replacement written
+    _check_payload(meta, path, id_col, payload_cols, "upsert")
+    delete_ids(
+        spark, path, df.select(id_col), NSW, id_col=id_col, strict=False,
+        op="nsw_upsert", ceiling=meta.max_part,
+    )
+    _append_shards(
+        df, path, meta, m=m, ef_construction=ef_construction, gamma=gamma,
         vec_col=vec_col, id_col=id_col, payload_cols=payload_cols,
     )
-
-
-def _store_gamma(stored: DataFrame) -> int:
-    """The densification a persisted store was built at — read back from
-    its constant ``gamma`` column; legacy stores (written before the
-    column existed) read as γ=1."""
-    if "gamma" not in stored.columns:
-        return 1
-    g = stored.agg(F.max("gamma")).head()[0]
-    return int(g) if g is not None else 1
 
 
 def nsw_append(
@@ -1091,38 +912,57 @@ def nsw_append(
     shards; pass the store's γ here (and to ``nsw_compact``) to keep
     densification uniform.
     """
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
+    meta = read_nsw_meta(df.sparkSession, path)
+    _check_payload(meta, path, id_col, payload_cols, "append")
+    _append_shards(
+        df, path, meta, m=m, ef_construction=ef_construction, gamma=gamma,
+        vec_col=vec_col, id_col=id_col, payload_cols=payload_cols,
+    )
 
+
+def _append_shards(
+    df: DataFrame, path: str, meta: NswMeta, *, m, ef_construction, gamma,
+    vec_col, id_col, payload_cols,
+) -> None:
     invalidate()
-    spark = df.sparkSession
-    stored = spark.read.parquet(path)
-    # the appended shards must carry the SAME node columns as the store:
-    # a payload mismatch would silently create a mixed-schema store whose
-    # predicate-filtered searches see NULLs on half the shards
-    want = {id_col, "vector", *payload_cols}
-    have = set(stored.columns) - {"part_id", "seq", "neighbors", "gamma"}
-    if want != have:
-        raise ValueError(
-            f"payload mismatch vs store at {path}: store has "
-            f"{sorted(have)}, append would write {sorted(want)}"
-        )
-    if gamma is None:
-        gamma = _store_gamma(stored)
-    max_part = stored.agg(F.max("part_id")).head()[0]
-    # bump BEFORE the shard write as well as after (review r11): a
-    # crash between a committed data write and a trailing bump would
-    # leave the recorded token equal to the on-disk one, so the O(1)
-    # fast path would read the pre-append stats as provably fresh; the
-    # leading bump makes the crash window conservative (token mismatch
-    # → fingerprint walk → the new shards read as stale)
-    _bump_store_version(path)
-    _nsw_nodes(
-        df, m=m, ef_construction=ef_construction, gamma=gamma,
-        vec_col=vec_col, id_col=id_col, part_offset=int(max_part) + 1,
-        payload_cols=payload_cols,
-        vector_dtype=_store_vector_dtype(stored),
+    # bump BEFORE the shard write as well as after: a crash between a
+    # committed data write and a trailing bump would leave the recorded
+    # token equal to the on-disk one, so the O(1) fast path would read
+    # the pre-append stats as provably fresh; the leading bump makes the
+    # crash window conservative (token mismatch → fingerprint walk →
+    # the new shards read as stale)
+    bump_store_version(path)
+    nsw_nodes(
+        df, m=m, ef_construction=ef_construction,
+        gamma=meta.gamma if gamma is None else gamma,
+        vec_col=vec_col, id_col=id_col, part_offset=meta.max_part + 1,
+        payload_cols=payload_cols, vector_dtype=meta.vector_dtype,
     ).write.mode("append").partitionBy("part_id").parquet(path)
-    _bump_store_version(path)
+    bump_store_version(path)
+
+
+def _count_shards(path: str) -> int:
+    import os
+
+    return sum(d.startswith("part_id=") for d in os.listdir(path))
+
+
+def _write_shards(packed: DataFrame):
+    """A ``replace_dir`` writer for a re-packed shard store; returns the
+    new shard count."""
+
+    def write(tmp: str) -> int:
+        packed.write.mode("overwrite").partitionBy("part_id").parquet(tmp)
+        return _count_shards(tmp)
+
+    return write
+
+
+def _payload_of(raw: DataFrame, id_col: str) -> list[str]:
+    return [
+        c for c in raw.columns
+        if c not in {"part_id", "seq", "neighbors", "gamma", id_col, "vector"}
+    ]
 
 
 def nsw_compact(
@@ -1156,89 +996,43 @@ def nsw_compact(
     (different graphs ⇒ different greedy paths — same contract as any
     ANN rebuild).
 
+    Tombstoned rows are dropped HERE — compaction is the physical-delete
+    step the mark_deleted sidecar defers to (hnswlib never reclaims
+    marked nodes; FAISS remove_ids pays this same rebuild-shaped cost).
+    The sidecar vanishes with the swapped-out directory, which is
+    REQUIRED: compacted shards renumber to 0..n-1 below every old
+    ceiling, so a surviving tombstone would kill live re-added copies.
+    Corollary: compaction makes deletions permanent (``nsw_undelete``
+    can no longer restore them), and a store whose every row is
+    tombstoned is refused (``StoreEmptied``, a ValueError).
+
     The swap is write-tmp → replace: atomic enough for a local store;
     on an object store, write a versioned prefix and flip a pointer
     (manifest) instead — the parquet layout is identical either way.
     """
-    import shutil
-
-    # The swap below is os.rename-based and therefore LOCAL-ONLY; other
-    # readers accept s3a:/hdfs: URIs, so fail fast BEFORE the tmp write
-    # rather than stranding a *__compact_tmp directory after it (r8
-    # ADVICE). On an object store, write a versioned prefix and flip a
-    # manifest pointer instead — the parquet layout is identical.
-    if "://" in path:
-        raise ValueError(
-            f"nsw_compact swaps via os.rename and only supports local "
-            f"paths; got {path!r} — compact to a new prefix and flip a "
-            f"manifest pointer on remote stores"
-        )
-    raw = spark.read.parquet(path)
-    # default to the store's OWN densification: a maintenance compaction
-    # must not silently rebuild a γ=4 store at γ=1 (review r8b)
-    if gamma is None:
-        gamma = _store_gamma(raw)
-    # r9 reclaim: tombstoned rows are dropped HERE — compaction is the
-    # physical-delete step the mark_deleted sidecar defers to (hnswlib
-    # never reclaims marked nodes; FAISS remove_ids pays this same
-    # rebuild-shaped cost). The sidecar itself vanishes with the swap
-    # (it lives under `path`), which is REQUIRED for correctness, not
-    # just hygiene: compacted shards renumber to 0..n-1 below every old
-    # ceiling, so a surviving tombstone would kill live re-added copies.
-    # Corollary, documented: compaction makes deletions permanent —
-    # nsw_undelete can no longer restore them.
-    tomb = _read_tombstones(spark, path, id_col)
-    if tomb is not None:
-        raw = (
-            _apply_tombstones(raw, tomb, id_col)
-            .filter(~F.col("_deleted"))
-            .drop("_deleted")
-        )
-        if raw.limit(1).count() == 0:
-            raise ValueError(
-                f"nsw_compact would empty the store at {path}: every "
-                f"row is tombstoned — drop the store directory instead"
-            )
+    require_local(path, "nsw_compact")
+    meta = read_nsw_meta(spark, path)
+    raw = live_rows(spark, path, meta.df, id_col=id_col, op="nsw_compact")
     # payload columns survive compaction: re-packing is a layout change,
     # node metadata rides along (r8 predicate-filtered store search)
-    extras = [
-        c for c in raw.columns
-        if c not in {"part_id", "seq", "neighbors", "gamma", id_col, "vector"}
-    ]
+    extras = _payload_of(raw, id_col)
     stored = raw.select(id_col, "vector", *extras)
     if n_shards is None:
         n_shards = max(1, spark.sparkContext.defaultParallelism)
-    packed = _nsw_nodes(
+    packed = nsw_nodes(
         stored.repartition(n_shards, F.col(id_col)).sortWithinPartitions(id_col),
         m=m,
         ef_construction=ef_construction,
-        gamma=gamma,
+        # default to the store's OWN densification: a maintenance
+        # compaction must not silently rebuild a γ=4 store at γ=1
+        gamma=meta.gamma if gamma is None else gamma,
         vec_col="vector",
         id_col=id_col,
         part_offset=0,
         payload_cols=extras,
-        vector_dtype=_store_vector_dtype(raw),
+        vector_dtype=meta.vector_dtype,
     )
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-
-    tmp = path.rstrip("/") + "__compact_tmp"
-    try:
-        packed.write.mode("overwrite").partitionBy("part_id").parquet(tmp)
-        n_new = spark.read.parquet(tmp).select("part_id").distinct().count()
-    except BaseException:
-        # never strand a half-written tmp store next to the live one
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
-    # swap with no loss window (/code-review r7; shared helper r9): a
-    # crash mid-swap leaves either the old store (at path or path__old)
-    # or the new one, never nothing. The swap also drops the tombstone
-    # and stats sidecars with the old directory — REQUIRED: compacted
-    # shards renumber below every old ceiling. The version token went
-    # with the old directory too; a fresh one marks the new layout.
-    _swap_dir(path, tmp)
-    _bump_store_version(path)
-    invalidate()
-    return n_new
+    return replace_dir(path, path, _write_shards(packed))
 
 
 # ---------------------------------------------------------------------------
@@ -1247,402 +1041,10 @@ def nsw_compact(
 # the NSW store. Today every stored graph answers every query; at 100 TB
 # a store has thousands of shards and per-query fan-out IS the query
 # cost. With per-shard ball stats (centroid, max-member radius — the
-# ivf_search_exact bound, ann.py:248) most shards are provably unable to
+# bound ivf_search_exact uses) most shards are provably unable to
 # contain a top-k point and are skipped BEFORE their directory is read
 # (part_id is the partition column, so the kept-set filter is partition
 # pruning at the scan).
-
-
-def _stats_path(path: str) -> str:
-    return path.rstrip("/") + "/_shard_stats"
-
-
-def _attr_stats_path(path: str) -> str:
-    return path.rstrip("/") + "/_shard_attr_stats"
-
-
-def _numeric_stats_path(path: str) -> str:
-    return path.rstrip("/") + "/_shard_numeric_stats"
-
-
-def _dir_fingerprint(path: str) -> tuple:
-    """Content fingerprint of a sidecar directory: sorted (name, size,
-    mtime_ns) of its files. Strict-mtime memo keys alone are unsafe on
-    filesystems with coarse timestamp granularity — a rewrite landing
-    in the same tick would serve the stale memoized stats (ADVICE r9);
-    size+name+mtime of every file distinguishes any real parquet
-    rewrite (part file names embed fresh UUIDs)."""
-    import os
-
-    return tuple(
-        sorted(
-            (name, st.st_size, st.st_mtime_ns)
-            for name in os.listdir(path)
-            for st in (os.stat(os.path.join(path, name)),)
-        )
-    )
-
-
-_STORE_FP_FILE = "_store_fp.json"
-_STORE_VERSION_FILE = "_store_version.json"
-# reserved key inside _store_fp.json (shard keys are "part_id=N" dir
-# names, so no collision is possible)
-_FP_VERSION_KEY = "__store_version__"
-
-
-def _read_store_version(path: str) -> "dict | None":
-    """The store's current version token, or None when the store has no
-    token (legacy store, remote path, or a store last written by an
-    out-of-API writer). The token is an opaque ``{"v": counter,
-    "nonce": hex}`` pair — compared by full equality, never ordered."""
-    import json
-    import os
-
-    if "://" in path:
-        return None
-    vf = os.path.join(path, _STORE_VERSION_FILE)
-    if not os.path.exists(vf):
-        return None
-    try:
-        with open(vf) as f:
-            tok = json.load(f)
-    except (OSError, ValueError):
-        return None
-    return tok if isinstance(tok, dict) and "v" in tok else None
-
-
-def _bump_store_version(path: str) -> "dict | None":
-    """Write a fresh store-version token — called by EVERY store mutator
-    (r11, VERDICT r10 ask #1): the O(1) freshness protocol that replaces
-    ``ann_search``'s per-dispatch per-shard content-fingerprint walk.
-    Monotonic counter + random nonce (the nonce defeats ABA across
-    directory swaps and out-of-band restores of an old counter value).
-    Remote paths are a no-op (their readers already report
-    fresh/uncheckable and their mutators fail fast) — returns the new
-    token, or None when none was written. The leading ``_`` keeps the
-    json invisible to parquet reads of the store root."""
-    import json
-    import os
-
-    if "://" in path or not os.path.isdir(path):
-        return None
-    prev = _read_store_version(path)
-    tok = {
-        "v": (int(prev["v"]) + 1) if prev else 1,
-        "nonce": os.urandom(8).hex(),
-    }
-    with open(os.path.join(path, _STORE_VERSION_FILE), "w") as f:
-        json.dump(tok, f)
-    return tok
-
-
-def _shard_fp_hash(path: str, d: str) -> str:
-    """Stable digest of one shard directory's content fingerprint."""
-    import hashlib
-    import os
-
-    return hashlib.md5(
-        repr(_dir_fingerprint(os.path.join(path, d))).encode()
-    ).hexdigest()
-
-
-def _record_store_fp(
-    path: str, sidecar: str, fps: dict, version: "dict | None" = None
-) -> None:
-    """Persist the per-shard content fingerprints a stats write was
-    computed against, INSIDE the sidecar directory (the leading ``_``
-    keeps the json invisible to parquet reads of the sidecar).
-    ``version`` (r11): the store-version token snapshotted BEFORE the
-    stats aggregation — the O(1) freshness evidence ``_check_stats_fresh``
-    prefers over the per-shard fingerprint walk."""
-    import json
-    import os
-
-    rec = dict(fps)
-    if version is not None:
-        rec[_FP_VERSION_KEY] = version
-    with open(os.path.join(sidecar, _STORE_FP_FILE), "w") as f:
-        json.dump(rec, f)
-
-
-def _snapshot_store_fp(path: str) -> dict:
-    import os
-
-    return {
-        d: _shard_fp_hash(path, d)
-        for d in os.listdir(path)
-        if d.startswith("part_id=")
-    }
-
-
-def _check_stats_fresh(path: str, spath: str) -> list[str]:
-    """Shard directories whose CONTENT no longer matches what the
-    stats sidecar was computed against. Returns the stale shard-dir
-    names (empty = fresh); remote paths are uncheckable and report
-    fresh — their writers already fail fast.
-
-    Preferred evidence (r11, VERDICT r10 ask #1 — the O(1) protocol):
-    the store-version token. Every store mutator bumps
-    ``_store_version.json`` at the store root; ``nsw_stats_write``
-    records the token it computed against into the sidecar. Token
-    match ⇒ provably no in-API mutation since the stats were written —
-    ONE file read, no per-shard walk, flat in shard count. Token
-    mismatch (or either side absent) falls through to the r10 content
-    fingerprints rather than refusing outright: a mutation that never
-    touched shard content (e.g. a tombstone write, which the prune
-    rungs gate separately) must not permanently demote the store.
-
-    Fallback evidence (r10): the per-shard content fingerprints
-    ``nsw_stats_write`` snapshots BEFORE aggregating and records into
-    the sidecar (``_store_fp.json`` — name+size+mtime of every file):
-    a shard rewritten even in the same filesystem-timestamp tick
-    changes its part-file names (fresh UUIDs) and is caught, while a
-    store whose bytes are untouched stays fresh regardless of
-    timestamp granularity — closing BOTH directions of the ADVICE r9
-    coarse-mtime hazard. A shard RECORDED in the snapshot but since
-    deleted from disk also reads as stale (ADVICE r10 — the one-way
-    iteration over current dirs was blind to deletions). Sidecars
-    written before the fingerprint existed fall back to the mtime
-    rule, ``>=`` so a same-tick rewrite reads as stale (ambiguity
-    must refuse: pruning on stale stats silently breaks the exactness
-    contract, while a spurious refresh costs one ``nsw_stats_write``)."""
-    import json
-    import os
-
-    if "://" in path:
-        return []
-    fp_file = os.path.join(spath, _STORE_FP_FILE)
-    if os.path.exists(fp_file):
-        with open(fp_file) as f:
-            recorded = json.load(f)
-        rec_version = recorded.pop(_FP_VERSION_KEY, None)
-        if rec_version is not None and rec_version == _read_store_version(path):
-            return []  # O(1) fast path: no mutator ran since the stats
-        current = {
-            d for d in os.listdir(path) if d.startswith("part_id=")
-        }
-        stale = [
-            d for d in current if recorded.get(d) != _shard_fp_hash(path, d)
-        ]
-        stale.extend(sorted(set(recorded) - current))
-        return stale
-    stats_m = os.stat(spath).st_mtime_ns
-    return [
-        d
-        for d in os.listdir(path)
-        if d.startswith("part_id=")
-        and os.stat(os.path.join(path, d)).st_mtime_ns >= stats_m
-    ]
-
-
-# (appId, stats_path, dir content fingerprint) → (parts, cents, radii,
-# counts); the sidecar is S rows of driver-side constants and every pruned
-# query needs it — without the memo each serve call pays one collect job
-# (measured ~0.2-0.3 s on the ladder, comparable to the whole pruned
-# search). Fingerprint-keyed (per-file name+size+mtime, not the bare dir
-# mtime — ADVICE r9: coarse timestamp granularity could let a same-tick
-# rewrite serve stale stats): nsw_stats_write rewrites the sidecar
-# directory, so a refresh changes the key and stale entries die with the
-# app id.
-_STATS_MEMO: dict[tuple, tuple] = {}
-
-
-def _load_stats(spark, spath: str):
-    key = None
-    if "://" not in spath:
-        key = (
-            spark.sparkContext.applicationId,
-            spath,
-            _dir_fingerprint(spath),
-        )
-        hit = _STATS_MEMO.get(key)
-        if hit is not None:
-            return hit
-    srows = read_sidecar(spark, spath).collect()
-    out = (
-        np.asarray([int(r["part_id"]) for r in srows], dtype=np.int64),
-        np.asarray([list(r["centroid"]) for r in srows], np.float64),
-        np.asarray([float(r["radius"]) for r in srows], np.float64),
-        np.asarray([int(r["n"]) for r in srows], dtype=np.int64),
-    )
-    if key is not None:
-        _STATS_MEMO.clear()  # one store's stats at a time is plenty
-        _STATS_MEMO[key] = out
-    return out
-
-
-_ATTR_STATS_MEMO: dict[tuple, dict] = {}
-
-
-def _load_attr_stats(spark, apath: str) -> dict:
-    """``{attr: {part_id: {value_str: n}}}`` from the attr-counts
-    sidecar, fingerprint-memoized like ``_load_stats`` — every pruned
-    hybrid serve needs the same S×V rows."""
-    key = None
-    if "://" not in apath:
-        key = (
-            spark.sparkContext.applicationId,
-            apath,
-            _dir_fingerprint(apath),
-        )
-        hit = _ATTR_STATS_MEMO.get(key)
-        if hit is not None:
-            return hit
-    out: dict = {}
-    for r in read_sidecar(spark, apath).collect():
-        out.setdefault(r["attr"], {}).setdefault(int(r["part_id"]), {})[
-            r["value"]
-        ] = int(r["n"])
-    if key is not None:
-        _ATTR_STATS_MEMO.clear()
-        _ATTR_STATS_MEMO[key] = out
-    return out
-
-
-_NUMERIC_STATS_MEMO: dict[tuple, dict] = {}
-
-
-def _load_numeric_stats(spark, npath: str) -> dict:
-    """``{attr: {part_id: (vmin, vmax, n_present)}}`` from the numeric
-    zone-map sidecar, fingerprint-memoized like ``_load_stats``."""
-    key = None
-    if "://" not in npath:
-        key = (
-            spark.sparkContext.applicationId,
-            npath,
-            _dir_fingerprint(npath),
-        )
-        hit = _NUMERIC_STATS_MEMO.get(key)
-        if hit is not None:
-            return hit
-    out: dict = {}
-    for r in read_sidecar(spark, npath).collect():
-        out.setdefault(r["attr"], {})[int(r["part_id"])] = (
-            r["vmin"], r["vmax"], int(r["n_present"]),
-        )
-    if key is not None:
-        _NUMERIC_STATS_MEMO.clear()
-        _NUMERIC_STATS_MEMO[key] = out
-    return out
-
-
-# the §2.3 range operators the numeric zone maps understand; the
-# reference spells leq/geq (acorn.py:176-185 item_weight/model_year)
-# and its class-2/3 queries use strict < / > — all four are one
-# canonical form here
-_RANGE_OPS = {"<": "<", "<=": "<=", ">": ">", ">=": ">=",
-              "leq": "<=", "geq": ">="}
-
-
-def _range_shard_verdict(
-    vmin, vmax, n_present: int, op: str, value: float
-) -> tuple[int, bool]:
-    """(certain_passing_lower_bound, may_pass) for one shard from its
-    numeric zone map. A shard whose whole [vmin, vmax] passes the
-    range has EXACTLY ``n_present`` passing members (NULL/missing
-    attrs reject per §2.3, so only present values count); one whose
-    whole range fails has zero and is skippable; a straddling shard
-    may pass but certifies nothing (lower bound 0)."""
-    if n_present == 0 or vmin is None or vmax is None:
-        return 0, False
-    v = float(value)
-    if op == "<":
-        all_pass, none_pass = vmax < v, vmin >= v
-    elif op == "<=":
-        all_pass, none_pass = vmax <= v, vmin > v
-    elif op == ">":
-        all_pass, none_pass = vmin > v, vmax <= v
-    else:  # ">="
-        all_pass, none_pass = vmin >= v, vmax < v
-    if all_pass:
-        return n_present, True
-    if none_pass:
-        return 0, False
-    return 0, True
-
-
-def _canon_value_count(vals: "dict[str, int]", value) -> int:
-    """The passing count for ``value`` out of one partition's
-    value→count map, matching the way CATALYST equality would: the
-    sidecar keys are ``CAST(col AS STRING)`` of ONE column type, so at
-    most one key can equal the predicate value under numeric coercion
-    — ``2015.0`` against an int column must find the ``'2015'`` key
-    (the walk mask ``col == lit(2015.0)`` matches those rows), and a
-    plain ``str(value)`` lookup would silently report zero passing
-    members and prune every shard (review r10). Exact string first,
-    then numeric equality over parseable keys; non-numeric mismatches
-    count zero (consistent with the mask matching nothing).
-
-    Booleans (ADVICE r10): Spark's ``CAST(boolcol AS STRING)`` spells
-    ``'true'``/``'false'`` while ``str(True)`` is ``'True'`` and the
-    numeric fallback can't parse the keys — a bool predicate value
-    would silently prune every shard. Canonicalize to the lowercase
-    spelling and skip the numeric fallback (``float(True)`` is 1.0,
-    which must NOT match a numeric column's ``'1'`` key — Catalyst
-    does not equate ``intcol == lit(True)`` rows with 1s under ANSI)."""
-    if isinstance(value, bool):
-        return vals.get(str(value).lower(), 0)
-    s = str(value)
-    if s in vals:
-        return vals[s]
-    try:
-        fv = float(value)
-    except (TypeError, ValueError):
-        return 0
-    for k, n in vals.items():
-        try:
-            if float(k) == fv:
-                return n
-        except (TypeError, ValueError):
-            continue
-    return 0
-
-
-_CONJ_OPS = frozenset({"exact", "substring"}) | frozenset(_RANGE_OPS)
-
-
-def _normalize_conj(conj) -> "dict[str, tuple]":
-    """Validate and normalize one conjunction ``{attr: (op, value)}``
-    (specs may arrive as the §2.3 ``[op, value]`` lists). Every op must
-    be exact, substring, or a recognized range spelling — other ops have
-    no zone-map evidence, so pruning under them would be unsound.
-    Substring is provable EXACTLY from the per-shard value counts: the
-    sidecar holds counts per DISTINCT value, so the passing count is
-    the sum over keys containing the needle (see
-    ``_substring_value_count``) — which makes the conjunction cover the
-    reference's literal class-2 flagship shape ``item_weight < 2 ∧
-    brand substring Amazon`` (acorn.py:296-298)."""
-    if not conj:
-        raise ValueError(
-            "empty prune_conj conjunction — pass None for an unfiltered "
-            "pruned search"
-        )
-    out = {}
-    for attr, spec in dict(conj).items():
-        op, value = list(spec)[0], list(spec)[1]
-        if op not in _CONJ_OPS:
-            raise ValueError(
-                f"prune_conj op must be 'exact', 'substring' or one of "
-                f"{sorted(_RANGE_OPS)}, got {op!r} for {attr!r} — zone "
-                f"maps prove nothing about other ops"
-            )
-        out[str(attr)] = (op, value)
-    return out
-
-
-def _substring_value_count(vals: "dict[str, int]", needle) -> int:
-    """EXACT passing count for a case-sensitive substring constraint
-    out of one partition's distinct-value→count map — Σ counts over
-    keys containing the needle (§2.3 containment, `target in value`;
-    NULL values have the None key and never match). Exact like
-    `_canon_value_count`, not a bound: the sidecar enumerates every
-    distinct value, so substring is decidable per shard. Intended for
-    categorical/low-cardinality string attrs (the zone-map economics
-    note on ``nsw_stats_write(attrs=...)``)."""
-    s = str(needle)
-    return sum(
-        n for k, n in vals.items() if k is not None and s in k
-    )
 
 
 def _conj_shard_stats(
@@ -1660,7 +1062,7 @@ def _conj_shard_stats(
     lb_i (exact: the sidecar's exact count; range: n_present on
     all-pass, else 0) and a may-pass verdict. Bonferroni gives the
     sound conjunction bound |∩ P_i| ≥ n − Σ (n − lb_i): under-counting
-    only widens the τ cover (``_prune_plan(possible=...)``), a shard
+    only widens the τ cover (``prune_plan(possible=...)``), a shard
     where ANY constraint is none-pass provably holds no passing member,
     and a cover falling short of k keeps every possible shard."""
     n_parts = len(stat_parts)
@@ -1670,8 +1072,8 @@ def _conj_shard_stats(
         if op in ("exact", "substring"):
             by_part = attr_counts[attr]
             counter = (
-                _canon_value_count if op == "exact"
-                else _substring_value_count
+                canon_value_count if op == "exact"
+                else substring_value_count
             )
             passing = np.asarray(
                 [
@@ -1682,10 +1084,10 @@ def _conj_shard_stats(
             )
             may = passing > 0
         else:
-            r_op = _RANGE_OPS[op]
+            r_op = RANGE_OPS[op]
             zones = num_stats[attr]
             verdicts = [
-                _range_shard_verdict(
+                range_shard_verdict(
                     *zones.get(int(p), (None, None, 0)), r_op, float(value)
                 )
                 for p in stat_parts
@@ -1696,32 +1098,6 @@ def _conj_shard_stats(
         deficits += member_counts - passing
     lb = np.maximum(0, member_counts - deficits)
     return np.where(possible, lb, 0), possible
-
-
-def _conj_pred_col(conj: "dict[str, tuple]"):
-    """The conjunction as ONE Catalyst walk mask over the store's flat
-    payload columns — identical to ``build_predicate`` over flat
-    passthrough accessors for these ops (NULL comparison yields SQL
-    NULL, which the walk's fillna(False) rejects — §2.3's strict
-    missing-attribute rejection; the router's dispatch gate
-    ``_flat_passthrough`` guarantees the accessor semantics coincide)."""
-    cond = None
-    for attr, (op, value) in conj.items():
-        col = F.col(attr)
-        if op == "exact":
-            c = col == F.lit(value)
-        elif op == "substring":
-            c = col.contains(F.lit(value))
-        else:
-            r_op = _RANGE_OPS[op]
-            c = {
-                "<": col < F.lit(value),
-                "<=": col <= F.lit(value),
-                ">": col > F.lit(value),
-                ">=": col >= F.lit(value),
-            }[r_op]
-        cond = c if cond is None else cond & c
-    return cond
 
 
 def nsw_stats_write(
@@ -1766,18 +1142,16 @@ def nsw_stats_write(
     nothing. One S-row partial-agg pass per attribute; columns must
     be numeric (min/max over a string column would compare
     lexicographically and silently break the bound)."""
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-
     # snapshot the store-version token and the shard-content
     # fingerprints BEFORE any aggregation: a mutation landing mid-write
     # bumps the token (and changes shard content), so the recorded
     # evidence reads as stale — never as falsely fresh
-    # (_check_stats_fresh). A store with no token yet (pre-r11 layout)
+    # (check_stats_fresh). A store with no token yet (pre-r11 layout)
     # gets one initialized here so its sidecars join the O(1) protocol.
     ver = None
     if "://" not in path:
-        ver = _read_store_version(path) or _bump_store_version(path)
-    fps = None if "://" in path else _snapshot_store_fp(path)
+        ver = read_store_version(path) or bump_store_version(path)
+    fps = None if "://" in path else snapshot_store_fp(path)
     stored = spark.read.parquet(path)
     out_schema = "part_id int, centroid array<double>, radius double, n long"
 
@@ -1799,9 +1173,9 @@ def nsw_stats_write(
         .groupBy("part_id")
         .applyInPandas(stats, out_schema)
     )
-    sdf.write.mode("overwrite").parquet(_stats_path(path))
+    sdf.write.mode("overwrite").parquet(stats_path(path))
     if fps is not None:
-        _record_store_fp(path, _stats_path(path), fps, ver)
+        record_store_fp(path, stats_path(path), fps, ver)
     if attrs:
         missing = [a for a in attrs if a not in stored.columns]
         if missing:
@@ -1821,9 +1195,9 @@ def nsw_stats_write(
                 .agg(F.count("*").alias("n"))
             )
             counts = part if counts is None else counts.unionByName(part)
-        counts.write.mode("overwrite").parquet(_attr_stats_path(path))
+        counts.write.mode("overwrite").parquet(attr_stats_path(path))
         if fps is not None:
-            _record_store_fp(path, _attr_stats_path(path), fps, ver)
+            record_store_fp(path, attr_stats_path(path), fps, ver)
     if numeric_attrs:
         from pyspark.sql.types import NumericType
 
@@ -1849,14 +1223,14 @@ def nsw_stats_write(
                 F.count(F.col(a)).alias("n_present"),
             )
             zones = part if zones is None else zones.unionByName(part)
-        zones.write.mode("overwrite").parquet(_numeric_stats_path(path))
+        zones.write.mode("overwrite").parquet(numeric_stats_path(path))
         if fps is not None:
-            _record_store_fp(path, _numeric_stats_path(path), fps, ver)
+            record_store_fp(path, numeric_stats_path(path), fps, ver)
     invalidate()
-    return read_sidecar(spark, _stats_path(path)).count()
+    return len(load_stats(spark, stats_path(path))[0])
 
 
-def _prune_plan(
+def prune_plan(
     parts: np.ndarray,
     cents: np.ndarray,
     radii: np.ndarray,
@@ -1936,19 +1310,15 @@ def nsw_write_clustered(
     makes ball-bound pruning bite. ``nsw_write`` shards by arrival
     order (hash-ish locality), so every shard's ball covers most of
     the space and nothing prunes; here a bounded-sample k-means (the
-    ivf_build trainer, ann.py:55) assigns each vector to its nearest
+    ``ivf_build`` trainer, ``ann._kmeans``) assigns each vector to its nearest
     of ``n_shards`` centroids and each CLUSTER becomes its own shard
     (one graph per cluster_id group — a hash repartition would merge
     arbitrary distant clusters into one shard and fatten its ball;
-    see ``_nsw_nodes(part_col=...)``), so shard balls are tight and
+    see ``nsw_nodes(part_col=...)``), so shard balls are tight and
     distant ones are provably skippable. Writes the ``_shard_stats``
     sidecar as the final step. Same store layout as ``nsw_write``
     otherwise — every reader/maintenance op works unchanged."""
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-    from acorn_hybrid_vector_search_spark.operators.ann import (
-        _kmeans,
-        assign_clusters,
-    )
+    from acorn_hybrid_vector_search_spark.operators.ann import train_assign
 
     if "cluster_id" in df.columns or "cluster_id" in payload_cols:
         raise ValueError(
@@ -1956,54 +1326,40 @@ def nsw_write_clustered(
             "kmeans assignment — a corpus column (or payload) of that "
             "name would be silently overwritten / dropped; rename it"
         )
-    n = df.count()
-    frac = min(1.0, sample_rows / max(n, 1))
-    sample_df = (
-        df.select(vec_col) if frac >= 1.0
-        else df.select(vec_col).sample(frac, seed=seed)
+    _, assigned = train_assign(
+        df, n_shards, vec_col=vec_col, sample_rows=sample_rows,
+        n_iter=n_iter, seed=seed,
     )
-    sample = np.asarray([r[0] for r in sample_df.collect()], dtype=np.float64)
-    centroids = _kmeans(sample, n_shards, n_iter, seed)
-    assigned = assign_clusters(df, centroids, vec_col=vec_col)
     invalidate()
-    _clear_sidecars(path, df.sparkSession)
-    _nsw_nodes(
+    clear_sidecars(path, df.sparkSession)
+    nsw_nodes(
         assigned, m=m, ef_construction=ef_construction, gamma=gamma,
         vec_col=vec_col, id_col=id_col, part_offset=0,
         payload_cols=payload_cols, part_col="cluster_id",
         vector_dtype=vector_dtype,
     ).write.mode("overwrite").partitionBy("part_id").parquet(path)
-    _bump_store_version(path)
+    bump_store_version(path)
     nsw_stats_write(
         df.sparkSession, path,
         attrs=stats_attrs, numeric_attrs=numeric_stats_attrs,
     )
 
 
-def _absent_ok(fn, default):
-    """Run a sidecar load, reading a MISSING sidecar as its absence
-    value instead of an exception — remote paths skip the os-level
-    existence checks, so the router-facing helpers must stay total
-    there (review r10: ann_search calls them on every invocation; a
-    remote store without some optional sidecar must read as
-    'uncovered', never crash). Only the legitimate no-sidecar error
-    shapes are swallowed (the _read_tombstones rule); 'Path does not
-    exist' is the pre-error-class spelling older Spark versions raise
-    for the same condition (ADVICE r10 — without it a remote store
-    lacking an optional sidecar crashes ann_search on those versions)."""
-    from pyspark.errors import AnalysisException
+def _fresh_zone_attrs(spark, path: str, side: str, load) -> frozenset:
+    """The attrs covered by the zone-map sidecar ``side`` when it and
+    the ball-stats sidecar are present and content-fresh, else the empty
+    set (remote stores are uncheckable and answer from the sidecar)."""
+    import os
 
-    try:
-        return fn()
-    except AnalysisException as e:
-        msg = str(e)
-        if (
-            "PATH_NOT_FOUND" in msg
-            or "UNABLE_TO_INFER_SCHEMA" in msg
-            or "Path does not exist" in msg
-        ):
-            return default
-        raise
+    spath = stats_path(path)
+    if "://" not in path and not (
+        os.path.exists(spath)
+        and os.path.exists(side)
+        and not check_stats_fresh(path, spath)
+        and not check_stats_fresh(path, side)
+    ):
+        return frozenset()
+    return frozenset(load(spark, side) or ())
 
 
 def pruned_match_attrs(spark, path: str) -> frozenset:
@@ -2013,19 +1369,7 @@ def pruned_match_attrs(spark, path: str) -> frozenset:
     too). Returns the empty set on any missing/stale sidecar — the
     router consults this BEFORE picking the ``nsw_pruned_match`` rung,
     so it never routes into ``nsw_read_topk``'s staleness guards."""
-    import os
-
-    spath, apath = _stats_path(path), _attr_stats_path(path)
-    if "://" not in path:
-        if not (os.path.exists(spath) and os.path.exists(apath)):
-            return frozenset()
-        if _check_stats_fresh(path, spath):
-            return frozenset()
-        if _check_stats_fresh(path, apath):
-            return frozenset()
-    return _absent_ok(
-        lambda: frozenset(_load_attr_stats(spark, apath)), frozenset()
-    )
+    return _fresh_zone_attrs(spark, path, attr_stats_path(path), load_attr_stats)
 
 
 def pruned_range_attrs(spark, path: str) -> frozenset:
@@ -2035,18 +1379,8 @@ def pruned_range_attrs(spark, path: str) -> frozenset:
     set on any missing/stale sidecar — the ``pruned_match_attrs``
     contract for the numeric rung (router rule 6's range arm never
     routes into a staleness guard)."""
-    import os
-
-    spath, npath = _stats_path(path), _numeric_stats_path(path)
-    if "://" not in path:
-        if not (os.path.exists(spath) and os.path.exists(npath)):
-            return frozenset()
-        if _check_stats_fresh(path, spath):
-            return frozenset()
-        if _check_stats_fresh(path, npath):
-            return frozenset()
-    return _absent_ok(
-        lambda: frozenset(_load_numeric_stats(spark, npath)), frozenset()
+    return _fresh_zone_attrs(
+        spark, path, numeric_stats_path(path), load_numeric_stats
     )
 
 
@@ -2058,14 +1392,9 @@ def store_has_tombstones(spark, path: str) -> bool:
     tombstoned store straight into the guard). Local stores answer
     from the sidecar directory listing (emptied sidecars are rmtree'd
     by nsw_undelete — r9); remote stores pay one bounded read."""
-    import os
-
-    tpath = _tombstones_path(path)
     if "://" not in path:
-        return os.path.isdir(tpath) and any(
-            not f.startswith((".", "_")) for f in os.listdir(tpath)
-        )
-    tomb = _read_tombstones(spark, path, "vec_id")
+        return has_data(tombstones_path(path))
+    tomb = read_tombstones(spark, path)
     return tomb is not None and tomb.limit(1).count() > 0
 
 
@@ -2083,19 +1412,19 @@ def estimate_kept_fraction(
     are missing/stale (the rung's own guards then decide)."""
     import os
 
-    spath = _stats_path(path)
+    spath = stats_path(path)
     if "://" not in path and not os.path.exists(spath):
         return None
-    if _check_stats_fresh(path, spath):
+    if check_stats_fresh(path, spath):
         return None
-    loaded = _absent_ok(lambda: _load_stats(spark, spath), None)
+    loaded = load_stats(spark, spath)
     if loaded is None:
         return None
     parts, cents, radii, counts = loaded
     total = int(counts.sum())
     if not total:
         return None
-    kept = _prune_plan(
+    kept = prune_plan(
         parts, cents, radii, counts,
         np.asarray([list(query_vec)], dtype=np.float64), k,
     )[0]
@@ -2113,13 +1442,9 @@ def pruned_full_beam(spark, path: str, k: int) -> int:
     approximate once a shard outgrew it (review r9b). Reads max shard
     size off the stats sidecar (memoized); a missing sidecar returns k
     and falls through to ``nsw_read_topk``'s own guard."""
-    import os
-
-    spath = _stats_path(path)
-    if "://" in spath or os.path.exists(spath):
-        loaded = _absent_ok(lambda: _load_stats(spark, spath), None)
-        if loaded is not None and loaded[3].size:
-            return max(k, int(loaded[3].max()))
+    loaded = load_stats(spark, stats_path(path))
+    if loaded is not None and loaded[3].size:
+        return max(k, int(loaded[3].max()))
     return k
 
 
@@ -2154,39 +1479,12 @@ def nsw_recluster(
     before and after (pinned); pruned searches work again immediately
     after — no manual stats refresh. Returns the new shard count.
     Local paths only (directory swap), like ``nsw_compact``."""
-    import shutil
+    from acorn_hybrid_vector_search_spark.operators.ann import train_assign
 
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-    from acorn_hybrid_vector_search_spark.operators.ann import (
-        _kmeans,
-        assign_clusters,
-    )
-
-    if "://" in path:
-        raise ValueError(
-            f"nsw_recluster swaps via os.rename and only supports local "
-            f"paths; got {path!r} — recluster to a new prefix and flip a "
-            f"manifest pointer on remote stores"
-        )
-    raw = spark.read.parquet(path)
-    if gamma is None:
-        gamma = _store_gamma(raw)
-    tomb = _read_tombstones(spark, path, id_col)
-    if tomb is not None:
-        raw = (
-            _apply_tombstones(raw, tomb, id_col)
-            .filter(~F.col("_deleted"))
-            .drop("_deleted")
-        )
-        if raw.limit(1).count() == 0:
-            raise ValueError(
-                f"nsw_recluster would empty the store at {path}: every "
-                f"row is tombstoned — drop the store directory instead"
-            )
-    extras = [
-        c for c in raw.columns
-        if c not in {"part_id", "seq", "neighbors", "gamma", id_col, "vector"}
-    ]
+    require_local(path, "nsw_recluster")
+    meta = read_nsw_meta(spark, path)
+    raw = live_rows(spark, path, meta.df, id_col=id_col, op="nsw_recluster")
+    extras = _payload_of(raw, id_col)
     if "cluster_id" in extras:
         raise ValueError(
             "nsw_recluster claims the 'cluster_id' column for its kmeans "
@@ -2194,39 +1492,56 @@ def nsw_recluster(
             "silently dropped; rebuild via nsw_write_clustered instead"
         )
     stored = raw.select(id_col, "vector", *extras)
-    n = stored.count()
-    frac = min(1.0, sample_rows / max(n, 1))
-    sample_df = (
-        stored.select("vector") if frac >= 1.0
-        else stored.select("vector").sample(frac, seed=seed)
+    _, assigned = train_assign(
+        stored, n_shards, vec_col="vector", sample_rows=sample_rows,
+        n_iter=n_iter, seed=seed,
     )
-    sample = np.asarray([r[0] for r in sample_df.collect()], dtype=np.float64)
-    centroids = _kmeans(sample, n_shards, n_iter, seed)
-    assigned = assign_clusters(stored, centroids, vec_col="vector")
-    packed = _nsw_nodes(
-        assigned, m=m, ef_construction=ef_construction, gamma=gamma,
+    packed = nsw_nodes(
+        assigned, m=m, ef_construction=ef_construction,
+        gamma=meta.gamma if gamma is None else gamma,
         vec_col="vector", id_col=id_col, part_offset=0,
         payload_cols=extras, part_col="cluster_id",
-        vector_dtype=_store_vector_dtype(raw),
+        vector_dtype=meta.vector_dtype,
     )
-    tmp = path.rstrip("/") + "__recluster_tmp"
-    try:
-        packed.write.mode("overwrite").partitionBy("part_id").parquet(tmp)
-        n_new = spark.read.parquet(tmp).select("part_id").distinct().count()
-    except BaseException:
-        shutil.rmtree(tmp, ignore_errors=True)
-        raise
     # the swap drops the tombstone and stats sidecars with the old
     # directory — REQUIRED (reclustered shards renumber below every old
     # ceiling), and the fresh stats land right after (recording the
-    # fresh version token the bump writes here)
-    _swap_dir(path, tmp)
-    _bump_store_version(path)
-    invalidate()
+    # fresh version token the swap wrote)
+    n_new = replace_dir(path, path, _write_shards(packed))
     nsw_stats_write(
         spark, path, attrs=stats_attrs, numeric_attrs=numeric_stats_attrs
     )
-    return int(n_new)
+    return n_new
+
+
+_ZONE_MAPS = {
+    "attrs": (attr_stats_path, load_attr_stats, "_shard_attr_stats"),
+    "numeric_attrs": (numeric_stats_path, load_numeric_stats, "_shard_numeric_stats"),
+}
+
+
+def _zone_map(spark, path: str, kw: str, need, op: str) -> dict:
+    """The zone-map sidecar ``nsw_stats_write(<kw>=...)`` writes, for a
+    pruned read: refused when absent, stale against the shards, or not
+    covering every attr in ``need`` — pruning on missing or stale
+    evidence would silently break the exactness contract."""
+    side_of, load, name = _ZONE_MAPS[kw]
+    side = side_of(path)
+    hint = f"run nsw_stats_write({kw}={list(need)!r})"
+    zones = load(spark, side)
+    if zones is None:
+        raise ValueError(f"{op} but no {name} sidecar at {path} — {hint}")
+    if newer := check_stats_fresh(path, side):
+        raise ValueError(
+            f"stale {name} at {path}: shard dir(s) {sorted(newer)[:3]}… "
+            f"were rewritten at or after the zone map — {hint}"
+        )
+    if missing := [a for a in need if a not in zones]:
+        raise ValueError(
+            f"{name} at {path} does not cover {missing} (covered: "
+            f"{sorted(zones)}) — {hint}"
+        )
+    return zones
 
 
 def nsw_read_topk(
@@ -2310,7 +1625,7 @@ def nsw_read_topk(
     a pruned shard could hide a passing point), as do tombstones
     (stats still count dead members — compact first) and a stale
     shard set. Full beam ⇒ pruned ≡ unpruned ≡ exact (the bound
-    argument in ``_prune_plan``); budgeted, kept-shard walks are
+    argument in ``prune_plan``); budgeted, kept-shard walks are
     bit-identical but a pruned shard no longer contributes its
     beyond-τ candidates.
 
@@ -2348,7 +1663,7 @@ def nsw_read_topk(
     present count to the τ cover, one whose whole range fails is
     provably empty of passing members and its directory is never
     read, and a straddling shard stays searchable but certifies
-    nothing (``_prune_plan(possible=...)`` — under-counting only
+    nothing (``prune_plan(possible=...)`` — under-counting only
     widens the kept set, so exactness holds at full beam). The range
     rides the walk as the usual Catalyst mask (NULL/missing attr
     rejects, §2.3). Mutually exclusive with ``prune_match`` and
@@ -2441,18 +1756,18 @@ def nsw_read_topk(
                 "search, or a {attr: (op, value)} conjunction"
             )
         if all(isinstance(ck, str) for ck in conj_keys):
-            conj_shared = _normalize_conj(prune_conj)
+            conj_shared = normalize_conj(prune_conj)
         else:
             conj_by_qid = {
-                int(q): _normalize_conj(c)
+                int(q): normalize_conj(c)
                 for q, c in dict(prune_conj).items()
             }
             if unknown := [q for q in sorted(conj_by_qid) if q not in qset]:
                 raise ValueError(
                     f"prune_conj for ids not in the batch: {unknown}"
                 )
-    stored = _read_store(spark, path)
-    tomb = _read_tombstones(spark, path, id_col)
+    stored = read_parquet(spark, path)
+    tomb = read_tombstones(spark, path)
     allowed: dict[int, np.ndarray] | None = None
     if prune:
         import os
@@ -2472,13 +1787,14 @@ def nsw_read_topk(
                 "candidates — run nsw_compact (which reclaims and clears "
                 "the sidecar), then nsw_stats_write"
             )
-        spath = _stats_path(path)
-        if "://" not in spath and not os.path.exists(spath):
+        spath = stats_path(path)
+        loaded = load_stats(spark, spath)
+        if loaded is None:
             raise ValueError(
                 f"prune=True but no _shard_stats sidecar at {path} — "
                 f"build with nsw_write_clustered or run nsw_stats_write"
             )
-        stat_parts, cents, radii, counts = _load_stats(spark, spath)
+        stat_parts, cents, radii, counts = loaded
         # shard set from the partition directory listing when local —
         # free vs a distinct() job on every pruned query
         if "://" not in path:
@@ -2504,7 +1820,7 @@ def nsw_read_topk(
         # leaves the ids identical while the balls moved — any shard
         # directory rewritten at-or-after the sidecar means the stats
         # no longer describe it (>=: same-tick is ambiguous ⇒ stale)
-        if newer := _check_stats_fresh(path, spath):
+        if newer := check_stats_fresh(path, spath):
             raise ValueError(
                 f"stale _shard_stats at {path}: shard dir(s) "
                 f"{sorted(newer)[:3]}… were rewritten at or after the "
@@ -2514,36 +1830,18 @@ def nsw_read_topk(
         per_query_counts: "list[np.ndarray] | None" = None
         per_query_possible: "list[np.ndarray | None] | None" = None
         if prune_match is not None:
-            apath = _attr_stats_path(path)
             need = (
                 sorted({a for a, _ in match_by_qid.values()})
                 if match_by_qid is not None
                 else [prune_match[0]]
             )
-            if "://" not in apath and not os.path.exists(apath):
-                raise ValueError(
-                    f"prune_match but no _shard_attr_stats sidecar at "
-                    f"{path} — run nsw_stats_write(attrs={need!r})"
-                )
-            if newer := _check_stats_fresh(path, apath):
-                raise ValueError(
-                    f"stale _shard_attr_stats at {path}: shard "
-                    f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                    f"or after the counts — run nsw_stats_write"
-                )
-            attr_counts = _load_attr_stats(spark, apath)
-            if missing := [a for a in need if a not in attr_counts]:
-                raise ValueError(
-                    f"_shard_attr_stats at {path} does not cover "
-                    f"{missing} (covered: {sorted(attr_counts)}) — run "
-                    f"nsw_stats_write(attrs={need!r})"
-                )
+            attr_counts = _zone_map(spark, path, "attrs", need, "prune_match")
 
             def _match_counts(a: str, v) -> np.ndarray:
                 by_part = attr_counts[a]
                 return np.asarray(
                     [
-                        _canon_value_count(by_part.get(int(p), {}), v)
+                        canon_value_count(by_part.get(int(p), {}), v)
                         for p in stat_parts
                     ],
                     dtype=np.int64,
@@ -2574,50 +1872,26 @@ def nsw_read_topk(
                 pred_qids = sorted(preds)
         elif prune_range is not None:
             r_attr, r_op_raw, r_val = prune_range
-            r_op = _RANGE_OPS.get(r_op_raw)
+            r_op = RANGE_OPS.get(r_op_raw)
             if r_op is None:
                 raise ValueError(
                     f"prune_range op must be one of "
-                    f"{sorted(_RANGE_OPS)}, got {r_op_raw!r} — zone "
+                    f"{sorted(RANGE_OPS)}, got {r_op_raw!r} — zone "
                     f"maps prove all-pass/none-pass for half-open "
                     f"ranges only (exact-match is prune_match)"
                 )
-            npath = _numeric_stats_path(path)
-            if "://" not in npath and not os.path.exists(npath):
-                raise ValueError(
-                    f"prune_range but no _shard_numeric_stats sidecar "
-                    f"at {path} — run nsw_stats_write("
-                    f"numeric_attrs=[{r_attr!r}])"
-                )
-            if newer := _check_stats_fresh(path, npath):
-                raise ValueError(
-                    f"stale _shard_numeric_stats at {path}: shard "
-                    f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                    f"or after the zone maps — run nsw_stats_write"
-                )
-            num_stats = _load_numeric_stats(spark, npath)
-            if r_attr not in num_stats:
-                raise ValueError(
-                    f"_shard_numeric_stats at {path} does not cover "
-                    f"{r_attr!r} (covered: {sorted(num_stats)}) — run "
-                    f"nsw_stats_write(numeric_attrs=[{r_attr!r}])"
-                )
-            zones = num_stats[r_attr]
+            zones = _zone_map(
+                spark, path, "numeric_attrs", [r_attr], "prune_range"
+            )[r_attr]
             verdicts = [
-                _range_shard_verdict(
+                range_shard_verdict(
                     *zones.get(int(p), (None, None, 0)), r_op, float(r_val)
                 )
                 for p in stat_parts
             ]
             counts = np.asarray([c for c, _ in verdicts], dtype=np.int64)
             possible = np.asarray([m for _, m in verdicts], dtype=bool)
-            col = F.col(r_attr)
-            predicate = {
-                "<": col < F.lit(r_val),
-                "<=": col <= F.lit(r_val),
-                ">": col > F.lit(r_val),
-                ">=": col >= F.lit(r_val),
-            }[r_op]
+            predicate = range_pred_col(r_attr, r_op, r_val)
             has_pred = True
         elif conj_shared is not None or conj_by_qid is not None:
             conj_dicts = (
@@ -2663,57 +1937,19 @@ def nsw_read_topk(
                     if c_op not in ("exact", "substring")
                 }
             )
-            attr_counts: dict = {}
-            if need_exact:
-                apath = _attr_stats_path(path)
-                if "://" not in apath and not os.path.exists(apath):
-                    raise ValueError(
-                        f"prune_conj with exact constraints but no "
-                        f"_shard_attr_stats sidecar at {path} — run "
-                        f"nsw_stats_write(attrs={need_exact!r})"
-                    )
-                if newer := _check_stats_fresh(path, apath):
-                    raise ValueError(
-                        f"stale _shard_attr_stats at {path}: shard "
-                        f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                        f"or after the counts — run nsw_stats_write"
-                    )
-                attr_counts = _load_attr_stats(spark, apath)
-                if missing := [
-                    a for a in need_exact if a not in attr_counts
-                ]:
-                    raise ValueError(
-                        f"_shard_attr_stats at {path} does not cover "
-                        f"{missing} (covered: {sorted(attr_counts)}) — "
-                        f"run nsw_stats_write(attrs={need_exact!r})"
-                    )
-            num_stats: dict = {}
-            if need_range:
-                npath = _numeric_stats_path(path)
-                if "://" not in npath and not os.path.exists(npath):
-                    raise ValueError(
-                        f"prune_conj with range constraints but no "
-                        f"_shard_numeric_stats sidecar at {path} — run "
-                        f"nsw_stats_write(numeric_attrs={need_range!r})"
-                    )
-                if newer := _check_stats_fresh(path, npath):
-                    raise ValueError(
-                        f"stale _shard_numeric_stats at {path}: shard "
-                        f"dir(s) {sorted(newer)[:3]}… were rewritten at "
-                        f"or after the zone maps — run nsw_stats_write"
-                    )
-                num_stats = _load_numeric_stats(spark, npath)
-                if missing := [a for a in need_range if a not in num_stats]:
-                    raise ValueError(
-                        f"_shard_numeric_stats at {path} does not cover "
-                        f"{missing} (covered: {sorted(num_stats)}) — run "
-                        f"nsw_stats_write(numeric_attrs={need_range!r})"
-                    )
+            attr_counts = (
+                _zone_map(spark, path, "attrs", need_exact, "prune_conj")
+                if need_exact else {}
+            )
+            num_stats = (
+                _zone_map(spark, path, "numeric_attrs", need_range, "prune_conj")
+                if need_range else {}
+            )
             if conj_shared is not None:
                 counts, possible = _conj_shard_stats(
                     conj_shared, attr_counts, num_stats, stat_parts, counts
                 )
-                predicate = _conj_pred_col(conj_shared)
+                predicate = conj_pred_col(conj_shared)
                 has_pred = True
             else:
                 # per-query serving shape (the prune_match mapping
@@ -2733,14 +1969,14 @@ def nsw_read_topk(
                     per_query_counts.append(lb)
                     per_query_possible.append(poss)
                 preds = {
-                    q: _conj_pred_col(c) for q, c in conj_by_qid.items()
+                    q: conj_pred_col(c) for q, c in conj_by_qid.items()
                 }
                 pred_qids = sorted(preds)
         if per_query_counts is not None:
             kept = []
             for qi, q in enumerate(qids):
                 kept.extend(
-                    _prune_plan(
+                    prune_plan(
                         stat_parts, cents, radii, per_query_counts[qi],
                         qmat[qi : qi + 1], k,
                         skip_empty=(
@@ -2754,7 +1990,7 @@ def nsw_read_topk(
                     )
                 )
         else:
-            kept = _prune_plan(
+            kept = prune_plan(
                 stat_parts, cents, radii, counts, qmat, k,
                 skip_empty=prune_match is not None,
                 possible=possible,
@@ -2797,7 +2033,7 @@ def nsw_read_topk(
         )
 
     if tomb is not None:
-        stored = _apply_tombstones(stored, tomb, id_col)
+        stored = apply_tombstones(stored, tomb, id_col)
     if has_pred:
         stored = stored.withColumn("_pass", predicate)
     elif pred_qids:
@@ -3057,7 +2293,7 @@ def nsw_dense_topk(
     if query_block < 1:
         raise ValueError(f"query_block must be >= 1, got {query_block}")
 
-    stored = _read_store(spark, path)
+    stored = read_parquet(spark, path)
     if missing := [
         a for a in mask_plan.match_attrs if a not in stored.columns
     ]:
@@ -3066,9 +2302,9 @@ def nsw_dense_topk(
             f"columns of {path!r} — the fast path reads flat columns; "
             "use predicates= (Catalyst) for derived/nested attributes"
         )
-    tomb = _read_tombstones(spark, path, id_col)
+    tomb = read_tombstones(spark, path)
     if tomb is not None:
-        stored = _apply_tombstones(stored, tomb, id_col)
+        stored = apply_tombstones(stored, tomb, id_col)
     stored, mask_cols = mask_plan.attach(stored)
     # column-prune the scan: the dense kernel needs neither adjacency
     # nor part_id (fragments are anonymous — r12 self-review)
@@ -3157,15 +2393,11 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
     Payload columns ride along so §2.3 predicate masks evaluate on the
     sidecar scan itself (same Catalyst machinery as ``nsw_dense_topk``).
     Freshness: the sidecar records the store-version token + per-shard
-    content fingerprints (the ``_record_store_fp`` protocol); the
+    content fingerprints (the ``record_store_fp`` protocol); the
     kernel REFUSES on staleness — codes quantized against a mutated
     store would silently break the exactness bound. Local stores only
     (the fingerprint walk is os-level, like every stats sidecar)."""
-    if "://" in path:
-        raise ValueError(
-            "nsw_write_int8 requires a local store path (the freshness "
-            f"fingerprint walk is os-level); got {path!r}"
-        )
+    require_local(path, "nsw_write_int8")
     from pyspark.sql import types as sqlt
 
     stored = spark.read.parquet(path)
@@ -3176,7 +2408,7 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
     ]
     # part_id rides along (as a plain column — sidecar fragments stay
     # anonymous): tombstone semantics are ceiling-scoped per shard
-    # (_apply_tombstones reads part_id), and the search kernel applies
+    # (apply_tombstones reads part_id), and the search kernel applies
     # tombstones to the SIDECAR scan
     fields = [
         sqlt.StructField(id_col, sqlt.LongType()),
@@ -3207,11 +2439,11 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
                 out[c] = pdf[c].reset_index(drop=True)
             yield out
 
-    sidecar = _int8_path(path)
+    sidecar = int8_path(path)
     # snapshot BEFORE the scan (the stats-writer discipline): a mutation
     # racing the encode reads as stale, never as silently fresh
-    version = _read_store_version(path)
-    fps = _snapshot_store_fp(path)
+    version = read_store_version(path)
+    fps = snapshot_store_fp(path)
     cols = [id_col, "part_id", "vector"] + payload
     (
         stored.select(*cols)
@@ -3219,12 +2451,10 @@ def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
         .write.mode("overwrite")
         .parquet(sidecar)
     )
-    _record_store_fp(path, sidecar, fps, version)
+    record_store_fp(path, sidecar, fps, version)
     # sidecar writers follow the store-writer contract: session-memoized
-    # reads (_read_store/read_parquet) would otherwise keep serving a
+    # reads (read_parquet/read_parquet) would otherwise keep serving a
     # DataFrame whose file listing points at the pre-overwrite files
-    from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-
     invalidate()
 
 
@@ -3240,10 +2470,10 @@ def nsw_int8_fresh(spark, path: str) -> bool:
     staleness refusal)."""
     import os
 
-    sidecar = _int8_path(path)
+    sidecar = int8_path(path)
     if "://" in sidecar or not os.path.isdir(sidecar):
         return False
-    return not _check_stats_fresh(path, sidecar)
+    return not check_stats_fresh(path, sidecar)
 
 
 def nsw_dense_topk_int8(
@@ -3347,23 +2577,23 @@ def nsw_dense_topk_int8(
     blocked_arr = np.asarray(
         sorted(int(b) for b in (blocked or ())), dtype=np.int64
     )
-    sidecar = _int8_path(path)
+    sidecar = int8_path(path)
     if "://" not in sidecar and not os.path.isdir(sidecar):
         raise ValueError(
             f"no int8 code sidecar under {path!r} — run nsw_write_int8 "
             "first (the two-phase kernel scans codes, not vectors)"
         )
-    if stale := _check_stats_fresh(path, sidecar):
+    if stale := check_stats_fresh(path, sidecar):
         raise ValueError(
             f"int8 code sidecar is stale against shards {stale} — the "
             "store was mutated since nsw_write_int8; rebuild the codes "
             "(searching stale codes would break the exactness bound)"
         )
 
-    codes = _read_store(spark, sidecar)
-    tomb = _read_tombstones(spark, path, id_col)
+    codes = read_parquet(spark, sidecar)
+    tomb = read_tombstones(spark, path)
     if tomb is not None:
-        codes = _apply_tombstones(codes, tomb, id_col)
+        codes = apply_tombstones(codes, tomb, id_col)
     if missing := [
         a for a in mask_plan.match_attrs if a not in codes.columns
     ]:
@@ -3541,9 +2771,9 @@ def nsw_dense_topk_int8(
     # self-review): an upsert history leaves tombstoned OLD copies of
     # a candidate id in earlier shards — joining on the id alone would
     # re-score (and possibly return) the deleted vector
-    full = _read_store(spark, path)
+    full = read_parquet(spark, path)
     if tomb is not None:
-        full = _apply_tombstones(full, tomb, id_col).where(
+        full = apply_tombstones(full, tomb, id_col).where(
             ~F.col("_deleted")
         )
     full = full.select(id_col, "vector")

@@ -23,6 +23,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 
 from acorn_hybrid_vector_search_spark.operators.ann import assign_clusters
+from acorn_hybrid_vector_search_spark.operators.store import IVF, data_root
 
 # one micro-batch may own at most this many NSW shards; part_id ranges are
 # batch-keyed as (batch_id + 1) * cap + local_pid (see stream_nsw_append)
@@ -57,7 +58,7 @@ def stream_index_embeddings(
     # duplicate vectors.
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").partitionBy("cluster_id").parquet(
-            f"{index_path}/lists/batch={batch_id}"
+            f"{data_root(index_path, IVF)}/batch={batch_id}"
         )
 
     return (
@@ -137,33 +138,29 @@ def nsw_stream_batch_writer(
     minutely triggers); re-key the store (one nsw_compact, then a fresh
     checkpoint) to reset.
     """
-    from pyspark.sql import functions as F
-
     from acorn_hybrid_vector_search_spark.operators._cache import invalidate
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _apply_tombstones,
-        _nsw_nodes,
-        _read_tombstones,
-        _store_gamma,
-        _store_vector_dtype,
-        _tombstones_path,
         nsw_compact,
+        nsw_nodes,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        NSW,
+        StoreEmptied,
+        bump_store_version,
+        delete_ids,
+        read_nsw_meta,
+        require_local,
     )
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         import os
         import shutil
 
-        # the pre-clean below (and nsw_compact's swap) are os-level and
-        # LOCAL-ONLY; silently skipping it on s3a:/hdfs: stores would
-        # re-open the stale-shard replay window, so fail fast exactly
-        # like nsw_compact does (r8 ADVICE) — on an object store, route
-        # batches through a versioned prefix + manifest pointer instead
-        if "://" in path:
-            raise ValueError(
-                f"nsw_stream_batch_writer's replay pre-clean is os-level "
-                f"and only supports local paths; got {path!r}"
-            )
+        # the pre-clean below (and nsw_compact's swap) are os-level:
+        # silently skipping them on s3a:/hdfs: stores would re-open the
+        # stale-shard replay window — on an object store, route batches
+        # through a versioned prefix + manifest pointer instead
+        require_local(path, "nsw_stream_batch_writer")
         spark = batch_df.sparkSession
         t = target_shards or max(1, spark.sparkContext.defaultParallelism)
         if t >= parts_cap:
@@ -184,79 +181,60 @@ def nsw_stream_batch_writer(
         # O(1) fast path would then skip the fingerprint walk that
         # catches exactly this same-set rewrite. Leading bump ⇒ the
         # crash window reads as token-mismatch ⇒ fallback walk governs.
-        from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-            _bump_store_version,
-        )
-
-        _bump_store_version(path)
+        bump_store_version(path)
         # step 1: pre-clean this batch's OWN part_id range BEFORE any
         # read of the store — a failed first attempt's shards must not
         # be folded into the compacted base (duplicate window, r8
         # ADVICE) and must not survive a replay that splits into fewer
         # partitions (dynamic overwrite replaces only partitions
         # present in the new data)
+        shards = []
         if os.path.exists(path):
             for d in os.listdir(path):
                 if d.startswith("part_id="):
-                    pid = int(d.split("=", 1)[1])
-                    if offset <= pid < offset + parts_cap:
+                    if offset <= int(d.split("=", 1)[1]) < offset + parts_cap:
                         shutil.rmtree(os.path.join(path, d))
+                    else:
+                        shards.append(d)
         # the pre-clean mutated the store on disk: drop pinned
         # materializations before the compaction-decision read
         invalidate()
         gamma = 1
         vector_dtype = "float64"
-        has_shards = os.path.exists(path) and any(
-            d.startswith("part_id=") for d in os.listdir(path)
-        )
-        if has_shards:
-            stored = spark.read.parquet(path)
+        if shards:
             # new shards keep the seed store's densification (γ rides
             # the store as a constant column; review r8b) AND its
             # vector precision (a float32 store must not grow
             # mixed-precision shards — the scan can't merge them)
-            gamma = _store_gamma(stored)
-            vector_dtype = _store_vector_dtype(stored)
-            n_shards = stored.select("part_id").distinct().count()
-            if n_shards > compact_factor * t:
+            meta = read_nsw_meta(spark, path)
+            gamma, vector_dtype = meta.gamma, meta.vector_dtype
+            if len(shards) > compact_factor * t:
                 # wedge guard (ADVICE r9): in upsert mode a REPLAYED
                 # batch's first attempt may have tombstoned every live
                 # row of a small store (its own shards were pre-cleaned
-                # above), and nsw_compact would then raise 'would empty
-                # the store' — a crash loop no retry escapes. An empty
-                # post-tombstone view here is always that replay shape
-                # (this batch's rows are about to restore liveness), so
-                # SKIP compaction for this batch; the policy re-fires
-                # on a later batch once live rows exist again.
-                tomb = _read_tombstones(spark, path, id_col)
-                would_empty = tomb is not None and (
-                    _apply_tombstones(stored, tomb, id_col)
-                    .filter(~F.col("_deleted"))
-                    .limit(1)
-                    .count()
-                    == 0
-                )
-                if not would_empty:
+                # above), so compaction refuses to empty the store — a
+                # crash loop no retry escapes if it propagated. That
+                # shape is always this replay (this batch's rows are
+                # about to restore liveness), so SKIP compaction for
+                # this batch; the policy re-fires on a later batch.
+                try:
                     nsw_compact(
                         spark, path, n_shards=t, m=m,
                         ef_construction=ef_construction, id_col=id_col,
                     )
+                except StoreEmptied:
+                    pass
         if upsert and os.path.exists(path):
             # streaming replace: kill every pre-batch copy of the
             # incoming ids. Deterministic ceiling (offset-1) ⇒ a replay
             # appends byte-identical rows; old copies all sit below this
             # batch's range, the batch's own shards sit at ≥ offset
-            (
-                batch_df.select(F.col(id_col).cast("long").alias(id_col))
-                .distinct()
-                .withColumn(
-                    "part_ceiling", F.lit(int(offset) - 1).cast("int")
-                )
-                .write.mode("append")
-                .parquet(_tombstones_path(path))
+            delete_ids(
+                spark, path, batch_df.select(id_col), NSW, id_col=id_col,
+                strict=False, op="nsw_stream_batch_writer",
+                ceiling=offset - 1,
             )
-            invalidate()
-        nodes = _nsw_nodes(
+        nodes = nsw_nodes(
             batch_df.coalesce(parts_cap),
             m=m,
             ef_construction=ef_construction,
@@ -277,7 +255,7 @@ def nsw_stream_batch_writer(
         # token must advance (the r11 O(1) freshness protocol — stats
         # sidecars recorded before this batch now read as stale via one
         # token compare instead of a per-shard fingerprint walk)
-        _bump_store_version(path)
+        bump_store_version(path)
         invalidate()
 
     return write_batch

@@ -1048,13 +1048,15 @@ def test_ann_search_dispatches_prune_match_rung(spark, tmp_path):
     with open(os.path.join(store, part, "_rewrite_marker"), "w") as f:
         f.write("x")
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
         pruned_match_attrs,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        bump_store_version,
     )
 
     # a writer's rewrite bumps the token (r11 — every in-API mutator
     # does); the fallback fingerprint walk then catches the content
-    _bump_store_version(store)
+    bump_store_version(store)
 
     assert pruned_match_attrs(spark, store) == frozenset()  # now stale
     got2 = router.ann_search(
@@ -1263,15 +1265,15 @@ def test_ivf_search_exact_range_pred_zone_maps(spark, tmp_path):
         got = ivf_search_exact(idx, q, 5, range_pred=rp).collect()
         assert [r["vec_id"] for r in got] == brute(py), rp
     # provably-failing lists exist for weight < 10
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _range_shard_verdict,
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        range_shard_verdict,
     )
 
     zones = idx.numeric_stats["weight"]
     fails = [
         c
         for c in range(idx.n_clusters)
-        if not _range_shard_verdict(*zones[c], "<", 10.0)[1]
+        if not range_shard_verdict(*zones[c], "<", 10.0)[1]
     ]
     assert fails
     # empty result (nothing passes), not an error
@@ -1429,11 +1431,13 @@ def test_ann_search_dispatches_conjunction_rung(spark, tmp_path):
         flat_accessors,
     )
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
         nsw_read_topk,
         pruned_full_beam,
         pruned_match_attrs,
         pruned_range_attrs,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        bump_store_version,
     )
 
     df, rows, store = _conj_blob_store(spark, tmp_path)
@@ -1479,7 +1483,7 @@ def test_ann_search_dispatches_conjunction_rung(spark, tmp_path):
     _time.sleep(0.01)
     with open(os.path.join(store, part, "_rewrite_marker"), "w") as f:
         f.write("x")
-    _bump_store_version(store)
+    bump_store_version(store)
     assert pruned_range_attrs(spark, store) == frozenset()
     got2 = router.ann_search(
         df, q, pred, 5, pruned_path=store, accessors=acc
@@ -1560,8 +1564,8 @@ def test_ann_search_rule5_demotes_on_stale_stats(spark, tmp_path):
     import os
     import time as _time
 
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        bump_store_version,
     )
 
     df, rows, store = _conj_blob_store(spark, tmp_path)
@@ -1571,7 +1575,7 @@ def test_ann_search_rule5_demotes_on_stale_stats(spark, tmp_path):
     _time.sleep(0.01)
     with open(os.path.join(store, part, "_rewrite_marker"), "w") as f:
         f.write("x")
-    _bump_store_version(store)
+    bump_store_version(store)
     got = router.ann_search(df, q, None, 5, pruned_path=store).collect()
     brute = [
         i
@@ -1776,7 +1780,7 @@ def test_ann_search_batch_ivf_and_nsw_arms_match_single(spark, tmp_path):
 def test_ivf_exact_match_boolean_payload(spark):
     """VERDICT r11 ask #7 — the IVF twin of the graph store's boolean
     zone-map pin: Spark's CAST(boolcol AS STRING) spells 'true'/'false'
-    while str(True) is 'True'; `_canon_value_count` canonicalizes, so
+    while str(True) is 'True'; `canon_value_count` canonicalizes, so
     `ivf_search_exact(match=('flag', True))` over a boolean payload
     answers the exact filtered oracle end-to-end instead of reading
     every zero-passing list as empty-of-evidence (or, worse, pruning

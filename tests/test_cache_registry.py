@@ -144,18 +144,23 @@ def _empty_container(node) -> bool:
     )
 
 
-def test_entry_file_has_no_own_caches_or_temp_dirs():
-    """Session state in the query entry file goes through the registry:
-    a module-level empty container is a hand-rolled cache, and a
-    mkdtemp directory is one nothing deletes."""
-    tree = ast.parse((REPO / "__spark_entry__.py").read_text())
-    caches = [
+def _module_caches(tree) -> list[int]:
+    """Lines of module-level assignments of an empty container."""
+    return [
         node.lineno
         for node in tree.body
         if isinstance(node, (ast.Assign, ast.AnnAssign))
         and node.value is not None
         and _empty_container(node.value)
     ]
+
+
+def test_entry_file_has_no_own_caches_or_temp_dirs():
+    """Session state in the query entry file goes through the registry:
+    a module-level empty container is a hand-rolled cache, and a
+    mkdtemp directory is one nothing deletes."""
+    tree = ast.parse((REPO / "__spark_entry__.py").read_text())
+    caches = _module_caches(tree)
     assert not caches, f"module-level cache containers at lines {caches}"
     mkdtemp = [
         node.lineno
@@ -169,3 +174,38 @@ def test_entry_file_has_no_own_caches_or_temp_dirs():
         )
     ]
     assert not mkdtemp, f"tempfile.mkdtemp used at lines {mkdtemp}"
+
+
+OPERATORS = REPO / "acorn_hybrid_vector_search_spark" / "operators"
+# modules whose private names no other module may use: store.py owns the
+# persisted-store layout, graph_ann.py the graph build and search kernels
+SEALED = ("store", "graph_ann")
+
+
+def test_store_modules_hold_no_module_caches():
+    """Store sidecar loads are memoized through the registry, so
+    ``invalidate()`` and session changes reach them."""
+    for name in SEALED:
+        tree = ast.parse((OPERATORS / f"{name}.py").read_text())
+        caches = _module_caches(tree)
+        assert not caches, f"{name}.py: module-level caches at lines {caches}"
+
+
+def test_no_private_imports_from_store_modules():
+    """Package modules and the entry file use only the public names of
+    store.py and graph_ann.py: a layout change stays inside them."""
+    files = [*(REPO / "acorn_hybrid_vector_search_spark").rglob("*.py")]
+    files.append(REPO / "__spark_entry__.py")
+    found = []
+    for f in files:
+        for node in ast.walk(ast.parse(f.read_text())):
+            if not isinstance(node, ast.ImportFrom) or not node.module:
+                continue
+            source = node.module.rsplit(".", 1)[-1]
+            if source in SEALED and source != f.stem:
+                found += [
+                    f"{f.relative_to(REPO)}:{node.lineno} {a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+    assert not found, f"private names imported from {SEALED}: {found}"

@@ -1020,9 +1020,9 @@ def test_clustered_prune_full_beam_exact_and_actually_prunes(
     sets are PROPER subsets — the 100 TB fan-out win is real, not
     vacuous."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _prune_plan,
         nsw_read_topk,
         nsw_write_clustered,
+        prune_plan,
     )
 
     rows = blob_corpus.collect()
@@ -1044,7 +1044,7 @@ def test_clustered_prune_full_beam_exact_and_actually_prunes(
     radii = np.asarray([r["radius"] for r in srows], np.float64)
     counts = np.asarray([r["n"] for r in srows], dtype=np.int64)
     qmat = np.asarray([qv for _, qv in queries], dtype=np.float64)
-    kept = _prune_plan(parts, cents, radii, counts, qmat, K)
+    kept = prune_plan(parts, cents, radii, counts, qmat, K)
     assert all(len(kp) < len(parts) for kp in kept), [len(kp) for kp in kept]
     # and unpruned agrees at full beam (pruned ≡ unpruned ≡ exact)
     unpruned = nsw_read_topk(spark, path, queries, K, ef=10**6)
@@ -1106,13 +1106,13 @@ def test_prune_guards(spark, blob_corpus, corpus, tmp_path):
 def test_prune_decisions_relational_twin_matches_numpy(spark):
     """The registry's nsw_prune_decisions relation (order-free
     decimal-sum DataFrame arithmetic, SQL-replayed by the oracle) must
-    agree with the numpy `_prune_plan` that the REAL prune path
+    agree with the numpy `prune_plan` that the REAL prune path
     executes — same kept verdicts per (query, shard) on the same
     inputs. Radius/centroid floats travel different pipelines
     (decimal-rounded vs raw float64), so the pin is on the DECISIONS,
     with stats agreement to 1e-9."""
     import __spark_entry__ as entry
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import _prune_plan
+    from acorn_hybrid_vector_search_spark.operators.graph_ann import prune_plan
 
     sf = "/root/testdata/sf0.001"
     rel = {
@@ -1134,7 +1134,7 @@ def test_prune_decisions_relational_twin_matches_numpy(spark):
     counts = np.asarray([(shard == s).sum() for s in parts], dtype=np.int64)
     pos = {int(v): i for i, v in enumerate(ids)}
     qmat = np.stack([x[pos[q]] for q in entry._PRUNE_QIDS])
-    kept = _prune_plan(parts, cents, radii, counts, qmat, 10)
+    kept = prune_plan(parts, cents, radii, counts, qmat, 10)
     for qi, qid in enumerate(entry._PRUNE_QIDS):
         for s in parts.tolist():
             assert rel[(qid, s)] == (s in set(kept[qi].tolist())), (qid, s)
@@ -1255,12 +1255,14 @@ def test_prune_match_sound_and_prunes_by_passing_counts(spark, tmp_path):
     import time as _time
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _attr_stats_path,
-        _load_attr_stats,
-        _prune_plan,
         nsw_read_topk,
         nsw_stats_write,
         nsw_write_clustered,
+        prune_plan,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        attr_stats_path,
+        load_attr_stats,
     )
 
     rng = random.Random(13)
@@ -1303,15 +1305,15 @@ def test_prune_match_sound_and_prunes_by_passing_counts(spark, tmp_path):
     cents = np.asarray([list(r["centroid"]) for r in srows], np.float64)
     radii = np.asarray([r["radius"] for r in srows], np.float64)
     counts = np.asarray([r["n"] for r in srows], dtype=np.int64)
-    ac = _load_attr_stats(spark, _attr_stats_path(path))
+    ac = load_attr_stats(spark, attr_stats_path(path))
     pc = np.asarray(
         [ac["label"].get(int(p), {}).get("3", 0) for p in parts],
         dtype=np.int64,
     )
     assert (pc == 0).any()  # zero-passing shards exist
     qm = np.asarray([q], dtype=np.float64)
-    plain = _prune_plan(parts, cents, radii, counts, qm, 5)[0]
-    match = _prune_plan(parts, cents, radii, pc, qm, 5, skip_empty=True)[0]
+    plain = prune_plan(parts, cents, radii, counts, qm, 5)[0]
+    match = prune_plan(parts, cents, radii, pc, qm, 5, skip_empty=True)[0]
     assert len(match) < len(plain), (len(match), len(plain))
     assert set(match.tolist()) <= {
         int(p) for p, c in zip(parts, pc) if c > 0
@@ -1351,7 +1353,7 @@ def test_prune_match_sound_and_prunes_by_passing_counts(spark, tmp_path):
 
 
 def test_rebuild_sidecar_clear_rejects_remote_paths(spark):
-    """ADVICE r9: _clear_sidecars used to silently no-op on remote
+    """ADVICE r9: clear_sidecars used to silently no-op on remote
     paths, so rebuilding a tombstoned remote store via nsw_write /
     nsw_write_clustered left stale tombstones whose ceilings cover the
     rebuilt 0-based shard ids (silently deleting arbitrary rebuilt
@@ -1360,12 +1362,14 @@ def test_rebuild_sidecar_clear_rejects_remote_paths(spark):
     import pytest
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _clear_sidecars,
         nsw_write,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        clear_sidecars,
     )
 
     with pytest.raises(ValueError, match="versioned prefix"):
-        _clear_sidecars("s3a://bucket/graph")
+        clear_sidecars("s3a://bucket/graph")
     df = spark.createDataFrame(
         [(0, [0.0] * 4)], "vec_id long, embedding array<double>"
     )
@@ -1387,10 +1391,12 @@ def test_prune_staleness_same_tick_reads_as_stale(spark, tmp_path):
     import pytest
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _STORE_FP_FILE,
-        _stats_path,
         nsw_read_topk,
         nsw_write_clustered,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        stats_path,
+        STORE_FP_FILE,
     )
 
     path = str(tmp_path / "graph")
@@ -1402,7 +1408,7 @@ def test_prune_staleness_same_tick_reads_as_stale(spark, tmp_path):
     # sanity: fresh stats prune fine
     nsw_read_topk(spark, path, [(0, [0.0, 2.0])], 3, ef=10**6, prune=True)
     # same-tick rewrite: content changes, then ALL mtimes forced equal
-    stats_m = os.stat(_stats_path(path)).st_mtime_ns
+    stats_m = os.stat(stats_path(path)).st_mtime_ns
     shard = next(d for d in os.listdir(path) if d.startswith("part_id="))
     _mutate_shard_dir(path, shard)
     os.utime(os.path.join(path, shard), ns=(stats_m, stats_m))
@@ -1411,10 +1417,10 @@ def test_prune_staleness_same_tick_reads_as_stale(spark, tmp_path):
     # legacy stores (no fingerprint file): the >= mtime fallback still
     # reads a same-tick shard as stale
     os.remove(os.path.join(path, shard, "_rewrite_marker"))
-    os.remove(os.path.join(_stats_path(path), _STORE_FP_FILE))
+    os.remove(os.path.join(stats_path(path), STORE_FP_FILE))
     # removing the fp file bumped the sidecar dir mtime — pin it back
     # so the fallback compares against the original stats tick
-    os.utime(_stats_path(path), ns=(stats_m, stats_m))
+    os.utime(stats_path(path), ns=(stats_m, stats_m))
     os.utime(os.path.join(path, shard), ns=(stats_m - 10, stats_m - 10))
     nsw_read_topk(spark, path, [(0, [0.0, 2.0])], 3, ef=10**6, prune=True)
     os.utime(os.path.join(path, shard), ns=(stats_m, stats_m))
@@ -1423,17 +1429,19 @@ def test_prune_staleness_same_tick_reads_as_stale(spark, tmp_path):
 
 
 def test_stats_memo_rekeys_on_content_change(spark, tmp_path):
-    """ADVICE r9: the _load_stats memo key is a per-file content
+    """ADVICE r9: the load_stats memo key is a per-file content
     fingerprint (name+size+mtime of every sidecar file), not the bare
     directory mtime — a sidecar rewritten within the same timestamp
     tick must still invalidate the memo."""
     import os
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _load_stats,
-        _stats_path,
         nsw_stats_write,
         nsw_write,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        load_stats,
+        stats_path,
     )
 
     path = str(tmp_path / "graph")
@@ -1443,15 +1451,15 @@ def test_stats_memo_rekeys_on_content_change(spark, tmp_path):
     )
     nsw_write(df.repartition(2), path)
     nsw_stats_write(spark, path)
-    spath = _stats_path(path)
-    first = _load_stats(spark, spath)
+    spath = stats_path(path)
+    first = load_stats(spark, spath)
     dir_m = os.stat(spath).st_mtime_ns
     # rewrite the sidecar (new part-file names/sizes), then force the
     # DIRECTORY mtime back to the old tick — a bare-mtime key would
     # serve the stale memo entry
     nsw_stats_write(spark, path)
     os.utime(spath, ns=(dir_m, dir_m))
-    second = _load_stats(spark, spath)
+    second = load_stats(spark, spath)
     assert second is not first  # re-loaded, not the memoized object
 
 
@@ -1480,13 +1488,15 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
     import time as _time
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _load_numeric_stats,
-        _numeric_stats_path,
-        _prune_plan,
-        _range_shard_verdict,
         nsw_read_topk,
         nsw_stats_write,
         nsw_write_clustered,
+        prune_plan,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        load_numeric_stats,
+        numeric_stats_path,
+        range_shard_verdict,
     )
 
     # weight rides the blob: blob b has weights in [10b, 10b+4]
@@ -1518,18 +1528,18 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
     ).collect()
     assert [r["vec_id"] for r in got] == brute(lambda w: w < 10)
     # zone-map verdicts: none-pass shards exist and are excluded
-    zones = _load_numeric_stats(spark, _numeric_stats_path(path))["weight"]
+    zones = load_numeric_stats(spark, numeric_stats_path(path))["weight"]
     srows = spark.read.parquet(path + "/_shard_stats").collect()
     parts = np.asarray([r["part_id"] for r in srows], dtype=np.int64)
     cents = np.asarray([list(r["centroid"]) for r in srows], np.float64)
     radii = np.asarray([r["radius"] for r in srows], np.float64)
     verdicts = [
-        _range_shard_verdict(*zones[int(p)], "<", 10.0) for p in parts
+        range_shard_verdict(*zones[int(p)], "<", 10.0) for p in parts
     ]
     cert = np.asarray([c for c, _ in verdicts], dtype=np.int64)
     poss = np.asarray([m for _, m in verdicts], dtype=bool)
     assert (~poss).any()  # provably-failing shards exist
-    kept = _prune_plan(
+    kept = prune_plan(
         parts, cents, radii, cert, np.asarray([q]), 5, possible=poss
     )[0]
     assert set(kept.tolist()) <= set(parts[poss].tolist())
@@ -1539,7 +1549,7 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
         prune=True, prune_range=("weight", "leq", 12),
     ).collect()
     assert [r["vec_id"] for r in got2] == brute(lambda w: w <= 12)
-    v2 = [_range_shard_verdict(*zones[int(p)], "<=", 12.0) for p in parts]
+    v2 = [range_shard_verdict(*zones[int(p)], "<=", 12.0) for p in parts]
     assert any(c == 0 and m for c, m in v2)  # straddlers certify nothing
     # open-ended ranges: everything passes ≡ plain pruned top-k;
     # nothing passes → empty result, not an error
@@ -1664,13 +1674,15 @@ def test_nsw_recluster_restores_prunability_after_growth(spark, tmp_path):
     hash-equals brute force over the live corpus, shards actually
     prune again, and the attr sidecar is refreshed for prune_match."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _load_stats,
-        _prune_plan,
-        _stats_path,
         nsw_delete,
         nsw_read_topk,
         nsw_recluster,
         nsw_write_clustered,
+        prune_plan,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        load_stats,
+        stats_path,
     )
 
     rows = _blob_rows_with(n=320)
@@ -1721,8 +1733,8 @@ def test_nsw_recluster_restores_prunability_after_growth(spark, tmp_path):
     ).collect()
     assert [r["vec_id"] for r in got] == brute(q, lambda b: True)
     # prunability restored: the plan drops shards again
-    parts, cents, radii, counts = _load_stats(spark, _stats_path(path))
-    kept = _prune_plan(parts, cents, radii, counts, np.asarray([q]), 5)[0]
+    parts, cents, radii, counts = load_stats(spark, stats_path(path))
+    kept = prune_plan(parts, cents, radii, counts, np.asarray([q]), 5)[0]
     assert len(kept) < len(parts), (len(kept), len(parts))
     # the refreshed attr sidecar serves prune_match immediately
     got_m = nsw_read_topk(
@@ -1747,11 +1759,11 @@ def test_nsw_recluster_restores_prunability_after_growth(spark, tmp_path):
 def test_range_decisions_relational_twin_matches_verdict_helper(spark):
     """r10b disclosure pin: the nsw_range_decisions relation (per-shard
     vmin/vmax/n_present + all-pass/none-pass/straddle verdict +
-    certain/possible) agrees with the `_range_shard_verdict` the real
+    certain/possible) agrees with the `range_shard_verdict` the real
     prune path executes, shard by shard."""
     import __spark_entry__ as entrymod
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _range_shard_verdict,
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        range_shard_verdict,
     )
 
     rows = entrymod._q_nsw_range_decisions(
@@ -1760,7 +1772,7 @@ def test_range_decisions_relational_twin_matches_verdict_helper(spark):
     assert rows
     seen_verdicts = set()
     for r in rows:
-        certain, possible = _range_shard_verdict(
+        certain, possible = range_shard_verdict(
             r["vmin"], r["vmax"], r["n_present"], "<", 25.0
         )
         assert certain == r["certain"], r
@@ -1787,13 +1799,13 @@ def _mutate_shard_dir(path, part):
     test_store_version_token_protocol for the fast-path pins)."""
     import os
 
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        bump_store_version,
     )
 
     with open(os.path.join(path, part, "_rewrite_marker"), "w") as f:
         f.write("x")
-    _bump_store_version(path)
+    bump_store_version(path)
 
 
 def test_prune_match_canonical_value_lookup(spark, tmp_path):
@@ -1803,16 +1815,18 @@ def test_prune_match_canonical_value_lookup(spark, tmp_path):
     type-spelling mismatch silently prunes every shard and returns
     empty where the prefilter answer has rows."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _canon_value_count,
         nsw_read_topk,
         nsw_write_clustered,
     )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        canon_value_count,
+    )
 
-    assert _canon_value_count({"3": 7}, 3.0) == 7
-    assert _canon_value_count({"3.0": 7}, 3) == 7
-    assert _canon_value_count({"3": 7}, "3") == 7
-    assert _canon_value_count({"3": 7}, 4) == 0
-    assert _canon_value_count({"x": 7}, 3) == 0
+    assert canon_value_count({"3": 7}, 3.0) == 7
+    assert canon_value_count({"3.0": 7}, 3) == 7
+    assert canon_value_count({"3": 7}, "3") == 7
+    assert canon_value_count({"3": 7}, 4) == 0
+    assert canon_value_count({"x": 7}, 3) == 0
 
     rows = _blob_rows_with(n=200)
     df = spark.createDataFrame(
@@ -1886,15 +1900,17 @@ def test_store_version_token_protocol(spark, tmp_path):
     import os
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _STORE_FP_FILE,
-        _STORE_VERSION_FILE,
-        _bump_store_version,
-        _check_stats_fresh,
-        _read_store_version,
-        _stats_path,
         nsw_delete,
         nsw_undelete,
         nsw_write_clustered,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        bump_store_version,
+        check_stats_fresh,
+        read_store_version,
+        stats_path,
+        STORE_FP_FILE,
+        STORE_VERSION_FILE,
     )
 
     path = str(tmp_path / "gv")
@@ -1903,46 +1919,46 @@ def test_store_version_token_protocol(spark, tmp_path):
         "vec_id long, embedding array<double>",
     )
     nsw_write_clustered(df, path, n_shards=4)
-    spath = _stats_path(path)
-    tok = _read_store_version(path)
+    spath = stats_path(path)
+    tok = read_store_version(path)
     assert tok is not None and tok["v"] >= 1
-    with open(os.path.join(spath, _STORE_FP_FILE)) as f:
+    with open(os.path.join(spath, STORE_FP_FILE)) as f:
         recorded = json.load(f)
     assert recorded["__store_version__"] == tok
-    assert _check_stats_fresh(path, spath) == []
+    assert check_stats_fresh(path, spath) == []
 
     # fast path pin: an out-of-API content change WITHOUT a bump is
     # invisible to the token compare (the walk would have caught it)
     shard = next(d for d in os.listdir(path) if d.startswith("part_id="))
     with open(os.path.join(path, shard, "_oob_marker"), "w") as f:
         f.write("x")
-    assert _check_stats_fresh(path, spath) == []
+    assert check_stats_fresh(path, spath) == []
 
     # stale-token-refuses: a bump (what every writer does) drops to the
     # fingerprint walk, which catches the content change
-    _bump_store_version(path)
-    assert _check_stats_fresh(path, spath) == [shard]
+    bump_store_version(path)
+    assert check_stats_fresh(path, spath) == [shard]
 
     # token mismatch with UNCHANGED content stays fresh: tombstone
     # writers bump but never touch shard bytes, and prunability must
     # come back after undelete without a stats rewrite
     os.remove(os.path.join(path, shard, "_oob_marker"))
-    assert _check_stats_fresh(path, spath) == []
-    v_before = _read_store_version(path)["v"]
+    assert check_stats_fresh(path, spath) == []
+    v_before = read_store_version(path)["v"]
     nsw_delete(spark, path, [0])
-    assert _read_store_version(path)["v"] > v_before
+    assert read_store_version(path)["v"] > v_before
     nsw_undelete(spark, path, [0])
-    assert _read_store_version(path)["v"] > v_before + 1
-    assert _check_stats_fresh(path, spath) == []
+    assert read_store_version(path)["v"] > v_before + 1
+    assert check_stats_fresh(path, spath) == []
 
     # legacy-fallback pin: no token file at all → the r10 fingerprint
     # walk governs alone (fresh content passes, a marker refuses)
-    os.remove(os.path.join(path, _STORE_VERSION_FILE))
-    assert _read_store_version(path) is None
-    assert _check_stats_fresh(path, spath) == []
+    os.remove(os.path.join(path, STORE_VERSION_FILE))
+    assert read_store_version(path) is None
+    assert check_stats_fresh(path, spath) == []
     with open(os.path.join(path, shard, "_oob_marker"), "w") as f:
         f.write("x")
-    assert _check_stats_fresh(path, spath) == [shard]
+    assert check_stats_fresh(path, spath) == [shard]
 
 
 def test_stats_fresh_detects_deleted_shard(spark, tmp_path):
@@ -1955,11 +1971,13 @@ def test_stats_fresh_detects_deleted_shard(spark, tmp_path):
     import shutil
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _bump_store_version,
-        _check_stats_fresh,
-        _stats_path,
         nsw_write_clustered,
         pruned_match_attrs,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        bump_store_version,
+        check_stats_fresh,
+        stats_path,
     )
 
     path = str(tmp_path / "gd")
@@ -1974,8 +1992,8 @@ def test_stats_fresh_detects_deleted_shard(spark, tmp_path):
         d for d in os.listdir(path) if d.startswith("part_id=")
     )[0]
     shutil.rmtree(os.path.join(path, shard))
-    _bump_store_version(path)  # what any real shard-deleting writer does
-    assert shard in _check_stats_fresh(path, _stats_path(path))
+    bump_store_version(path)  # what any real shard-deleting writer does
+    assert shard in check_stats_fresh(path, stats_path(path))
     # and the router-facing coverage helper reports uncovered, so rule 6
     # falls back instead of routing into the shard-set guard
     assert pruned_match_attrs(spark, path) == frozenset()
@@ -1989,15 +2007,17 @@ def test_canon_value_count_booleans(spark, tmp_path):
     boolean payload answers the exact filtered oracle instead of
     silently pruning every shard."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _canon_value_count,
         nsw_read_topk,
         nsw_write_clustered,
     )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        canon_value_count,
+    )
 
-    assert _canon_value_count({"true": 5, "false": 3}, True) == 5
-    assert _canon_value_count({"true": 5, "false": 3}, False) == 3
-    assert _canon_value_count({"1": 7, "0": 2}, True) == 0
-    assert _canon_value_count({"true": 5}, 1) == 0
+    assert canon_value_count({"true": 5, "false": 3}, True) == 5
+    assert canon_value_count({"true": 5, "false": 3}, False) == 3
+    assert canon_value_count({"1": 7, "0": 2}, True) == 0
+    assert canon_value_count({"true": 5}, 1) == 0
 
     rows = [
         (i, [float(i % 4) * 3.0, float(i)], i % 3 == 0) for i in range(24)
@@ -2030,20 +2050,20 @@ def test_absent_ok_swallows_legacy_path_message():
     import pytest
     from pyspark.errors import AnalysisException
 
-    from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _absent_ok,
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        absent_ok,
     )
 
     def boom_legacy():
         raise AnalysisException("Path does not exist: s3a://b/x/_shard_stats")
 
-    assert _absent_ok(boom_legacy, frozenset()) == frozenset()
+    assert absent_ok(boom_legacy, frozenset()) == frozenset()
 
     def boom_other():
         raise AnalysisException("TABLE_OR_VIEW_NOT_FOUND: nope")
 
     with pytest.raises(AnalysisException):
-        _absent_ok(boom_other, None)
+        absent_ok(boom_other, None)
 
 
 # ---------------------------------------------------------------------------
@@ -2107,14 +2127,16 @@ def test_prune_conj_exact_and_bonferroni_sound(spark, conj_store):
     are outside every kept set, and the Bonferroni lower bounds under-
     count (never over-count) the true per-shard passing members."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _attr_stats_path,
         _conj_shard_stats,
-        _load_attr_stats,
-        _load_numeric_stats,
-        _load_stats,
-        _numeric_stats_path,
-        _stats_path,
         nsw_read_topk,
+    )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        attr_stats_path,
+        load_attr_stats,
+        load_numeric_stats,
+        load_stats,
+        numeric_stats_path,
+        stats_path,
     )
 
     path, rows = conj_store
@@ -2129,9 +2151,9 @@ def test_prune_conj_exact_and_bonferroni_sound(spark, conj_store):
     assert [r["vec_id"] for r in got] == want
 
     # verdict arithmetic vs ground truth, shard by shard
-    parts, cents, radii, counts = _load_stats(spark, _stats_path(path))
-    ac = _load_attr_stats(spark, _attr_stats_path(path))
-    ns = _load_numeric_stats(spark, _numeric_stats_path(path))
+    parts, cents, radii, counts = load_stats(spark, stats_path(path))
+    ac = load_attr_stats(spark, attr_stats_path(path))
+    ns = load_numeric_stats(spark, numeric_stats_path(path))
     conj = {"label": ("exact", 3), "weight": ("<", 32)}
     lb, possible = _conj_shard_stats(conj, ac, ns, parts, counts)
     stored = spark.read.parquet(path).collect()
@@ -2333,16 +2355,18 @@ def test_prune_conj_substring_exact_counts(spark, conj_store, tmp_path):
     ``weight < 2 ∧ brand substring …`` (acorn.py:296-298) runs through
     prune_conj. The conj store lacks a string payload, so this builds
     a tagged twin; full beam answers the exact filtered oracle and
-    `_substring_value_count` is pinned against ground truth."""
+    `substring_value_count` is pinned against ground truth."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _substring_value_count,
         nsw_read_topk,
         nsw_write_clustered,
     )
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        substring_value_count,
+    )
 
-    assert _substring_value_count({"cat3": 5, "cat13": 2, "dog": 9}, "at") == 7
-    assert _substring_value_count({"cat3": 5, None: 4}, "3") == 5
-    assert _substring_value_count({"cat3": 5}, "x") == 0
+    assert substring_value_count({"cat3": 5, "cat13": 2, "dog": 9}, "at") == 7
+    assert substring_value_count({"cat3": 5, None: 4}, "3") == 5
+    assert substring_value_count({"cat3": 5}, "x") == 0
 
     path, rows = conj_store
     tagged_rows = [

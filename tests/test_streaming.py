@@ -774,11 +774,13 @@ def test_stream_nsw_upsert_skips_compaction_that_would_empty(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-        _tombstones_path,
         nsw_read_topk,
         nsw_write,
     )
     from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
+    from acorn_hybrid_vector_search_spark.operators.store import (
+        tombstones_path,
+    )
     from acorn_hybrid_vector_search_spark.streaming.indexing import (
         nsw_stream_batch_writer,
     )
@@ -803,7 +805,7 @@ def test_stream_nsw_upsert_skips_compaction_that_would_empty(spark, tmp_path):
         v1.select("vec_id")
         .withColumn("part_ceiling", F.lit(2 * 64 - 1).cast("int"))
         .write.mode("append")
-        .parquet(_tombstones_path(path))
+        .parquet(tombstones_path(path))
     )
     # replay of batch 1: store has 3 base + 2 batch-0 shards (5 > 4 ->
     # the policy fires) and EVERY row is tombstoned -> pre-fix this

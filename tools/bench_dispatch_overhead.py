@@ -38,11 +38,13 @@ import numpy as np  # noqa: E402
 import pandas as pd  # noqa: E402
 
 from acorn_hybrid_vector_search_spark.operators.graph_ann import (  # noqa: E402
-    _STORE_VERSION_FILE,
     nsw_write_clustered,
     pruned_match_attrs,
     pruned_range_attrs,
     store_has_tombstones,
+)
+from acorn_hybrid_vector_search_spark.operators.store import (  # noqa: E402
+    STORE_VERSION_FILE,
 )
 from acorn_hybrid_vector_search_spark.session import get_spark  # noqa: E402
 
@@ -106,7 +108,7 @@ def main() -> None:
             stats_attrs=["label"], numeric_stats_attrs=["weight"],
         )
         token_ms = _time_calls(spark, path) * 1000
-        os.remove(os.path.join(path, _STORE_VERSION_FILE))
+        os.remove(os.path.join(path, STORE_VERSION_FILE))
         legacy_ms = _time_calls(spark, path) * 1000
         rows[str(shards)] = {
             "token_ms_per_dispatch": round(token_ms, 3),

@@ -14,7 +14,7 @@ vacuous by construction; see _clustered_embeddings in __spark_entry__).
 Per shard count S: kmeans-clustered store build (nsw_write_clustered),
 then for a 16-query batch at serving beam ef=64: unpruned
 nsw_read_topk wall time, pruned wall time, the mean kept-shard
-fraction from the actual _prune_plan, and an exactness spot-check
+fraction from the actual prune_plan, and an exactness spot-check
 (full-beam pruned == full-beam unpruned == brute force for 4 queries).
 
 Writes the ``nsw_prune`` section of BENCH_LADDER.json.
@@ -36,9 +36,9 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from acorn_hybrid_vector_search_spark.operators.graph_ann import (  # noqa: E402
-    _prune_plan,
     nsw_read_topk,
     nsw_write_clustered,
+    prune_plan,
 )
 from acorn_hybrid_vector_search_spark.session import get_spark  # noqa: E402
 
@@ -87,7 +87,7 @@ def main() -> None:
         cents = np.asarray([list(r["centroid"]) for r in srows], np.float64)
         radii = np.asarray([r["radius"] for r in srows], np.float64)
         counts = np.asarray([r["n"] for r in srows], dtype=np.int64)
-        kept = _prune_plan(
+        kept = prune_plan(
             parts, cents, radii, counts,
             np.asarray([v for _, v in queries], dtype=np.float64), K,
         )
@@ -139,18 +139,18 @@ def main() -> None:
         # r9b predicate-aware point: match one blob's label (~1/64 of
         # rows) — passing counts + zero-passing skip vs the same query
         # batch run as an unpruned filter-functor walk
-        from acorn_hybrid_vector_search_spark.operators.graph_ann import (
-            _attr_stats_path,
-            _load_attr_stats,
+        from acorn_hybrid_vector_search_spark.operators.store import (
+            attr_stats_path,
+            load_attr_stats,
         )
         from pyspark.sql import functions as F
 
-        ac = _load_attr_stats(spark, _attr_stats_path(path))
+        ac = load_attr_stats(spark, attr_stats_path(path))
         pc = np.asarray(
             [ac["label"].get(int(p), {}).get("7", 0) for p in parts],
             dtype=np.int64,
         )
-        kept_m = _prune_plan(
+        kept_m = prune_plan(
             parts, cents, radii, pc,
             np.asarray([v for _, v in queries], dtype=np.float64), K,
             skip_empty=True,

@@ -42,12 +42,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from acorn_hybrid_vector_search_spark.operators.graph_ann import (  # noqa: E402
-    _load_stats,
-    _prune_plan,
-    _stats_path,
     estimate_kept_fraction,
     nsw_read_topk,
     nsw_write_clustered,
+    prune_plan,
+)
+from acorn_hybrid_vector_search_spark.operators.store import (  # noqa: E402
+    load_stats,
+    stats_path,
 )
 from acorn_hybrid_vector_search_spark.session import get_spark  # noqa: E402
 
@@ -86,10 +88,10 @@ def main() -> None:
             nsw_write_clustered(sdf, path, n_shards=N_SHARDS)
             build_s = time.time() - t0
 
-            parts, cents, radii, counts = _load_stats(
-                spark, _stats_path(path)
+            parts, cents, radii, counts = load_stats(
+                spark, stats_path(path)
             )
-            kept = _prune_plan(
+            kept = prune_plan(
                 parts, cents, radii, counts,
                 np.asarray([v for _, v in queries], dtype=np.float64), K,
             )

@@ -42,9 +42,6 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 
 from acorn_hybrid_vector_search_spark.operators.graph_ann import (  # noqa: E402
-    _load_stats,
-    _prune_plan,
-    _stats_path,
     nsw_append,
     nsw_compact,
     nsw_delete,
@@ -52,6 +49,11 @@ from acorn_hybrid_vector_search_spark.operators.graph_ann import (  # noqa: E402
     nsw_recluster,
     nsw_stats_write,
     nsw_write_clustered,
+    prune_plan,
+)
+from acorn_hybrid_vector_search_spark.operators.store import (  # noqa: E402
+    load_stats,
+    stats_path,
 )
 from acorn_hybrid_vector_search_spark.session import get_spark  # noqa: E402
 
@@ -93,8 +95,8 @@ def main() -> None:
     path = root + "/graph"
 
     def measure(state: str, extra: dict | None = None) -> dict:
-        parts, cents, radii, counts = _load_stats(spark, _stats_path(path))
-        kept = _prune_plan(
+        parts, cents, radii, counts = load_stats(spark, stats_path(path))
+        kept = prune_plan(
             parts, cents, radii, counts,
             np.asarray([v for _, v in queries], dtype=np.float64), K,
         )

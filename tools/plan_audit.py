@@ -911,7 +911,7 @@ def _nsw_prune_section() -> None:
         f"_shard_stats sidecars, a {sec['n_queries']}-query batch at "
         f"serving beam ef={sec['ef']}, k={sec['k']}. Per shard count: "
         f"the kept-shard/rows-walked fractions from the actual "
-        f"_prune_plan, and wall time unpruned vs pruned (full-beam "
+        f"prune_plan, and wall time unpruned vs pruned (full-beam "
         f"pruned ≡ unpruned ≡ brute force asserted in-run):\n"
     )
     has_match = "match_kept_shard_fraction" in sec["shard_counts"][0]
