@@ -1369,11 +1369,11 @@ def _q_hybrid_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     knn_query rows); the per-query form pays plan + scan per query.
 
     Plan contract (plans/plan_audit contract `hybrid_batch_topk`): one
-    scan of the joined corpus, BroadcastNestedLoopJoin against the
-    4-row query-parameter table, per-(row, query) predicate pruning
-    BEFORE the distance projection, then the two-phase salted
-    per-query top-k (no per-query hot window partition). pytest pins
-    batch ≡ per-query prefilter_search (tests/test_hybrid.py)."""
+    scan of the joined corpus, one boolean mask column per distinct
+    predicate, then knn_batch's MapInArrow (each query's top k per
+    Arrow batch, no corpus×queries join) and the per-query row_number
+    merge. pytest pins batch ≡ per-query prefilter_search
+    (tests/test_hybrid.py)."""
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         AttributeAccessor,
         abo_accessors,
@@ -1412,9 +1412,11 @@ def _q_acorn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate scan): four queries spanning class-1 (no predicate),
     moderate selectivity (label = 3), a sparse id-range predicate that
     exercises escalation depth (vec_id < 25), and a numeric-leq class.
-    Round selection (40 → 160 → 640 for k=10) is a per-query |Q|-row
-    aggregate broadcast back; the exact-prefilter fallback rides the
-    plan filtered to chosen-IS-NULL queries. The oracle replays the
+    The candidates are knn_batch's distance-first top 640 per query
+    with the predicate verdict carried; round selection (40 → 160 →
+    640 for k=10) is a per-query |Q|-row aggregate broadcast back; the
+    exact-prefilter fallback rides the plan filtered to chosen-IS-NULL
+    queries. The oracle replays the
     full per-query round arithmetic (the acorn_hybrid CASE oracle per
     block). pytest pins batch ≡ per-query acorn_search incl. the
     fallback branch (tests/test_hybrid.py)."""
@@ -1438,8 +1440,9 @@ def _q_acorn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 @_prepared
 def _q_postfilter_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batched K3 (hybrid.py::postfilter_search_batch): distance-first
-    per-query top-large_k candidates from ONE scan, then each query's
-    own predicate, truncated to k — the under-fill failure mode
+    per-query top-large_k candidates from ONE knn_batch scan (the
+    predicate verdict carried, not filtering), then each query's
+    passing candidates, truncated to k — the under-fill failure mode
     preserved per query (a selective predicate may return < k rows,
     the reference's accuracy-collapse case, now visible inside a
     batch). Oracle: per-query candidate/filter/truncate blocks."""
@@ -2524,13 +2527,13 @@ def _q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch multi-query top-k: one scan answers 4 queries (mirrors
     hnswlib's batched knn_query thread fan-out, bindings.cpp:627-646).
 
-    Uses the MAP-SIDE-reduced BLAS kernel (knn_batch_blas): each input
-    partition emits ≤ |Q|·k candidates, so the shuffle is O(P·|Q|·k)
-    instead of the window variant's N·|Q| pair rows — the shape that
-    survives 100×. The 4 query vectors are a bounded query PARAMETER
-    (collected once, closure-shipped), not row-scaled data; pytest pins
-    blas == window-variant hash parity (tests/test_hybrid.py)."""
-    from acorn_hybrid_vector_search_spark.operators.similarity import knn_batch_blas
+    knn_batch is one MapInArrow pass: each Arrow batch emits ≤ |Q|·k
+    candidates (the strict float64 distance, bit-identical to
+    knn_exact), so the shuffle is O(batches·|Q|·k) rows, never N·|Q|.
+    The 4 query vectors are a bounded query PARAMETER (collected once,
+    closure-shipped), not row-scaled data; pytest pins batch ≡
+    per-query knn_exact (tests/test_hybrid.py)."""
+    from acorn_hybrid_vector_search_spark.operators.knn import knn_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     qrows = (
@@ -2539,7 +2542,7 @@ def _q_knn_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     queries = [(r["vec_id"], r["embedding"]) for r in qrows]
-    res = knn_batch_blas(emb, queries, k=5)
+    res = knn_batch(emb, queries, k=5)
     return res.select("query_id", "vec_id", F.round("dist", _R).alias("dist"))
 
 
@@ -5374,12 +5377,12 @@ def _q_ivf_exact_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r11 (VERDICT r10 ask #6): the IVF exact rung at BATCH shape —
     ``ivf_search_exact_batch`` answers a three-query batch (per-query
     exact match, per-query range, unconstrained) from TWO list scans
-    total: phase 1 hash-joins each query's nearest PASSING list (its
+    total: phase 1 masks each query to its nearest PASSING list (its
     own zone-map verdicts — the same `canon_value_count` /
     `range_shard_verdict` arithmetic as the single-query arms — skip
     provably-empty lists), one bounded ≤|Q|·k collect yields per-query
-    d_k, and phase 2 equi-joins the exploded per-query ball-bound
-    probe sets. Batch ≡ per-query loop is pytest-pinned; here each
+    d_k, and phase 2 masks each query to its ball-bound probe set —
+    both one knn_batch scan of the probed lists, no join. Batch ≡ per-query loop is pytest-pinned; here each
     query answers its own exact filtered oracle (UNION of brute-force
     SELECTs)."""
     from acorn_hybrid_vector_search_spark.operators.ann import (

@@ -4,9 +4,9 @@ Each is a Catalyst ``zip_with`` + ``aggregate`` expression summing in
 DOUBLE, strictly left to right, so results are bit-reproducible and match
 a DuckDB oracle that sums in the same order. A literal query vector puts
 one plan node per dimension into the plan. Use these where a distance
-feeds further JVM expressions (``centroids``, ``mining``, ``ann``'s IVF
-cross joins, ``knn_batch``, the ``*_search_batch`` joins); single-query
-top-k runs ``operators/knn.py``'s Arrow kernel, which returns the same bits.
+feeds further JVM expressions (``centroids``, ``mining``, the entry
+file's queries); exact top-k, single-query and batch, runs
+``operators/knn.py``'s Arrow kernels, which return the same bits.
 """
 
 from __future__ import annotations

@@ -35,7 +35,6 @@ from acorn_hybrid_vector_search_spark.operators.hybrid import (
 )
 from acorn_hybrid_vector_search_spark.operators.knn import knn_batch, knn_exact
 from acorn_hybrid_vector_search_spark.operators.similarity import (
-    knn_batch_blas,
     lsh_near_dup_pairs,
     with_lsh_bucket,
 )
@@ -70,7 +69,6 @@ __all__ = [
     "postfilter_search",
     "prefilter_search",
     "knn_batch",
-    "knn_batch_blas",
     "knn_exact",
     "lsh_near_dup_pairs",
     "with_lsh_bucket",

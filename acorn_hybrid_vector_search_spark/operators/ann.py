@@ -35,8 +35,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
+from acorn_hybrid_vector_search_spark.functions.predicates import (
+    build_predicate,
+    flat_accessors,
+)
 from acorn_hybrid_vector_search_spark.operators._cache import invalidate
-from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
+from acorn_hybrid_vector_search_spark.operators.knn import (
+    knn_batch,
+    knn_exact,
+    query_batch_matrix,
+)
 from acorn_hybrid_vector_search_spark.operators.store import (
     IVF,
     RANGE_OPS,
@@ -412,42 +420,38 @@ def ivf_read(
     attr_counts = None
     apath = ivf_attr_stats_path(path)
     if os.path.exists(apath):
-        persisted_attrs = sorted(
-            {r["attr"] for r in spark.read.parquet(apath).select("attr").distinct().collect()}
-        )
+        rows = spark.read.parquet(apath).collect()
         if has_extra_batches:
             # streaming ingest appended rows the persisted counts never
             # saw — a zero-count list could now hold passing members,
             # so zero-skip would be UNSOUND on stale counts. Recompute
             # from the LIVE view (tombstones applied above): exact and
             # fresh, one bounded aggregate per attr at load time.
-            attr_counts = _ivf_attr_counts(df, persisted_attrs)
+            attr_counts = _ivf_attr_counts(df, sorted({r["attr"] for r in rows}))
         else:
             # tombstones alone keep persisted counts sound for skipping:
             # deletions only SHRINK a list's passing set, so zero stays
             # zero (a stale-high count just prunes less — never wrong)
             attr_counts = {}
-            for r in spark.read.parquet(apath).collect():
+            for r in rows:
                 attr_counts.setdefault(r["attr"], {}).setdefault(
                     int(r["cluster_id"]), {}
                 )[r["value"]] = int(r["n"])
     numeric_stats = None
     npath = ivf_numeric_stats_path(path)
     if os.path.exists(npath):
-        persisted_nums = sorted(
-            {r["attr"] for r in spark.read.parquet(npath).select("attr").distinct().collect()}
-        )
+        rows = spark.read.parquet(npath).collect()
         if has_extra_batches:
             # same staleness argument: appended rows can widen a
             # list's [vmin, vmax] — a none-pass verdict on stale
             # bounds would skip passing members
-            numeric_stats = _ivf_numeric_stats(df, persisted_nums)
+            numeric_stats = _ivf_numeric_stats(df, sorted({r["attr"] for r in rows}))
         else:
             # deletions only NARROW the true range, so stale-wide
             # bounds stay sound (a straddle verdict where none-pass
             # now holds just prunes less)
             numeric_stats = {}
-            for r in spark.read.parquet(npath).collect():
+            for r in rows:
                 numeric_stats.setdefault(r["attr"], {})[
                     int(r["cluster_id"])
                 ] = (r["vmin"], r["vmax"], int(r["n_present"]))
@@ -768,7 +772,6 @@ def ivf_search_exact_batch(
     range_pred=None,
     conj=None,
     query_id_col: str = "query_id",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """``ivf_search_exact`` for a QUERY BATCH — the IVF rung at the
     serving shape (r11, VERDICT r10 ask #6): per query the result is
@@ -788,42 +791,22 @@ def ivf_search_exact_batch(
     provably passes nowhere contributes an empty per-query result,
     exactly like the single-query arms.
 
-    Plan (both phases are broadcast EQUI-joins — no nested-loop pair
-    explosion, and cluster_id stays partition-prunable at rest):
+    Plan: both phases are one ``knn_batch`` scan of the union of the
+    lists they probe, each query masked to ``cluster_id IN probes(q)``
+    and its own predicate (the single-query arm's Catalyst column), so
+    cluster_id stays partition-prunable and no corpus×queries join
+    exists.
 
-      phase 1: each query's nearest PASSING list, as a broadcast hash
-               join of the lists scan against the bounded query table
-               carrying ``_first`` per query; per-query exact top-k via
-               the salted two-phase rank; ONE bounded ≤ |Q|·k collect
-               gives every query's candidate d_k.
+      phase 1: each query's nearest PASSING list; ONE bounded ≤ |Q|·k
+               collect gives every query's candidate d_k.
       phase 2: per-query ball-bound probe sets (driver-side C-row
                arithmetic; a query whose phase 1 under-fills probes
-               every passing list), EXPLODED to (query, cluster) rows
-               on the broadcast side — the lists scan hash-joins on
-               cluster_id, so each (row, query) pair exists exactly
-               once and only probed lists are read.
-
-    §2.3 predicate semantics per query ride the broadcast parameter
-    columns (``_batch_predicate`` — the r8 batched-hybrid machinery),
-    so NULL attrs reject and each query filters only its own rows."""
-    from pyspark.sql.window import Window
-
-    from acorn_hybrid_vector_search_spark.functions.distance import (
-        l2_sq_distance,
-    )
-    from acorn_hybrid_vector_search_spark.functions.predicates import (
-        flat_accessors,
-    )
-    from acorn_hybrid_vector_search_spark.operators.hybrid import (
-        _batch_predicate,
-        _batch_query_table,
-        _check_batch_collisions,
-    )
-
+               every passing list)."""
     if index.radii is None:
         raise ValueError(
             "ivf_search_exact_batch requires an index built with_radii=True"
         )
+    qids, qmat = query_batch_matrix(queries)
     match = {int(q): t for q, t in dict(match or {}).items()}
     range_pred = {int(q): t for q, t in dict(range_pred or {}).items()}
     conj = {int(q): dict(c) for q, c in dict(conj or {}).items()}
@@ -838,87 +821,52 @@ def ivf_search_exact_batch(
             f"(or conj) — one constraint set drives both the list "
             f"pruning and the row filter"
         )
-    qids = [int(q) for q, _ in queries]
-    qset = set(qids)
     if unknown := [
-        q for q in sorted({*match, *range_pred, *conj}) if q not in qset
+        q for q in sorted({*match, *range_pred, *conj}) if q not in set(qids)
     ]:
         raise ValueError(f"constraints for ids not in the batch: {unknown}")
 
-    # driver-side per-query verdicts: passing-list masks, centroid
-    # ordering, nearest passing list (C-row numpy — query-batch-sized
-    # work, independent of data scale). Every constraint shape
-    # normalizes to a conjunction dict {attr: (op, value)} — match and
-    # range are its one-term special cases (the graph store's
-    # prune_conj unification).
-
-    def _spell_range(op: str) -> str:
-        # canonicalize the range spelling to the §2.3 op the row-filter
-        # grammar ENFORCES ('<=' → 'leq', '>=' → 'geq'): the predicate
-        # parameter table silently ignores unsupported spellings, so an
-        # un-normalized '<=' would prune lists by the zone maps but
-        # never filter rows (review r11 — the single-query arm enforces
-        # every RANGE_OPS spelling through its own Catalyst predicate)
-        canon = RANGE_OPS.get(op)
-        if canon is None:
-            raise ValueError(
-                f"batch range op must be one of {sorted(RANGE_OPS)}, "
-                f"got {op!r}"
-            )
-        return {"<=": "leq", ">=": "geq", "<": "<", ">": ">"}[canon]
-
-    from acorn_hybrid_vector_search_spark.functions.predicates import (
-        flat_accessors as _facc,
-    )
-
-    acc_kinds = {a: x.kind for a, x in _facc(index.df).items()}
+    # every constraint shape normalizes to a conjunction {attr: (op,
+    # value)} — match and range are its one-term special cases — and
+    # filters rows with the single-query arm's own Catalyst column
+    acc_kinds = {a: x.kind for a, x in flat_accessors(index.df).items()}
     constraints: dict[int, dict] = {}
+    preds: dict[int, Column] = {}
     for q, (attr, value) in match.items():
         constraints[q] = {attr: ("exact", value)}
+        preds[q] = F.col(attr) == F.lit(value)
     for q, (attr, op, value) in range_pred.items():
-        constraints[q] = {attr: (_spell_range(op), value)}
+        if op not in RANGE_OPS:
+            raise ValueError(
+                f"batch range op must be one of {sorted(RANGE_OPS)}, got {op!r}"
+            )
+        constraints[q] = {attr: (op, value)}
+        preds[q] = range_pred_col(attr, op, value)
     for q, terms in conj.items():
-        normalized = {}
-        for attr, spec in terms.items():
-            c_op, c_val = list(spec)[0], list(spec)[1]
-            if c_op == "exact":
-                pass
-            elif c_op == "substring":
-                # the batch row filter runs through the §2.3 parameter
-                # grammar, which IGNORES substring on non-string kinds
-                # — accepting it would prune lists without filtering
-                # rows (the review-r11 hazard, closed at the gate)
-                if acc_kinds.get(attr) != "string":
-                    raise ValueError(
-                        f"substring constraint on non-string column "
-                        f"{attr!r} — the §2.3 grammar ignores it, so "
-                        f"pruning by it would change results"
-                    )
-            else:
-                c_op = _spell_range(c_op)
-            normalized[attr] = (c_op, c_val)
-        if not normalized:
+        if not terms:
             raise ValueError(f"empty conj for query {q}")
-        constraints[q] = normalized
-    qmat = np.asarray([list(v) for _, v in queries], dtype=np.float64)
+        for attr, spec in terms.items():
+            if list(spec)[0] == "substring" and acc_kinds.get(attr) != "string":
+                raise ValueError(
+                    f"substring constraint on non-string column {attr!r} — "
+                    f"the §2.3 grammar ignores it, so pruning by it would "
+                    f"change results"
+                )
+        constraints[q] = normalize_conj(terms)
+        preds[q] = conj_pred_col(constraints[q])
     dc_all = np.sqrt(
         ((index.centroids[None, :, :] - qmat[:, None, :]) ** 2).sum(axis=2)
     )  # (|Q|, C) L2
-    passing_by_q: dict[int, np.ndarray] = {}
     order_by_q: dict[int, np.ndarray] = {}
-    first_by_q: dict[int, int] = {}
     for qi, q in enumerate(qids):
         passing = np.ones(index.n_clusters, dtype=bool)
         for c_attr, (c_op, c_val) in constraints.get(q, {}).items():
             passing &= _ivf_passing_lists(index, (c_attr, c_op, c_val))
         order = np.argsort(dc_all[qi], kind="stable")
         order = order[passing[order]]
-        passing_by_q[q] = passing
-        order_by_q[q] = order
         if order.size:
-            first_by_q[q] = int(order[0])
-    live = [(q, v) for q, v in queries if int(q) in first_by_q]
-    spark = index.df.sparkSession
+            order_by_q[q] = order
+    live = [(q, v) for q, v in queries if int(q) in order_by_q]
     if not live:
         empty = index.df.filter(F.lit(False)).select(
             F.lit(0).cast("long").alias(query_id_col),
@@ -926,70 +874,26 @@ def ivf_search_exact_batch(
         )
         return empty.withColumn("dist", F.lit(0.0))
 
-    preds_323 = {
-        q: {a: [c_op, c_val] for a, (c_op, c_val) in constraints[q].items()}
-        for q in constraints
-        if q in first_by_q
-    }
-    acc = flat_accessors(index.df)
-    qt, used = _batch_query_table(
-        spark,
-        [(q, v, preds_323.get(int(q))) for q, v in live],
-        acc,
-        query_id_col=query_id_col,
-        query_vec_col="_qv",
-    )
-    _check_batch_collisions(
-        index.df, qt, extra=("_first", "_probe_c", "_sb", "_rn", "dist")
-    )
-    first_map = F.element_at(
-        F.create_map(
-            *[
-                c
-                for q in first_by_q
-                for c in (F.lit(int(q)), F.lit(first_by_q[q]))
-            ]
-        ),
-        F.col(query_id_col),
-    )
-    order_cols = [F.col("dist").asc(), F.col(index.id_col).asc()]
+    def probed(probe_by_q: dict) -> DataFrame:
+        masks = {}
+        for q, probe in probe_by_q.items():
+            m = F.col("cluster_id").isin(probe)
+            masks[q] = m if preds.get(q) is None else m & preds[q]
+        union = sorted({c for probe in probe_by_q.values() for c in probe})
+        return knn_batch(
+            index.df.filter(F.col("cluster_id").isin(union)), live, k,
+            predicates=masks, vec_col=index.vec_col, id_col=index.id_col,
+            query_id_col=query_id_col,
+        ).select(query_id_col, index.id_col, "dist")
 
-    def _per_query_topk(scored: DataFrame, limit: int) -> DataFrame:
-        w_local = Window.partitionBy(query_id_col, "_sb").orderBy(*order_cols)
-        w_global = Window.partitionBy(query_id_col).orderBy(*order_cols)
-        return (
-            scored.withColumn(
-                "_sb",
-                F.pmod(F.xxhash64(F.col(index.id_col)), F.lit(salt_buckets)),
-            )
-            .withColumn("_rn", F.row_number().over(w_local))
-            .filter(F.col("_rn") <= limit)
-            .drop("_rn")
-            .withColumn("_rn", F.row_number().over(w_global))
-            .filter(F.col("_rn") <= limit)
-            .drop("_rn", "_sb")
-        )
-
-    qt1 = qt.withColumn("_first", first_map)
-    pairs1 = index.df.join(
-        F.broadcast(qt1), on=F.col("cluster_id") == F.col("_first")
-    ).where(_batch_predicate(used, acc))
-    top1 = (
-        _per_query_topk(
-            pairs1.withColumn(
-                "dist", l2_sq_distance(F.col(index.vec_col), F.col("_qv"))
-            ).select(query_id_col, index.id_col, "dist"),
-            k,
-        )
-        .collect()
-    )  # bounded: ≤ |Q|·k rows — the single-query phase-1 collect, batched
-
+    first_by_q = {q: int(order[0]) for q, order in order_by_q.items()}
+    top1 = probed({q: [c] for q, c in first_by_q.items()}).collect()
     filled: dict[int, list] = {}
     for r in top1:
         filled.setdefault(int(r[query_id_col]), []).append(float(r["dist"]))
     probe_by_q: dict[int, list[int]] = {}
     for qi, q in enumerate(qids):
-        if q not in first_by_q:
+        if q not in order_by_q:
             continue
         order = order_by_q[q]
         dists = filled.get(q, [])
@@ -998,34 +902,10 @@ def ivf_search_exact_batch(
             continue
         d_k = float(np.sqrt(max(dists)))
         lower = dc_all[qi] - index.radii
-        first = first_by_q[q]
-        probe_by_q[q] = [first] + [
+        probe_by_q[q] = [first_by_q[q]] + [
             int(c) for c in order[1:] if lower[int(c)] <= d_k + 1e-9
         ]
-
-    probe_map = F.element_at(
-        F.create_map(
-            *[
-                c
-                for q, probe in probe_by_q.items()
-                for c in (
-                    F.lit(int(q)),
-                    F.array(*[F.lit(int(p)) for p in probe]),
-                )
-            ]
-        ),
-        F.col(query_id_col),
-    )
-    qt2 = qt.withColumn("_probe_c", F.explode(probe_map))
-    pairs2 = index.df.join(
-        F.broadcast(qt2), on=F.col("cluster_id") == F.col("_probe_c")
-    ).where(_batch_predicate(used, acc))
-    return _per_query_topk(
-        pairs2.withColumn(
-            "dist", l2_sq_distance(F.col(index.vec_col), F.col("_qv"))
-        ).select(query_id_col, index.id_col, "dist"),
-        k,
-    )
+    return probed(probe_by_q)
 
 
 def ivf_search_batch(
@@ -1037,83 +917,29 @@ def ivf_search_batch(
     predicates=None,
     accessors=None,
     query_id_col: str = "query_id",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """``ivf_search`` for a QUERY BATCH (r11): each query's ``nprobe``
-    nearest lists, answered from ONE scan of the probed-list union —
-    the (query, cluster) probe pairs ride the bounded broadcast side
-    (exploded array per query), the lists scan hash-joins on
-    cluster_id (equi-join, partition-prunable, never a nested loop),
-    each query's own §2.3 predicate (``predicates``: ``{query_id:
-    {attr: [op, value]}}``) applies via the broadcast parameter
-    columns, and the per-query exact top-k uses the salted two-phase
-    rank. Per query ≡ ``ivf_search`` (pytest-pinned) — same nprobe
-    recall contract, batch-shaped cost."""
-    from pyspark.sql.window import Window
-
-    from acorn_hybrid_vector_search_spark.functions.distance import (
-        l2_sq_distance,
-    )
-    from acorn_hybrid_vector_search_spark.functions.predicates import (
-        flat_accessors,
-    )
-    from acorn_hybrid_vector_search_spark.operators.hybrid import (
-        _batch_predicate,
-        _batch_query_table,
-        _check_batch_collisions,
-    )
-
+    nearest lists, answered from ONE ``knn_batch`` scan of the
+    probed-list union (cluster_id partition-prunable). Each query's
+    mask is ``cluster_id IN probes(q)`` and its own §2.3 predicate
+    (``predicates``: ``{query_id: {attr: [op, value]}}``, through
+    ``build_predicate``). Per query ≡ ``ivf_search`` (pytest-pinned) —
+    same nprobe recall contract, batch-shaped cost."""
+    qids, qmat = query_batch_matrix(queries)
     predicates = {int(q): p for q, p in dict(predicates or {}).items()}
-    qids = [int(q) for q, _ in queries]
     if unknown := [q for q in sorted(predicates) if q not in set(qids)]:
         raise ValueError(f"predicates for ids not in the batch: {unknown}")
-    qmat = np.asarray([list(v) for _, v in queries], dtype=np.float64)
     d2 = ((index.centroids[None, :, :] - qmat[:, None, :]) ** 2).sum(axis=2)
-    probe_by_q = {
-        q: [int(c) for c in np.argsort(d2[qi], kind="stable")[:nprobe]]
-        for qi, q in enumerate(qids)
-    }
     acc = accessors or flat_accessors(index.df)
-    qt, used = _batch_query_table(
-        index.df.sparkSession,
-        [(q, v, predicates.get(int(q))) for q, v in queries],
-        acc,
+    masks, union = {}, set()
+    for qi, q in enumerate(qids):
+        probe = [int(c) for c in np.argsort(d2[qi], kind="stable")[:nprobe]]
+        union.update(probe)
+        masks[q] = F.col("cluster_id").isin(probe)
+        if q in predicates:
+            masks[q] = masks[q] & build_predicate(predicates[q], acc)
+    return knn_batch(
+        index.df.filter(F.col("cluster_id").isin(sorted(union))), queries, k,
+        predicates=masks, vec_col=index.vec_col, id_col=index.id_col,
         query_id_col=query_id_col,
-        query_vec_col="_qv",
-    )
-    _check_batch_collisions(
-        index.df, qt, extra=("_probe_c", "_sb", "_rn", "dist")
-    )
-    probe_map = F.element_at(
-        F.create_map(
-            *[
-                c
-                for q, probe in probe_by_q.items()
-                for c in (
-                    F.lit(int(q)),
-                    F.array(*[F.lit(int(p)) for p in probe]),
-                )
-            ]
-        ),
-        F.col(query_id_col),
-    )
-    qt2 = qt.withColumn("_probe_c", F.explode(probe_map))
-    pairs = index.df.join(
-        F.broadcast(qt2), on=F.col("cluster_id") == F.col("_probe_c")
-    ).where(_batch_predicate(used, acc))
-    scored = pairs.withColumn(
-        "dist", l2_sq_distance(F.col(index.vec_col), F.col("_qv"))
-    ).select(query_id_col, index.id_col, "dist").withColumn(
-        "_sb", F.pmod(F.xxhash64(F.col(index.id_col)), F.lit(salt_buckets))
-    )
-    order = [F.col("dist").asc(), F.col(index.id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, "_sb").orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w_local))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .withColumn("_rn", F.row_number().over(w_global))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_sb")
-    )
+    ).select(query_id_col, index.id_col, "dist")

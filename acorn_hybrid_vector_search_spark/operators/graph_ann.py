@@ -18,7 +18,7 @@ mirroring the reference's build-once-query-many lifecycle), answers
 every query with the budgeted best-first search, emits its local top-k
 per query, and a global per-query rank over the O(P·|Q|·k) candidate
 stream merges partitions — the same partial→final reduction shape as
-``knn_batch_blas``, with the scan replaced by graph traversal.
+``knn.knn_batch``, with the scan replaced by graph traversal.
 
 Fidelity knobs (names match the reference):
 - ``m`` / ``ef_construction``: build-time degree bound / beam
@@ -60,6 +60,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from acorn_hybrid_vector_search_spark.operators._cache import invalidate, read_parquet
+from acorn_hybrid_vector_search_spark.operators.knn import (
+    DenseMaskPlan,
+    merge_topk,
+    query_batch_matrix,
+)
 from acorn_hybrid_vector_search_spark.operators.store import (
     NSW,
     RANGE_OPS,
@@ -494,42 +499,6 @@ def _local_topk_frame(
     return pd.DataFrame({"query_id": rows_q, id_col: rows_i, dist_col: rows_d})
 
 
-def _merge_topk(cand: DataFrame, k: int, id_col: str, dist_col: str) -> DataFrame:
-    """Global per-query rank over the O(P·|Q|·k) candidate stream."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def _query_batch_matrix(queries):
-    """Validate a (qid, vector) batch on the DRIVER and return
-    (qids, f64 query matrix). Duplicate ids would double their
-    candidates and corrupt the merged per-query top-k; a ragged batch
-    would make np.asarray build an object array and fail INSIDE the
-    executor as an opaque broadcast/matmul error (r13, advisor note) —
-    both raise ValueError here, guard-rail style."""
-    qids = [int(q) for q, _ in queries]
-    if len(qids) != len(set(qids)):
-        raise ValueError(
-            "duplicate query ids in batch — duplicated ids would double "
-            "their candidates and corrupt the merged per-query top-k"
-        )
-    qlists = [list(v) for _, v in queries]
-    if len({len(v) for v in qlists}) > 1:
-        raise ValueError(
-            "query vectors must share one dimension, got lengths "
-            f"{sorted({len(v) for v in qlists})}"
-        )
-    return qids, np.asarray(qlists, dtype=np.float64)
-
-
 def nsw_batch_topk(
     df: DataFrame,
     queries: Sequence[tuple[int, Sequence[float]]],
@@ -548,8 +517,8 @@ def nsw_batch_topk(
     """Approximate batch top-k via per-partition NSW graphs.
 
     Plan: mapInPandas builds ONE graph per partition (amortized over all
-    ``queries`` — the bounded broadcast-style parameter, as in
-    ``knn_batch_blas``), runs the budgeted search per query, emits each
+    ``queries`` — the bounded driver-side parameter, as in
+    ``knn.knn_batch``), runs the budgeted search per query, emits each
     partition's local top-k (≤ |Q|·k rows per partition), and a global
     per-query ``row_number() ≤ k`` merges partitions. ``max_visits``
     bounds work per (query, partition): with P partitions the effective
@@ -560,7 +529,7 @@ def nsw_batch_topk(
     declared blocked-set semantics) — post-search exclusion keeps the
     graph walk identical, matching hnswlib's BaseFilterFunctor.
     """
-    qids, qmat = _query_batch_matrix(queries)
+    qids, qmat = query_batch_matrix(queries)
     blocked_set = frozenset(int(b) for b in (blocked or ()))
 
     out_schema = f"query_id long, {id_col} long, {dist_col} double"
@@ -581,7 +550,7 @@ def nsw_batch_topk(
         )
 
     cand = df.select(id_col, vec_col).mapInPandas(gen, out_schema)
-    return _merge_topk(cand, k, id_col, dist_col)
+    return merge_topk(cand, k, id_col, dist_col)
 
 
 def nsw_write(
@@ -1693,7 +1662,7 @@ def nsw_read_topk(
     single-entry conjunction is exactly ``prune_match`` (op 'exact')
     or ``prune_range`` (range op) — identical counts, verdicts and
     masks by construction (pytest-pinned)."""
-    qids, qmat = _query_batch_matrix(queries)
+    qids, qmat = query_batch_matrix(queries)
     blocked_set = frozenset(int(b) for b in (blocked or ()))
     out_schema = f"query_id long, {id_col} long, {dist_col} double"
     has_pred = predicate is not None
@@ -2041,189 +2010,7 @@ def nsw_read_topk(
             {f"_pass_{q}": preds[q] for q in pred_qids}
         )
     cand = stored.groupBy("part_id").applyInPandas(run, out_schema)
-    return _merge_topk(cand, k, id_col, dist_col)
-
-
-# ops the zero-Catalyst template fast path can evaluate executor-side
-# (r14, VERDICT r13 ask #4) — §2.3's single-attribute grammar minus
-# nothing: exact + containment for strings, exact + the range ops for
-# numerics. Kind-appropriateness is the ROUTER's job (it only templates
-# supported (kind, op) pairs); the kernel validates the op spelling.
-_MATCH_TEMPLATE_OPS = frozenset(
-    {"exact", "substring", "leq", "geq", "<", ">"}
-)
-
-
-class _DenseMaskPlan:
-    """Shared predicate-mask planning for the dense serving kernels
-    (``nsw_dense_topk`` and the r13 int8 two-phase variant): validates
-    the predicate arguments, dedupes IDENTICAL per-query expressions
-    into shared mask groups (r12b), attaches one boolean mask column
-    per group to the scan, and hands the executor a PICKLABLE extractor
-    (plain ints/dicts only — the py4j Column objects never cross the
-    closure boundary).
-
-    Dedupe is by the expression's canonical string — false negatives
-    only (two distinct spellings of one predicate just keep their own
-    columns). INVARIANT (r13, advisor note): str(Column) is the JVM
-    expression toString — a safe dedupe key only while every predicate
-    is a pure function of the STORED TABLE's columns (no session
-    state, no non-deterministic exprs). build_predicate (the §2.3
-    builder, this repo's only producer) guarantees that; a caller
-    handing arbitrary Columns must keep the same contract or two
-    stringify-identical trees would silently share one mask."""
-
-    def __init__(self, predicate, predicates, qids, match=None):
-        self.has_pred = predicate is not None
-        self.predicate = predicate
-        if self.has_pred and (predicates or match):
-            raise ValueError("pass either predicate or predicates, not both")
-        self.preds = {int(q): c for q, c in (predicates or {}).items()}
-        self.pred_qids = sorted(self.preds)
-        # r13 MATCH fast path (the heterogeneous-predicate cliff fix,
-        # VERDICT r12 ask #3): per-query EXACT-match template
-        # predicates {qid: (attr, value)} on FLAT stored payload
-        # columns evaluate EXECUTOR-SIDE from the raw column — the
-        # §2.3 exact semantics (present ∧ col = value, NULL fails)
-        # with ZERO Catalyst expressions, so mask cost is flat in the
-        # number of DISTINCT (attr, value) pairs. The Catalyst column
-        # path pays per-DISTINCT-expression projection width (codegen
-        # falls back past the janino 64 KB line, so the interpreted
-        # projection scales with rows × expressions) — the BENCH_LADDER
-        # ``dense_predicate_cliff`` adjudication: a ≤2× quiet-phase
-        # rise at 1024 distinct masks at the reference shape (the r12
-        # 62 ms/q reading was a host-stall capture; PLANS §Dense-kernel
-        # heterogeneous-predicate cliff), which this path deletes
-        # entirely.
-        # r14 (VERDICT r13 ask #4): templates carry an OP — (attr, value)
-        # back-compat means exact; (attr, op, value) adds the serving
-        # battery's other single-attribute §2.3 classes: substring
-        # (case-sensitive containment) and the numeric range ops. Each
-        # evaluates executor-side from the raw payload column with the
-        # same NULL-fails semantics as build_predicate's Catalyst form
-        # (pytest-pinned ≡ predicates ≡ brute per op).
-        self.match: dict[int, tuple] = {}
-        for q, spec in (match or {}).items():
-            t = tuple(spec)
-            if len(t) == 2:
-                attr, op, value = str(t[0]), "exact", t[1]
-            elif len(t) == 3:
-                attr, op, value = str(t[0]), str(t[1]), t[2]
-            else:
-                raise ValueError(
-                    f"match template for query {q} must be (attr, value) "
-                    f"or (attr, op, value); got {spec!r}"
-                )
-            if op not in _MATCH_TEMPLATE_OPS:
-                raise ValueError(
-                    f"match template op {op!r} (query {q}) not in "
-                    f"{sorted(_MATCH_TEMPLATE_OPS)} — use predicates= "
-                    "(Catalyst) for other operators"
-                )
-            self.match[int(q)] = (attr, op, value)
-        self.match_attrs = sorted({a for a, _, _ in self.match.values()})
-        qset = set(qids)
-        if unknown := [q for q in self.pred_qids if q not in qset]:
-            raise ValueError(f"predicates for ids not in the batch: {unknown}")
-        if unknown := [q for q in sorted(self.match) if q not in qset]:
-            raise ValueError(f"match for ids not in the batch: {unknown}")
-        if both := sorted(set(self.match) & set(self.preds)):
-            raise ValueError(
-                f"queries {both} carry BOTH a predicate Column and a "
-                "match template — pick one per query"
-            )
-        self.group_of: dict[int, int] = {}
-        self.group_cols: list = []
-        by_expr: dict[str, int] = {}
-        for q in self.pred_qids:
-            key_s = str(self.preds[q])
-            gi = by_expr.get(key_s)
-            if gi is None:
-                gi = by_expr[key_s] = len(self.group_cols)
-                self.group_cols.append(self.preds[q])
-            self.group_of[q] = gi
-        self.n_groups = len(self.group_cols)
-
-    def attach(self, stored: DataFrame) -> "tuple[DataFrame, list[str]]":
-        """Attach the mask column(s); returns (df, added column names)."""
-        if self.has_pred:
-            return stored.withColumn("_pass", self.predicate), ["_pass"]
-        if self.pred_qids:
-            return (
-                stored.withColumns(
-                    {
-                        f"_pass_g{i}": c
-                        for i, c in enumerate(self.group_cols)
-                    }
-                ),
-                [f"_pass_g{i}" for i in range(self.n_groups)],
-            )
-        return stored, []
-
-    def extractor(self):
-        """A picklable per-fragment mask reader: pdf →
-        (shared_mask | None, {qid: mask}). Masks are False for
-        NULL-verdict rows (§2.3 NULL fails)."""
-        has_pred = self.has_pred
-        pred_qids = list(self.pred_qids)
-        group_of = dict(self.group_of)
-        n_groups = self.n_groups
-        match = dict(self.match)
-
-        def extract(pdf):
-            masks: dict[int, np.ndarray] = {}
-            if has_pred:
-                return (
-                    pdf["_pass"].fillna(False).to_numpy(dtype=bool),
-                    masks,
-                )
-            if match:
-                # dedupe identical (attr, op, value) templates; evaluate
-                # each ONCE per fragment from the raw payload column
-                # (present ∧ <op> — NaN/None compare False, so notna()
-                # is the explicit §2.3 presence conjunct; str.contains
-                # mirrors Catalyst's case-sensitive containment)
-                shared_tpl: dict = {}
-                for qid, key in match.items():
-                    m = shared_tpl.get(key)
-                    if m is None:
-                        attr, op, val = key
-                        s = pdf[attr]
-                        if op == "exact":
-                            mm = s.notna() & (s == val)
-                        elif op == "substring":
-                            mm = (
-                                s.str.contains(val, regex=False)
-                                .fillna(False)
-                                .astype(bool)
-                                & s.notna()
-                            )
-                        elif op == "leq":
-                            mm = s.notna() & (s <= val)
-                        elif op == "geq":
-                            mm = s.notna() & (s >= val)
-                        elif op == "<":
-                            mm = s.notna() & (s < val)
-                        else:  # ">"
-                            mm = s.notna() & (s > val)
-                        m = shared_tpl[key] = (
-                            mm.fillna(False).to_numpy(dtype=bool)
-                        )
-                    masks[qid] = m
-            if pred_qids:
-                # ONE vectorized extraction for all group columns (r13):
-                # per-column pandas access costs ~2× at G=1024
-                gm = (
-                    pdf[[f"_pass_g{i}" for i in range(n_groups)]]
-                    .fillna(False)
-                    .to_numpy(dtype=bool)
-                )
-                for q in pred_qids:
-                    masks[q] = gm[:, group_of[q]]
-                return None, masks
-            return None, masks
-
-        return extract
+    return merge_topk(cand, k, id_col, dist_col)
 
 
 def nsw_dense_topk(
@@ -2286,10 +2073,10 @@ def nsw_dense_topk(
     100 TB that is the difference between re-shuffling the dataset per
     micro-batch and a map-only pass.
     """
-    qids, qmat = _query_batch_matrix(queries)
+    qids, qmat = query_batch_matrix(queries)
     blocked_arr = np.asarray(sorted(int(b) for b in (blocked or ())), dtype=np.int64)
     out_schema = f"query_id long, {id_col} long, {dist_col} double"
-    mask_plan = _DenseMaskPlan(predicate, predicates, qids, match=match)
+    mask_plan = DenseMaskPlan(predicate, predicates, qids, match=match)
     if query_block < 1:
         raise ValueError(f"query_block must be >= 1, got {query_block}")
 
@@ -2372,7 +2159,7 @@ def nsw_dense_topk(
                 yield frag_topk(pdf)
 
     cand = stored.mapInPandas(run, out_schema)
-    return _merge_topk(cand, k, id_col, dist_col)
+    return merge_topk(cand, k, id_col, dist_col)
 
 
 def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
@@ -2506,7 +2293,7 @@ def nsw_dense_topk_int8(
     UPPER bound — by the bracket, any row it drops has ≥ k rows
     strictly closer, so the true top-k provably survives. Predicates /
     blocked / tombstones apply in this phase (masks evaluate on the
-    sidecar's payload columns via the same ``_DenseMaskPlan``
+    sidecar's payload columns via the same ``DenseMaskPlan``
     machinery, NULL fails).
 
     Phase 2 (exact re-rank, candidate-sized): the certified candidates
@@ -2564,8 +2351,8 @@ def nsw_dense_topk_int8(
 
     from pyspark.sql.window import Window
 
-    qids, qmat = _query_batch_matrix(queries)
-    mask_plan = _DenseMaskPlan(predicate, predicates, qids, match=match)
+    qids, qmat = query_batch_matrix(queries)
+    mask_plan = DenseMaskPlan(predicate, predicates, qids, match=match)
     if query_block < 1:
         raise ValueError(f"query_block must be >= 1, got {query_block}")
     if mode not in ("certified", "rerank"):
@@ -2807,4 +2594,4 @@ def nsw_dense_topk_int8(
                 }
             )
 
-    return _merge_topk(rerank.mapInPandas(exact, out_schema), k, id_col, dist_col)
+    return merge_topk(rerank.mapInPandas(exact, out_schema), k, id_col, dist_col)

@@ -42,12 +42,16 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from acorn_hybrid_vector_search_spark.functions.predicates import (
-    _NUMERIC_OPS,
-    _STRING_OPS,
     AttributeAccessor,
     build_predicate,
+    flat_accessors,
 )
-from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
+from acorn_hybrid_vector_search_spark.operators.knn import (
+    knn_batch,
+    knn_exact,
+    merge_topk,
+    query_batch_matrix,
+)
 
 Predicates = Mapping[str, Sequence[Any]]
 
@@ -62,8 +66,6 @@ def _resolve_predicate(
     if isinstance(predicates, Column):
         return predicates
     if accessors is None:
-        from acorn_hybrid_vector_search_spark.functions.predicates import flat_accessors
-
         accessors = flat_accessors(df)
     return build_predicate(predicates, accessors)
 
@@ -362,132 +364,32 @@ def acorn_prepare(
 
 
 # ---------------------------------------------------------------------------
-# batched hybrid search (VERDICT r7 ask #1): one corpus scan answers a
-# whole batch of hybrid queries, each with its OWN §2.3 predicate.
-
-# op → column-name token (ops like '<' aren't valid identifier chars)
-_OP_TOKEN = {
-    "exact": "exact", "leq": "leq", "geq": "geq",
-    "<": "lt", ">": "gt", "substring": "substring",
-}
+# batched hybrid search: one corpus scan answers a whole batch of hybrid
+# queries, each with its OWN §2.3 predicate, through knn.knn_batch.
 
 
-def _batch_query_table(
-    spark,
-    queries: Sequence[tuple[Any, Sequence[float], Predicates | None]],
-    accessors: Mapping[str, AttributeAccessor],
-    *,
-    query_id_col: str,
-    query_vec_col: str,
-):
-    """The broadcast side of a hybrid batch: one row per query carrying
-    (id, vector) plus the batch's predicate PARAMETERS as columns —
-    ``_c_<attr>`` (did this query constrain the attribute at all: the
-    strict missing-attribute-rejection trigger) and ``_p_<attr>_<op>``
-    (the comparison value; NULL = this query doesn't use that (attr, op),
-    so its conjunct is vacuous). Returns (query_table, attr→ops map)."""
-    qids = [qid for qid, _, _ in queries]
-    if len(set(qids)) != len(qids):
-        raise ValueError(f"duplicate query ids in batch: {qids}")
-    used: dict[str, list[str]] = {}
-    for _, _, preds in queries:
-        for attr, (op, v) in (preds or {}).items():
-            if attr not in accessors:
-                raise ValueError(f"unknown attribute: {attr!r}")
-            if v is None:
-                # NULL is the "constraint absent for this query" marker in
-                # the parameter columns — a literal None value would be
-                # silently mistaken for it (and str(None) would compare
-                # against the string 'None'); the single-query grammar
-                # rejects every row under a None comparison anyway
-                raise ValueError(f"predicate value for {attr!r} may not be None")
-            supported = (
-                _NUMERIC_OPS if accessors[attr].kind == "numeric" else _STRING_OPS
-            )
-            ops = used.setdefault(attr, [])
-            # unsupported (attr, op) → presence-only, same as build_predicate
-            if op in supported and op not in ops:
-                ops.append(op)
-
-    fields = [f"{query_id_col} long", f"{query_vec_col} array<double>"]
-    for attr, ops in used.items():
-        fields.append(f"_c_{attr} boolean")
-        for op in ops:
-            t = "double" if accessors[attr].kind == "numeric" else "string"
-            fields.append(f"_p_{attr}_{_OP_TOKEN[op]} {t}")
-    rows = []
-    for qid, vec, preds in queries:
-        preds = preds or {}
-        row: list[Any] = [int(qid), [float(x) for x in vec]]
-        for attr, ops in used.items():
-            constraint = preds.get(attr)
-            row.append(constraint is not None)
-            for op in ops:
-                if constraint is not None and constraint[0] == op:
-                    v = constraint[1]
-                    row.append(
-                        float(v) if accessors[attr].kind == "numeric" else str(v)
-                    )
-                else:
-                    row.append(None)
-        rows.append(tuple(row))
-    return spark.createDataFrame(rows, ", ".join(fields)), used
+def _batch_masks(
+    df: DataFrame,
+    queries: Sequence[tuple[Any, Sequence[float], Predicates | Column | None]],
+    accessors: Mapping[str, AttributeAccessor] | None,
+) -> dict[int, Column]:
+    """Each query's predicate as the Column its single-query search would
+    filter on, for the queries that carry one."""
+    if accessors is None:
+        accessors = flat_accessors(df)
+    return {
+        int(qid): _resolve_predicate(df, preds, accessors)
+        for qid, _, preds in queries
+        if preds is not None
+    }
 
 
-def _check_batch_collisions(
-    df: DataFrame, qt: DataFrame, extra: Sequence[str] = ()
-) -> None:
-    """Reject corpus columns that collide with ANY batch-internal name:
-    the query table's columns (``query_id``, ``_qv``, every generated
-    ``_c_<attr>``/``_p_<attr>_<op>`` parameter) plus the rank/salt
-    scratch columns. A corpus column named ``_qv`` (or ``_c_brand``)
-    would otherwise silently corrupt the distance/predicate evaluation
-    inside the crossJoin — or fail later with an ambiguous-column
-    error (r8 ADVICE: the old guard covered only query_id/_sb/_rn and
-    only in the prefilter variant)."""
-    internal = set(qt.columns) | {"_sb", "_rn"} | set(extra)
-    bad = internal & set(df.columns)
-    if bad:
-        raise ValueError(
-            f"df columns collide with batch internals: {sorted(bad)}"
-        )
-
-
-def _batch_predicate(
-    used: Mapping[str, Sequence[str]],
-    accessors: Mapping[str, AttributeAccessor],
-) -> Column:
-    """The §2.3 conjunction evaluated PER (row, query) pair against the
-    parameter columns of ``_batch_query_table``. Exactly
-    ``build_predicate``'s semantics for every query at once:
-
-    - unconstrained attr for this query (``_c`` false) → vacuous;
-    - constrained → strict presence rejection, plus each (attr, op) the
-      batch uses: NULL parameter → vacuous, else the comparison. A NULL
-      attribute VALUE under a non-null parameter yields SQL NULL and the
-      row is filtered — identical to the single-query path."""
-    cond = F.lit(True)
-    for attr, ops in used.items():
-        acc = accessors[attr]
-        attr_ok = acc.present
-        for op in ops:
-            p = F.col(f"_p_{attr}_{_OP_TOKEN[op]}")
-            v = acc.value
-            if op == "exact":
-                c = v == p
-            elif op == "leq":
-                c = v <= p
-            elif op == "geq":
-                c = v >= p
-            elif op == "<":
-                c = v < p
-            elif op == ">":
-                c = v > p
-            else:  # substring
-                c = v.contains(p)
-            attr_ok = attr_ok & (p.isNull() | c)
-        cond = cond & (~F.col(f"_c_{attr}") | attr_ok)
-    return cond
+def _query_pairs(queries) -> list[tuple[int, Sequence[float]]]:
+    """The (id, vector) half of a hybrid batch, validated on the driver
+    (duplicate ids and ragged vectors raise)."""
+    pairs = [(qid, vec) for qid, vec, _ in queries]
+    query_batch_matrix(pairs)
+    return pairs
 
 
 def prefilter_search_batch(
@@ -501,7 +403,6 @@ def prefilter_search_batch(
     dist_col: str = "dist",
     query_id_col: str = "query_id",
     payload_cols: Sequence[str] | None = None,
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """K2 for a QUERY BATCH: one corpus scan answers every (vector,
     predicate, k) query — the reference's real serving surface is a batch
@@ -512,61 +413,21 @@ def prefilter_search_batch(
 
     ``queries``: bounded driver-side [(query_id, vector, predicates), …]
     where ``predicates`` is the §2.3 grammar ``{attr: [op, value]}`` (or
-    None/{} for a pure top-k query — the class-1 shape). Per-query
-    results are IDENTICAL to ``prefilter_search`` called per query
-    (pytest-pinned): the query table carries each query's predicate
-    parameters, the joined condition replays build_predicate's semantics
-    (strict missing-attribute rejection, unsupported-op fallthrough,
-    first-element nested access via the same accessors) per (row, query).
+    None/{} for a pure top-k query — the class-1 shape). Each query's
+    predicate is ``build_predicate``'s Column, used as that query's mask
+    in ``knn_batch``, so per query the result is ``prefilter_search``'s
+    rows with the same ``dist`` bits.
 
-    Plan: ONE scan of ``df`` → BroadcastNestedLoopJoin against the
-    bounded query table (the big side never shuffles for the join; the
-    predicate prunes pairs map-side, BEFORE the distance projection) →
-    two-phase per-query top-k: row_number inside (query, salt-bucket)
-    sub-partitions first (no per-query hot window partition — the
-    de-skew contract every capped operator in this repo follows), then
-    the global per-query rank over the ≤ |Q|·salt_buckets·k survivors.
-    Shuffle volume is the PASSING pairs only, spread over salt buckets.
-
-    ``payload_cols``: projection pushed below the join (must include
+    ``payload_cols``: projection applied before the scan (must include
     every column the batch's predicates read); default all of ``df``'s
-    columns — pass the projection at scale so pair rows don't carry
-    unused width through the shuffle.
+    columns.
     """
-    from pyspark.sql.window import Window
-
-    if accessors is None:
-        from acorn_hybrid_vector_search_spark.functions.predicates import (
-            flat_accessors,
-        )
-
-        accessors = flat_accessors(df)
-    qt, used = _batch_query_table(
-        df.sparkSession, queries, accessors,
-        query_id_col=query_id_col, query_vec_col="_qv",
-    )
-    _check_batch_collisions(df, qt)
+    masks = _batch_masks(df, queries, accessors)
     if payload_cols is not None:
         df = df.select(*dict.fromkeys([id_col, *payload_cols, vec_col]))
-    from acorn_hybrid_vector_search_spark.functions.distance import l2_sq_distance
-
-    pairs = df.crossJoin(F.broadcast(qt)).where(_batch_predicate(used, accessors))
-    param_cols = [c for c in qt.columns if c.startswith(("_c_", "_p_")) or c == "_qv"]
-    scored = (
-        pairs.withColumn(dist_col, l2_sq_distance(F.col(vec_col), F.col("_qv")))
-        .drop(*param_cols)
-        .withColumn("_sb", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
-    )
-    order = [F.col(dist_col).asc(), F.col(id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, "_sb").orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
-    return (
-        scored.withColumn("_rn", F.row_number().over(w_local))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-        .withColumn("_rn", F.row_number().over(w_global))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_sb")
+    return knn_batch(
+        df, _query_pairs(queries), k, predicates=masks, vec_col=vec_col,
+        id_col=id_col, dist_col=dist_col, query_id_col=query_id_col,
     )
 
 
@@ -581,54 +442,21 @@ def postfilter_search_batch(
     id_col: str = "vec_id",
     dist_col: str = "dist",
     query_id_col: str = "query_id",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """K3 for a query batch: per-query top-``large_k`` candidates FIRST
-    (no predicate — every (row, query) pair is ranked), then each query's
-    predicate over its own candidate list, truncated to k. Same
-    semantics as ``postfilter_search`` per query, including the
-    under-fill failure mode (pytest-pinned). The candidate stage ranks
-    all N·|Q| pairs through the same two-phase salted window as
-    ``prefilter_search_batch`` — the predicate can't prune pairs here
-    because post-filter semantics REQUIRE rank-then-filter."""
-    from pyspark.sql.window import Window
-
-    if accessors is None:
-        from acorn_hybrid_vector_search_spark.functions.predicates import (
-            flat_accessors,
-        )
-
-        accessors = flat_accessors(df)
-    qt, used = _batch_query_table(
-        df.sparkSession, queries, accessors,
-        query_id_col=query_id_col, query_vec_col="_qv",
+    (each predicate rides along as the ``_passes`` verdict — post-filter
+    semantics REQUIRE rank-then-filter), then each query's passing
+    candidates truncated to k. Same semantics as ``postfilter_search``
+    per query, including the under-fill failure mode (pytest-pinned)."""
+    cand = knn_batch(
+        df, _query_pairs(queries), large_k,
+        predicates=_batch_masks(df, queries, accessors), carry=True,
+        vec_col=vec_col, id_col=id_col, dist_col=dist_col,
     )
-    _check_batch_collisions(df, qt)
-    from acorn_hybrid_vector_search_spark.functions.distance import l2_sq_distance
-
-    pairs = df.crossJoin(F.broadcast(qt))
-    scored = (
-        pairs.withColumn(dist_col, l2_sq_distance(F.col(vec_col), F.col("_qv")))
-        .withColumn("_sb", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
-    )
-    order = [F.col(dist_col).asc(), F.col(id_col).asc()]
-    w_local = Window.partitionBy(query_id_col, "_sb").orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w_local))
-        .filter(F.col("_rn") <= large_k)
-        .drop("_rn")
-        .withColumn("_rn", F.row_number().over(w_global))
-        .filter(F.col("_rn") <= large_k)
-        .drop("_rn", "_sb")
-    )
-    param_cols = [c for c in qt.columns if c.startswith(("_c_", "_p_")) or c == "_qv"]
     return (
-        cand.where(_batch_predicate(used, accessors))
-        .drop(*param_cols)
-        .withColumn("_rn", F.row_number().over(w_global))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
+        merge_topk(cand.filter(F.col("_passes")), k, id_col, dist_col)
+        .drop("_passes")
+        .withColumnRenamed("query_id", query_id_col)
     )
 
 
@@ -644,7 +472,6 @@ def acorn_search_batch(
     id_col: str = "vec_id",
     dist_col: str = "dist",
     query_id_col: str = "query_id",
-    salt_buckets: int = 32,
 ) -> DataFrame:
     """K4 for a query batch: the ``acorn_search_plan`` escalation —
     bounded candidate prefix, smallest-filling-round selection, exact
@@ -654,59 +481,33 @@ def acorn_search_batch(
     reference's §2.4 battery pays one scan for the whole batch instead
     of one driver-planned escalation per query.
 
-    Plan: one scan → broadcast query-parameter join → two-phase salted
-    per-query top-``max_large_k`` (the K4 candidate set is
-    DISTANCE-FIRST: the predicate rides along as the ``_passes``
-    verdict, it must not prune candidates) → per-query running
-    prefix-hit count and round selection as a |Q|-row aggregate
-    broadcast back → escalation rows where the chosen prefix fills;
-    the exact pre-filter fallback (``prefilter_search_batch`` — its own
-    scan, same as the single-query plan's fallback branch) rides in the
-    same plan filtered to chosen-IS-NULL queries. All windows after the
-    candidate stage partition over ≤ |Q|·max_large_k rows — a
-    query-size constant, not row-scaled."""
+    Plan: ``knn_batch`` gives each query's top-``max_large_k`` by
+    distance with the ``_passes`` verdict carried (the K4 candidate set
+    is DISTANCE-FIRST) → per-query running prefix-hit count and round
+    selection as a |Q|-row aggregate broadcast back → the first k
+    passing rows where the chosen prefix fills; the exact pre-filter
+    fallback (the same kernel with the masks filtering — its own scan,
+    as in the single-query plan's fallback branch) rides in the same
+    plan filtered to chosen-IS-NULL queries. Every window after the kernel partitions
+    over ≤ |Q|·max_large_k rows — a query-size constant, not
+    row-scaled."""
     from pyspark.sql.window import Window
 
-    if accessors is None:
-        from acorn_hybrid_vector_search_spark.functions.predicates import (
-            flat_accessors,
-        )
-
-        accessors = flat_accessors(df)
-    qt, used = _batch_query_table(
-        df.sparkSession, queries, accessors,
-        query_id_col=query_id_col, query_vec_col="_qv",
-    )
-    _check_batch_collisions(
-        df, qt, extra=("_passes", "_prefix_hits", "_pass_rank", "_chosen")
-    )
-    from acorn_hybrid_vector_search_spark.functions.distance import l2_sq_distance
-
+    if bad := {"_prefix_hits", "_chosen"} & set(df.columns):
+        raise ValueError(f"df columns collide with batch internals: {sorted(bad)}")
+    pairs, masks = _query_pairs(queries), _batch_masks(df, queries, accessors)
     max_large_k = initial_oversample * (4 ** (max_rounds - 1)) * k
-    order = [F.col(dist_col).asc(), F.col(id_col).asc()]
-    scored = (
-        df.crossJoin(F.broadcast(qt))
-        .withColumn(dist_col, l2_sq_distance(F.col(vec_col), F.col("_qv")))
-        .withColumn("_sb", F.pmod(F.xxhash64(F.col(id_col)), F.lit(salt_buckets)))
+    cand = knn_batch(
+        df, pairs, max_large_k, predicates=masks, carry=True,
+        vec_col=vec_col, id_col=id_col, dist_col=dist_col,
     )
-    w_local = Window.partitionBy(query_id_col, "_sb").orderBy(*order)
-    w_global = Window.partitionBy(query_id_col).orderBy(*order)
-    cand = (
-        scored.withColumn("_rn", F.row_number().over(w_local))
-        .filter(F.col("_rn") <= max_large_k)
-        .drop("_rn")
-        .withColumn("_rn", F.row_number().over(w_global))
-        .filter(F.col("_rn") <= max_large_k)
-        .drop("_sb")
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(dist_col).asc(), F.col(id_col).asc()
     )
-    param_cols = [c for c in qt.columns if c.startswith(("_c_", "_p_")) or c == "_qv"]
-    ranked = (
-        cand.withColumn("_passes", _batch_predicate(used, accessors))
-        .drop(*param_cols)
-        .withColumn(
-            "_prefix_hits",
-            F.sum(F.when(F.col("_passes"), 1).otherwise(0)).over(w_global),
-        )
+    ranked = cand.select(
+        "*",
+        F.row_number().over(w).alias("_rn"),
+        F.sum(F.when(F.col("_passes"), 1).otherwise(0)).over(w).alias("_prefix_hits"),
     )
     rounds = [initial_oversample * (4**r) * k for r in range(max_rounds)]
     per_round = [
@@ -718,29 +519,29 @@ def acorn_search_batch(
     chosen = (
         F.least(*per_round) if len(per_round) > 1 else per_round[0]
     ).alias("_chosen")
-    sel = F.broadcast(ranked.groupBy(query_id_col).agg(chosen))
+    sel = F.broadcast(ranked.groupBy("query_id").agg(chosen))
 
-    pass_rank = F.row_number().over(w_global)
+    # a filled prefix holds k passing rows, so they are the first k passing
     escalation = (
-        ranked.filter(F.col("_passes"))
-        .withColumn("_pass_rank", pass_rank)
-        .join(sel, query_id_col)
-        .filter(F.col("_chosen").isNotNull() & (F.col("_pass_rank") <= k))
-        .drop("_passes", "_rn", "_prefix_hits", "_pass_rank", "_chosen")
-    )
-    out_cols = escalation.columns
-    fallback = (
-        prefilter_search_batch(
-            df, queries, k, accessors=accessors, vec_col=vec_col,
-            id_col=id_col, dist_col=dist_col, query_id_col=query_id_col,
-            salt_buckets=salt_buckets,
+        merge_topk(
+            ranked.filter(F.col("_passes")).drop("_passes", "_rn", "_prefix_hits"),
+            k, id_col, dist_col,
         )
-        .select(*out_cols)
-        .join(sel, query_id_col)
+        .join(sel, "query_id")
+        .filter(F.col("_chosen").isNotNull())
+        .drop("_chosen")
+    )
+    fallback = (
+        knn_batch(
+            df, pairs, k, predicates=masks, vec_col=vec_col,
+            id_col=id_col, dist_col=dist_col,
+        )
+        .select(*escalation.columns)
+        .join(sel, "query_id")
         .filter(F.col("_chosen").isNull())
         .drop("_chosen")
     )
-    return escalation.unionByName(fallback)
+    return escalation.unionByName(fallback).withColumnRenamed("query_id", query_id_col)
 
 
 def routed_search_batch(
@@ -764,6 +565,7 @@ def routed_search_batch(
     ``attribute_partitioned_search``'s contract per query: the subset
     holds every attribute-present row, and the strict
     missing-attribute-rejection conjunct discards subset-external rows."""
+    _query_pairs(queries)  # ids must be unique across both targets
     routed = [q for q in queries if set(q[2] or ()) & set(subset_attrs)]
     direct = [q for q in queries if not (set(q[2] or ()) & set(subset_attrs))]
     parts = []

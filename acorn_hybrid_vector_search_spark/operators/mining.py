@@ -3,17 +3,16 @@ training — the retrieval-training data prep step.
 
 A hard negative for query q is an item CLOSE to q in embedding space but
 with a DIFFERENT label — the examples that actually move a contrastive
-loss. The Spark shape mirrors batch k-NN (operators/knn.py::knn_batch):
-broadcast the bounded query batch across the collection (the corpus
-never shuffles for the join), apply the label-mismatch conjunct to each
-pair BEFORE ranking, then ``row_number() ≤ k`` per query. The pair
-filter runs map-side, so the per-query rank shuffle carries only
-eligible pairs.
+loss. The queries are a DataFrame with a per-query label, so the plan
+is a join by design: broadcast the bounded query batch across the
+collection (the corpus never shuffles for the join), apply the
+label-mismatch conjunct to each pair BEFORE ranking, then
+``row_number() ≤ k`` per query. The pair filter runs map-side, so the
+per-query rank shuffle carries only eligible pairs.
 
-At 100 TB: corpus scan × |Q| broadcast — one pass per mining batch; for
-very large query batches the per-partition pre-reduction of
-``knn_batch_blas`` applies identically (top-k per partition per query
-before the shuffle).
+At 100 TB: corpus scan × |Q| broadcast — one pass per mining batch. A
+driver-side batch with per-query masks is ``knn.knn_batch``'s shape
+(top-k per Arrow batch per query before the shuffle).
 """
 
 from __future__ import annotations

@@ -1,91 +1,19 @@
-"""Similarity search kernels: batch multi-query BLAS top-k, LSH bucketing
-and Johnson-Lindenstrauss random projection.
+"""Similarity search kernels: LSH bucketing and Johnson-Lindenstrauss
+random projection (exact batch top-k is ``knn.knn_batch``).
 
-``knn_batch_blas`` ranks a query batch with one BLAS matmul per Arrow
-batch; its ``x @ q`` reorders the float sum, so unlike ``knn_exact`` its
-distances are not bit-identical to the oracle. **Random-hyperplane LSH**
-(SimHash-for-vectors) gives each row a deterministic bucket id, so
-near-duplicate / top-k search joins only inside a bucket: the scale path
-when even one exact scan per query is too much and no IVF index exists.
+**Random-hyperplane LSH** (SimHash-for-vectors) gives each row a
+deterministic bucket id, so near-duplicate / top-k search joins only
+inside a bucket: the scale path when even one exact scan per query is too
+much and no IVF index exists.
 """
 
 from __future__ import annotations
-
-from collections.abc import Sequence
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
-
-
-def knn_batch_blas(
-    df: DataFrame,
-    queries: Sequence[tuple[int, Sequence[float]]],
-    k: int,
-    *,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dist_col: str = "dist",
-) -> DataFrame:
-    """Batch multi-query exact top-k with MAP-SIDE top-k reduction — the
-    100 TB shape for large query batches.
-
-    ``queries`` is the bounded driver-side batch [(query_id, vector), …]
-    (a query parameter, like ``knn_exact``'s single vector; it ships
-    closure-captured with the UDF, one copy per executor). Plan:
-
-      mapInPandas over (id, vec): per Arrow batch, ONE BLAS matmul gives
-      the (batch × |Q|) distance block; np.argpartition keeps each query's
-      local top-k → each input partition emits ≤ |Q|·k candidate rows
-      total (accumulated across its batches, re-reduced at partition end)
-      → global per-query row_number() ≤ k over the tiny candidate stream.
-
-    The shuffle moves O(P·|Q|·k) rows instead of ``knn_batch``'s N·|Q| —
-    the same partial-then-final aggregation shape Spark uses for map-side
-    combine. Output: (query_id, id, dist); join payload back by id if
-    needed (k·|Q| rows — a broadcast).
-    """
-    qids = np.asarray([int(q) for q, _ in queries], dtype=np.int64)
-    qmat = np.asarray([list(v) for _, v in queries], dtype=np.float64)  # (Q, dim)
-    q_sq = (qmat**2).sum(axis=1)  # (Q,)
-    nq = len(qids)
-
-    out_schema = f"query_id long, {id_col} long, {dist_col} double"
-
-    def gen(batches):
-        best_d = [np.empty(0, dtype=np.float64) for _ in range(nq)]
-        best_i = [np.empty(0, dtype=np.int64) for _ in range(nq)]
-        for pdf in batches:
-            x = np.asarray(list(pdf[vec_col]), dtype=np.float64)  # (B, dim)
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            d2 = (x**2).sum(axis=1)[:, None] - 2.0 * (x @ qmat.T) + q_sq[None, :]
-            for qi in range(nq):
-                d = np.concatenate([best_d[qi], d2[:, qi]])
-                i = np.concatenate([best_i[qi], ids])
-                if d.shape[0] > k:
-                    keep = np.argpartition(d, k - 1)[:k]
-                    d, i = d[keep], i[keep]
-                best_d[qi], best_i[qi] = d, i
-        rows = {
-            "query_id": np.repeat(qids, [len(b) for b in best_i]),
-            id_col: np.concatenate(best_i) if best_i else np.empty(0, np.int64),
-            dist_col: np.concatenate(best_d) if best_d else np.empty(0, np.float64),
-        }
-        yield pd.DataFrame(rows)
-
-    from pyspark.sql.window import Window
-
-    cand = df.select(id_col, vec_col).mapInPandas(gen, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
-    )
-    return (
-        cand.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
 
 
 # ---------------------------------------------------------------------------

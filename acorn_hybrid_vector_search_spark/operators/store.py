@@ -29,6 +29,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import re
 import shutil
 from dataclasses import dataclass
 
@@ -310,6 +311,15 @@ def live_rows(
     return live
 
 
+def max_owner(stored: DataFrame, kind: StoreKind) -> "int | None":
+    """The highest owner id of a read of a store's data, taken from the
+    ``<owner>=N`` directories of the files Spark listed for it: no job,
+    and the same path for local and remote stores."""
+    pattern = re.compile(rf"/{kind.owner}=(-?\d+)/")
+    owners = [int(m.group(1)) for f in stored.inputFiles() if (m := pattern.search(f))]
+    return max(owners, default=None)
+
+
 def delete_ids(
     spark,
     path: str,
@@ -330,7 +340,7 @@ def delete_ids(
     if ceiling is None or strict:
         stored = spark.read.parquet(data_root(path, kind))
         if ceiling is None:
-            ceiling = stored.agg(F.max(kind.owner)).head()[0]
+            ceiling = max_owner(stored, kind)
         if strict:
             # one job answers both existence and the sample
             miss = ids_df.join(stored.select(id_col), id_col, "left_anti").take(6)

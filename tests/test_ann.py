@@ -1650,13 +1650,13 @@ def test_ivf_search_exact_batch_equals_per_query_loop(spark):
         ]
         assert by_q.get(qid, []) == single, qid
     assert 101 not in by_q  # provably-empty constraint → empty result
-    # plan shape: both phases are broadcast EQUI-joins, never a
-    # nested-loop pair explosion
+    # plan shape: one knn_batch scan of the probed lists, the queries
+    # never joined to the corpus
     plan = ivf_search_exact_batch(
         idx, queries, 5, match=match, range_pred=range_pred
     )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
-    assert "BroadcastHashJoin" in plan
+    assert "MapInArrow" in plan
+    assert "Join" not in plan
     # guards
     with pytest.raises(ValueError, match="both match and range_pred"):
         ivf_search_exact_batch(
@@ -2344,7 +2344,8 @@ def test_ivf_search_batch_equals_per_query_loop(spark, tmp_path):
     plan = ivf_search_batch(
         idx, queries, 5, nprobe=3, predicates=preds, accessors=acc
     )._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" not in plan
+    assert "MapInArrow" in plan
+    assert "Join" not in plan
 
 
 def test_ivf_exact_batch_enforces_le_ge_spellings(spark, tmp_path):

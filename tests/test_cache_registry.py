@@ -178,8 +178,9 @@ def test_entry_file_has_no_own_caches_or_temp_dirs():
 
 OPERATORS = REPO / "acorn_hybrid_vector_search_spark" / "operators"
 # modules whose private names no other module may use: store.py owns the
-# persisted-store layout, graph_ann.py the graph build and search kernels
-SEALED = ("store", "graph_ann")
+# persisted-store layout, graph_ann.py the graph build and search kernels,
+# knn.py and hybrid.py the exact top-k kernels and the hybrid strategies
+SEALED = ("store", "graph_ann", "knn", "hybrid")
 
 
 def test_store_modules_hold_no_module_caches():

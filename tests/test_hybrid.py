@@ -132,40 +132,18 @@ def test_materialized_subset_partition_pruning(embeddings_df, qvec, tmp_path):
 
 def test_knn_batch_matches_per_query_loop(embeddings_df):
     """K1 batch form: one-scan multi-query top-k must equal running
-    knn_exact once per query (ids AND distances)."""
+    knn_exact once per query (ids AND distances, bit for bit)."""
     from acorn_hybrid_vector_search_spark.operators.knn import knn_batch
 
-    queries = embeddings_df.filter("vec_id < 3").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
+    qrows = embeddings_df.filter("vec_id < 3").select("vec_id", "embedding").collect()
+    queries = [(r["vec_id"], r["embedding"]) for r in qrows]
     got: dict[int, list] = {}
     for r in knn_batch(embeddings_df, queries, k=5).collect():
         got.setdefault(r["query_id"], []).append((r["dist"], r["vec_id"]))
     assert set(got) == {0, 1, 2}
-    for qid in got:
-        qv = embeddings_df.filter(f"vec_id = {qid}").select("embedding").head()[0]
+    for qid, qv in queries:
         want = [(r["dist"], r["vec_id"]) for r in knn_exact(embeddings_df, qv, 5).collect()]
-        assert sorted(got[qid]) == [(pytest.approx(d), i) for d, i in want]
-
-
-def test_knn_batch_blas_matches_jvm_path(embeddings_df):
-    """The map-side-reduced BLAS batch kernel returns the same neighbor
-    ids per query as the JVM expression path."""
-    from acorn_hybrid_vector_search_spark.operators.knn import knn_batch
-    from acorn_hybrid_vector_search_spark.operators.similarity import knn_batch_blas
-
-    qrows = embeddings_df.filter("vec_id < 3").select("vec_id", "embedding").collect()
-    queries_list = [(r["vec_id"], r["embedding"]) for r in qrows]
-    queries_df = embeddings_df.filter("vec_id < 3").select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    blas = {
-        (r["query_id"], r["vec_id"]) for r in knn_batch_blas(embeddings_df, queries_list, 5).collect()
-    }
-    jvm = {
-        (r["query_id"], r["vec_id"]) for r in knn_batch(embeddings_df, queries_df, 5).collect()
-    }
-    assert blas == jvm
+        assert sorted(got[qid]) == want
 
 
 def test_acorn_plan_equals_loop_all_branches(spark):
@@ -252,6 +230,8 @@ def test_prefilter_batch_matches_per_query_loop(embeddings_df):
     )
 
     qs = _batch_queries(embeddings_df)
+    # a None comparison value passes no row, as in prefilter_search
+    qs.append((5, qs[1][1], {"label": ["exact", None]}))
     got = prefilter_search_batch(embeddings_df, qs, k=5)
     by_q = {}
     for r in got.collect():
@@ -259,12 +239,10 @@ def test_prefilter_batch_matches_per_query_loop(embeddings_df):
     assert set(by_q) == {3, 17, 42, 99}
     for qid, vec, preds in qs:
         want = prefilter_search(embeddings_df, vec, preds, k=5).collect()
-        have = sorted(by_q[qid], key=lambda r: (r["dist"], r["vec_id"]))
-        assert [(r["vec_id"], r["label"]) for r in have] == [
-            (r["vec_id"], r["label"]) for r in want
+        have = sorted(by_q.get(qid, []), key=lambda r: (r["dist"], r["vec_id"]))
+        assert [(r["vec_id"], r["label"], r["dist"]) for r in have] == [
+            (r["vec_id"], r["label"], r["dist"]) for r in want
         ], qid
-        for h, w in zip(have, want):
-            assert h["dist"] == pytest.approx(w["dist"], rel=1e-12)
 
 
 def test_prefilter_batch_missing_attr_and_unsupported_op(spark):
@@ -374,16 +352,14 @@ def test_acorn_batch_matches_per_query_loop(embeddings_df):
         ).collect()
         have = sorted(by_q.get(qid, []), key=lambda r: (r["dist"], r["vec_id"]))
         assert [r["vec_id"] for r in have] == [r["vec_id"] for r in want], qid
-        for h, w in zip(have, want):
-            assert h["dist"] == pytest.approx(w["dist"], rel=1e-12)
+        assert [r["dist"] for r in have] == [r["dist"] for r in want], qid
 
 
 def test_batch_collision_guard_covers_internals(embeddings_df, qvec):
-    """r8 ADVICE: the collision guard must reject corpus columns named
-    like ANY batch internal — the query-vector column, the generated
-    _c_/_p_ parameter columns, the salt/rank scratch — and must be
-    enforced in ALL THREE batch variants (postfilter/acorn had no
-    check at all)."""
+    """The collision guard must reject corpus columns named like ANY
+    batch internal — the kernel's per-query mask columns, its rank and
+    verdict scratch, the query id — in ALL THREE hybrid batch
+    functions, and ACORN's escalation scratch in ``acorn_search_batch``."""
     from acorn_hybrid_vector_search_spark.operators.hybrid import (
         acorn_search_batch,
         postfilter_search_batch,
@@ -391,7 +367,7 @@ def test_batch_collision_guard_covers_internals(embeddings_df, qvec):
     )
 
     queries = [(0, list(qvec), {"label": ["exact", 2]})]
-    for bad_col in ("_qv", "_c_label", "_p_label_exact", "_sb", "_rn"):
+    for bad_col in ("_pass_g0", "_rn", "_passes", "query_id"):
         bad_df = embeddings_df.withColumn(bad_col, F.lit(1))
         for fn in (
             prefilter_search_batch,
@@ -404,3 +380,113 @@ def test_batch_collision_guard_covers_internals(embeddings_df, qvec):
     bad_df = embeddings_df.withColumn("_prefix_hits", F.lit(1))
     with pytest.raises(ValueError, match="collide"):
         acorn_search_batch(bad_df, queries, k=3)
+
+
+def _batch_fns(df):
+    """Every batch search, each as ``(name, batch_fn(queries, k),
+    single_fn(vec, preds, k))`` over ``df``; queries are ``(id, vec,
+    preds)`` triples and the IVF forms probe every list."""
+    from acorn_hybrid_vector_search_spark.functions.predicates import (
+        build_predicate,
+        flat_accessors,
+    )
+    from acorn_hybrid_vector_search_spark.operators.ann import (
+        ivf_build,
+        ivf_search,
+        ivf_search_batch,
+        ivf_search_exact,
+        ivf_search_exact_batch,
+    )
+    from acorn_hybrid_vector_search_spark.operators.hybrid import (
+        acorn_search_batch,
+        postfilter_search_batch,
+        prefilter_search_batch,
+        routed_search_batch,
+    )
+    from acorn_hybrid_vector_search_spark.operators.knn import knn_batch
+
+    acc = flat_accessors(df)
+    idx = ivf_build(df, n_clusters=3, with_radii=True, stats_attrs=["label"])
+
+    def exact_match(preds):
+        return {"match": ("label", preds["label"][1])} if preds else {}
+
+    return [
+        ("knn_batch",
+         lambda qs, k: knn_batch(df, [(q, v) for q, v, _ in qs], k),
+         lambda v, p, k: knn_exact(df, v, k)),
+        ("prefilter",
+         lambda qs, k: prefilter_search_batch(df, qs, k),
+         lambda v, p, k: prefilter_search(df, v, p, k)),
+        ("postfilter",
+         lambda qs, k: postfilter_search_batch(df, qs, k, large_k=12),
+         lambda v, p, k: postfilter_search(df, v, p, k, large_k=12)),
+        ("acorn",
+         lambda qs, k: acorn_search_batch(df, qs, k, initial_oversample=2, max_rounds=2),
+         lambda v, p, k: acorn_search(df, v, p, k, initial_oversample=2, max_rounds=2)),
+        ("routed",
+         lambda qs, k: routed_search_batch(df, df, {"label"}, qs, k),
+         lambda v, p, k: prefilter_search(df, v, p, k)),
+        ("ivf",
+         lambda qs, k: ivf_search_batch(
+             idx, [(q, v) for q, v, _ in qs], k, nprobe=3,
+             predicates={q: p for q, _, p in qs if p}),
+         lambda v, p, k: ivf_search(
+             idx, v, k, nprobe=3, predicate=build_predicate(p, acc) if p else None)),
+        ("ivf_exact",
+         lambda qs, k: ivf_search_exact_batch(
+             idx, [(q, v) for q, v, _ in qs], k,
+             match={q: ("label", p["label"][1]) for q, _, p in qs if p}),
+         lambda v, p, k: ivf_search_exact(idx, v, k, **exact_match(p))),
+    ]
+
+
+def test_batch_ties_match_single_query_across_arrow_batches(spark):
+    """Duplicate vectors with ids out of row order, spread over many
+    3-row Arrow batches: every batch search returns, per query, its
+    single-query answer — the same ids in the same (dist, id) order and
+    ``dist`` exactly equal — so the k-th-distance ties keep the smallest
+    ids in every Arrow batch, not an arbitrary subset."""
+    import numpy as np
+
+    rng = np.random.RandomState(5)
+    base = rng.rand(4, 6).round(2)
+    ids = rng.permutation(48)
+    rows = [
+        (int(i), [float(x) for x in base[n % 4]], int(i) % 2)
+        for n, i in enumerate(ids)
+    ]
+    df = spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    ).cache()
+    queries = [
+        (0, [float(x) for x in base[0]], None),                 # 12 exact ties
+        (1, [float(x) for x in base[1] + 0.01], {"label": ["exact", 1]}),
+        (2, [float(x) for x in base[3] - 0.02], {"label": ["exact", 0]}),
+    ]
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try:
+        for name, batch, single in _batch_fns(df):
+            got: dict = {}
+            for r in batch(queries, 5).collect():
+                got.setdefault(r["query_id"], []).append((r["dist"], r["vec_id"]))
+            for qid, vec, preds in queries:
+                want = [(r["dist"], r["vec_id"]) for r in single(vec, preds, 5).collect()]
+                assert sorted(got.get(qid, [])) == want, (name, qid)
+    finally:
+        spark.conf.set(key, old)
+        df.unpersist()
+
+
+def test_batch_functions_reject_duplicate_and_ragged_queries(spark, embeddings_df):
+    """Every batch search validates its batch on the driver: duplicate
+    query ids and vectors of different lengths raise ValueError."""
+    v = embeddings_df.filter("vec_id = 0").head()["embedding"]
+    df = embeddings_df.filter("vec_id < 40")
+    for name, batch, _ in _batch_fns(df):
+        with pytest.raises(ValueError, match="duplicate query ids"):
+            batch([(1, v, None), (1, v, None)], 3)
+        with pytest.raises(ValueError, match="one dimension"):
+            batch([(1, v, None), (2, v[:-1], None)], 3)

@@ -26,22 +26,10 @@ def test_topk_queries_use_take_ordered(queries):
         assert "TakeOrderedAndProject" in _plan(queries[name]), name
 
 
-# queries whose INTENDED plan is a broadcast nested-loop join: knn_batch
-# pairs every row with the bounded broadcast query batch (there is no
-# equi-key by construction). Everything else must stay equi-join.
+# queries whose INTENDED plan is a broadcast nested-loop join against a
+# bounded relation (there is no equi-key by construction). Everything
+# else must stay equi-join.
 _BNLJ_BY_DESIGN = {
-    "knn_batch_topk",
-    # bounded broadcast query-PARAMETER table (4 rows: vectors +
-    # per-query predicate params); predicate prunes pairs map-side
-    "hybrid_batch_topk",
-    # K4 batch: same broadcast query table, distance-first candidates
-    "acorn_batch_topk",
-    # K3/K5 batch: same bounded broadcast query-parameter shape
-    "postfilter_batch_topk",
-    "routed_batch_topk",
-    # r11 batched dispatch: the prefilter ARM is the same bounded
-    # broadcast query-parameter scan (plan_audit pins the BNLJ token)
-    "routed_batch_dispatch_topk",
     # BM25's / the LM scorers' corpus-stats table is a broadcast 1-row
     # cross join
     "bm25_topk_docs",
@@ -131,18 +119,37 @@ def test_global_rank_filter_pushes_to_take_ordered(queries):
     assert p.index("TakeOrderedAndProject") > p.index("Window")
 
 
+# every batch entry answers its queries through knn_batch's map-side
+# kernel; the value lists the joins its plan may still hold (the ABO
+# corpus join, ACORN's |Q|-row round selection), none of them with the
+# queries
+_BATCH_ENTRIES = {
+    "knn_batch_topk": 0,
+    "hybrid_batch_topk": 1,
+    "acorn_batch_topk": 2,
+    "postfilter_batch_topk": 0,
+    "routed_batch_topk": 1,
+    "routed_batch_dispatch_topk": 0,
+    "ivf_exact_batch_topk": 0,
+}
+
+
 def test_knn_batch_driver_entry_is_map_side_reduced(queries):
-    """The driver's knn_batch entry must use the BLAS map-side-reduced
-    kernel: candidates come out of a mapInPandas stage (O(P·|Q|·k) rows),
-    NOT an exploded N·|Q| pair join ranked by a window. A join between
-    the corpus and the query relation in this plan means the scale-weak
-    window variant leaked back in (VERDICT r2 'what's wrong' #2)."""
-    p = _plan(queries["knn_batch_topk"])
-    assert "MapInPandas" in p, p[:800]
-    # the only join-free path: scan → mapInPandas → exchange(query_id) →
-    # window rank over the tiny candidate stream
-    for j in ("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin"):
-        assert j not in p, f"{j} in knn_batch plan — window variant leaked back"
+    """Every batch entry must use the map-side-reduced kernel: candidates
+    come out of a MapInArrow stage (O(batches·|Q|·k) rows), NOT an
+    exploded N·|Q| pair join ranked by a window. A query relation in the
+    plan (a local scan), a nested-loop join, or a join beyond the
+    entry's own means the pair join leaked back in (VERDICT r2 'what's
+    wrong' #2)."""
+    import re
+
+    for name, n_joins in _BATCH_ENTRIES.items():
+        p = _plan(queries[name])
+        assert "MapInArrow" in p, name
+        for node in ("LocalTableScan", "BroadcastNestedLoopJoin", "CartesianProduct"):
+            assert node not in p, f"{node} in {name} — pair join leaked back"
+        joins = re.findall(r"(?:SortMerge|ShuffledHash|BroadcastHash)Join", p)
+        assert len(joins) == n_joins, f"{name}: {joins}"
 
 
 def test_asof_driver_entry_is_chunked(queries):
@@ -354,21 +361,18 @@ def test_simhash_cap_stats_partial_agg_only(queries):
     assert "HashAggregate" in p or "ObjectHashAggregate" in p or "SortAggregate" in p
 
 
-def test_hybrid_batch_one_scan_and_salted_windows(queries):
-    """hybrid_batch_topk (r8): one corpus scan answers the whole batch —
-    the embeddings table must appear EXACTLY once in the executed plan —
-    and the per-query top-k must be the two-phase salted shape: a Window
-    partitioned on (query_id, _sb) bounds every task before the global
-    per-query rank (no per-query hot window partition over the corpus)."""
-    import re
-
+def test_hybrid_batch_one_scan_and_mask_kernel(queries):
+    """hybrid_batch_topk: one corpus scan answers the whole batch — the
+    embeddings table must appear EXACTLY once in the executed plan —
+    each distinct predicate is one boolean mask column (_pass_g<i>) on
+    that scan, and the per-query top-k is the kernel's map-side cut
+    followed by a bounded WindowGroupLimit merge (no per-query window
+    over the corpus)."""
     p = _plan(queries["hybrid_batch_topk"])
     assert p.count("embeddings.parquet") == 1, "corpus scanned more than once"
-    assert "BroadcastNestedLoopJoin" in p
-    specs = re.findall(r"windowspecdefinition\(([^)]*)\)", p)
-    assert any("_sb" in s.split("ASC")[0] for s in specs), (
-        "missing the salted local top-k window"
-    )
+    assert "MapInArrow" in p
+    assert "_pass_g0" in p and "_pass_g2" in p
+    assert "WindowGroupLimit" in p
 
 
 def test_nsw_hybrid_batch_plan_single_scan(queries):

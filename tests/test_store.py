@@ -48,6 +48,7 @@ def _frame(spark, rows):
 
 class _Nsw:
     reclaim_op = "nsw_compact"
+    layout = store.NSW
 
     def build(self, spark, path):
         graph_ann.nsw_write(_frame(spark, _rows(0, N)).repartition(2), path)
@@ -68,6 +69,7 @@ class _Nsw:
 
 class _Ivf:
     reclaim_op = "ivf_reclaim"
+    layout = store.IVF
 
     def build(self, spark, path):
         idx = ann.ivf_build(_frame(spark, _rows(0, N)), n_clusters=2)
@@ -166,6 +168,31 @@ def test_reclaim_refuses_to_empty_the_store(spark, kind, tmp_path):
     with pytest.raises(ValueError, match="would empty the store"):
         kind.reclaim(spark, path)
     assert kind.live_ids(spark, path) == []
+
+
+def test_max_owner_matches_the_aggregate(spark, kind, tmp_path):
+    """The default tombstone ceiling comes from the listed owner
+    directories and equals ``max(owner)`` over the stored rows after a
+    write, an upsert-style append above the base, and a reclaim."""
+    from pyspark.sql import functions as F
+
+    path = str(tmp_path / "store")
+
+    def check():
+        stored = spark.read.parquet(store.data_root(path, kind.layout))
+        want = stored.agg(F.max(kind.layout.owner)).head()[0]
+        assert store.max_owner(stored, kind.layout) == want
+
+    kind.build(spark, path)
+    check()
+    kind.delete(spark, path, [1, 2])
+    kind.readd(spark, path, _rows(1, 3, shift=5.0))
+    check()
+    if kind.layout is store.NSW:
+        graph_ann.nsw_upsert(_frame(spark, _rows(2, 5, shift=2.0)), path)
+        check()
+    kind.reclaim(spark, path)
+    check()
 
 
 def test_nsw_upsert_reads_store_root_once(spark, tmp_path, monkeypatch):

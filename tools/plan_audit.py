@@ -28,8 +28,9 @@ AUDIT: dict[str, list[str]] = {
     "minhash_near_dups": ["Join"],
     # chunked as-of: every row-scaled window partitions on (key, chunk)
     "asof_latest_order": ["Window", "Exchange"],
-    # batch k-NN: map-side BLAS reduction, no corpus×queries join
-    "knn_batch_topk": ["MapInPandas", "Window"],
+    # batch k-NN: one MapInArrow kernel pass (per-batch top-k), bounded
+    # per-query merge, no corpus×queries join
+    "knn_batch_topk": ["MapInArrow", "WindowGroupLimit"],
     "global_sort_orders": ["TakeOrderedAndProject", "Window"],
     "quantized_ann_topk": ["TakeOrderedAndProject"],
     "decontaminate_docs": ["BroadcastHashJoin", "HashAggregate"],
@@ -110,17 +111,15 @@ AUDIT: dict[str, list[str]] = {
     # (Generate), per-side cap (Union bypass), cross-relation equi-join,
     # partial-agg pair count
     "winnow_incremental_pairs": ["Generate", "Join", "HashAggregate"],
-    # round 8: batched hybrid search — ONE corpus scan joined to the
-    # bounded broadcast query-parameter table (BroadcastNestedLoopJoin,
-    # big side never shuffles for the join), per-(row, query) predicate
-    # pruning before the distance projection, two-phase salted per-query
-    # top-k (Window on (query_id, _sb) then the tiny global rank — never
-    # one hot per-query window partition over the corpus)
-    "hybrid_batch_topk": ["BroadcastNestedLoopJoin", "Window", "Exchange"],
-    # round 8: batched K4 escalation — candidate scan + broadcast
-    # per-query round selection (the |Q|-row agg joins back broadcast),
-    # fallback branch unioned in the same plan
-    "acorn_batch_topk": ["BroadcastNestedLoopJoin", "Window", "Union"],
+    # batched hybrid search — ONE corpus scan, one boolean mask column
+    # per distinct predicate (_pass_g<i>), the knn_batch MapInArrow
+    # kernel (each query's top k per Arrow batch), bounded per-query
+    # merge — no query table, no pair join
+    "hybrid_batch_topk": ["MapInArrow", "_pass_g0", "WindowGroupLimit"],
+    # batched K4 escalation — distance-first kernel candidates with the
+    # _passes verdict carried, broadcast per-query round selection (the
+    # |Q|-row agg joins back), fallback branch unioned in the same plan
+    "acorn_batch_topk": ["MapInArrow", "_passes", "Union"],
     # round 8: hybrid over the persisted graph store — the predicate is
     # a Catalyst projection on the stored node table feeding the
     # per-shard walk; bounded top-k merge as in every NSW search
@@ -243,17 +242,16 @@ AUDIT: dict[str, list[str]] = {
     # round 11: batched routed dispatch — the pruned family folds into
     # ONE store read (per-query _pass_<qid> masks + per-query kept sets
     # in one partition filter) unioned with the prefilter batch arm's
-    # broadcast-parameter scan
+    # knn_batch kernel scan
     "routed_batch_dispatch_topk": [
         "FlatMapGroupsInPandas", "WindowGroupLimit", "PartitionFilters",
-        "_pass_2", "_pass_4", "Union", "BroadcastNestedLoopJoin",
+        "_pass_2", "_pass_4", "Union", "MapInArrow",
     ],
-    # round 11: the IVF exact rung at batch shape — BOTH phases are
-    # broadcast EQUI-joins against the bounded query table (never a
-    # nested loop over corpus×queries), cluster partition pruning
-    # survives per query via the exploded probe pairs
+    # the IVF exact rung at batch shape — each phase is one knn_batch
+    # scan of the probed-list union, each query masked to its own lists
+    # and predicate (_pass_g<i>); no query table is joined
     "ivf_exact_batch_topk": [
-        "BroadcastHashJoin", "PartitionFilters", "Window",
+        "MapInArrow", "_pass_g0", "WindowGroupLimit",
     ],
     # round 11: the conjunction-verdict disclosure relation is one
     # partial aggregate (the cap_stats pattern)
