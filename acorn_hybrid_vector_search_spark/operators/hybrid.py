@@ -25,12 +25,27 @@ gives it the optimizations the other two strategies approximate):
   (max_visits budget, blocked set, livelock escape) are pointwise engine
   internals with no set-oriented analog; the *contract* — "exact-or-better
   results for (filter, top-k) with bounded work" — is delivered by an
-  escalating-oversample post-filter loop that falls back to the exact
-  pre-filter plan, which dominates it in a batch engine (SURVEY.md §4).
+  exact escalation that returns the pre-filter answer (below).
 - ``attribute_partitioned_search`` (K5,
   /root/reference/acorn_attribute_specific.py:44-77): route queries
   constrained on a sparse attribute to a materialized subset. With
   Parquet + partitioned materializations this is partition pruning.
+
+Why K4's rows are the pre-filter rows. The reference's rounds oversample
+4k, 16k, 64k, …; the last round takes the top ``L =
+initial_oversample·4^(max_rounds−1)·k`` rows by (dist, id). Every round's
+candidates are a prefix of the whole table in (dist, id) order, so a
+round holding ≥ k passing rows holds the first k passing rows of the
+whole table, which are exactly ``prefilter_search``'s rows; and the
+rounds are nested, so whichever round fills first, L fills too and gives
+the same rows. When L holds fewer than k passing rows the escalation
+runs the pre-filter plan itself. The round number and the knobs
+therefore change only the cost, never the rows (``dist`` comes from the
+same kernel on both paths, so it is bit-identical). The single-query
+form keeps its own cost profile (``AcornPrepared``: the predicate runs
+on L rows, a second scan only on under-fill); a batch already applies
+every query's predicate as a mask in one scan, so ``acorn_search_batch``
+is ``prefilter_search_batch``.
 """
 
 from __future__ import annotations
@@ -113,6 +128,17 @@ def postfilter_search(
     return cand.filter(cond).orderBy(F.col(dist_col).asc(), F.col(id_col).asc()).limit(k)
 
 
+def _acorn_width(k: int, initial_oversample: int, max_rounds: int) -> int:
+    """L, the size of K4's distance-first candidate set: its last
+    round's ``initial_oversample·4^(max_rounds−1)·k``."""
+    if initial_oversample < 1 or max_rounds < 1:
+        raise ValueError(
+            "initial_oversample and max_rounds must be >= 1, got "
+            f"{initial_oversample} and {max_rounds}"
+        )
+    return initial_oversample * 4 ** (max_rounds - 1) * k
+
+
 def acorn_search(
     df: DataFrame,
     query_vec: Sequence[float],
@@ -127,211 +153,57 @@ def acorn_search(
     dist_col: str = "dist",
     payload_cols: Sequence[str] | None = None,
 ) -> DataFrame:
-    """K4: ACORN-equivalent hybrid search with bounded escalation.
+    """K4: the pre-filter answer, reached through a bounded candidate set.
 
-    The reference escalates an HNSW visit budget round-by-round, pruning
-    predicate-failing nodes (/root/reference/acorn.py:149-238). The batch
-    equivalent: try post-filter with an escalating oversample factor
-    (4·k, 16·k, 64·k, … — mirroring the visit-budget growth), and if the
-    filtered candidate set still can't fill k, run the exact pre-filter
-    plan. Each round is lazily planned; rounds after the first only
-    execute when the previous round under-filled, so the common case costs
-    one top-``4k`` scan — and every round is a TakeOrderedAndProject, never
-    a full sort.
-
-    Returns exactly the pre-filter answer whenever that answer has ≥ k
-    rows reachable — i.e. recall 1.0 against the reference's oracle
-    strategy, the property ACORN approximates.
-
-    ONE-PASS PLAN: all rounds share one scan. The largest round's
-    candidate set (top ``initial_oversample·4^(max_rounds−1)·k`` rows —
-    a TakeOrderedAndProject, never a global sort) is computed once with a
-    per-row predicate verdict, and the bounded result (≤ max_large_k rows,
-    a query-size constant independent of table size) is collected; round
-    selection — "smallest round whose candidate prefix holds ≥ k passing
-    rows" — is then driver-side arithmetic on rows already in hand, so no
-    escalation round ever re-scans, and the returned DataFrame is a local
-    relation the consumer can't accidentally recompute. Only when even
-    the largest round under-fills does the exact pre-filter plan run
-    (its scan is the one the escalation was trying to avoid).
+    The reference escalates an HNSW visit budget round by round
+    (/root/reference/acorn.py:149-238). Here the predicate is evaluated on
+    the top ``L`` rows by distance only (one TakeOrderedAndProject scan);
+    the exact pre-filter plan runs only when those hold fewer than k
+    passing rows. The rows are ``prefilter_search``'s either way (see the
+    module docstring).
 
     ``payload_cols``: columns the caller will actually keep (must include
     every column the predicate reads). Default is all of ``df``'s columns
-    — but the candidate collect then ships max_large_k full rows INCLUDING
-    the vectors; at 2048-dim that is ~5 MB of floats the caller usually
+    — but the candidate collect then ships L full rows INCLUDING the
+    vectors; at 2048-dim that is ~5 MB of floats the caller usually
     drops. Passing the projection keeps the collect to a few KB.
     """
     return acorn_prepare(
-        df,
-        query_vec,
-        predicates,
-        k,
-        initial_oversample=initial_oversample,
-        max_rounds=max_rounds,
-        accessors=accessors,
-        vec_col=vec_col,
-        id_col=id_col,
-        dist_col=dist_col,
-        payload_cols=payload_cols,
+        df, query_vec, predicates, k, initial_oversample=initial_oversample,
+        max_rounds=max_rounds, accessors=accessors, vec_col=vec_col,
+        id_col=id_col, dist_col=dist_col, payload_cols=payload_cols,
     ).search()
 
 
-def _acorn_candidates(
-    df: DataFrame, query_vec: Sequence[float], cond: Column, max_large_k: int,
-    vec_col: str, id_col: str, dist_col: str, payload_cols: Sequence[str] | None,
-) -> DataFrame:
-    """K4's distance-first candidate set: the top ``max_large_k`` rows of
-    ``df`` by (dist, id), each with its predicate verdict ``_passes``,
-    projected to ``payload_cols`` (plus id and dist) when given."""
-    if payload_cols is not None:
-        keep = list(dict.fromkeys([id_col, *payload_cols]))
-        df = df.select(*dict.fromkeys([*keep, vec_col]))
-    cand = knn_exact(
-        df, query_vec, max_large_k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
-    ).withColumn("_passes", cond)
-    if payload_cols is not None and vec_col not in keep:
-        cand = cand.drop(vec_col)
-    return cand
-
-
 class AcornPrepared:
-    """The build/search split of the K4 escalation, mirroring the
-    reference's lifecycle exactly (acorn.py:274-277 builds the index
-    once per process; the reported latencies time ``knn_query`` alone):
-    ``acorn_prepare`` pays Python plan construction + analysis ONCE;
-    every ``search()`` call re-EXECUTES the candidate scan (a real
-    cluster job — nothing about the data is cached here), re-runs the
-    bounded round selection, and re-executes the exact-prefilter plan
-    when escalation under-fills. Results are identical to a fresh
-    ``acorn_search`` call by construction (same plans, same
-    arithmetic)."""
+    """The build/search split of K4, mirroring the reference's lifecycle
+    (acorn.py:274-277 builds the index once per process; the reported
+    latencies time ``knn_query`` alone): ``acorn_prepare`` pays Python
+    plan construction and analysis ONCE; every ``search()`` re-executes
+    the candidate scan (nothing about the data is cached here), and the
+    pre-filter plan when the candidates under-fill."""
 
-    __slots__ = ("cand", "fallback", "k", "initial_oversample",
-                 "max_rounds", "dist_col", "id_col", "_spark")
+    __slots__ = ("cand", "fallback", "k", "dist_col", "id_col")
 
     def __init__(self, cand: DataFrame, fallback: DataFrame, *, k: int,
-                 initial_oversample: int, max_rounds: int,
                  dist_col: str, id_col: str) -> None:
         self.cand = cand
         self.fallback = fallback
         self.k = k
-        self.initial_oversample = initial_oversample
-        self.max_rounds = max_rounds
         self.dist_col = dist_col
         self.id_col = id_col
-        self._spark = cand.sparkSession
 
     def search(self) -> DataFrame:
+        """The first k passing candidates by (dist, id) as a local
+        relation, or ``self.fallback`` itself when fewer than k pass."""
         rows = sorted(
             self.cand.collect(), key=lambda r: (r[self.dist_col], r[self.id_col])
         )
-        for round_i in range(self.max_rounds):
-            large_k = self.initial_oversample * (4**round_i) * self.k
-            hits = [r for r in rows[:large_k] if r["_passes"]]
-            if len(hits) >= self.k:
-                out = self._spark.createDataFrame(
-                    hits[: self.k], schema=self.cand.schema
-                )
-                return out.drop("_passes")
-        return self.fallback
-
-
-def acorn_search_plan(
-    df: DataFrame,
-    query_vec: Sequence[float],
-    predicates: Predicates | Column | None,
-    k: int,
-    *,
-    initial_oversample: int = 4,
-    max_rounds: int = 3,
-    accessors: Mapping[str, AttributeAccessor] | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dist_col: str = "dist",
-    payload_cols: Sequence[str] | None = None,
-) -> DataFrame:
-    """The K4 escalation as ONE declarative plan — no driver-side round
-    loop, no collect, no local relation: fully Catalyst-expressible,
-    and therefore eligible for the prepared-statement contract (its
-    executed plan is distributed end-to-end).
-
-    Encoding of "smallest round whose candidate prefix holds ≥ k
-    passing rows":
-
-    - rank the bounded candidate set (top ``max_large_k`` by (dist,
-      id) — a TakeOrderedAndProject) with ``row_number`` → ``rn``, and
-      the PASSING rows with their own ``row_number`` → ``pass_rank``.
-      Both windows run on a single partition of ≤ ``max_large_k`` rows
-      (a query-size constant, NOT row-scaled — the one place a
-      single-partition window is the right plan);
-    - a 1-row aggregate computes the chosen prefix ``least(L_r where
-      count(_passes ∧ rn ≤ L_r) ≥ k)`` and broadcasts it back
-      (1-row cross join);
-    - if ``count_passing(prefix) ≥ k`` then the first k passing rows
-      by rank necessarily sit inside the prefix, so the escalation
-      answer is ``_passes ∧ pass_rank ≤ k`` guarded by ``chosen IS NOT
-      NULL``;
-    - the exact-prefilter fallback rides in the same plan as a UNION
-      branch filtered on ``chosen IS NULL`` — when escalation fills,
-      the branch's filter eliminates its rows (its bounded top-k scan
-      still executes; that is the price of a collect-free plan, and it
-      is the same TakeOrderedAndProject shape as the candidate scan).
-
-    Result rows/ordering are identical to ``acorn_search`` (pytest
-    pins plan ≡ loop on fill, under-fill and fallback corpora).
-    """
-    from pyspark.sql.window import Window
-
-    cond = _resolve_predicate(df, predicates, accessors)
-    max_large_k = initial_oversample * (4 ** (max_rounds - 1)) * k
-    cand = _acorn_candidates(
-        df, query_vec, cond, max_large_k, vec_col, id_col, dist_col, payload_cols
-    )
-
-    order = [F.col(dist_col).asc(), F.col(id_col).asc()]
-    w = Window.orderBy(*order)
-    ranked = cand.select(
-        "*",
-        F.row_number().over(w).alias("_rn"),
-        F.sum(F.when(F.col("_passes"), 1).otherwise(0)).over(w).alias("_prefix_hits"),
-    )
-    rounds = [initial_oversample * (4**r) * k for r in range(max_rounds)]
-    chosen = F.least(
-        *[
-            F.min(
-                F.when(
-                    (F.col("_rn") <= L) & (F.col("_prefix_hits") >= k), F.lit(L)
-                )
-            )
-            for L in rounds
-        ]
-    ).alias("_chosen") if len(rounds) > 1 else F.min(
-        F.when((F.col("_rn") <= rounds[0]) & (F.col("_prefix_hits") >= k),
-               F.lit(rounds[0]))
-    ).alias("_chosen")
-    sel = F.broadcast(ranked.agg(chosen))
-
-    pass_rank = F.row_number().over(
-        Window.partitionBy(F.lit(1)).orderBy(*order)
-    )
-    escalation = (
-        ranked.filter(F.col("_passes"))
-        .withColumn("_pass_rank", pass_rank)
-        .crossJoin(sel)
-        .filter(F.col("_chosen").isNotNull() & (F.col("_pass_rank") <= k))
-        .drop("_passes", "_rn", "_prefix_hits", "_pass_rank", "_chosen")
-    )
-    out_cols = escalation.columns
-    fallback = (
-        prefilter_search(
-            df, query_vec, cond, k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
-        )
-        .select(*out_cols)
-        .crossJoin(sel)
-        .filter(F.col("_chosen").isNull())
-        .drop("_chosen")
-    )
-    return escalation.unionByName(fallback)
+        hits = [r for r in rows if r["_passes"]][: self.k]
+        if len(hits) < self.k:
+            return self.fallback
+        out = self.cand.sparkSession.createDataFrame(hits, schema=self.cand.schema)
+        return out.drop("_passes")
 
 
 def acorn_prepare(
@@ -348,19 +220,25 @@ def acorn_prepare(
     dist_col: str = "dist",
     payload_cols: Sequence[str] | None = None,
 ) -> AcornPrepared:
-    """Build the K4 plans once (see AcornPrepared)."""
+    """Build the K4 plans once (see AcornPrepared): the top ``L`` rows of
+    ``df`` by (dist, id), each with its predicate verdict ``_passes`` and
+    projected to ``payload_cols`` (plus id and dist) when given, and the
+    exact pre-filter fallback."""
     cond = _resolve_predicate(df, predicates, accessors)
-    max_large_k = initial_oversample * (4 ** (max_rounds - 1)) * k
-    cand = _acorn_candidates(
-        df, query_vec, cond, max_large_k, vec_col, id_col, dist_col, payload_cols
-    )
+    cand_df = df
+    if payload_cols is not None:
+        keep = list(dict.fromkeys([id_col, *payload_cols]))
+        cand_df = df.select(*dict.fromkeys([*keep, vec_col]))
+    cand = knn_exact(
+        cand_df, query_vec, _acorn_width(k, initial_oversample, max_rounds),
+        vec_col=vec_col, id_col=id_col, dist_col=dist_col,
+    ).withColumn("_passes", cond)
+    if payload_cols is not None and vec_col not in keep:
+        cand = cand.drop(vec_col)
     fallback = prefilter_search(
         df, query_vec, cond, k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
     )
-    return AcornPrepared(
-        cand, fallback, k=k, initial_oversample=initial_oversample,
-        max_rounds=max_rounds, dist_col=dist_col, id_col=id_col,
-    )
+    return AcornPrepared(cand, fallback, k=k, dist_col=dist_col, id_col=id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -416,7 +294,9 @@ def prefilter_search_batch(
     None/{} for a pure top-k query — the class-1 shape). Each query's
     predicate is ``build_predicate``'s Column, used as that query's mask
     in ``knn_batch``, so per query the result is ``prefilter_search``'s
-    rows with the same ``dist`` bits.
+    rows with the same ``dist`` bits. The rows carry ``query_id_col``,
+    ``dist_col`` and ``df``'s columns except ``vec_col`` (the kernel
+    keeps the vectors).
 
     ``payload_cols``: projection applied before the scan (must include
     every column the batch's predicates read); default all of ``df``'s
@@ -473,75 +353,16 @@ def acorn_search_batch(
     dist_col: str = "dist",
     query_id_col: str = "query_id",
 ) -> DataFrame:
-    """K4 for a query batch: the ``acorn_search_plan`` escalation —
-    bounded candidate prefix, smallest-filling-round selection, exact
-    pre-filter fallback — evaluated for EVERY query of the batch from
-    ONE candidate scan. Per query the result is identical to
-    ``acorn_search`` (pytest-pinned), so a serving pipeline running the
-    reference's §2.4 battery pays one scan for the whole batch instead
-    of one driver-planned escalation per query.
-
-    Plan: ``knn_batch`` gives each query's top-``max_large_k`` by
-    distance with the ``_passes`` verdict carried (the K4 candidate set
-    is DISTANCE-FIRST) → per-query running prefix-hit count and round
-    selection as a |Q|-row aggregate broadcast back → the first k
-    passing rows where the chosen prefix fills; the exact pre-filter
-    fallback (the same kernel with the masks filtering — its own scan,
-    as in the single-query plan's fallback branch) rides in the same
-    plan filtered to chosen-IS-NULL queries. Every window after the kernel partitions
-    over ≤ |Q|·max_large_k rows — a query-size constant, not
-    row-scaled."""
-    from pyspark.sql.window import Window
-
-    if bad := {"_prefix_hits", "_chosen"} & set(df.columns):
-        raise ValueError(f"df columns collide with batch internals: {sorted(bad)}")
-    pairs, masks = _query_pairs(queries), _batch_masks(df, queries, accessors)
-    max_large_k = initial_oversample * (4 ** (max_rounds - 1)) * k
-    cand = knn_batch(
-        df, pairs, max_large_k, predicates=masks, carry=True,
-        vec_col=vec_col, id_col=id_col, dist_col=dist_col,
+    """K4 for a query batch. Each query's K4 answer is its pre-filter
+    answer (module docstring), and a batch scan already applies every
+    query's predicate as a mask, so this is ``prefilter_search_batch``:
+    one scan, per query the rows of ``acorn_search``. The knobs are
+    validated as in ``acorn_search`` but do not change the plan."""
+    _acorn_width(k, initial_oversample, max_rounds)
+    return prefilter_search_batch(
+        df, queries, k, accessors=accessors, vec_col=vec_col, id_col=id_col,
+        dist_col=dist_col, query_id_col=query_id_col,
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col(dist_col).asc(), F.col(id_col).asc()
-    )
-    ranked = cand.select(
-        "*",
-        F.row_number().over(w).alias("_rn"),
-        F.sum(F.when(F.col("_passes"), 1).otherwise(0)).over(w).alias("_prefix_hits"),
-    )
-    rounds = [initial_oversample * (4**r) * k for r in range(max_rounds)]
-    per_round = [
-        F.min(
-            F.when((F.col("_rn") <= L) & (F.col("_prefix_hits") >= k), F.lit(L))
-        )
-        for L in rounds
-    ]
-    chosen = (
-        F.least(*per_round) if len(per_round) > 1 else per_round[0]
-    ).alias("_chosen")
-    sel = F.broadcast(ranked.groupBy("query_id").agg(chosen))
-
-    # a filled prefix holds k passing rows, so they are the first k passing
-    escalation = (
-        merge_topk(
-            ranked.filter(F.col("_passes")).drop("_passes", "_rn", "_prefix_hits"),
-            k, id_col, dist_col,
-        )
-        .join(sel, "query_id")
-        .filter(F.col("_chosen").isNotNull())
-        .drop("_chosen")
-    )
-    fallback = (
-        knn_batch(
-            df, pairs, k, predicates=masks, vec_col=vec_col,
-            id_col=id_col, dist_col=dist_col,
-        )
-        .select(*escalation.columns)
-        .join(sel, "query_id")
-        .filter(F.col("_chosen").isNull())
-        .drop("_chosen")
-    )
-    return escalation.unionByName(fallback).withColumnRenamed("query_id", query_id_col)
 
 
 def routed_search_batch(

@@ -22,10 +22,11 @@ reference's ``knn_query`` over a ``ParallelFor`` of query rows
 pass over the scan: per Arrow batch, the strict loop runs across all
 queries at once, each query's predicate arrives as a boolean mask column
 (``DenseMaskPlan``), and each query keeps its (dist, id) top k. The
-O(batches·|Q|·k) candidates carry the caller's columns, so nothing joins
-back by id, and one per-query ``row_number`` (``merge_topk``) finishes the
-answer. Every batch search in the package (pre-filter, post-filter, ACORN,
-the IVF probes) is this kernel with a different mask.
+O(batches·|Q|·k) candidates carry the caller's columns (all but the
+vectors), so nothing joins back by id, and one per-query ``row_number``
+(``merge_topk``) finishes the answer. Every batch search in the package
+(pre-filter, post-filter, ACORN, the IVF probes) is this kernel with a
+different mask.
 
 A NULL vector, or one holding a NULL element, has no distance and is never
 returned. A vector whose length differs from the query's raises
@@ -139,10 +140,13 @@ def knn_batch(
     ``knn_exact(df.filter(pred), vec, k)`` with the same ``dist`` bits.
     ``carry=True`` ranks by distance alone and returns the verdict as a
     boolean ``_passes`` column instead (NULL reads False): the
-    distance-first candidate set of post-filter and ACORN.
+    distance-first candidate set of post-filter.
 
-    Returns ``df``'s columns plus ``query_id_col`` and ``dist_col``
-    (and ``_passes``), at most k rows per query, tie-broken (dist, id).
+    Returns ``df``'s columns except ``vec_col``, plus ``query_id_col``
+    and ``dist_col`` (and ``_passes``), at most k rows per query,
+    tie-broken (dist, id). The vectors stay in the kernel: MapInArrow
+    blocks column pruning, so returning them would copy |Q|·k vectors
+    per Arrow batch back to the JVM for the caller to drop.
     Plan: scan → the mask projection → MapInArrow (per Arrow batch, the
     strict float64 loop over every query, then each query's top k by a
     threshold cut and a (dist, id) ``lexsort``, so ties at the k-th
@@ -155,13 +159,13 @@ def knn_batch(
     internal = {"query_id", query_id_col, "_rn", "_passes", *mask_cols}
     if bad := internal & set(df.columns):
         raise ValueError(f"df columns collide with batch internals: {sorted(bad)}")
-    fields = [*df.schema.fields, StructField("query_id", LongType()),
-              StructField(dist_col, DoubleType())]
+    vec_i, id_i = df.columns.index(vec_col), df.columns.index(id_col)
+    payload = [i for i in range(len(df.columns)) if i != vec_i]
+    fields = [*(df.schema.fields[i] for i in payload),
+              StructField("query_id", LongType()), StructField(dist_col, DoubleType())]
     if carry:
         fields.append(StructField("_passes", BooleanType()))
     names = [f.name for f in fields]
-    n_payload = len(df.columns)
-    vec_i, id_i = df.columns.index(vec_col), df.columns.index(id_col)
     dim = qmat.shape[1] if qmat.ndim == 2 else 0
     read = _vector_reader(dim)
     extract = plan.extractor()
@@ -204,7 +208,7 @@ def knn_batch(
                     if carry:
                         out_p.append(np.ones(len(sel), bool) if m is None else m[sel])
             idx = pa.array(np.concatenate(take))
-            cols = [rb.column(i).take(idx) for i in range(n_payload)]
+            cols = [rb.column(i).take(idx) for i in payload]
             cols += [pa.array(np.concatenate(out_q)), pa.array(np.concatenate(out_d))]
             if carry:
                 cols.append(pa.array(np.concatenate(out_p)))

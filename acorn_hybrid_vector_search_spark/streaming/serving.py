@@ -12,13 +12,16 @@ is that arrival path — a Structured Streaming source of query rows
 ONE corpus scan via ``prefilter_search_batch``, results landed
 batch-keyed so at-least-once replays are idempotent.
 
-Scale shape: per-micro-batch cost is one corpus scan + the bounded
-broadcast query table — cost ∝ corpus per trigger, NOT ∝ queries (the
-per-query-loop alternative pays plan+scan × |Q| per trigger; the r8
-batched-serving ladder measured 11.6× at |Q|=64). The only driver-side
-materialization is the micro-batch's QUERY rows — a query-size constant
-by definition (the same bounded-collect contract as K4's candidate set,
-hybrid.py:202-214), never corpus-sized.
+Scale shape: per-micro-batch cost is one corpus scan — cost ∝ corpus
+per trigger, NOT ∝ queries (the per-query-loop alternative pays
+plan+scan × |Q| per trigger; the r8 batched-serving ladder measured
+11.6× at |Q|=64). The only driver-side materialization is the
+micro-batch's QUERY rows — a query-size constant by definition (the same
+bounded-collect contract as K4's candidate set), never corpus-sized.
+
+The three families (static corpus, NSW store, routed ladder) share one
+foreachBatch body (``_serve_writer``) and one stream start; each differs
+only in how it answers a parsed query batch.
 """
 
 from __future__ import annotations
@@ -43,28 +46,59 @@ __all__ = [
 ]
 
 
-def _dedupe_query_rows(rows, query_id_col, vec_col, predicate_col):
-    """At-least-once sources can redeliver a query INSIDE one
+def _serve_writer(answer, out_path, *, vec_col, query_id_col, predicate_col):
+    """The foreachBatch body every serving family shares. Each
+    micro-batch row is one query: ``(query_id, <vec_col>,
+    predicate_json)`` where ``predicate_json`` is the §2.3 grammar
+    ``{"attr": ["op", value]}`` serialized as JSON (NULL/empty ⇒ pure
+    top-k, the class-1 shape). The query rows are collected — they ARE
+    the queries, a query-size constant — parsed, and answered by
+    ``answer(spark, [(query_id, vector, spec | None), …])``; the answer
+    writes under ``_batch_id=<id>`` with DYNAMIC partition overwrite, so
+    an at-least-once replay overwrites exactly its own results instead
+    of duplicating them.
+
+    At-least-once sources can also redeliver a query INSIDE one
     micro-batch. Identical redeliveries (same id, vector, predicate)
     collapse to one — duplicated query ids would otherwise double every
     candidate and silently halve the distinct top-k. CONFLICTING
     duplicates (same id, different vector or predicate) are a client
     bug and raise rather than letting a dict silently pick a winner."""
-    seen: dict = {}
-    out = []
-    for r in rows:
-        qid = r[query_id_col]
-        key = (list(r[vec_col]), r[predicate_col])
-        if qid in seen:
-            if seen[qid] != key:
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        queries: dict = {}
+        for r in batch_df.select(query_id_col, vec_col, predicate_col).collect():
+            q = (list(r[vec_col]), r[predicate_col])
+            if queries.setdefault(r[query_id_col], q) != q:
                 raise ValueError(
-                    f"conflicting duplicate query_id {qid!r} in one "
-                    "micro-batch (different vector or predicate)"
+                    f"conflicting duplicate query_id {r[query_id_col]!r} in "
+                    "one micro-batch (different vector or predicate)"
                 )
-            continue
-        seen[qid] = key
-        out.append(r)
-    return out
+        if not queries:
+            return
+        batch = [
+            (qid, vec, json.loads(spec) if spec else None)
+            for qid, (vec, spec) in queries.items()
+        ]
+        (
+            answer(batch_df.sparkSession, batch)
+            .withColumn("_batch_id", F.lit(int(batch_id)))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("_batch_id")
+            .parquet(out_path)
+        )
+
+    return write_batch
+
+
+def _start(query_stream: DataFrame, write_batch, checkpoint: str):
+    return (
+        query_stream.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
+        .start()
+    )
 
 
 def hybrid_serve_batch_writer(
@@ -82,59 +116,24 @@ def hybrid_serve_batch_writer(
     """The foreachBatch body of ``stream_hybrid_serve`` as a standalone
     callable (exposed so tests can drive it with an explicit batch_id
     and pin replay idempotency — the ``nsw_stream_batch_writer``
-    convention).
-
-    Each micro-batch row is one query: ``(query_id, <vec_col>,
-    predicate_json)`` where ``predicate_json`` is the §2.3 grammar
-    ``{"attr": ["op", value]}`` serialized as JSON (NULL/empty ⇒ pure
-    top-k, the class-1 shape). The batch's query rows are collected —
-    they ARE the queries, a query-size constant — and answered by ONE
-    ``prefilter_search_batch`` corpus scan; results write under
-    ``_batch_id=<id>`` with DYNAMIC partition overwrite, so an
-    at-least-once replay overwrites exactly its own results instead of
-    duplicating them."""
+    convention): each micro-batch's queries are answered by ONE
+    ``prefilter_search_batch`` corpus scan, and only the serving answer
+    (query, id, dist) is written — the corpus row width must not
+    accumulate a redundant copy per served result under ``out_path``."""
     from acorn_hybrid_vector_search_spark.operators.hybrid import (
         prefilter_search_batch,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.select(
-            query_id_col, vec_col, predicate_col
-        ).collect()
-        rows = _dedupe_query_rows(rows, query_id_col, vec_col, predicate_col)
-        if not rows:
-            return
-        batch = [
-            (
-                r[query_id_col],
-                list(r[vec_col]),
-                json.loads(r[predicate_col]) if r[predicate_col] else None,
-            )
-            for r in rows
-        ]
-        res = prefilter_search_batch(
-            corpus,
-            batch,
-            k,
-            accessors=accessors,
-            vec_col=vec_col,
-            id_col=id_col,
-            query_id_col=query_id_col,
-            payload_cols=payload_cols,
-        )
-        # persist only the serving answer (query, id, dist) — the
-        # corpus row width (vectors, payloads) must not accumulate a
-        # redundant copy per served result under out_path
-        res = res.select(query_id_col, id_col, "dist")
-        (
-            res.withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
+    def answer(spark, batch):
+        return prefilter_search_batch(
+            corpus, batch, k, accessors=accessors, vec_col=vec_col,
+            id_col=id_col, query_id_col=query_id_col, payload_cols=payload_cols,
+        ).select(query_id_col, id_col, "dist")
 
-    return write_batch
+    return _serve_writer(
+        answer, out_path, vec_col=vec_col, query_id_col=query_id_col,
+        predicate_col=predicate_col,
+    )
 
 
 def nsw_serve_batch_writer(
@@ -166,40 +165,21 @@ def nsw_serve_batch_writer(
         nsw_read_topk,
     )
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.select(
-            query_id_col, vec_col, predicate_col
-        ).collect()
-        rows = _dedupe_query_rows(rows, query_id_col, vec_col, predicate_col)
-        if not rows:
-            return
-        batch = [(r[query_id_col], list(r[vec_col])) for r in rows]
-        preds = {
-            r[query_id_col]: build_predicate(
-                json.loads(r[predicate_col]), accessors
-            )
-            for r in rows
-            if r[predicate_col]
-        }
-        res = nsw_read_topk(
-            batch_df.sparkSession,
-            store_path,
-            batch,
-            k,
-            ef=ef,
-            max_visits=max_visits,
-            predicates=preds,
-            id_col=id_col,
-        )
-        (
-            res.withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
+    def answer(spark, batch):
+        return nsw_read_topk(
+            spark, store_path, [(q, v) for q, v, _ in batch], k,
+            ef=ef, max_visits=max_visits, id_col=id_col,
+            predicates={
+                q: build_predicate(spec, accessors)
+                for q, _, spec in batch
+                if spec is not None
+            },
         )
 
-    return write_batch
+    return _serve_writer(
+        answer, out_path, vec_col=vec_col, query_id_col=query_id_col,
+        predicate_col=predicate_col,
+    )
 
 
 def stream_hybrid_serve(
@@ -221,23 +201,14 @@ def stream_hybrid_serve(
     idempotent results (see ``hybrid_serve_batch_writer``). Returns the
     StreamingQuery; results accumulate under ``out_path`` partitioned
     by ``_batch_id``."""
-    return (
-        query_stream.writeStream.foreachBatch(
-            hybrid_serve_batch_writer(
-                corpus,
-                out_path,
-                k,
-                accessors=accessors,
-                vec_col=vec_col,
-                id_col=id_col,
-                query_id_col=query_id_col,
-                predicate_col=predicate_col,
-                payload_cols=payload_cols,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return _start(
+        query_stream,
+        hybrid_serve_batch_writer(
+            corpus, out_path, k, accessors=accessors, vec_col=vec_col,
+            id_col=id_col, query_id_col=query_id_col,
+            predicate_col=predicate_col, payload_cols=payload_cols,
+        ),
+        checkpoint,
     )
 
 
@@ -272,38 +243,14 @@ def routed_serve_batch_writer(
     predicate-free queries pays one store read for the whole pruned
     family instead of one per strategy (or an unroutable per-query
     loop). Results land batch-keyed with dynamic overwrite
-    (replay-idempotent), serving-answer projection only.
+    (replay-idempotent), serving-answer projection only. The dense
+    knobs forward to ``ann_search_batch``: walk-arm unions of ≥
+    ``dense_min_batch`` queries land on the exact batch-dense kernel
+    (``None`` pins the walk), on its int8 two-phase form when
+    ``dense_dtype`` resolves to int8."""
 
-    r13 (VERDICT r12 ask #1): walk-arm unions of ≥
-    ``DENSE_SERVE_MIN_BATCH`` queries per micro-batch land on the
-    batch-dense gemm kernel BY DEFAULT (exact, measured faster from
-    |Q|=4 up — see ``StrategyRouter.plan_ann_batch``); pass
-    ``dense_min_batch=None`` to pin the walk.
-
-    r14 (VERDICT r13 ask #1): ``dense_dtype`` reaches the serving
-    surface — ``"auto"`` (default) lands densified micro-batches on
-    the int8 two-phase kernel whenever the store carries a FRESH
-    ``nsw_write_int8`` sidecar (the bandwidth-bound rung; certified
-    mode keeps results provably identical), ``"int8"``/``"vector"``
-    pin it; ``dense_int8_mode``/``dense_rerank_width`` forward to the
-    kernel."""
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        rows = batch_df.select(
-            query_id_col, vec_col, predicate_col
-        ).collect()
-        rows = _dedupe_query_rows(rows, query_id_col, vec_col, predicate_col)
-        if not rows:
-            return
-        batch = [
-            (
-                r[query_id_col],
-                list(r[vec_col]),
-                json.loads(r[predicate_col]) if r[predicate_col] else None,
-            )
-            for r in rows
-        ]
-        res = router.ann_search_batch(
+    def answer(spark, batch):
+        return router.ann_search_batch(
             corpus, batch, k,
             min_recall=min_recall, ivf_index=ivf_index, nsw_path=nsw_path,
             gamma_path=gamma_path, pruned_path=pruned_path,
@@ -313,15 +260,11 @@ def routed_serve_batch_writer(
             id_col=id_col, vec_col=vec_col,
             query_id_col=query_id_col,
         )
-        (
-            res.withColumn("_batch_id", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("_batch_id")
-            .parquet(out_path)
-        )
 
-    return write_batch
+    return _serve_writer(
+        answer, out_path, vec_col=vec_col, query_id_col=query_id_col,
+        predicate_col=predicate_col,
+    )
 
 
 def stream_routed_serve(
@@ -337,13 +280,9 @@ def stream_routed_serve(
     ladder: one ``ann_search_batch`` per micro-batch (≤ 1 store read
     per strategy arm — see ``routed_serve_batch_writer``), batch-keyed
     idempotent results. Returns the StreamingQuery."""
-    return (
-        query_stream.writeStream.foreachBatch(
-            routed_serve_batch_writer(router, corpus, out_path, k, **kw)
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return _start(
+        query_stream, routed_serve_batch_writer(router, corpus, out_path, k, **kw),
+        checkpoint,
     )
 
 
@@ -368,22 +307,12 @@ def stream_nsw_serve(
     ``nsw_serve_batch_writer``). With ``ef``/``max_visits`` bounded
     this is the ANYTIME serving path; at full beam it answers each
     query's exact pre-filter oracle. Returns the StreamingQuery."""
-    return (
-        query_stream.writeStream.foreachBatch(
-            nsw_serve_batch_writer(
-                store_path,
-                out_path,
-                k,
-                accessors=accessors,
-                ef=ef,
-                max_visits=max_visits,
-                id_col=id_col,
-                vec_col=vec_col,
-                query_id_col=query_id_col,
-                predicate_col=predicate_col,
-            )
-        )
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-        .start()
+    return _start(
+        query_stream,
+        nsw_serve_batch_writer(
+            store_path, out_path, k, accessors=accessors, ef=ef,
+            max_visits=max_visits, id_col=id_col, vec_col=vec_col,
+            query_id_col=query_id_col, predicate_col=predicate_col,
+        ),
+        checkpoint,
     )

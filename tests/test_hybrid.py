@@ -146,60 +146,71 @@ def test_knn_batch_matches_per_query_loop(embeddings_df):
         assert sorted(got[qid]) == want
 
 
-def test_acorn_plan_equals_loop_all_branches(spark):
-    """acorn_search_plan (declarative escalation) ≡ acorn_search
-    (driver loop) on every branch: round-1 fill, late-round fill, and
-    exact-prefilter fallback."""
+def test_acorn_single_and_batch_equal_prefilter_all_branches(spark):
+    """acorn_search ≡ acorn_search_batch ≡ prefilter_search, ids and
+    ``dist`` exactly, on every branch the reference's rounds would take
+    — round-1 fill, late-round fill, exact-prefilter fallback, and a
+    predicate no row passes — at two knob settings. Under-fill returns
+    the prepared fallback plan itself."""
     import numpy as np
-    from pyspark.sql import functions as F
 
     from acorn_hybrid_vector_search_spark.operators.hybrid import (
-        acorn_search,
-        acorn_search_plan,
+        acorn_prepare,
+        acorn_search_batch,
     )
 
     rng = np.random.RandomState(11)
     n, dim = 400, 8
     vecs = rng.rand(n, dim).round(3)
     # labels: 0 is common (round-1 fill), 1 is rare (late fill),
-    # 2 is near-absent (fallback)
+    # 2 is near-absent (fallback), 9 is absent (zero-match)
     labels = [0 if i % 2 == 0 else (1 if i % 29 == 0 else 3) for i in range(n)]
     labels[397] = 2
     labels[31] = 2
     rows = [(i, [float(x) for x in vecs[i]], labels[i]) for i in range(n)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>, label int")
     q = [float(x) for x in vecs[7]]
+    cases = [(0, 5), (1, 4), (2, 2), (9, 3)]
 
-    for label, k in [(0, 5), (1, 4), (2, 2)]:
-        loop = acorn_search(
-            df, q, {"label": ["exact", label]}, k=k, initial_oversample=2,
-            max_rounds=3, payload_cols=["vec_id", "label"],
-        ).select("vec_id", "label", "dist")
-        plan = acorn_search_plan(
-            df, q, {"label": ["exact", label]}, k=k, initial_oversample=2,
-            max_rounds=3, payload_cols=["vec_id", "label"],
-        ).select("vec_id", "label", "dist")
-        lr = sorted((r["vec_id"], r["label"], round(r["dist"], 9)) for r in loop.collect())
-        pr = sorted((r["vec_id"], r["label"], round(r["dist"], 9)) for r in plan.collect())
-        assert lr == pr, (label, k, lr, pr)
-        assert len(pr) == k, (label, k)
+    def key(rs):
+        return sorted(((r["dist"], r["vec_id"]) for r in rs))
+
+    for oversample, rounds in ((2, 3), (1, 1)):
+        knobs = {"initial_oversample": oversample, "max_rounds": rounds}
+        batch = acorn_search_batch(
+            df, [(i, q, {"label": ["exact", lab]}) for i, (lab, _) in enumerate(cases)],
+            k=5, **knobs,
+        ).collect()
+        for i, (label, k) in enumerate(cases):
+            pred = {"label": ["exact", label]}
+            want = key(prefilter_search(df, q, pred, k).collect())
+            single = acorn_search(df, q, pred, k, payload_cols=["label"], **knobs)
+            assert key(single.collect()) == want, (label, k, knobs)
+            want5 = key(prefilter_search(df, q, pred, 5).collect())
+            assert key(r for r in batch if r["query_id"] == i) == want5, (label, knobs)
+    # at (2, 3) label 0 fills in round 1 and label 1 only in round 3 (L =
+    # 128); the near-absent and absent labels under-fill and return the
+    # fallback plan itself (at (1, 1) every label under-fills)
+    for label, k, falls_back in ((0, 5, False), (1, 4, False), (2, 2, True), (9, 3, True)):
+        prep = acorn_prepare(
+            df, q, {"label": ["exact", label]}, k, initial_oversample=2, max_rounds=3
+        )
+        assert (prep.search() is prep.fallback) == falls_back, label
 
 
-def test_acorn_plan_is_distributed_and_bounded(spark, embeddings_df):
-    """The declarative escalation never materializes a local relation
-    and its windows run over the bounded candidate set only."""
+def test_acorn_rejects_knobs_below_one(embeddings_df, qvec):
+    """``max_rounds=0`` used to make the candidate width a float that
+    reached ``limit()``; both knobs must be at least 1."""
     from acorn_hybrid_vector_search_spark.operators.hybrid import (
-        acorn_search_plan,
+        acorn_prepare,
+        acorn_search_batch,
     )
 
-    emb = embeddings_df
-    q = emb.filter("vec_id = 0").head()["embedding"]
-    plan_df = acorn_search_plan(
-        emb, q, {"label": ["exact", 3]}, k=10, payload_cols=["vec_id", "label"]
-    )
-    p = plan_df._jdf.queryExecution().executedPlan().toString()
-    assert "LocalTableScan" not in p
-    assert "TakeOrderedAndProject" in p
+    for knobs in ({"initial_oversample": 0}, {"max_rounds": 0}, {"max_rounds": -1}):
+        with pytest.raises(ValueError, match="must be >= 1"):
+            acorn_prepare(embeddings_df, qvec, None, 5, **knobs)
+        with pytest.raises(ValueError, match="must be >= 1"):
+            acorn_search_batch(embeddings_df, [(0, qvec, None)], 5, **knobs)
 
 
 # ---------------------------------------------------------------------------
@@ -359,7 +370,7 @@ def test_batch_collision_guard_covers_internals(embeddings_df, qvec):
     """The collision guard must reject corpus columns named like ANY
     batch internal — the kernel's per-query mask columns, its rank and
     verdict scratch, the query id — in ALL THREE hybrid batch
-    functions, and ACORN's escalation scratch in ``acorn_search_batch``."""
+    functions."""
     from acorn_hybrid_vector_search_spark.operators.hybrid import (
         acorn_search_batch,
         postfilter_search_batch,
@@ -376,10 +387,6 @@ def test_batch_collision_guard_covers_internals(embeddings_df, qvec):
         ):
             with pytest.raises(ValueError, match="collide"):
                 fn(bad_df, queries, k=3)
-    # acorn additionally claims its escalation scratch names
-    bad_df = embeddings_df.withColumn("_prefix_hits", F.lit(1))
-    with pytest.raises(ValueError, match="collide"):
-        acorn_search_batch(bad_df, queries, k=3)
 
 
 def _batch_fns(df):

@@ -13,8 +13,8 @@ from pyspark.sql import functions as F
 
 from acorn_hybrid_vector_search_spark.functions.distance import l2_distance, l2_sq_distance
 from acorn_hybrid_vector_search_spark.operators.hybrid import (
+    acorn_prepare,
     acorn_search,
-    acorn_search_plan,
     postfilter_search,
     prefilter_search,
 )
@@ -116,7 +116,7 @@ def test_predicate_rejecting_every_row_returns_nothing(spark):
     assert _got(prefilter_search(df, q, preds, 5)) == []
     assert _got(postfilter_search(df, q, preds, 5)) == []
     assert _got(acorn_search(df, q, preds, 5)) == []
-    assert _got(acorn_search_plan(df, q, preds, 5)) == []
+    assert _got(acorn_search(df, q, preds, 5, payload_cols=["brand"])) == []
 
 
 _BAD = [(0, [0.0, 0.0]), (1, [5.0, 5.0]), (2, None), (3, [1.0, 1.0, 9.0]), (4, [0.1, 0.1])]
@@ -167,7 +167,9 @@ def test_plan_size_does_not_grow_with_dimension(spark):
         plans = {
             "knn_exact": _plan(knn_exact(df, q, 5)),
             "postfilter": _plan(postfilter_search(df, q, preds, 5)),
-            "acorn_plan": _plan(acorn_search_plan(df, q, preds, 5, payload_cols=["brand"])),
+            "acorn_cand": _plan(acorn_prepare(df, q, preds, 5, payload_cols=["brand"]).cand),
+            # four rows cannot fill k=5: the pre-filter fallback plan
+            "acorn": _plan(acorn_search(df, q, preds, 5, payload_cols=["brand"])),
         }
         for name, p in plans.items():
             assert "zip_with" not in p and "ArrowEvalPython" in p, (name, dim)

@@ -44,9 +44,6 @@ _BNLJ_BY_DESIGN = {
     # embedding_near_dups / the ANN family
     "video_frame_similarity",
     "image_similarity",
-    # K4 declarative escalation: 1-row round-selection scalar broadcast
-    # back over the bounded candidate set (acorn_search_plan)
-    "acorn_hybrid",
     # r6 bloom decontamination: the bitset is a 1-row broadcast scalar
     # (constant-size array<bigint>) crossed onto the gram stream for
     # the map-side screen — the designed shape, verified exact by the
@@ -121,12 +118,11 @@ def test_global_rank_filter_pushes_to_take_ordered(queries):
 
 # every batch entry answers its queries through knn_batch's map-side
 # kernel; the value lists the joins its plan may still hold (the ABO
-# corpus join, ACORN's |Q|-row round selection), none of them with the
-# queries
+# corpus join), none of them with the queries
 _BATCH_ENTRIES = {
     "knn_batch_topk": 0,
     "hybrid_batch_topk": 1,
-    "acorn_batch_topk": 2,
+    "acorn_batch_topk": 0,
     "postfilter_batch_topk": 0,
     "routed_batch_topk": 1,
     "routed_batch_dispatch_topk": 0,
@@ -150,6 +146,28 @@ def test_knn_batch_driver_entry_is_map_side_reduced(queries):
             assert node not in p, f"{node} in {name} — pair join leaked back"
         joins = re.findall(r"(?:SortMerge|ShuffledHash|BroadcastHash)Join", p)
         assert len(joins) == n_joins, f"{name}: {joins}"
+
+
+def test_acorn_batch_is_one_kernel_scan(queries):
+    """Each query's K4 answer is its pre-filter answer, so the ACORN
+    batch is one kernel pass: exactly one MapInArrow, and no Union or
+    join (no escalation branch, round selection or fallback scan)."""
+    p = _plan(queries["acorn_batch_topk"])
+    assert p.count("MapInArrow") == 1, p
+    assert "Union" not in p and "Join" not in p, p
+
+
+def test_batch_kernel_output_drops_vectors(queries):
+    """MapInArrow blocks column pruning, so the kernel itself must not
+    hand the vector column back to the JVM: its output attributes hold
+    no ``embedding``."""
+    import re
+
+    for name in ("hybrid_batch_topk", "ivf_exact_batch_topk"):
+        outs = re.findall(r"MapInArrow [^\n]*?\)#\d+, \[([^\]]*)\]", _plan(queries[name]))
+        assert outs, name
+        for out in outs:
+            assert "dist#" in out and "embedding#" not in out, (name, out)
 
 
 def test_asof_driver_entry_is_chunked(queries):

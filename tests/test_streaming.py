@@ -549,24 +549,48 @@ def test_stream_nsw_serve_replay_idempotent_and_batch_parity(spark, tmp_path):
     assert first == want
 
 
-def test_stream_serve_duplicate_query_rows(spark, tmp_path):
+def _writer_for(family, corpus, tmp_path, out):
+    """One serving writer per family over ``corpus`` (k=5, flat int
+    ``label`` payload): the static-corpus, NSW-store and routed forms."""
+    from acorn_hybrid_vector_search_spark.functions.predicates import (
+        flat_accessors,
+    )
+    from acorn_hybrid_vector_search_spark.streaming import serving
+
+    acc = flat_accessors({"label": "int"})
+    if family == "hybrid":
+        return serving.hybrid_serve_batch_writer(corpus, out, k=5)
+    if family == "nsw":
+        from acorn_hybrid_vector_search_spark.operators.graph_ann import nsw_write
+
+        store = str(tmp_path / "graph")
+        nsw_write(corpus.repartition(2), store, payload_cols=["label"])
+        return serving.nsw_serve_batch_writer(
+            store, out, k=5, accessors=acc, ef=1_000_000
+        )
+    from acorn_hybrid_vector_search_spark.plans.router import (
+        StrategyRouter,
+        collect_stats,
+    )
+
+    router = StrategyRouter(collect_stats(corpus, ["label"]))
+    return serving.routed_serve_batch_writer(router, corpus, out, 5, accessors=acc)
+
+
+@pytest.mark.parametrize("family", ["hybrid", "nsw", "routed"])
+def test_stream_serve_duplicate_query_rows(spark, tmp_path, family):
     """Review r8b: an at-least-once source redelivering a query INSIDE
     one micro-batch must not corrupt the top-k — identical duplicates
-    collapse to one, conflicting duplicates raise."""
+    collapse to one, conflicting duplicates raise — in every serving
+    family's writer."""
     import json
-
-    import pytest as _pytest
-
-    from acorn_hybrid_vector_search_spark.streaming.serving import (
-        hybrid_serve_batch_writer,
-    )
 
     corpus = spark.createDataFrame(
         [(i, [float(i % 7), float((i * 3) % 5)], i % 4) for i in range(40)],
         "vec_id long, embedding array<double>, label int",
     )
     out = str(tmp_path / "results")
-    writer = hybrid_serve_batch_writer(corpus, out, k=5)
+    writer = _writer_for(family, corpus, tmp_path, out)
     spec = json.dumps({"label": ["exact", 2]})
     dup = spark.createDataFrame(
         [(1, [3.0, 1.0], spec), (1, [3.0, 1.0], spec)],
@@ -580,7 +604,7 @@ def test_stream_serve_duplicate_query_rows(spark, tmp_path):
         [(2, [3.0, 1.0], spec), (2, [3.0, 1.0], None)],
         "query_id long, embedding array<double>, predicate_json string",
     )
-    with _pytest.raises(ValueError, match="conflicting duplicate"):
+    with pytest.raises(ValueError, match="conflicting duplicate"):
         writer(conflict, 1)
 
 

@@ -116,10 +116,10 @@ AUDIT: dict[str, list[str]] = {
     # kernel (each query's top k per Arrow batch), bounded per-query
     # merge — no query table, no pair join
     "hybrid_batch_topk": ["MapInArrow", "_pass_g0", "WindowGroupLimit"],
-    # batched K4 escalation — distance-first kernel candidates with the
-    # _passes verdict carried, broadcast per-query round selection (the
-    # |Q|-row agg joins back), fallback branch unioned in the same plan
-    "acorn_batch_topk": ["MapInArrow", "_passes", "Union"],
+    # batched K4 — each query's answer is its pre-filter answer, so the
+    # batch is the pre-filter batch: one mask column per distinct
+    # predicate into one knn_batch MapInArrow, bounded per-query merge
+    "acorn_batch_topk": ["MapInArrow", "_pass_g0", "WindowGroupLimit"],
     # round 8: hybrid over the persisted graph store — the predicate is
     # a Catalyst projection on the stored node table feeding the
     # per-shard walk; bounded top-k merge as in every NSW search

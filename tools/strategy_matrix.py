@@ -34,7 +34,7 @@ from acorn_hybrid_vector_search_spark.operators.graph_ann import (  # noqa: E402
     nsw_write,
 )
 from acorn_hybrid_vector_search_spark.operators.hybrid import (  # noqa: E402
-    acorn_search_plan,
+    acorn_search,
     postfilter_search,
     prefilter_search,
 )
@@ -73,7 +73,7 @@ def main() -> None:
     # attributes extracted to flat payload columns at build time
     # (extract_attribute_payloads — decision-equivalent, pytest-pinned);
     # searched on the predicate subgraph at a bounded beam, the paper's
-    # ANN operating point (vs acorn_search_plan's exact escalation)
+    # ANN operating point (vs acorn_search's exact escalation)
     import tempfile
 
     cols, flat_acc = extract_attribute_payloads(acc, prefix="v_")
@@ -108,10 +108,8 @@ def main() -> None:
             coll, q, pred, k, large_k=50, accessors=acc, id_col="item_id"
         ),
         # payload must carry every column the predicate reads (operator
-        # contract) — project to id + the 5 ABO attributes. Round 5:
-        # the DECLARATIVE escalation (acorn_search_plan) — same results
-        # as the loop (pytest-pinned), no per-call driver round loop.
-        "acorn": lambda pred: acorn_search_plan(
+        # contract) — project to id + the 5 ABO attributes
+        "acorn": lambda pred: acorn_search(
             coll, q, pred, k, accessors=acc, id_col="item_id",
             payload_cols=[
                 "item_id", "brand", "color", "item_weight", "model_year", "country",
