@@ -1859,13 +1859,15 @@ def _q_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_prepared
 def _q_routed_hybrid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strategy-routed hybrid search: the router estimates selectivity from
     cached attribute histograms and picks the physical strategy (here:
     ~10% selectivity, k=10 → exact pre-filter, so the pre-filter oracle
     applies). Demonstrates the reference's pre/post/partitioned research
-    question as a planner decision."""
+    question as a planner decision. On cached inputs ``collect_stats``
+    takes the table's driver snapshot and the router answers from it, so
+    the result is a local relation built per call (hence not
+    ``@_prepared``: a memoized local relation would time nothing)."""
     from acorn_hybrid_vector_search_spark.plans.router import StrategyRouter, collect_stats
 
     emb = _t(spark, sf_dir, "embeddings")

@@ -41,8 +41,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # ops the reference dispatches per attribute class (SURVEY.md §2.3 matrix)
-_NUMERIC_OPS = {"exact", "leq", "geq", "<", ">"}
-_STRING_OPS = {"exact", "substring"}
+SUPPORTED_OPS = {
+    "numeric": frozenset({"exact", "leq", "geq", "<", ">"}),
+    "string": frozenset({"exact", "substring"}),
+}
 
 
 class AttributeAccessor:
@@ -90,10 +92,15 @@ def flat_accessors(df_or_schema: DataFrame | Mapping[str, str]) -> dict[str, Att
         dtypes = dict(df_or_schema)
     out: dict[str, AttributeAccessor] = {}
     for name, dt in dtypes.items():
-        kind = "string" if dt in ("string", "varchar") else "numeric"
         col = F.col(name)
-        out[name] = AttributeAccessor(col, col.isNotNull(), kind)
+        out[name] = AttributeAccessor(col, col.isNotNull(), flat_kind(dt))
     return out
+
+
+def flat_kind(dtype: str) -> str:
+    """The attribute kind ``flat_accessors`` gives a column of Spark type
+    string ``dtype``: 'string' for strings, 'numeric' for everything else."""
+    return "string" if dtype in ("string", "varchar") else "numeric"
 
 
 def extract_attribute_payloads(
@@ -151,8 +158,7 @@ def build_predicate(
         # strict missing-attribute rejection, always applied
         cond = cond & acc.present
 
-        supported = _NUMERIC_OPS if acc.kind == "numeric" else _STRING_OPS
-        if op not in supported:
+        if op not in SUPPORTED_OPS[acc.kind]:
             continue  # unsupported (attr, op): constraint silently ignored
 
         v = acc.value

@@ -22,8 +22,17 @@ an entry has one of two lifetimes:
   fresh directory inside the store ``(name,)``, for per-call outputs
   whose lazy frames must still read their files after the call.
 
-``reset()`` is ``invalidate()`` plus dropping every store: the next call
-rebuilds from the inputs (the bench's uncached first-execution probe).
+A third lifetime belongs to one cached frame OBJECT rather than to a
+key: ``frame_memo(df, name, build)`` (the driver snapshot of
+``operators/snapshot.py``). The entry holds only a weak reference to the
+frame, survives ``invalidate()`` (a cached frame's rows do not change
+when a store is rewritten), and is dropped when the frame is garbage
+collected, when a lookup or a new entry's build finds the frame no
+longer cached, on ``reset()`` and with its session.
+
+``reset()`` is ``invalidate()`` plus dropping every store and frame
+entry: the next call rebuilds from the inputs (the bench's uncached
+first-execution probe).
 
 ``materialize`` exists because Spark's exchange reuse does not fire
 across two consumers of the same subtree when the consuming joins carry
@@ -41,13 +50,14 @@ import atexit
 import os
 import shutil
 import tempfile
+import weakref
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
 __all__ = [
-    "invalidate", "materialize", "memo", "probe_memo", "read_parquet",
-    "reset", "scratch_dir", "store",
+    "frame_memo", "invalidate", "materialize", "memo", "probe_memo",
+    "read_parquet", "reset", "scratch_dir", "store",
 ]
 
 # insertion-ordered: index 0 is the LRU victim; entries carry the owning
@@ -155,12 +165,17 @@ def read_parquet(spark, path: str) -> DataFrame:
 _ENTRIES: dict[tuple, tuple[object, str | None]] = {}
 _ROOTS: dict[str, str] = {}
 _APP: str | None = None
+# frame entries: (applicationId, name, id(frame)) -> (weakref, value); the
+# weakref's callback removes the entry when the frame is collected
+_FRAMES: dict[tuple, tuple[weakref.ref, object]] = {}
 
 
 def _drop_sessions(keep: str | None = None) -> None:
     """Drop every registry entry and store root not owned by ``keep``."""
     for k in [k for k in _ENTRIES if k[0] != keep]:
         del _ENTRIES[k]
+    for k in [k for k in list(_FRAMES) if k[0] != keep]:
+        _FRAMES.pop(k, None)
     for app in [a for a in _ROOTS if a != keep]:
         shutil.rmtree(_ROOTS.pop(app), ignore_errors=True)
 
@@ -200,6 +215,31 @@ def store(spark, key: tuple, build):
             raise
         _ENTRIES[k] = (value, d)
     return _ENTRIES[k][0]
+
+
+def frame_memo(df: DataFrame, name: str, build=None):
+    """The value ``build()`` returned for this frame OBJECT under
+    ``name``, while ``df`` stays cached; None when ``df`` is not cached,
+    or when nothing was built and ``build`` is None (a pure lookup).
+
+    Keyed by the object, not by plan semantics: two frames that read the
+    same files are different entries, so one caller's entry never changes
+    what another caller's frame is served from."""
+    k = _session_key(df.sparkSession, (name, id(df)))
+    hit = _FRAMES.get(k)
+    if not df.is_cached:
+        _FRAMES.pop(k, None)
+        return None
+    if hit is None or hit[0]() is not df:
+        if build is None:
+            return None
+        # entries of unpersisted frames go before a new one is built
+        for key, (ref, _) in list(_FRAMES.items()):
+            if (f := ref()) is None or not f.is_cached:
+                _FRAMES.pop(key, None)
+        ref = weakref.ref(df, lambda _ref, k=k: _FRAMES.pop(k, None))
+        hit = _FRAMES[k] = (ref, build())
+    return hit[1]
 
 
 def scratch_dir(spark, name: str) -> str:

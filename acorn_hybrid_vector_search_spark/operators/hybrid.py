@@ -46,6 +46,21 @@ form keeps its own cost profile (``AcornPrepared``: the predicate runs
 on L rows, a second scan only on under-fill); a batch already applies
 every query's predicate as a mask in one scan, so ``acorn_search_batch``
 is ``prefilter_search_batch``.
+
+Serving from a driver snapshot. ``acorn_prepare``/``AcornPrepared``
+(and ``StrategyRouter.search``) answer from the driver snapshot of
+``df`` when one exists: ``df`` is a cached frame within the snapshot
+budget that ``collect_stats`` or ``register_subset`` was given, the
+predicate is a §2.3 dict under the default flat accessors with
+well-typed values, and the vectors have one dimension
+(``operators/snapshot.py``). The rows, ``dist`` bits and schema are the
+Spark plan's, returned as a local relation that collects without a job.
+The snapshot is keyed by the frame OBJECT, not by plan semantics: the
+battery hands one cached table object to every query, and a
+plan-keyed snapshot would turn unrelated rows over the same table
+driver-local depending on query order. The plan builders here
+(``prefilter_search``, ``postfilter_search``, the batch forms) always
+return Spark plans.
 """
 
 from __future__ import annotations
@@ -55,12 +70,15 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.conversion import LocalDataToArrowConversion
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from acorn_hybrid_vector_search_spark.functions.predicates import (
     AttributeAccessor,
     build_predicate,
     flat_accessors,
 )
+from acorn_hybrid_vector_search_spark.operators import snapshot
 from acorn_hybrid_vector_search_spark.operators.knn import (
     knn_batch,
     knn_exact,
@@ -181,29 +199,60 @@ class AcornPrepared:
     latencies time ``knn_query`` alone): ``acorn_prepare`` pays Python
     plan construction and analysis ONCE; every ``search()`` re-executes
     the candidate scan (nothing about the data is cached here), and the
-    pre-filter plan when the candidates under-fill."""
+    pre-filter plan when the candidates under-fill.
 
-    __slots__ = ("cand", "fallback", "k", "dist_col", "id_col")
+    On a frame with a driver snapshot (``operators/snapshot.py``),
+    ``search()`` answers from the snapshot without a Spark job, and the
+    plans ``cand`` and ``fallback`` are built only when read."""
 
-    def __init__(self, cand: DataFrame, fallback: DataFrame, *, k: int,
-                 dist_col: str, id_col: str) -> None:
-        self.cand = cand
-        self.fallback = fallback
+    __slots__ = ("_build", "_plans", "_serve", "_fallback", "k", "dist_col", "id_col")
+
+    def __init__(self, build, serve, *, k: int, dist_col: str, id_col: str) -> None:
+        self._build = build
+        self._plans = None if serve is not None else build()
+        self._serve = serve
+        self._fallback = None
         self.k = k
         self.dist_col = dist_col
         self.id_col = id_col
 
+    def _plan(self, i: int) -> DataFrame:
+        if self._plans is None:
+            self._plans = self._build()
+        return self._plans[i]
+
+    @property
+    def cand(self) -> DataFrame:
+        """The top ``L`` rows by (dist, id) with their ``_passes`` verdict."""
+        return self._plan(0)
+
+    @property
+    def fallback(self) -> DataFrame:
+        """The exact pre-filter answer: the plan, or the snapshot's rows
+        once ``search()`` served an under-fill from the snapshot."""
+        return self._fallback if self._fallback is not None else self._plan(1)
+
     def search(self) -> DataFrame:
         """The first k passing candidates by (dist, id) as a local
         relation, or ``self.fallback`` itself when fewer than k pass."""
+        served = self._serve and self._serve()
+        if served is not None:
+            rows, filled = served
+            if not filled:
+                self._fallback = rows
+            return rows
         rows = sorted(
             self.cand.collect(), key=lambda r: (r[self.dist_col], r[self.id_col])
         )
-        hits = [r for r in rows if r["_passes"]][: self.k]
+        hits = [r.asDict() for r in rows if r["_passes"]][: self.k]
         if len(hits) < self.k:
             return self.fallback
-        out = self.cand.sparkSession.createDataFrame(hits, schema=self.cand.schema)
-        return out.drop("_passes")
+        schema = self.cand.drop("_passes").schema
+        table = (
+            LocalDataToArrowConversion.convert(hits, schema, False) if hits
+            else to_arrow_schema(schema).empty_table()
+        )
+        return snapshot.local_relation(self.cand.sparkSession, table, schema)
 
 
 def acorn_prepare(
@@ -223,22 +272,31 @@ def acorn_prepare(
     """Build the K4 plans once (see AcornPrepared): the top ``L`` rows of
     ``df`` by (dist, id), each with its predicate verdict ``_passes`` and
     projected to ``payload_cols`` (plus id and dist) when given, and the
-    exact pre-filter fallback."""
-    cond = _resolve_predicate(df, predicates, accessors)
-    cand_df = df
-    if payload_cols is not None:
-        keep = list(dict.fromkeys([id_col, *payload_cols]))
-        cand_df = df.select(*dict.fromkeys([*keep, vec_col]))
-    cand = knn_exact(
-        cand_df, query_vec, _acorn_width(k, initial_oversample, max_rounds),
-        vec_col=vec_col, id_col=id_col, dist_col=dist_col,
-    ).withColumn("_passes", cond)
-    if payload_cols is not None and vec_col not in keep:
-        cand = cand.drop(vec_col)
-    fallback = prefilter_search(
-        df, query_vec, cond, k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
+    exact pre-filter fallback. Skipped while a snapshot of ``df`` answers
+    (they are then built when first read)."""
+    width = _acorn_width(k, initial_oversample, max_rounds)
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        cond = _resolve_predicate(df, predicates, accessors)
+        cand_df = df
+        if payload_cols is not None:
+            keep = list(dict.fromkeys([id_col, *payload_cols]))
+            cand_df = df.select(*dict.fromkeys([*keep, vec_col]))
+        cand = knn_exact(
+            cand_df, query_vec, width, vec_col=vec_col, id_col=id_col, dist_col=dist_col,
+        ).withColumn("_passes", cond)
+        if payload_cols is not None and vec_col not in keep:
+            cand = cand.drop(vec_col)
+        fallback = prefilter_search(
+            df, query_vec, cond, k, vec_col=vec_col, id_col=id_col, dist_col=dist_col
+        )
+        return cand, fallback
+
+    serve = snapshot.acorn(
+        df, query_vec, predicates, k, width, accessors=accessors, vec_col=vec_col,
+        id_col=id_col, dist_col=dist_col, payload_cols=payload_cols,
     )
-    return AcornPrepared(cand, fallback, k=k, dist_col=dist_col, id_col=id_col)
+    return AcornPrepared(build, serve, k=k, dist_col=dist_col, id_col=id_col)
 
 
 # ---------------------------------------------------------------------------

@@ -76,6 +76,24 @@ def _vector_reader(dim: int):
     return read
 
 
+def strict_sq_l2():
+    """A picklable ``(xt, q) -> dist``: the squared L2 distance of each
+    column of ``xt`` (dim × rows, float32 or float64) to ``q`` (float64),
+    summed in float64 one dimension at a time, left to right. Every exact
+    single-query answer (``knn_exact``, the driver snapshot) calls this
+    one sum, so their ``dist`` bits agree by construction. Nested for the
+    reason given in ``_vector_reader``."""
+
+    def sq_l2(xt: np.ndarray, q: np.ndarray) -> np.ndarray:
+        acc = np.zeros(xt.shape[1])
+        for j in range(len(q)):
+            d = np.subtract(xt[j], q[j], dtype=np.float64)
+            acc = acc + d * d
+        return acc
+
+    return sq_l2
+
+
 def knn_exact(
     df: DataFrame,
     query_vec: Sequence[float],
@@ -95,13 +113,11 @@ def knn_exact(
         raise ValueError(f"unsupported metric {metric!r}")
     q = np.asarray(query_vec, dtype=np.float64)
     read = _vector_reader(len(q))
+    sq_l2 = strict_sq_l2()
 
     def dist(vecs: pa.Array) -> pa.Array:
         rows, xt = read(vecs)
-        acc = np.zeros(len(rows))
-        for j in range(len(q)):
-            d = xt[j] - q[j]
-            acc = acc + d * d
+        acc = sq_l2(xt, q)
         out = np.zeros(len(vecs))
         out[rows] = np.sqrt(acc) if metric == "l2" else acc
         missing = np.ones(len(vecs), dtype=bool)

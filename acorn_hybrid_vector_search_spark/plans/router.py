@@ -23,6 +23,14 @@ Histograms are equi-frequency-ish summaries, not oracle truth — estimates
 combine per-attribute independence (standard Selinger assumption). The
 router is deliberately library-level (no Catalyst internals): it chooses
 WHICH DataFrame plan to build; Catalyst still optimizes the chosen plan.
+
+Point queries over a small cached corpus skip the plan altogether.
+``collect_stats`` on a cached frame within ``snapshot.BUDGET_BYTES`` (and
+``register_subset`` on a cached subset) takes the frame's driver
+snapshot, and ``StrategyRouter.search`` answers each route from it with
+the route's own semantics and the Spark plan's rows, without a Spark job
+(``operators/snapshot.py``): the index is built in Spark, and one
+query over a few tens of MB is served outside it.
 """
 
 from __future__ import annotations
@@ -39,6 +47,7 @@ from acorn_hybrid_vector_search_spark.functions.predicates import (
     abo_accessors,
     build_predicate,
 )
+from acorn_hybrid_vector_search_spark.operators import snapshot
 from acorn_hybrid_vector_search_spark.operators.hybrid import (
     postfilter_search,
     prefilter_search,
@@ -70,34 +79,38 @@ class TableStats:
 def collect_stats(df: DataFrame, attrs: Sequence[str], max_distinct: int = 10_000) -> TableStats:
     """A1 per attribute, collected to the driver.
 
-    One job computes every histogram via a single pass + grouping-sets-free
-    union of tiny aggregates (each ``groupBy(attr).count()`` is its own
-    shuffle but over distinct-value-sized data). ``max_distinct`` caps the
-    collect — attributes with more distinct values fall back to a
-    count-only summary (selectivity estimated as 1/NDV).
+    On a cached frame within ``snapshot.BUDGET_BYTES`` this takes the
+    frame's driver snapshot (one job) and computes every histogram from
+    it. Otherwise it runs one count, then one ``groupBy(attr).count()``
+    collect per attribute. ``max_distinct`` caps a histogram: an
+    attribute with more distinct values (the NULL group counted) keeps a
+    count-only summary, its exact NDV and NULL count (selectivity is then
+    estimated as 1/NDV), which costs two more jobs on the Spark path.
+    Both paths give equal stats.
     """
-    n_rows = df.count()
+    snap = snapshot.take(df)
+    n_rows = snap.table.num_rows if snap is not None else df.count()
     stats = TableStats(n_rows=n_rows)
     for attr in attrs:
-        agg = df.groupBy(attr).agg(F.count(F.lit(1)).alias("cnt"))
-        ndv = agg.count()
-        counts: dict[Any, int] = {}
-        n_null = 0
-        if ndv <= max_distinct:
-            for row in agg.collect():
-                if row[attr] is None:
-                    n_null = row["cnt"]
-                else:
-                    counts[row[attr]] = row["cnt"]
-        else:
-            n_null = df.filter(F.col(attr).isNull()).count()
+        hist = snapshot.histogram(snap, attr, max_distinct) if snap is not None else None
+        counts, n_null, ndv = hist or _spark_histogram(df, attr, max_distinct)
+        st = stats.attrs[attr] = AttributeStats(counts, n_rows, n_null)
+        if ndv is not None:
             # sentinel: empty counts dict with known NDV → uniform estimate
-            counts = {}
-            stats.attrs[attr] = AttributeStats(counts, n_rows, n_null)
-            stats.attrs[attr].ndv = ndv  # type: ignore[attr-defined]
-            continue
-        stats.attrs[attr] = AttributeStats(counts, n_rows, n_null)
+            st.ndv = ndv  # type: ignore[attr-defined]
     return stats
+
+
+def _spark_histogram(df: DataFrame, attr: str, max_distinct: int):
+    """``(counts, n_null, ndv)`` of ``attr`` by Spark aggregates; ``ndv``
+    is None unless the attribute has more than ``max_distinct`` groups."""
+    agg = df.groupBy(attr).agg(F.count(F.lit(1)).alias("cnt"))
+    rows = agg.limit(max_distinct + 1).collect()
+    if len(rows) > max_distinct:
+        return {}, df.filter(F.col(attr).isNull()).count(), agg.count()
+    counts = {r[attr]: r["cnt"] for r in rows if r[attr] is not None}
+    n_null = next((r["cnt"] for r in rows if r[attr] is None), 0)
+    return counts, n_null, None
 
 
 def _attr_selectivity(st: AttributeStats, op: str, value: Any) -> float:
@@ -373,7 +386,10 @@ class StrategyRouter:
         self._subsets: dict[str, tuple[DataFrame, frozenset[str], int]] = {}
 
     def register_subset(self, name: str, df: DataFrame, attrs: Sequence[str], n_rows: int) -> None:
-        """Register a materialized attribute subset (K5 build output)."""
+        """Register a materialized attribute subset (K5 build output). A
+        cached subset within the snapshot budget gets its driver snapshot
+        now, as ``collect_stats`` gives the corpus its own."""
+        snapshot.take(df)
         self._subsets[name] = (df, frozenset(attrs), n_rows)
 
     def route(self, predicates: Predicates | None, k: int) -> Route:
@@ -583,13 +599,20 @@ class StrategyRouter:
         k: int,
         **kw: Any,
     ) -> DataFrame:
+        """The routed answer: pre-filter, post-filter (top ``large_k`` by
+        (dist, id), then the predicate, then k) or pre-filter over the
+        subset. From the target's driver snapshot as a local relation when
+        it can answer (module docstring; keyed by the frame object, so
+        only the frames given to ``collect_stats``/``register_subset``),
+        else the route's Spark plan."""
         r = self.route(predicates, k)
-        if r.strategy == "subset":
-            target = self._subsets[r.subset_name][0]
-            return prefilter_search(target, query_vec, predicates, k, **kw)
+        target = self._subsets[r.subset_name][0] if r.strategy == "subset" else df
+        served = snapshot.search(target, query_vec, predicates, k, large_k=r.large_k, **kw)
+        if served is not None:
+            return served
         if r.strategy == "postfilter":
             return postfilter_search(df, query_vec, predicates, k, large_k=r.large_k, **kw)
-        return prefilter_search(df, query_vec, predicates, k, **kw)
+        return prefilter_search(target, query_vec, predicates, k, **kw)
 
     def _pruned_facts(
         self,
