@@ -3509,13 +3509,15 @@ def _q_nsw_dense_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r12 (VERDICT r11 ask #3): the BATCH-DENSE serving kernel —
     ``nsw_dense_topk`` answers the same four-predicate-class batch as
     nsw_hybrid_batch_topk over the same persisted covering-index store,
-    but with ONE BLAS gemm per shard instead of |Q| best-first walks
-    (profiled 2.4-5.7× faster past |Q|≈16 at the reference's 123k×2048
-    shape — BENCH_LADDER ``acorn_amortized_refshape_dense_f32`` /
-    ``serving_crossover``). Exact by construction (brute per shard,
-    same f64 dot-trick arithmetic as the walk's ``_dist``), so it
-    answers the IDENTICAL brute-force oracle hash-exact; dense ≡
-    full-beam walk is pytest-pinned (tests/test_graph_ann.py)."""
+    but with ONE scan of the store's live rows instead of |Q| best-first
+    walks: ``knn_batch``'s kernel, a gemm screen and then the strict sum
+    over its survivors (the pure-gemm kernel it replaced profiled
+    2.4-5.7× faster than the walk past |Q|≈16 at the reference's
+    123k×2048 shape — BENCH_LADDER ``acorn_amortized_refshape_dense_f32``
+    / ``serving_crossover``). Exact by construction (``dist`` is
+    ``knn_exact``'s strict sum), so it answers the IDENTICAL brute-force
+    oracle hash-exact; dense ≡ full-beam walk is pytest-pinned
+    (tests/test_graph_ann.py)."""
     from acorn_hybrid_vector_search_spark.functions.predicates import (
         build_predicate,
         flat_accessors,
@@ -3555,8 +3557,8 @@ def _q_nsw_dense_int8_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     than float32, the 100 TB bandwidth lever), whose per-row
     quantization radius certifies a candidate set that provably
     contains the true top-k; phase 2 re-ranks ONLY the candidates
-    against the full-precision vectors with the same f64 dot-trick as
-    the dense kernel. Exact by construction, so the IDENTICAL
+    against the full-precision vectors with the dense kernel's strict
+    sum. Exact by construction, so the IDENTICAL
     brute-force oracle gates it hash-exactly (int8≡dense≡walk≡brute is
     pytest-pinned). Reference anchor: the quantized memory rung the
     reference's float32-only hnswlib store cannot express
@@ -5217,8 +5219,8 @@ def _q_stream_dense_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
     rung), yet each micro-batch's 4-query union reaches
     ``DENSE_SERVE_MIN_BATCH`` = 4, so ``plan_ann_batch`` hands the arm
     to ``nsw_dense_topk`` (in-fn pinned per micro-batch: the plan the
-    dispatcher executes is exactly [("nsw", "nsw_dense")]) — one BLAS
-    gemm over the store, EXACT results despite the sub-1.0 recall
+    dispatcher executes is exactly [("nsw", "nsw_dense")]) — one exact
+    scan of the store, EXACT results despite the sub-1.0 recall
     route, so the brute-force per-query oracle gates the stream
     hash-exactly (the walk at ef=16 could not promise that). In-fn
     pins: route arm + recall, per-micro-batch plan, TWO landed

@@ -61,9 +61,12 @@ from pyspark.sql import functions as F
 
 from acorn_hybrid_vector_search_spark.operators._cache import invalidate, read_parquet
 from acorn_hybrid_vector_search_spark.operators.knn import (
+    QUERY_BLOCK,
     DenseMaskPlan,
     merge_topk,
     query_batch_matrix,
+    scan_topk,
+    strict_sq_l2,
 )
 from acorn_hybrid_vector_search_spark.operators.store import (
     NSW,
@@ -2013,6 +2016,18 @@ def nsw_read_topk(
     return merge_topk(cand, k, id_col, dist_col)
 
 
+def _batch_filters(stored: DataFrame, predicate, predicates, match, blocked, id_col: str) -> DataFrame:
+    """The dense kernels' batch-wide filters: the shared ``predicate``
+    (NULL fails) and the ``blocked`` ids."""
+    if predicate is not None:
+        if predicates or match:
+            raise ValueError("pass either predicate or predicates, not both")
+        stored = stored.where(predicate)
+    if blocked:
+        stored = stored.where(~F.col(id_col).isin(sorted(int(b) for b in blocked)))
+    return stored
+
+
 def nsw_dense_topk(
     spark,
     path: str,
@@ -2023,143 +2038,41 @@ def nsw_dense_topk(
     predicates=None,
     match=None,
     blocked: frozenset[int] | set[int] | None = None,
-    query_block: int = 256,
     id_col: str = "vec_id",
     dist_col: str = "dist",
 ) -> DataFrame:
-    """BATCH-DENSE serving kernel over the same persisted store (r12,
-    VERDICT r11 ask #3): answer the whole query batch per shard with
-    ONE BLAS gemm instead of |Q| best-first walks — EXACT brute-force
-    per shard, merged by the same global (dist, id) rank.
+    """BATCH-DENSE serving kernel over the same persisted store: the
+    EXACT brute-force answer for a whole query batch, where the walk
+    (``nsw_read_topk``) pays a Python best-first search per (query,
+    shard). It is ``knn.knn_batch``'s scan over the store's live rows, so
+    ``dist`` is ``knn_exact``'s strict sum bit for bit. The walk remains
+    the kernel for SMALL batches and tight visit budgets (the anytime
+    ACORN contract); the router's ``DENSE_SERVE_MIN_BATCH`` is the
+    crossover.
 
-    Why it exists: the walk (``nsw_read_topk``) pays a Python-loop
-    best-first search PER (query, shard) — profiled at ~9 ms/query/
-    shard at the reference's 123k×2048 shape, ``_dist`` fancy-indexed
-    numpy being 67% of it — while a dense ``X @ Qᵀ`` answers 64
-    queries in ~0.25 s/shard (~4 ms/query) and 256 in ~0.4 s
-    (~1.6 ms/query): past a modest |Q| the gemm is strictly faster AND
-    exact. This is the Spark-first trade the reference cannot make —
-    its hnswlib index answers queries one beam at a time
-    (bindings.cpp ParallelFor parallelizes, never batches the
-    arithmetic), whereas a batch engine turns the whole micro-batch
-    into one level-3 BLAS call per shard. The walk remains the right
-    kernel for SMALL batches and tight visit budgets (the anytime
-    ACORN contract); the crossover is measured in BENCH_LADDER
-    ``serving_crossover``.
+    Semantics: the shared ``predicate`` and ``blocked`` (anti-membership
+    ids) are Catalyst filters on the scan; per-query ``predicates`` and
+    ``match`` templates are ``DenseMaskPlan`` masks (NULL fails, the §2.3
+    builder works unchanged). Being exact, a failing row is simply not a
+    candidate (there is no traversed-but-not-returned distinction in a
+    scan). Tombstoned ids are never returned. The scan reads only the id,
+    the vector and the mask inputs: ``neighbors``/``gamma`` never ship.
 
-    Numerics: distances are the same f64 dot-trick ``_dist`` uses
-    (``|x|² − 2x·q + |q|²`` — gemm instead of gemv), so results carry
-    the same oracle hash-parity the walk rows established; a float32
-    store upcasts to f64 exactly like ``NswGraph.from_adjacency``.
+    NO SHUFFLE: unlike the walk, whose seq-indexed adjacency forces a
+    ``groupBy(part_id)`` that reshuffles the vector payload on every
+    call, a brute top-k over any FRAGMENT of the store, merged by the
+    global (dist, id) rank, is still exact — so the only shuffled rows
+    are the O(fragments·|Q|·k) candidates.
 
-    Semantics: ``predicate`` / per-query ``predicates`` are evaluated
-    by CATALYST on the stored node table exactly as in
-    ``nsw_read_topk`` (NULL fails, §2.3 builder works unchanged) —
-    being exact, failing rows are simply excluded (there is no
-    traversed-but-not-returned distinction in a scan). Tombstoned ids
-    are never returned; ``blocked`` is the anti-membership set. The
-    graph columns are PRUNED from the scan (``neighbors``/``gamma``
-    never ship — a dense call reads strictly fewer bytes than a walk).
-    ``query_block`` bounds per-task memory: the n×|Q| distance matrix
-    is computed in |Q|≤query_block slabs (15k×256 f64 ≈ 31 MB).
-
-    NO SHUFFLE (r12b): unlike the walk — whose graph adjacency is
-    seq-indexed per shard, forcing a ``groupBy(part_id)`` that
-    reshuffles the full vector payload on every call — the dense
-    kernel needs no shard integrity: a brute top-k over any FRAGMENT
-    of the store, merged by the same global (dist, id) rank, is still
-    exact. So it runs as ``mapInPandas`` straight over the scan: the
-    only shuffled rows are the O(fragments·|Q|·k) candidates. At
-    100 TB that is the difference between re-shuffling the dataset per
-    micro-batch and a map-only pass.
+    Returns ``(query_id, <id_col>, <dist_col>)``.
     """
     qids, qmat = query_batch_matrix(queries)
-    blocked_arr = np.asarray(sorted(int(b) for b in (blocked or ())), dtype=np.int64)
-    out_schema = f"query_id long, {id_col} long, {dist_col} double"
-    mask_plan = DenseMaskPlan(predicate, predicates, qids, match=match)
-    if query_block < 1:
-        raise ValueError(f"query_block must be >= 1, got {query_block}")
-
-    stored = read_parquet(spark, path)
-    if missing := [
-        a for a in mask_plan.match_attrs if a not in stored.columns
-    ]:
-        raise ValueError(
-            f"match template attrs {missing} are not stored payload "
-            f"columns of {path!r} — the fast path reads flat columns; "
-            "use predicates= (Catalyst) for derived/nested attributes"
-        )
-    tomb = read_tombstones(spark, path)
-    if tomb is not None:
-        stored = apply_tombstones(stored, tomb, id_col)
-    stored, mask_cols = mask_plan.attach(stored)
-    # column-prune the scan: the dense kernel needs neither adjacency
-    # nor part_id (fragments are anonymous — r12 self-review)
-    keep = [id_col, "vector"]
-    if tomb is not None:
-        keep.append("_deleted")
-    keep.extend(mask_cols)
-    keep.extend(mask_plan.match_attrs)
-    stored = stored.select(*dict.fromkeys(keep))
-
-    n_q = len(qids)
-    qn = (qmat * qmat).sum(axis=1)
-    extract_masks = mask_plan.extractor()
-
-    def frag_topk(pdf: pd.DataFrame) -> pd.DataFrame:
-        X = np.asarray(list(pdf["vector"]), dtype=np.float64)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        xn = (X * X).sum(axis=1)
-        excl = np.zeros(len(ids), dtype=bool)
-        if "_deleted" in pdf.columns:
-            excl |= pdf["_deleted"].to_numpy(dtype=bool)
-        if blocked_arr.size:
-            excl |= np.isin(ids, blocked_arr)
-        shared, masks = extract_masks(pdf)
-        rows_q, rows_i, rows_d = [], [], []
-        kk = min(k, len(ids))
-        if kk == 0:
-            return pd.DataFrame({"query_id": [], id_col: [], dist_col: []})
-        for lo in range(0, n_q, query_block):
-            hi = min(lo + query_block, n_q)
-            # one level-3 BLAS call scores every (row, query) pair
-            D = xn[:, None] - 2.0 * (X @ qmat[lo:hi].T) + qn[None, lo:hi]
-            for j in range(lo, hi):
-                d = D[:, j - lo]
-                bad = excl.copy()
-                m = shared if shared is not None else masks.get(qids[j])
-                if m is not None:
-                    bad |= ~m
-                if bad.all():
-                    continue
-                dm = np.where(bad, np.inf, d)
-                kj = min(kk, int((~bad).sum()))
-                # argpartition picks an ARBITRARY subset of rows tied at
-                # the kj boundary — widen to EVERY row at or under the
-                # boundary distance, then the (dist, id) lexsort makes
-                # the truncation deterministic and oracle-consistent
-                # (ORDER BY dist, id LIMIT k) — r12 self-review fix
-                thresh = dm[np.argpartition(dm, kj - 1)[kj - 1]]
-                cand = np.flatnonzero(dm <= thresh)
-                order = np.lexsort((ids[cand], dm[cand]))
-                sel = cand[order][:kj]
-                rows_q.extend([qids[j]] * kj)
-                rows_i.extend(ids[sel].tolist())
-                rows_d.extend(dm[sel].tolist())
-        return pd.DataFrame(
-            {"query_id": rows_q, id_col: rows_i, dist_col: rows_d}
-        )
-
-    def run(batches):
-        # map-only: each Arrow batch is an independent fragment — no
-        # groupBy, no payload shuffle; the global merge re-ranks the
-        # O(fragments·|Q|·k) candidate stream
-        for pdf in batches:
-            if len(pdf):
-                yield frag_topk(pdf)
-
-    cand = stored.mapInPandas(run, out_schema)
-    return merge_topk(cand, k, id_col, dist_col)
+    plan = DenseMaskPlan(predicates, qids, match=match)
+    stored = live_rows(spark, path, read_parquet(spark, path), id_col=id_col)
+    stored = _batch_filters(stored, predicate, predicates, match, blocked, id_col)
+    cand = scan_topk(stored, qids, qmat, k, plan, keep=[id_col], carry=False,
+                     vec_col="vector", id_col=id_col, dist_col=dist_col)
+    return cand.select("query_id", id_col, dist_col)
 
 
 def nsw_write_int8(spark, path: str, *, id_col: str = "vec_id") -> None:
@@ -2273,7 +2186,6 @@ def nsw_dense_topk_int8(
     predicates=None,
     match=None,
     blocked: frozenset[int] | set[int] | None = None,
-    query_block: int = 256,
     mode: str = "certified",
     rerank_width: int | None = None,
     rerank_isin_max: int = 4096,
@@ -2292,16 +2204,16 @@ def nsw_dense_topk_int8(
     emits every passing row whose LOWER bound is ≤ the k-th smallest
     UPPER bound — by the bracket, any row it drops has ≥ k rows
     strictly closer, so the true top-k provably survives. Predicates /
-    blocked / tombstones apply in this phase (masks evaluate on the
-    sidecar's payload columns via the same ``DenseMaskPlan``
-    machinery, NULL fails).
+    blocked / tombstones apply in this phase (Catalyst filters on the
+    sidecar scan, and per-query masks on the sidecar's payload columns
+    via the same ``DenseMaskPlan`` machinery, NULL fails).
 
     Phase 2 (exact re-rank, candidate-sized): the certified candidates
     are reduced once more against the GLOBAL k-th upper bound (window
     rank — no driver loop), then joined back to the full-precision
-    store and re-scored with the same f64 dot-trick arithmetic as
-    ``nsw_dense_topk`` — so the result carries the same brute-force
-    oracle hash-parity (pytest-pinned at both sfs). The candidate set
+    store and re-scored with ``knn.strict_sq_l2``, the sum
+    ``nsw_dense_topk`` and ``knn_exact`` use — so certified results equal
+    ``nsw_dense_topk``'s (query_id, id, dist) bit for bit. The candidate set
     is O(|Q|·k) rows: the re-rank reads vectors for candidates only
     (an ``isin`` pushed to parquet row-group stats when the distinct
     candidate ids fit ``rerank_isin_max``; the bounded driver-side id
@@ -2352,18 +2264,13 @@ def nsw_dense_topk_int8(
     from pyspark.sql.window import Window
 
     qids, qmat = query_batch_matrix(queries)
-    mask_plan = DenseMaskPlan(predicate, predicates, qids, match=match)
-    if query_block < 1:
-        raise ValueError(f"query_block must be >= 1, got {query_block}")
+    mask_plan = DenseMaskPlan(predicates, qids, match=match)
     if mode not in ("certified", "rerank"):
         raise ValueError(
             f"mode must be 'certified' or 'rerank', got {mode!r}"
         )
     certified = mode == "certified"
     k_emit = k if certified else max(int(rerank_width or 4 * k), k)
-    blocked_arr = np.asarray(
-        sorted(int(b) for b in (blocked or ())), dtype=np.int64
-    )
     sidecar = int8_path(path)
     if "://" not in sidecar and not os.path.isdir(sidecar):
         raise ValueError(
@@ -2377,25 +2284,11 @@ def nsw_dense_topk_int8(
             "(searching stale codes would break the exactness bound)"
         )
 
-    codes = read_parquet(spark, sidecar)
-    tomb = read_tombstones(spark, path)
-    if tomb is not None:
-        codes = apply_tombstones(codes, tomb, id_col)
-    if missing := [
-        a for a in mask_plan.match_attrs if a not in codes.columns
-    ]:
-        raise ValueError(
-            f"match template attrs {missing} are not sidecar payload "
-            f"columns of {path!r} — the fast path reads flat columns; "
-            "use predicates= (Catalyst) for derived/nested attributes"
-        )
-    codes, mask_cols = mask_plan.attach(codes)
-    keep = [id_col, "qcode", "qscale"]
-    if tomb is not None:
-        keep.append("_deleted")
-    keep.extend(mask_cols)
-    keep.extend(mask_plan.match_attrs)
-    codes = codes.select(*dict.fromkeys(keep))
+    # the sidecar carries part_id, so the store's tombstones apply to it
+    codes = live_rows(spark, path, read_parquet(spark, sidecar), id_col=id_col)
+    codes = _batch_filters(codes, predicate, predicates, match, blocked, id_col)
+    codes, reads = mask_plan.attach(codes)
+    codes = codes.select(*dict.fromkeys([id_col, "qcode", "qscale", *reads]))
 
     n_q = len(qids)
     qn = (qmat * qmat).sum(axis=1)
@@ -2426,36 +2319,28 @@ def nsw_dense_topk_int8(
             )
         dim = raw.size // n
         scale = pdf["qscale"].to_numpy(dtype=np.float64)
-        # dequantize then the SAME dot-trick shape as the f64 kernel;
-        # the gemm cost matches nsw_dense_topk — the win is the 4×
-        # smaller scan feeding it
+        # dequantize, then one gemm scores every (row, query) pair —
+        # the win is the 4× smaller scan feeding it
         Xh = raw.reshape(n, dim).astype(np.float64) * scale[:, None]
         eps = scale * (np.sqrt(dim) / 2.0)
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         xn = (Xh * Xh).sum(axis=1)
-        excl = np.zeros(n, dtype=bool)
-        if "_deleted" in pdf.columns:
-            excl |= pdf["_deleted"].to_numpy(dtype=bool)
-        if blocked_arr.size:
-            excl |= np.isin(ids, blocked_arr)
-        shared, masks = extract_masks(pdf)
+        masks = extract_masks(pdf)
         rows_q, rows_i, rows_lb, rows_ub = [], [], [], []
         kk = min(k_emit, n)
         if kk == 0:
             return pd.DataFrame(
                 {"query_id": [], id_col: [], "lb": [], "ub": []}
             )
-        for lo in range(0, n_q, query_block):
-            hi = min(lo + query_block, n_q)
+        for lo in range(0, n_q, QUERY_BLOCK):
+            hi = min(lo + QUERY_BLOCK, n_q)
             D = xn[:, None] - 2.0 * (Xh @ qmat[lo:hi].T) + qn[None, lo:hi]
             np.maximum(D, 0.0, out=D)
             # the bracket arithmetic needs √d̂ only in certified mode
             S = np.sqrt(D) if certified else None
             for j in range(lo, hi):
-                bad = excl.copy()
-                m = shared if shared is not None else masks.get(qids[j])
-                if m is not None:
-                    bad |= ~m
+                m = masks.get(qids[j])
+                bad = np.zeros(n, dtype=bool) if m is None else ~m
                 if bad.all():
                     continue
                 if certified:
@@ -2558,11 +2443,7 @@ def nsw_dense_topk_int8(
     # self-review): an upsert history leaves tombstoned OLD copies of
     # a candidate id in earlier shards — joining on the id alone would
     # re-score (and possibly return) the deleted vector
-    full = read_parquet(spark, path)
-    if tomb is not None:
-        full = apply_tombstones(full, tomb, id_col).where(
-            ~F.col("_deleted")
-        )
+    full = live_rows(spark, path, read_parquet(spark, path), id_col=id_col)
     full = full.select(id_col, "vector")
     if cand_ids and len(cand_ids) <= rerank_isin_max:
         # pushed to parquet row-group stats: the re-rank reads only
@@ -2572,6 +2453,7 @@ def nsw_dense_topk_int8(
 
     qvec = {int(q): qmat[i] for i, q in enumerate(qids)}
     out_schema = f"query_id long, {id_col} long, {dist_col} double"
+    sq_l2 = strict_sq_l2()
 
     def exact(batches):
         for pdf in batches:
@@ -2581,16 +2463,12 @@ def nsw_dense_topk_int8(
             Qm = np.asarray(
                 [qvec[int(q)] for q in pdf["query_id"]], dtype=np.float64
             )
-            d = (
-                (X * X).sum(axis=1)
-                - 2.0 * np.einsum("ij,ij->i", X, Qm)
-                + (Qm * Qm).sum(axis=1)
-            )
             yield pd.DataFrame(
                 {
                     "query_id": pdf["query_id"].to_numpy(),
                     id_col: pdf[id_col].to_numpy(),
-                    dist_col: d,
+                    # each candidate paired with its own query
+                    dist_col: sq_l2(X.T, Qm.T),
                 }
             )
 

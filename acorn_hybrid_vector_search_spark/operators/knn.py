@@ -19,19 +19,37 @@ so the plan does not grow with the dimension.
 ``knn_batch`` is the same arithmetic for a whole query batch — the
 reference's ``knn_query`` over a ``ParallelFor`` of query rows
 (hnswlib/python_bindings/bindings.cpp:627-646). It is one ``mapInArrow``
-pass over the scan: per Arrow batch, the strict loop runs across all
-queries at once, each query's predicate arrives as a boolean mask column
-(``DenseMaskPlan``), and each query keeps its (dist, id) top k. The
-O(batches·|Q|·k) candidates carry the caller's columns (all but the
-vectors), so nothing joins back by id, and one per-query ``row_number``
-(``merge_topk``) finishes the answer. Every batch search in the package
-(pre-filter, post-filter, ACORN, the IVF probes) is this kernel with a
-different mask.
+pass over the scan: per Arrow batch, each query's predicate arrives as a
+boolean mask column (``DenseMaskPlan``), each query keeps its (dist, id)
+top k, and the O(batches·|Q|·k) candidates carry the caller's columns (all
+but the vectors), so nothing joins back by id; one per-query
+``row_number`` (``merge_topk``) finishes the answer. Every batch search in
+the package (pre-filter, post-filter, ACORN, the IVF probes, the NSW
+store's dense scan) is this kernel with a different mask.
+
+The strict loop is O(|Q|·rows·dim) elementwise NumPy, so a batch kernel
+first screens with one float64 gemm per block of queries,
+``G = |x|² − 2·Q·Xᵀ + |q|²``, and re-scores with the strict loop only the
+rows that can win. Why that leaves every ``dist`` bit-identical: let D be
+a row's true squared distance, s its strict sum and u = eps/2. Both G and
+s are O(d) roundings of D, each within about (d+2)·u·(|x| + |q|)² of it
+(the gemm's three dot products plus two additions; the strict sum's
+subtraction, square and running sum), so |G − s| ≤ M with
+``M = 2(d+2)·eps·(max|x| + |q|)²``, twice their sum. Let τ be the k-th
+smallest G among the rows a query ranks. Those k rows have s ≤ τ + M, so
+the k-th smallest s is ≤ τ + M, and a row of the strict top k has
+G ≤ s + M ≤ τ + 2M. Keeping the rows with ``G ≤ τ + 2M`` therefore keeps
+the whole strict top k, and the (dist, id) cut over the survivors' strict
+sums returns exactly the rows and bits of the unscreened loop. A block
+whose G holds a non-finite value (a NaN or infinity in the batch or the
+query, or an overflow) and a query ranking at most k rows are not
+screened.
 
 A NULL vector, or one holding a NULL element, has no distance and is never
-returned. A vector whose length differs from the query's raises
-``ValueError`` naming both dimensions (on the driver, a
-``PythonException`` carrying that message).
+returned. A NaN distance ranks after every number, as Spark orders it. A
+vector whose length differs from the query's raises ``ValueError`` naming
+both dimensions (on the driver, a ``PythonException`` carrying that
+message).
 """
 
 from __future__ import annotations
@@ -48,7 +66,7 @@ from pyspark.sql.window import Window
 
 # queries scored together per Arrow batch: bounds the (block × rows)
 # distance slab a task holds
-_QUERY_BLOCK = 64
+QUERY_BLOCK = 64
 
 
 def _vector_reader(dim: int):
@@ -79,9 +97,11 @@ def _vector_reader(dim: int):
 def strict_sq_l2():
     """A picklable ``(xt, q) -> dist``: the squared L2 distance of each
     column of ``xt`` (dim × rows, float32 or float64) to ``q`` (float64),
-    summed in float64 one dimension at a time, left to right. Every exact
-    single-query answer (``knn_exact``, the driver snapshot) calls this
-    one sum, so their ``dist`` bits agree by construction. Nested for the
+    summed in float64 one dimension at a time, left to right. ``q`` is one
+    vector, or a (dim × rows) matrix paired column by column with ``xt``,
+    or any shape whose rows broadcast against ``xt``'s. Every exact answer
+    (``knn_exact``, the batch kernels, the driver snapshot) calls this one
+    sum, so their ``dist`` bits agree by construction. Nested for the
     reason given in ``_vector_reader``."""
 
     def sq_l2(xt: np.ndarray, q: np.ndarray) -> np.ndarray:
@@ -135,6 +155,61 @@ def knn_exact(
     )
 
 
+def dist_id_cut():
+    """A picklable ``(dist, ids, k) -> positions``: the first ``k``
+    entries of ``dist`` by (dist, id), a NaN after every number, as
+    Spark's ``ORDER BY dist, id`` ranks them. The one top-k cut of every
+    exact kernel. Nested for the reason given in ``_vector_reader``."""
+
+    def cut(dist: np.ndarray, ids: np.ndarray, k: int) -> np.ndarray:
+        if len(dist) > k > 0:
+            kth = np.partition(dist, k - 1)[k - 1]
+            # a NaN k-th value means fewer than k numbers: keep every row
+            if not np.isnan(kth):
+                # every row at or under the k-th distance, then the (dist,
+                # id) sort decides the ties at the boundary
+                cand = np.flatnonzero(dist <= kth)
+                return cand[np.lexsort((ids[cand], dist[cand]))[:k]]
+        return np.lexsort((ids, dist))[:k]
+
+    return cut
+
+
+def _block_topk(k: int):
+    """A picklable ``(xt, xn, ids, qb, ranked) -> [(rows, dist)]``: for
+    each query of the block ``qb`` (queries × dim), the first ``k`` of the
+    columns ``ranked[i]`` of ``xt`` (dim × rows, float64, column norms
+    ``xn``) by (dist, id), with their strict sums. The gemm screen and its
+    margin are argued in the module docstring."""
+    sq_l2 = strict_sq_l2()
+    cut = dist_id_cut()
+    eps = np.finfo(np.float64).eps
+
+    def topk(xt, xn, ids, qb, ranked):
+        qn = (qb * qb).sum(axis=1)
+        g = xn - 2.0 * (qb @ xt) + qn[:, None]
+        if np.isfinite(g).all():
+            slack = 4.0 * (len(xt) + 2) * eps * (np.sqrt(xn.max()) + np.sqrt(qn)) ** 2  # 2M
+            for i, rows in enumerate(ranked):
+                if len(rows) > k:
+                    gi = g[i, rows]
+                    ranked[i] = rows[gi <= np.partition(gi, k - 1)[k - 1] + slack[i]]
+        lens = [len(rows) for rows in ranked]
+        pairs = np.concatenate(ranked)
+        owner = np.repeat(np.arange(len(qb)), lens)
+        if len(pairs) <= xt.shape[1]:
+            dist = sq_l2(xt[:, pairs], qb[owner].T)
+        else:  # unscreened or heavily tied: one block × rows slab is smaller
+            dist = sq_l2(xt, qb.T[:, :, None])[owner, pairs]
+        out = []
+        for rows, d in zip(ranked, np.split(dist, np.cumsum(lens)[:-1])):
+            sel = cut(d, ids[rows], k)
+            out.append((rows[sel], d[sel]))
+        return out
+
+    return topk
+
+
 def knn_batch(
     df: DataFrame,
     queries: Sequence[tuple[int, Sequence[float]]],
@@ -163,75 +238,86 @@ def knn_batch(
     tie-broken (dist, id). The vectors stay in the kernel: MapInArrow
     blocks column pruning, so returning them would copy |Q|·k vectors
     per Arrow batch back to the JVM for the caller to drop.
-    Plan: scan → the mask projection → MapInArrow (per Arrow batch, the
-    strict float64 loop over every query, then each query's top k by a
-    threshold cut and a (dist, id) ``lexsort``, so ties at the k-th
-    distance keep the smallest ids) → one per-query ``row_number``
-    merge over the O(batches·|Q|·k) candidates.
+    Plan: scan → the mask projection → MapInArrow (per Arrow batch and
+    block of queries, the gemm screen, the strict loop over its
+    survivors and each query's (dist, id) cut) → one per-query
+    ``row_number`` merge over the O(batches·|Q|·k) candidates.
     """
     qids, qmat = query_batch_matrix(queries)
-    plan = DenseMaskPlan(None, predicates, qids)
-    scan, mask_cols = plan.attach(df)
-    internal = {"query_id", query_id_col, "_rn", "_passes", *mask_cols}
+    plan = DenseMaskPlan(predicates, qids)
+    internal = {"query_id", query_id_col, "_rn", "_passes", *plan.mask_cols}
     if bad := internal & set(df.columns):
         raise ValueError(f"df columns collide with batch internals: {sorted(bad)}")
-    vec_i, id_i = df.columns.index(vec_col), df.columns.index(id_col)
-    payload = [i for i in range(len(df.columns)) if i != vec_i]
-    fields = [*(df.schema.fields[i] for i in payload),
+    keep = [c for c in df.columns if c != vec_col]
+    cand = scan_topk(df, qids, qmat, k, plan, keep=keep, carry=carry,
+                     vec_col=vec_col, id_col=id_col, dist_col=dist_col)
+    return cand.withColumnRenamed("query_id", query_id_col)
+
+
+def scan_topk(
+    df: DataFrame,
+    qids: list[int],
+    qmat: np.ndarray,
+    k: int,
+    plan: "DenseMaskPlan",
+    *,
+    keep: Sequence[str],
+    carry: bool,
+    vec_col: str,
+    id_col: str,
+    dist_col: str,
+) -> DataFrame:
+    """``knn_batch``'s plan for a batch ``query_batch_matrix`` validated:
+    ``df`` with ``plan``'s masks, projected to ``keep``, the vectors and
+    the mask inputs, then one MapInArrow and the ``merge_topk`` window.
+    Returns ``keep`` plus ``query_id`` and ``dist_col`` (and ``_passes``
+    with ``carry``). The NSW store's dense scan calls it with
+    ``keep=[id_col]``."""
+    masked, reads = plan.attach(df)
+    scan = masked.select(*dict.fromkeys([*keep, vec_col, *reads]))
+    cols = scan.columns
+    vec_i, id_i = cols.index(vec_col), cols.index(id_col)
+    keep_i = [cols.index(c) for c in keep]
+    fields = [*(scan.schema[c] for c in keep),
               StructField("query_id", LongType()), StructField(dist_col, DoubleType())]
     if carry:
         fields.append(StructField("_passes", BooleanType()))
     names = [f.name for f in fields]
-    dim = qmat.shape[1] if qmat.ndim == 2 else 0
-    read = _vector_reader(dim)
+    read = _vector_reader(qmat.shape[1] if qmat.ndim == 2 else 0)
     extract = plan.extractor()
+    block_topk = _block_topk(k)
 
     def topk(batches):
-        if not qids:
+        if not qids or k < 1:
             return
         for rb in batches:
             rows, xt = read(rb.column(vec_i))
             if not len(rows):
                 continue
             ids = rb.column(id_i).to_numpy(zero_copy_only=False)[rows]
-            masks = {}
-            if mask_cols:
-                _, masks = extract(pa.Table.from_batches([rb.select(mask_cols)]).to_pandas())
+            xn = (xt * xt).sum(axis=0)
+            masks = extract(rb.select(reads).to_pandas()) if reads else {}
             take, out_q, out_d, out_p = [], [], [], []
-            for lo in range(0, len(qids), _QUERY_BLOCK):
-                qb = qmat[lo:lo + _QUERY_BLOCK]
-                acc = np.zeros((len(qb), len(rows)))
-                d = np.empty_like(acc)
-                for j in range(dim):  # knn_exact's order: acc = acc + d*d
-                    np.subtract(xt[j], qb[:, j:j + 1], out=d)
-                    d *= d
-                    acc += d
-                for qi, qid in enumerate(qids[lo:lo + _QUERY_BLOCK]):
-                    m = masks.get(qid)
-                    m = None if m is None else m[rows]
-                    filtered = m is not None and not carry
-                    cand = np.flatnonzero(m) if filtered else np.arange(len(rows))
-                    dist = acc[qi][cand]
-                    if len(cand) > k:
-                        # every row at or under the k-th distance, then the
-                        # (dist, id) sort decides the ties at the boundary
-                        cand = cand[dist <= np.partition(dist, k - 1)[k - 1]]
-                        dist = acc[qi][cand]
-                    sel = cand[np.lexsort((ids[cand], dist))[:k]]
+            for lo in range(0, len(qids), QUERY_BLOCK):
+                block = qids[lo:lo + QUERY_BLOCK]
+                passes = [None if (m := masks.get(q)) is None else m[rows] for q in block]
+                ranked = [np.arange(len(rows)) if m is None or carry else np.flatnonzero(m)
+                          for m in passes]
+                best = block_topk(xt, xn, ids, qmat[lo:lo + QUERY_BLOCK], ranked)
+                for qid, m, (sel, dist) in zip(block, passes, best):
                     take.append(rows[sel])
                     out_q.append(np.full(len(sel), qid, dtype=np.int64))
-                    out_d.append(acc[qi][sel])
+                    out_d.append(dist)
                     if carry:
                         out_p.append(np.ones(len(sel), bool) if m is None else m[sel])
             idx = pa.array(np.concatenate(take))
-            cols = [rb.column(i).take(idx) for i in payload]
-            cols += [pa.array(np.concatenate(out_q)), pa.array(np.concatenate(out_d))]
+            arrays = [rb.column(i).take(idx) for i in keep_i]
+            arrays += [pa.array(np.concatenate(out_q)), pa.array(np.concatenate(out_d))]
             if carry:
-                cols.append(pa.array(np.concatenate(out_p)))
-            yield pa.RecordBatch.from_arrays(cols, names=names)
+                arrays.append(pa.array(np.concatenate(out_p)))
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    cand = scan.mapInArrow(topk, StructType(fields))
-    return merge_topk(cand, k, id_col, dist_col).withColumnRenamed("query_id", query_id_col)
+    return merge_topk(scan.mapInArrow(topk, StructType(fields)), k, id_col, dist_col)
 
 
 def merge_topk(cand: DataFrame, k: int, id_col: str, dist_col: str) -> DataFrame:
@@ -281,14 +367,14 @@ _MATCH_TEMPLATE_OPS = frozenset(
 
 
 class DenseMaskPlan:
-    """Shared predicate-mask planning for the batch kernels
-    (``knn_batch``, ``nsw_dense_topk`` and the r13 int8 two-phase
-    variant): validates
-    the predicate arguments, dedupes IDENTICAL per-query expressions
-    into shared mask groups (r12b), attaches one boolean mask column
+    """Per-query predicate masks for the batch kernels (``knn_batch``,
+    ``nsw_dense_topk`` and the int8 two-phase variant): validates the
+    per-query predicates and match templates, dedupes IDENTICAL per-query
+    expressions into shared mask groups, attaches one boolean mask column
     per group to the scan, and hands the executor a PICKLABLE extractor
     (plain ints/dicts only — the py4j Column objects never cross the
-    closure boundary).
+    closure boundary). A predicate shared by the whole batch is a
+    Catalyst filter on the scan, not a mask.
 
     Dedupe is by the expression's canonical string — false negatives
     only (two distinct spellings of one predicate just keep their own
@@ -300,13 +386,8 @@ class DenseMaskPlan:
     handing arbitrary Columns must keep the same contract or two
     stringify-identical trees would silently share one mask."""
 
-    def __init__(self, predicate, predicates, qids, match=None):
-        self.has_pred = predicate is not None
-        self.predicate = predicate
-        if self.has_pred and (predicates or match):
-            raise ValueError("pass either predicate or predicates, not both")
+    def __init__(self, predicates, qids, match=None):
         self.preds = {int(q): c for q, c in (predicates or {}).items()}
-        self.pred_qids = sorted(self.preds)
         # r13 MATCH fast path (the heterogeneous-predicate cliff fix,
         # VERDICT r12 ask #3): per-query EXACT-match template
         # predicates {qid: (attr, value)} on FLAT stored payload
@@ -350,7 +431,7 @@ class DenseMaskPlan:
             self.match[int(q)] = (attr, op, value)
         self.match_attrs = sorted({a for a, _, _ in self.match.values()})
         qset = set(qids)
-        if unknown := [q for q in self.pred_qids if q not in qset]:
+        if unknown := [q for q in sorted(self.preds) if q not in qset]:
             raise ValueError(f"predicates for ids not in the batch: {unknown}")
         if unknown := [q for q in sorted(self.match) if q not in qset]:
             raise ValueError(f"match for ids not in the batch: {unknown}")
@@ -362,48 +443,37 @@ class DenseMaskPlan:
         self.group_of: dict[int, int] = {}
         self.group_cols: list = []
         by_expr: dict[str, int] = {}
-        for q in self.pred_qids:
+        for q in sorted(self.preds):
             key_s = str(self.preds[q])
             gi = by_expr.get(key_s)
             if gi is None:
                 gi = by_expr[key_s] = len(self.group_cols)
                 self.group_cols.append(self.preds[q])
             self.group_of[q] = gi
-        self.n_groups = len(self.group_cols)
+        self.mask_cols = [f"_pass_g{i}" for i in range(len(self.group_cols))]
 
     def attach(self, stored: DataFrame) -> "tuple[DataFrame, list[str]]":
-        """Attach the mask column(s); returns (df, added column names)."""
-        if self.has_pred:
-            return stored.withColumn("_pass", self.predicate), ["_pass"]
-        if self.pred_qids:
-            return (
-                stored.withColumns(
-                    {
-                        f"_pass_g{i}": c
-                        for i, c in enumerate(self.group_cols)
-                    }
-                ),
-                [f"_pass_g{i}" for i in range(self.n_groups)],
+        """``stored`` with the mask columns attached, and the columns the
+        extractor reads (the masks and the match attributes)."""
+        if missing := [a for a in self.match_attrs if a not in stored.columns]:
+            raise ValueError(
+                f"match template attrs {missing} are not stored payload "
+                "columns — the fast path reads flat columns; use "
+                "predicates= (Catalyst) for derived/nested attributes"
             )
-        return stored, []
+        if self.group_cols:
+            stored = stored.withColumns(dict(zip(self.mask_cols, self.group_cols)))
+        return stored, [*self.mask_cols, *self.match_attrs]
 
     def extractor(self):
-        """A picklable per-fragment mask reader: pdf →
-        (shared_mask | None, {qid: mask}). Masks are False for
-        NULL-verdict rows (§2.3 NULL fails)."""
-        has_pred = self.has_pred
-        pred_qids = list(self.pred_qids)
+        """A picklable per-fragment mask reader: pdf → {qid: mask}. Masks
+        are False for NULL-verdict rows (§2.3 NULL fails)."""
         group_of = dict(self.group_of)
-        n_groups = self.n_groups
+        mask_cols = list(self.mask_cols)
         match = dict(self.match)
 
         def extract(pdf):
             masks: dict[int, np.ndarray] = {}
-            if has_pred:
-                return (
-                    pdf["_pass"].fillna(False).to_numpy(dtype=bool),
-                    masks,
-                )
             if match:
                 # dedupe identical (attr, op, value) templates; evaluate
                 # each ONCE per fragment from the raw payload column
@@ -437,17 +507,12 @@ class DenseMaskPlan:
                             mm.fillna(False).to_numpy(dtype=bool)
                         )
                     masks[qid] = m
-            if pred_qids:
-                # ONE vectorized extraction for all group columns (r13):
+            if group_of:
+                # ONE vectorized extraction for all group columns:
                 # per-column pandas access costs ~2× at G=1024
-                gm = (
-                    pdf[[f"_pass_g{i}" for i in range(n_groups)]]
-                    .fillna(False)
-                    .to_numpy(dtype=bool)
-                )
-                for q in pred_qids:
-                    masks[q] = gm[:, group_of[q]]
-                return None, masks
-            return None, masks
+                gm = pdf[mask_cols].fillna(False).to_numpy(dtype=bool)
+                for q, gi in group_of.items():
+                    masks[q] = gm[:, gi]
+            return masks
 
         return extract

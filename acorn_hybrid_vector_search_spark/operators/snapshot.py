@@ -11,8 +11,10 @@ Who takes a snapshot. ``collect_stats`` on a frame that is cached
 (``df.is_cached``) and whose Spark plan statistic ``sizeInBytes`` is at
 most ``BUDGET_BYTES``, and ``StrategyRouter.register_subset`` for a subset
 frame under the same test (``take``). Nothing else builds one. The
-snapshot is one ``toArrow()`` collect: every column as Arrow, plus each
-float vector column as a contiguous (dim × n) matrix of its element type.
+snapshot is one ``toArrow()`` collect: every column as Arrow, except that
+a float vector column of one dimension without NULL elements is kept only
+as a contiguous (dim × n) matrix of its element type (``column`` rebuilds
+its Arrow rows on demand).
 
 Where it lives. In the ``_cache`` registry as a frame entry: keyed by the
 frame OBJECT, through a weak reference, not by plan semantics. The
@@ -70,24 +72,49 @@ from pyspark.sql.types import (
 
 from acorn_hybrid_vector_search_spark.functions.predicates import SUPPORTED_OPS, flat_kind
 from acorn_hybrid_vector_search_spark.operators import _cache
-from acorn_hybrid_vector_search_spark.operators.knn import strict_sq_l2
+from acorn_hybrid_vector_search_spark.operators.knn import dist_id_cut, strict_sq_l2
 
 # the largest cached frame (by its plan's sizeInBytes) copied to the driver
 BUDGET_BYTES = 64 << 20
 
 _SQ_L2 = strict_sq_l2()
+_CUT = dist_id_cut()
 
 
 @dataclass(frozen=True)
 class Snapshot:
+    # the columns, less the vector columns held only as matrices
     table: pa.Table
+    # every column's Arrow type, the matrix-only ones included
+    arrow_schema: pa.Schema
     schema: StructType
     # per float vector column: (dim × n matrix, rows with a full vector,
     # rows with a non-NULL vector), or None when its lengths differ
     vectors: dict[str, tuple[np.ndarray, np.ndarray, np.ndarray] | None]
 
 
-def _vector_matrix(arr: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
+def column(snap: Snapshot, name: str, rows: np.ndarray | None = None) -> pa.Array:
+    """Column ``name`` of the snapshot as Arrow, at ``rows`` (all rows
+    when None). A vector column kept only as a matrix is rebuilt from it
+    with its Arrow type."""
+    if name in snap.table.column_names:
+        col = snap.table.column(name).chunk(0)
+        return col if rows is None else col.take(pa.array(rows, type=pa.int64()))
+    xt, _, present = snap.vectors[name]
+    if rows is None:
+        rows = np.arange(len(present))
+    valid = present[rows]
+    offsets = np.zeros(len(rows) + 1, dtype=np.int32)
+    np.cumsum(valid * len(xt), out=offsets[1:])
+    return pa.ListArray.from_arrays(
+        pa.array(offsets),
+        pa.array(xt[:, rows[valid]].T.ravel()),
+        type=snap.arrow_schema.field(name).type,
+        mask=pa.array(~valid),
+    )
+
+
+def _vector_matrix(arr: pa.ChunkedArray, dtype) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
     lens = pc.list_value_length(arr).to_numpy(zero_copy_only=False)
     present = ~np.isnan(lens)
     dims = np.unique(lens[present])
@@ -97,7 +124,7 @@ def _vector_matrix(arr: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.nda
     xt = np.zeros((dim, len(arr)), dtype=dtype)
     full = present.copy()
     if dim:
-        flat = arr.flatten()
+        flat = pc.list_flatten(arr)
         xt[:, present] = flat.to_numpy(zero_copy_only=False).reshape(-1, dim).T
         if flat.null_count:
             holes = flat.is_null().to_numpy(zero_copy_only=False).reshape(-1, dim).any(1)
@@ -107,17 +134,22 @@ def _vector_matrix(arr: pa.Array, dtype) -> tuple[np.ndarray, np.ndarray, np.nda
 
 def _build(df: DataFrame) -> Snapshot:
     collected = df.toArrow()
-    # one chunk per column, also when the frame is empty
-    table = pa.Table.from_arrays(
-        [c.combine_chunks() for c in collected.columns], schema=collected.schema
-    )
     vectors = {}
     for f in df.schema.fields:
         t = f.dataType
         if isinstance(t, ArrayType) and isinstance(t.elementType, (FloatType, DoubleType)):
             dtype = np.float32 if isinstance(t.elementType, FloatType) else np.float64
-            vectors[f.name] = _vector_matrix(table.column(f.name).chunk(0), dtype)
-    return Snapshot(table, df.schema, vectors)
+            vectors[f.name] = _vector_matrix(collected.column(f.name), dtype)
+    # one chunk per column, also when the frame is empty; a vector column
+    # without a NULL element is held only as its matrix
+    kept = [
+        f for f in collected.schema
+        if (m := vectors.get(f.name)) is None or not (m[1] == m[2]).all()
+    ]
+    table = pa.Table.from_arrays(
+        [collected.column(f.name).combine_chunks() for f in kept], schema=pa.schema(kept)
+    )
+    return Snapshot(table, collected.schema, df.schema, vectors)
 
 
 def take(df: DataFrame) -> Snapshot | None:
@@ -125,7 +157,9 @@ def take(df: DataFrame) -> Snapshot | None:
     ``BUDGET_BYTES``; None otherwise."""
     if not df.is_cached:
         return None
-    if df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > BUDGET_BYTES:
+    # a new plan: ``df``'s own memoizes the statistic it had before its
+    # cache was materialized
+    if df.select("*")._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > BUDGET_BYTES:
         return None
     return _cache.frame_memo(df, "snapshot", lambda: _build(df))
 
@@ -215,7 +249,7 @@ def mask(snap: Snapshot, predicates) -> np.ndarray | None:
         if not isinstance(spec, Sequence) or isinstance(spec, str) or len(spec) != 2:
             return None
         op, value = spec
-        col = snap.table.column(attr).chunk(0)
+        col = column(snap, attr)
         m &= col.is_valid().to_numpy(zero_copy_only=False)
         kind = flat_kind(snap.schema[attr].dataType.simpleString())
         if not isinstance(op, str) or op not in SUPPORTED_OPS[kind]:
@@ -252,7 +286,7 @@ class _Query:
         self.spark = spark
         self.snap = snap
         self.xt, self.full, self.present = snap.vectors[vec_col]
-        self.ids = snap.table.column(id_col).chunk(0).to_numpy(zero_copy_only=False)
+        self.ids = column(snap, id_col).to_numpy(zero_copy_only=False)
         self.q = np.asarray(query_vec, dtype=np.float64)
         self.passing = passing
 
@@ -272,22 +306,15 @@ class _Query:
 
     def first(self, rows: np.ndarray, dist: np.ndarray, n: int) -> tuple[np.ndarray, np.ndarray]:
         """The first ``n`` of ``rows`` by (dist, id), with their distances."""
-        if len(rows) > n > 0:
-            # every row at or under the n-th distance; the (dist, id) sort
-            # decides the ties at the boundary
-            keep = dist <= np.partition(dist, n - 1)[n - 1]
-            rows, dist = rows[keep], dist[keep]
-        order = np.lexsort((self.ids[rows], dist))[:n]
+        order = _CUT(dist, self.ids[rows], n)
         return rows[order], dist[order]
 
     def relation(self, rows: np.ndarray, dist: np.ndarray, cols: Sequence[str], dist_col: str):
         """``rows`` projected to ``cols`` plus ``dist_col`` (replacing a
         column of that name in place, as ``withColumn`` does)."""
         names = list(cols) if dist_col in cols else [*cols, dist_col]
-        idx = pa.array(rows, type=pa.int64())
         arrays = [
-            pa.array(dist, pa.float64()) if n == dist_col
-            else self.snap.table.column(n).chunk(0).take(idx)
+            pa.array(dist, pa.float64()) if n == dist_col else column(self.snap, n, rows)
             for n in names
         ]
         fields = [
@@ -308,7 +335,7 @@ def _query(df, query_vec, predicates, accessors, vec_col, id_col) -> _Query | No
         return None
     if id_col not in snap.schema.fieldNames():
         return None
-    ids = snap.table.column(id_col)
+    ids = column(snap, id_col)
     if not pa.types.is_integer(ids.type) or ids.null_count:
         return None
     passing = mask(snap, predicates)

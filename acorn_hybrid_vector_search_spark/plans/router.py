@@ -923,13 +923,15 @@ class StrategyRouter:
 
         The DENSE rule (r13, default ON): a walk arm (nsw / nsw_gamma)
         whose query union reaches ``dense_min_batch`` is served by
-        ``nsw_dense_topk`` — one BLAS gemm over the same store, EXACT
-        (recall 1.0 ≥ any budget, so every route's recall contract
-        holds by construction), measured faster than the ef=64 walk
-        from |Q|=4 up on every arm and FLAT in |Q| (BENCH_LADDER
-        ``serving_crossover``: 1.92 ms/q dense vs 7.81 walk at
-        |Q|=256). The decision is made on the UNION of the arm's
-        queries BEFORE budget grouping — the dense kernel ignores
+        ``nsw_dense_topk`` — one scan of the same store by
+        ``knn_batch``'s kernel (a gemm screen, then the strict sum over
+        its survivors), EXACT (recall 1.0 ≥ any budget, so every
+        route's recall contract holds by construction), measured faster
+        than the ef=64 walk from |Q|=4 up on every arm and FLAT in |Q|
+        (BENCH_LADDER ``serving_crossover``, taken with the earlier
+        pure-gemm kernel: 1.92 ms/q dense vs 7.81 walk at |Q|=256).
+        The decision is made on the UNION of the arm's queries BEFORE
+        budget grouping — the dense kernel ignores
         ef/max_visits, so splitting by budget would both defeat the
         threshold and multiply full-store scans. Below the threshold
         (single-query and tiny batches) the walk keeps its measured
@@ -1072,7 +1074,8 @@ class StrategyRouter:
         - nsw / nsw_gamma with |union| ≥ ``dense_min_batch`` (DEFAULT
           ``DENSE_SERVE_MIN_BATCH`` = 4, the measured BENCH_LADDER
           ``serving_crossover`` — r13, VERDICT r12 ask #1) → ONE
-          ``nsw_dense_topk`` gemm scan per arm: EXACT results (recall
+          ``nsw_dense_topk`` scan per arm (``knn_batch``'s
+          gemm-screened exact kernel): EXACT results (recall
           1.0 ≥ any budget, so every route's recall contract holds by
           construction) and measured faster than the walk from |Q|≈4
           up. Smaller walk-arm groups keep the ``nsw_read_topk`` walk

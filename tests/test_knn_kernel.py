@@ -1,7 +1,9 @@
 """The exact Arrow distance kernel under ``knn_exact`` and every
 single-query hybrid plan: bit parity with a strict NumPy sum and with the
 JVM expression, tie and boundary handling, NULL / wrong-dimension vectors,
-and a plan whose size does not grow with the dimension."""
+and a plan whose size does not grow with the dimension. The batch kernels
+(``knn_batch``, ``nsw_dense_topk``) and the driver snapshot return
+``knn_exact``'s rows and bits through near-ties and NaN distances."""
 
 from __future__ import annotations
 
@@ -18,7 +20,9 @@ from acorn_hybrid_vector_search_spark.operators.hybrid import (
     postfilter_search,
     prefilter_search,
 )
-from acorn_hybrid_vector_search_spark.operators.knn import knn_exact
+from acorn_hybrid_vector_search_spark.operators import snapshot
+from acorn_hybrid_vector_search_spark.operators.graph_ann import nsw_dense_topk, nsw_write
+from acorn_hybrid_vector_search_spark.operators.knn import knn_batch, knn_exact
 
 
 def _strict(x, ids, q, k, sqrt=False):
@@ -189,3 +193,84 @@ def test_prefilter_plan_pushes_filter_and_takes_ordered(spark, tmp_path):
     assert "TakeOrderedAndProject" in p and "ArrowEvalPython" in p
     assert "PushedFilters: [IsNotNull(brand), EqualTo(brand,Rivet)]" in p
     assert [r["vec_id"] for r in res.collect()] == [1, 3, 5]
+
+
+# ---------------------------------------------------------------------------
+# the batch kernel's gemm screen
+
+
+def _by_query(df):
+    """{query_id: [(vec_id, repr(dist))]} in Spark's (dist, id) order."""
+    out = {}
+    for r in df.orderBy("query_id", "dist", "vec_id").collect():
+        out.setdefault(r["query_id"], []).append((r["vec_id"], repr(r["dist"])))
+    return out
+
+
+def _near_ties(dtype, n=60, dim=8, n_queries=70):
+    """Rows and queries scattered 1e-4 around a point far from the origin,
+    so the screen's gemm rounding (about eps·|x|²) exceeds the gaps
+    between distances. Rows 10-19 duplicate rows 0-9 and rows 20-29 are
+    1 ulp from them in one component; the ids are shuffled."""
+    rng = np.random.default_rng(1)
+    c = rng.uniform(500, 1000, dim)
+    x = (c + rng.standard_normal((n, dim)) * 1e-4).astype(dtype)
+    x[10:20] = x[0:10]
+    for i in range(20, 30):
+        x[i] = x[i - 20]
+        x[i, i % dim] = np.nextafter(x[i, i % dim], dtype(np.inf))
+    ids = [int(i) for i in rng.permutation(1000)[:n]]
+    queries = [(i, (c + rng.standard_normal(dim) * 1e-4).tolist()) for i in range(n_queries)]
+    return x, ids, queries
+
+
+@pytest.mark.parametrize("elem,dtype", [("float", "float32"), ("double", "float64")])
+def test_screen_keeps_near_ties_inside_the_margin(spark, tmp_path, elem, dtype):
+    """``knn_batch`` (filtered and ``carry=True``) and ``nsw_dense_topk``
+    return ``knn_exact``'s ids and ``dist`` bits for every query of a
+    70-query batch (more than one query block) whose candidates sit
+    inside the screen's margin: in whole-partition Arrow batches, and in
+    batches of 7 rows, so ties at k straddle batches."""
+    x, ids, queries = _near_ties(np.dtype(dtype).type)
+    df = _frame(spark, x, elem, ids=ids, slices=0).coalesce(1)
+    path = str(tmp_path / "store")
+    nsw_write(df.repartition(2), path, vector_dtype=dtype)
+    preds = {i: F.col("vec_id") % 3 != 0 for i, _ in queries if i % 2}
+    want = {i: _got(knn_exact(df.filter(preds[i]) if i in preds else df, q, 5)) for i, q in queries}
+    want_all = {i: _got(knn_exact(df, q, 5)) if i in preds else want[i] for i, q in queries}
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    try:
+        for rows_per_batch in (old, "7"):
+            spark.conf.set(key, rows_per_batch)
+            assert _by_query(knn_batch(df, queries, 5, predicates=preds)) == want
+            assert _by_query(knn_batch(df, queries, 5, predicates=preds, carry=True)) == want_all
+            assert _by_query(nsw_dense_topk(spark, path, queries, 5, predicates=preds)) == want
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_nan_distances_rank_last_like_knn_exact(spark, tmp_path):
+    """An Arrow batch with more than k scored rows but fewer than k finite
+    distances: a cut at the k-th (NaN) distance kept no row at all."""
+    nan = float("nan")
+    x = [[2.0, 0.0], [nan, 0.0], [0.0, nan], [1.0, 0.0], [nan, nan]]
+    ids = [4, 3, 2, 1, 0]
+    df = _frame(spark, x, "double", ids=ids, slices=0).coalesce(1)
+    path = str(tmp_path / "store")
+    nsw_write(df, path)
+    cached = _frame(spark, x, "double", ids=ids, slices=0).cache()
+    cached.count()
+    assert snapshot.take(cached) is not None
+    q = [0.0, 0.0]
+    want = _got(knn_exact(df, q, 3))
+    assert want == [(1, "1.0"), (4, "4.0"), (0, "nan")]
+    assert _by_query(knn_batch(df, [(0, q)], 3))[0] == want
+    assert _got(snapshot.search(cached, q, None, 3)) == want
+    # the store keeps a NaN element as NULL, and such a vector has no
+    # distance: the dense scan equals knn_exact over the stored rows
+    stored = spark.read.parquet(path)
+    assert _by_query(nsw_dense_topk(spark, path, [(0, q)], 3))[0] == _got(
+        knn_exact(stored, q, 3, vec_col="vector")
+    )
+    cached.unpersist()

@@ -407,14 +407,15 @@ def test_nsw_hybrid_batch_plan_single_scan(queries):
 
 def test_nsw_dense_batch_plan_shuffle_free(queries):
     """nsw_dense_batch_topk (r12): the dense kernel is a MAP-ONLY pass
-    over one store scan — no FlatMapGroupsInPandas (the walk's groupBy
-    re-shuffles the vector payload per call), exactly ONE Exchange in
-    the whole plan (the O(fragments·|Q|·k) candidate merge window),
-    per-query predicates deduped into shared _pass_g<i> mask columns,
-    and the bounded top-k as WindowGroupLimit."""
+    over one store scan (``knn_batch``'s MapInArrow) — no
+    FlatMapGroupsInPandas (the walk's groupBy re-shuffles the vector
+    payload per call), exactly ONE Exchange in the whole plan (the
+    O(fragments·|Q|·k) candidate merge window), per-query predicates
+    deduped into shared _pass_g<i> mask columns, and the bounded top-k
+    as WindowGroupLimit."""
     p = _plan(queries["nsw_dense_batch_topk"])
     assert p.count("Scan parquet") == 1, "store scanned more than once"
-    assert "MapInPandas" in p
+    assert "MapInArrow" in p
     assert "FlatMapGroupsInPandas" not in p, "dense kernel must not groupBy"
     assert p.count("Exchange") == 1, "only the candidate merge may shuffle"
     assert "WindowGroupLimit" in p

@@ -420,3 +420,32 @@ def test_dropped_frame_releases_its_snapshot(spark):
     del df
     gc.collect()
     assert frames() == before
+
+
+def test_take_reads_the_size_of_the_materialized_cache(spark):
+    """An RDD-backed frame has no size until its cache materializes; a
+    size read before that must not stick to the frame."""
+    df = spark.sparkContext.parallelize(_rows(seed=5)[0]).toDF(SCHEMA).cache()
+    assert snapshot.take(df) is None
+    df.count()
+    assert snapshot.take(df) is not None
+    df.unpersist()
+
+
+def test_vector_column_is_held_once_and_rebuilt(spark):
+    """A vector column without NULL elements lives only in the snapshot's
+    matrix; the rows a query returns carry it as the Spark plan does."""
+    rows = [(r[0], None if r[1] is not None and None in r[1] else r[1], *r[2:])
+            for r in _rows(seed=5)[0]]
+    df = spark.createDataFrame(rows, SCHEMA).cache()
+    df.count()
+    snap = snapshot.take(df)
+    assert "embedding" not in snap.table.column_names
+    assert snapshot.column(snap, "embedding").equals(df.toArrow().column("embedding").combine_chunks())
+    q = _queries(_rows(seed=5)[1])[0]
+    plain = spark.createDataFrame(rows, SCHEMA)
+    for pred in CLASSES.values():
+        got, want = snapshot.search(df, q, pred, K), prefilter_search(plain, q, pred, K)
+        assert _is_local(got) and got.schema == want.schema
+        assert [repr(r) for r in got.collect()] == [repr(r) for r in want.collect()]
+    df.unpersist()

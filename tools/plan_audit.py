@@ -276,13 +276,14 @@ AUDIT: dict[str, list[str]] = {
     "nsw_f32_topk": [
         "FlatMapGroupsInPandas", "WindowGroupLimit", "array<float>",
     ],
-    # round 12: the batch-dense serving kernel — SHUFFLE-FREE MapInPandas
-    # over the scan (never the walk's FlatMapGroupsInPandas groupBy,
-    # which re-shuffles the vector payload per call), deduped shared
+    # round 12: the batch-dense serving kernel — knn_batch's SHUFFLE-FREE
+    # MapInArrow over the store scan (never the walk's
+    # FlatMapGroupsInPandas groupBy, which re-shuffles the vector payload
+    # per call), deduped shared
     # predicate-mask columns (_pass_g<i>), bounded candidate merge
     # (tests/test_plan_shapes.py pins the single-Exchange contract)
     "nsw_dense_batch_topk": [
-        "MapInPandas", "WindowGroupLimit", "_pass_g0",
+        "MapInArrow", "WindowGroupLimit", "_pass_g0",
     ],
     # round 13: the int8 two-phase rung. Phase 1 (the 4×-bandwidth
     # qcode-sidecar MapInPandas scan) executes EAGERLY inside the call
@@ -1374,13 +1375,15 @@ def _dense_kernel_section() -> None:
             "variant beat ~2× inside the loop (f64/f32/int8 diff-square "
             "and dot-trick all 23-53 µs/call — micro-benched; per-call "
             "numpy overhead dominates at m=8 rows). The structural "
-            "answer is `nsw_dense_topk`: per shard, ONE level-3 BLAS "
-            "gemm (`|x|² − 2X·Qᵀ + |q|²` — the same f64 dot-trick "
-            "arithmetic `_dist` uses, so oracle hash-parity carries "
-            "over) scores every (row, query) pair, per-query masks/"
-            "argpartition pick top-k, the same global (dist, id) rank "
-            "merges. Exact by construction — and hash-gated in the "
-            "window (nsw_dense_batch_topk answers the identical brute "
+            "answer is `nsw_dense_topk`: per fragment, ONE level-3 BLAS "
+            "gemm (`|x|² − 2X·Qᵀ + |q|²`) scores every (row, query) "
+            "pair. It began as the whole kernel; it is now "
+            "`knn_batch`'s screen, and the rows within its proven "
+            "rounding margin are re-scored with the strict sum "
+            "`knn_exact` uses, so `dist` is bit-identical to it. "
+            "Per-query masks pick each top-k and the same global "
+            "(dist, id) rank merges. Exact by construction — and "
+            "hash-gated in the window (nsw_dense_batch_topk answers the identical brute "
             "oracle as the walk batch at both sfs; dense ≡ walk "
             "pytest-pinned).\n"
         )
@@ -1397,7 +1400,7 @@ def _dense_kernel_section() -> None:
             "every call (graph adjacency is seq-indexed per shard, so "
             "it must); the dense kernel needs NO shard integrity — "
             "fragment top-k + global merge is still exact — so it runs "
-            "as shuffle-free `mapInPandas` straight over the (cached) "
+            "as a shuffle-free `mapInArrow` straight over the (cached) "
             "scan. On this host's stall-prone disk that removed the "
             "dominant dispersion source (pure samples went "
             "30.9/90.6/71.3/55.2/7.2 → 1.79/1.84/1.87/1.68/1.95 on the "
