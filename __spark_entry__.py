@@ -4327,7 +4327,7 @@ def _nsw_pruned_store(spark: SparkSession, sf_dir: str) -> tuple:
 
 def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Predicate-aware shard pruning (r9b — the ACORN×SPANN
-    composition, graph_ann.py nsw_read_topk(prune_match=...)): plain
+    composition, graph_ann.py nsw_read_topk(prune_conj=...)): plain
     ball-bound pruning is UNSOUND under a predicate (τ covers the kth
     unfiltered neighbor), but with EXACT per-shard value counts
     (``nsw_stats_write(attrs=['label'])`` — the zone-map idea on graph
@@ -4365,7 +4365,7 @@ def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     qmat = np.asarray([v for _, v in qs], dtype=np.float64)
     plain = prune_plan(parts, cents, radii, counts, qmat, 10)
-    match = prune_plan(parts, cents, radii, pc, qmat, 10, skip_empty=True)
+    match = prune_plan(parts, cents, radii, pc, qmat, 10, possible=pc > 0)
     # never worse than plain pruning, and the zone-map property is
     # real: shards with zero passing members exist and are skippable
     # (at tiny sf plain pruning already keeps a single shard per
@@ -4380,7 +4380,7 @@ def _q_nsw_pruned_hybrid_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     res = nsw_read_topk(
         spark, path, qs, k=10, ef=1_000_000,
-        prune=True, prune_match=("label", 3),
+        prune=True, prune_conj={"label": ("exact", 3)},
     )
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
@@ -4609,7 +4609,7 @@ def _q_nsw_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     assert any(not m for _, m in verdicts), verdicts
     res = nsw_read_topk(
         spark, path, [qs[0]], k=10, ef=1_000_000,
-        prune=True, prune_range=("weight", "<", 23.0),
+        prune=True, prune_conj={"weight": ("<", 23.0)},
     )
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
@@ -4648,8 +4648,9 @@ def _q_nsw_pruned_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     res = nsw_read_topk(
         spark, path, batch_qs, k=10, ef=1_000_000,
         prune=True,
-        prune_match={
-            q: ("label", v) for q, v in _PRUNE_BATCH_MATCHES.items()
+        prune_conj={
+            q: {"label": ("exact", v)}
+            for q, v in _PRUNE_BATCH_MATCHES.items()
         },
     )
     return res.select(
@@ -4665,7 +4666,7 @@ def _q_routed_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     stale/missing reads as uncovered, so the router never routes into
     a staleness guard), rule 6 dispatches the exact-match
     single-attribute predicate {label: exact 3} to
-    ``nsw_read_topk(prune=True, prune_match=...)`` at the provably-
+    ``nsw_read_topk(prune=True, prune_conj=...)`` at the provably-
     exact full beam, and the in-fn assert pins that the chosen rung
     IS nsw_pruned_match. Answers the identical exact pre-filter
     oracle as the direct-call row — route → run, one call (the
@@ -4717,7 +4718,8 @@ def _q_ivf_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate-aware pruning): ``ivf_build(stats_attrs=['label'])``
     persists the SAME per-(partition, attr, value) exact-count shape
     as the graph store's ``_shard_attr_stats``, the write/read
-    roundtrip carries it, and ``ivf_search_exact(match=('label', 3))``
+    roundtrip carries it, and ``ivf_search_exact(conj={'label':
+    ('exact', 3)})``
     skips zero-passing lists at every stage — phase 1 runs in the
     nearest list that HOLDS passing members, the ball lower bound
     applies unchanged to the passing subset, so the result is the
@@ -4752,7 +4754,7 @@ def _q_ivf_pruned_match_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return live, list(qv)
 
     live, qv = _cache.store(spark, ("ivf_match", sf_dir), build)
-    res = ivf_search_exact(live, qv, 10, match=("label", 3))
+    res = ivf_search_exact(live, qv, 10, conj={"label": ("exact", 3)})
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
@@ -4876,7 +4878,7 @@ def _q_routed_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     derives numeric zone-map coverage from the store's own sidecar
     (``pruned_range_attrs``) and dispatches the single-attribute
     ``weight < 23`` predicate (the reference's class-2/3 query shape,
-    acorn.py:176-185) to ``nsw_read_topk(prune=True, prune_range=...)``
+    acorn.py:176-185) to ``nsw_read_topk(prune=True, prune_conj=...)``
     at the provably-exact full beam; the in-fn assert pins the chosen
     rung. Same exact pre-filter oracle as the direct-call row
     (nsw_pruned_range_topk). Shares the clustered store."""
@@ -5369,8 +5371,8 @@ def _q_ivf_exact_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ivf_search_exact_batch`` answers a three-query batch (per-query
     exact match, per-query range, unconstrained) from TWO list scans
     total: phase 1 masks each query to its nearest PASSING list (its
-    own zone-map verdicts — the same `canon_value_count` /
-    `range_shard_verdict` arithmetic as the single-query arms — skip
+    own zone-map verdicts — the same `term_verdicts` arithmetic as the
+    single-query scan — skip
     provably-empty lists), one bounded ≤|Q|·k collect yields per-query
     d_k, and phase 2 masks each query to its ball-bound probe set —
     both one knn_batch scan of the probed lists, no join. Batch ≡ per-query loop is pytest-pinned; here each
@@ -5383,8 +5385,7 @@ def _q_ivf_exact_batch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx, by_id = _ivf_batch_index(spark, sf_dir)
     res = ivf_search_exact_batch(
         idx, [(2, by_id[2]), (4, by_id[4]), (8, by_id[8])], 10,
-        match={2: ("label", 3)},
-        range_pred={4: ("weight", "<", 23)},
+        conj={2: {"label": ("exact", 3)}, 4: {"weight": ("<", 23)}},
     )
     return res.select(
         "query_id", "vec_id", F.round("dist", _R).alias("dist")
@@ -5509,7 +5510,7 @@ def _q_nsw_conj_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """r10b IVF numeric zone-map symmetry: per-list (vmin, vmax,
     n_present) — `range_shard_verdict` shared verbatim with the
-    graph store — let ``ivf_search_exact(range_pred=('weight','<',23))``
+    graph store — let ``ivf_search_exact(conj={'weight': ('<', 23)})``
     skip provably-failing lists while straddling/all-pass lists scan
     with the predicate pushed into the parquet read; provably-failing
     lists asserted in-fn, write/read roundtrip in the build. Answers
@@ -5549,7 +5550,7 @@ def _q_ivf_pruned_range_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         return live, list(qv)
 
     live, qv = _cache.store(spark, ("ivf_range", sf_dir), build)
-    res = ivf_search_exact(live, qv, 10, range_pred=("weight", "<", 23))
+    res = ivf_search_exact(live, qv, 10, conj={"weight": ("<", 23)})
     return res.select("vec_id", F.round("dist", _R).alias("dist"))
 
 
@@ -5973,8 +5974,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # exact verify), the sharded-bloom row stays oracle-gated 51+
         # r11b swap: the reference's LITERAL class-2 flagship shape —
         # range ∧ SUBSTRING through the planner (substring proven
-        # exactly from distinct-value counts); the r9b single
-        # prune_match form (nsw_pruned_hybrid_topk) stays oracle-gated
+        # exactly from distinct-value counts); the r9b one-term
+        # exact-match form (nsw_pruned_hybrid_topk) stays oracle-gated
         # at 51+, its machinery subsumed by the routed match/conj rows
         "routed_pruned_substr_conj_topk": _q_routed_pruned_substr_conj_topk,
         # r12 swap (VERDICT r11 ask #2): the STREAMING routed serving

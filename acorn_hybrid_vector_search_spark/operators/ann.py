@@ -47,9 +47,7 @@ from acorn_hybrid_vector_search_spark.operators.knn import (
 )
 from acorn_hybrid_vector_search_spark.operators.store import (
     IVF,
-    RANGE_OPS,
     bump_store_version,
-    canon_value_count,
     clear_sidecars,
     conj_pred_col,
     data_root,
@@ -59,11 +57,9 @@ from acorn_hybrid_vector_search_spark.operators.store import (
     ivf_numeric_stats_path,
     live_rows,
     normalize_conj,
-    range_pred_col,
-    range_shard_verdict,
     replace_dir,
     require_local,
-    substring_value_count,
+    term_verdicts,
     tombstones_path,
 )
 
@@ -80,12 +76,13 @@ class IVFIndex:
     # r10 zone maps on the inverted lists — {attr: {cluster_id:
     # {value_str: n}}}, the SAME per-(partition, attr, value) exact-count
     # contract as the graph store's _shard_attr_stats (graph_ann.py):
-    # ivf_search_exact(match=...) skips zero-passing lists outright
+    # ivf_search_exact(conj=...) skips zero-passing lists outright
+    # under exact and substring terms
     attr_counts: dict | None = None
     # r10b numeric zone maps — {attr: {cluster_id: (vmin, vmax,
     # n_present)}}, the graph store's _shard_numeric_stats contract on
-    # the lists: ivf_search_exact(range_pred=...) skips provably-
-    # failing lists under §2.3 range ops
+    # the lists: ivf_search_exact(conj=...) skips provably-failing
+    # lists under §2.3 range terms
     numeric_stats: dict | None = None
 
     @property
@@ -243,11 +240,11 @@ def ivf_build(
     ``stats_attrs`` (r10): payload columns to aggregate exact per-LIST
     value counts for — the zone-map sidecar contract shared with the
     graph store (``nsw_stats_write(attrs=...)``), consumed by
-    ``ivf_search_exact(match=...)`` to skip zero-passing lists under
-    an exact-match predicate. ``numeric_stats_attrs`` (r10b): numeric
-    payload columns to aggregate per-list (vmin, vmax, n_present)
-    zone maps for — ``ivf_search_exact(range_pred=...)``'s evidence
-    under §2.3 range ops, mirroring
+    ``ivf_search_exact(conj=...)`` to skip zero-passing lists under
+    exact-match and substring terms. ``numeric_stats_attrs`` (r10b):
+    numeric payload columns to aggregate per-list (vmin, vmax,
+    n_present) zone maps for — ``ivf_search_exact(conj=...)``'s
+    evidence under §2.3 range terms, mirroring
     ``nsw_stats_write(numeric_attrs=...)``.
     """
     centroids, assigned = train_assign(
@@ -538,8 +535,6 @@ def ivf_search_exact(
     query_vec: Sequence[float],
     k: int,
     *,
-    match: tuple[str, object] | None = None,
-    range_pred: tuple[str, str, float] | None = None,
     conj=None,
 ) -> DataFrame:
     """PROVABLY EXACT top-k with data-adaptive cluster pruning — the
@@ -568,107 +563,33 @@ def ivf_search_exact(
     stored radius — recompute radii after ingest (one cheap aggregate)
     before using exact pruned search on a grown index.
 
-    ``match`` (r10, the graph store's ``prune_match`` on the IVF lists
-    — one shared zone-map contract): ``(attr, value)`` exact-match
-    predicate with per-list exact value counts (``ivf_build(
-    stats_attrs=[attr])`` / loaded by ``ivf_read``): zero-passing
-    lists are skipped at EVERY stage (their directories are never
-    read — the cluster_id filter is partition pruning), phase 1 runs
-    in the nearest list that actually holds passing members, and the
-    ball lower bound applies unchanged to the passing subset (every
-    passing member is a member), so the result is the exact filtered
-    top-k. Counts persisted at build stay sound under deletions
-    (passing sets only shrink; zero stays zero) and are recomputed at
-    load when streaming batches appended rows the counts never saw
-    (``ivf_read``).
-
-    ``range_pred`` (r10b): ``(attr, op, value)`` with op in
-    ``< <= > >=`` (+ ``leq``/``geq``) — the numeric zone-map form
-    over per-list (vmin, vmax, n_present) stats (``ivf_build(
-    numeric_stats_attrs=[attr])``): lists whose whole value range
-    fails are skipped at every stage, straddling/all-pass lists are
-    scanned with the predicate pushed into the parquet read, and the
-    ball lower bound applies unchanged to the passing subset —
-    exact filtered top-k, the graph store's ``prune_range`` on the
-    inverted lists. Mutually exclusive with ``match``.
-
-    ``conj`` (r11): ``{attr: (op, value)}`` — a CONJUNCTION of exact /
-    substring / range constraints, the graph store's ``prune_conj`` on
-    the inverted lists (the reference's literal class-2 shape,
-    acorn.py:296-298). The IVF form needs NO Bonferroni counts: the
-    two-phase scan's exactness comes from the ball bound plus the
-    predicate-filtered top-k, so it suffices to skip lists where ANY
-    constraint provably passes nowhere (exact/substring: zero summed
-    value counts; range: none-pass verdict) and to AND the constraint
-    masks into both scans. Every exact/substring attr needs per-list
-    value counts, every range attr numeric zone maps. Mutually
-    exclusive with ``match``/``range_pred``.
+    ``conj`` (r10-r11, the graph store's ``prune_conj`` on the
+    inverted lists — one shared zone-map contract): ``{attr: (op,
+    value)}``, a CONJUNCTION of exact / substring / range (``< <= >
+    >=``, ``leq``/``geq``) terms, the reference's class-2/3 shape
+    (acorn.py:176-185, 296-298). Exact and substring terms read the
+    per-list exact value counts (``ivf_build(stats_attrs=[attr])``),
+    range terms the per-list (vmin, vmax, n_present) zone maps
+    (``ivf_build(numeric_stats_attrs=[attr])``); both are loaded by
+    ``ivf_read``. A list where ANY term provably passes nowhere is
+    skipped at EVERY stage (its directory is never read — the
+    cluster_id filter is partition pruning), phase 1 runs in the
+    nearest list that may hold passing members, the conjunction's
+    Catalyst mask filters both scans, and the ball lower bound applies
+    unchanged to the passing subset (every passing member is a
+    member), so the result is the exact filtered top-k. The IVF form
+    needs NO Bonferroni counts: the two-phase scan's exactness comes
+    from the ball bound plus the predicate-filtered top-k. Zone maps
+    persisted at build stay sound under deletions (passing sets only
+    shrink, value ranges only narrow) and are recomputed at load when
+    streaming batches appended rows they never saw (``ivf_read``).
     """
     if index.radii is None:
         raise ValueError("ivf_search_exact requires an index built with_radii=True")
-    if sum(x is not None for x in (match, range_pred, conj)) > 1:
-        raise ValueError(
-            "pass at most one of match / range_pred / conj — one "
-            "predicate drives both the list pruning and the row filter"
-        )
-    pred = None
-    passing = None
+    passing = pred = None
     if conj is not None:
-        normalized = normalize_conj(conj)
-        passing = np.ones(index.n_clusters, dtype=np.int64)
-        for attr, (c_op, c_val) in normalized.items():
-            passing &= _ivf_passing_lists(
-                index, (attr, c_op, c_val)
-            ).astype(np.int64)
-        pred = conj_pred_col(normalized)
-    if range_pred is not None:
-        r_attr, r_op_raw, r_val = range_pred
-        r_op = RANGE_OPS.get(r_op_raw)
-        if r_op is None:
-            raise ValueError(
-                f"range_pred op must be one of {sorted(RANGE_OPS)}, "
-                f"got {r_op_raw!r}"
-            )
-        if not index.numeric_stats or r_attr not in index.numeric_stats:
-            covered = sorted(index.numeric_stats or ())
-            raise ValueError(
-                f"ivf_search_exact(range_pred=({r_attr!r}, …)) needs "
-                f"per-list numeric zone maps for {r_attr!r} (covered: "
-                f"{covered}) — build with ivf_build("
-                f"numeric_stats_attrs=[{r_attr!r}])"
-            )
-        zones = index.numeric_stats[r_attr]
-        passing = np.asarray(
-            [
-                1
-                if range_shard_verdict(
-                    *zones.get(c, (None, None, 0)), r_op, float(r_val)
-                )[1]
-                else 0
-                for c in range(index.n_clusters)
-            ],
-            dtype=np.int64,
-        )
-        pred = range_pred_col(r_attr, r_op, r_val)
-    if match is not None:
-        m_attr, m_val = match
-        if not index.attr_counts or m_attr not in index.attr_counts:
-            covered = sorted(index.attr_counts or ())
-            raise ValueError(
-                f"ivf_search_exact(match=({m_attr!r}, …)) needs per-list "
-                f"value counts for {m_attr!r} (covered: {covered}) — "
-                f"build with ivf_build(stats_attrs=[{m_attr!r}])"
-            )
-        per = index.attr_counts[m_attr]
-        passing = np.asarray(
-            [
-                canon_value_count(per.get(c, {}), m_val)
-                for c in range(index.n_clusters)
-            ],
-            dtype=np.int64,
-        )
-        pred = F.col(m_attr) == F.lit(m_val)
-    if passing is not None and not (passing > 0).any():
+        passing, pred = _ivf_conj(index, conj)
+    if passing is not None and not passing.any():
         return knn_exact(
             index.df.filter(F.lit(False)), query_vec, k,
             vec_col=index.vec_col, id_col=index.id_col,
@@ -677,7 +598,7 @@ def ivf_search_exact(
     dc = np.sqrt(((index.centroids - q[None, :]) ** 2).sum(axis=1))  # (C,) L2
     order = np.argsort(dc, kind="stable")
     if passing is not None:
-        order = np.asarray([c for c in order if passing[int(c)] > 0])
+        order = order[passing[order]]
     first = int(order[0])
 
     scan1 = index.df.filter(F.col("cluster_id") == first)
@@ -710,57 +631,26 @@ def ivf_search_exact(
     )
 
 
-def _ivf_passing_lists(index: IVFIndex, constraint) -> np.ndarray:
-    """Per-list may-hold-a-passing-member mask for ONE §2.3 constraint
-    ``(attr, op, value)`` with op 'exact'/'substring' (per-list exact
-    value counts — substring sums the distinct keys containing the
-    needle, exactly like the graph store's `substring_value_count`)
-    or a range spelling (numeric zone-map verdicts) — the single-query
-    ``ivf_search_exact`` arms' verdict arithmetic, shaped for the r11
-    conj/batch forms. Raises on uncovered attrs exactly like the
-    single-query arms do (callers route only covered constraints)."""
-    attr, op, value = constraint
-    if op in ("exact", "substring"):
-        if not index.attr_counts or attr not in index.attr_counts:
-            covered = sorted(index.attr_counts or ())
+def _ivf_conj(index: IVFIndex, conj) -> "tuple[np.ndarray, Column]":
+    """(per-list may-hold-a-passing-member mask, Catalyst row filter)
+    for one conjunction ``{attr: (op, value)}``: a list passes when
+    every term's zone-map verdict (``store.term_verdicts``) says it
+    may. Raises on an attr the index's zone maps do not cover."""
+    terms = normalize_conj(conj, index.df)
+    passing = np.ones(index.n_clusters, dtype=bool)
+    for attr, (op, value) in terms.items():
+        if op in ("exact", "substring"):
+            zones, what, kw = index.attr_counts, "value counts", "stats_attrs"
+        else:
+            zones, what, kw = index.numeric_stats, "numeric zone maps", "numeric_stats_attrs"
+        if not zones or attr not in zones:
             raise ValueError(
-                f"{op} constraint on {attr!r} needs per-list value "
-                f"counts (covered: {covered}) — build with "
-                f"ivf_build(stats_attrs=[{attr!r}])"
+                f"{op} constraint on {attr!r} needs per-list {what} "
+                f"(covered: {sorted(zones or ())}) — build with "
+                f"ivf_build({kw}=[{attr!r}])"
             )
-        per = index.attr_counts[attr]
-        counter = (
-            canon_value_count if op == "exact" else substring_value_count
-        )
-        return np.asarray(
-            [
-                counter(per.get(c, {}), value) > 0
-                for c in range(index.n_clusters)
-            ],
-            dtype=bool,
-        )
-    r_op = RANGE_OPS.get(op)
-    if r_op is None:
-        raise ValueError(
-            f"batch range op must be one of {sorted(RANGE_OPS)}, got {op!r}"
-        )
-    if not index.numeric_stats or attr not in index.numeric_stats:
-        covered = sorted(index.numeric_stats or ())
-        raise ValueError(
-            f"batch range_pred on {attr!r} needs per-list numeric zone "
-            f"maps (covered: {covered}) — build with "
-            f"ivf_build(numeric_stats_attrs=[{attr!r}])"
-        )
-    zones = index.numeric_stats[attr]
-    return np.asarray(
-        [
-            range_shard_verdict(
-                *zones.get(c, (None, None, 0)), r_op, float(value)
-            )[1]
-            for c in range(index.n_clusters)
-        ],
-        dtype=bool,
-    )
+        passing &= term_verdicts(op, value, zones[attr], range(index.n_clusters))[1]
+    return passing, conj_pred_col(terms)
 
 
 def ivf_search_exact_batch(
@@ -768,8 +658,6 @@ def ivf_search_exact_batch(
     queries: Sequence[tuple[int, Sequence[float]]],
     k: int,
     *,
-    match=None,
-    range_pred=None,
     conj=None,
     query_id_col: str = "query_id",
 ) -> DataFrame:
@@ -779,21 +667,17 @@ def ivf_search_exact_batch(
     but the whole batch pays TWO list scans total instead of two per
     query.
 
-    ``match`` / ``range_pred``: per-query mappings ``{query_id: (attr,
-    value)}`` / ``{query_id: (attr, op, value)}`` — each query's own
-    zone-map verdicts (the SAME `canon_value_count` /
-    `range_shard_verdict` arithmetic as the single-query arms) skip
-    its provably-empty lists at every stage; a query in neither mapping
-    probes on plain ball bounds; ``conj``: per-query CONJUNCTION dicts
-    ``{query_id: {attr: (op, value)}}`` with exact / substring / range
-    terms (the graph store's per-query prune_conj shape — a query's
-    lists must survive EVERY term's verdict). A query whose constraint
+    ``conj``: a per-query mapping ``{query_id: {attr: (op, value)}}``
+    of ``ivf_search_exact`` conjunctions (the graph store's per-query
+    ``prune_conj`` shape): each query's own zone-map verdicts skip its
+    provably-empty lists at every stage, and a query absent from the
+    mapping probes on plain ball bounds. A query whose conjunction
     provably passes nowhere contributes an empty per-query result,
-    exactly like the single-query arms.
+    exactly like the single-query scan.
 
     Plan: both phases are one ``knn_batch`` scan of the union of the
     lists they probe, each query masked to ``cluster_id IN probes(q)``
-    and its own predicate (the single-query arm's Catalyst column), so
+    and its own predicate (the single-query scan's Catalyst column), so
     cluster_id stays partition-prunable and no corpus×queries join
     exists.
 
@@ -807,63 +691,21 @@ def ivf_search_exact_batch(
             "ivf_search_exact_batch requires an index built with_radii=True"
         )
     qids, qmat = query_batch_matrix(queries)
-    match = {int(q): t for q, t in dict(match or {}).items()}
-    range_pred = {int(q): t for q, t in dict(range_pred or {}).items()}
-    conj = {int(q): dict(c) for q, c in dict(conj or {}).items()}
-    overlapping = sorted(
-        (set(match) & set(range_pred))
-        | (set(match) & set(conj))
-        | (set(range_pred) & set(conj))
-    )
-    if overlapping:
-        raise ValueError(
-            f"queries {overlapping} appear in both match and range_pred "
-            f"(or conj) — one constraint set drives both the list "
-            f"pruning and the row filter"
-        )
-    if unknown := [
-        q for q in sorted({*match, *range_pred, *conj}) if q not in set(qids)
-    ]:
+    conj = {int(q): c for q, c in dict(conj or {}).items()}
+    if unknown := [q for q in sorted(conj) if q not in set(qids)]:
         raise ValueError(f"constraints for ids not in the batch: {unknown}")
-
-    # every constraint shape normalizes to a conjunction {attr: (op,
-    # value)} — match and range are its one-term special cases — and
-    # filters rows with the single-query arm's own Catalyst column
-    acc_kinds = {a: x.kind for a, x in flat_accessors(index.df).items()}
-    constraints: dict[int, dict] = {}
-    preds: dict[int, Column] = {}
-    for q, (attr, value) in match.items():
-        constraints[q] = {attr: ("exact", value)}
-        preds[q] = F.col(attr) == F.lit(value)
-    for q, (attr, op, value) in range_pred.items():
-        if op not in RANGE_OPS:
-            raise ValueError(
-                f"batch range op must be one of {sorted(RANGE_OPS)}, got {op!r}"
-            )
-        constraints[q] = {attr: (op, value)}
-        preds[q] = range_pred_col(attr, op, value)
-    for q, terms in conj.items():
-        if not terms:
-            raise ValueError(f"empty conj for query {q}")
-        for attr, spec in terms.items():
-            if list(spec)[0] == "substring" and acc_kinds.get(attr) != "string":
-                raise ValueError(
-                    f"substring constraint on non-string column {attr!r} — "
-                    f"the §2.3 grammar ignores it, so pruning by it would "
-                    f"change results"
-                )
-        constraints[q] = normalize_conj(terms)
-        preds[q] = conj_pred_col(constraints[q])
+    # each query's passing lists and row filter are the single-query
+    # scan's own (_ivf_conj)
+    by_q = {q: _ivf_conj(index, c) for q, c in conj.items()}
+    preds = {q: pred for q, (_, pred) in by_q.items()}
     dc_all = np.sqrt(
         ((index.centroids[None, :, :] - qmat[:, None, :]) ** 2).sum(axis=2)
     )  # (|Q|, C) L2
     order_by_q: dict[int, np.ndarray] = {}
     for qi, q in enumerate(qids):
-        passing = np.ones(index.n_clusters, dtype=bool)
-        for c_attr, (c_op, c_val) in constraints.get(q, {}).items():
-            passing &= _ivf_passing_lists(index, (c_attr, c_op, c_val))
         order = np.argsort(dc_all[qi], kind="stable")
-        order = order[passing[order]]
+        if q in by_q:
+            order = order[by_q[q][0][order]]
         if order.size:
             order_by_q[q] = order
     live = [(q, v) for q, v in queries if int(q) in order_by_q]

@@ -70,12 +70,10 @@ from acorn_hybrid_vector_search_spark.operators.knn import (
 )
 from acorn_hybrid_vector_search_spark.operators.store import (
     NSW,
-    RANGE_OPS,
     NswMeta,
     apply_tombstones,
     attr_stats_path,
     bump_store_version,
-    canon_value_count,
     check_stats_fresh,
     clear_sidecars,
     conj_pred_col,
@@ -89,8 +87,6 @@ from acorn_hybrid_vector_search_spark.operators.store import (
     load_stats,
     normalize_conj,
     numeric_stats_path,
-    range_pred_col,
-    range_shard_verdict,
     read_nsw_meta,
     read_store_version,
     read_tombstones,
@@ -99,7 +95,7 @@ from acorn_hybrid_vector_search_spark.operators.store import (
     require_local,
     snapshot_store_fp,
     stats_path,
-    substring_value_count,
+    term_verdicts,
     tombstones_path,
 )
 
@@ -1031,41 +1027,20 @@ def _conj_shard_stats(
     ask #3 — the reference's literal class-2 query shape is a
     two-attribute conjunction, acorn.py:296-298). Per shard with n
     members: each constraint i has a certain per-shard passing count
-    lb_i (exact: the sidecar's exact count; range: n_present on
-    all-pass, else 0) and a may-pass verdict. Bonferroni gives the
-    sound conjunction bound |∩ P_i| ≥ n − Σ (n − lb_i): under-counting
-    only widens the τ cover (``prune_plan(possible=...)``), a shard
-    where ANY constraint is none-pass provably holds no passing member,
-    and a cover falling short of k keeps every possible shard."""
-    n_parts = len(stat_parts)
-    deficits = np.zeros(n_parts, dtype=np.int64)
-    possible = np.ones(n_parts, dtype=bool)
+    lb_i and a may-pass verdict (``term_verdicts`` — exact/substring:
+    the sidecar's exact count; range: n_present on all-pass, else 0).
+    Bonferroni gives the sound conjunction bound |∩ P_i| ≥ n − Σ (n −
+    lb_i): under-counting only widens the τ cover
+    (``prune_plan(possible=...)``), a shard where ANY constraint is
+    none-pass provably holds no passing member, and a cover falling
+    short of k keeps every possible shard. For one term the bound is
+    lb_1 itself, so a one-term conjunction returns that term's own
+    verdicts."""
+    deficits = np.zeros(len(stat_parts), dtype=np.int64)
+    possible = np.ones(len(stat_parts), dtype=bool)
     for attr, (op, value) in conj.items():
-        if op in ("exact", "substring"):
-            by_part = attr_counts[attr]
-            counter = (
-                canon_value_count if op == "exact"
-                else substring_value_count
-            )
-            passing = np.asarray(
-                [
-                    counter(by_part.get(int(p), {}), value)
-                    for p in stat_parts
-                ],
-                dtype=np.int64,
-            )
-            may = passing > 0
-        else:
-            r_op = RANGE_OPS[op]
-            zones = num_stats[attr]
-            verdicts = [
-                range_shard_verdict(
-                    *zones.get(int(p), (None, None, 0)), r_op, float(value)
-                )
-                for p in stat_parts
-            ]
-            passing = np.asarray([c for c, _ in verdicts], dtype=np.int64)
-            may = np.asarray([m for _, m in verdicts], dtype=bool)
+        zone = (attr_counts if op in ("exact", "substring") else num_stats)[attr]
+        passing, may = term_verdicts(op, value, zone, stat_parts)
         possible &= may
         deficits += member_counts - passing
     lb = np.maximum(0, member_counts - deficits)
@@ -1091,8 +1066,8 @@ def nsw_stats_write(
     ``attrs`` (r9b): payload columns to also aggregate EXACT per-shard
     value counts for — ``(part_id, attr, value, n)`` in a
     ``_shard_attr_stats`` sidecar, values canonicalized to strings.
-    These counts are what make pruning sound UNDER an exact-match
-    predicate (``nsw_read_topk(prune_match=...)``): the τ cover bound
+    These counts are what make pruning sound UNDER an exact-match or
+    substring term (``nsw_read_topk(prune_conj=...)``): the τ cover bound
     can then count PASSING members per shard instead of all members —
     and a shard with zero passing members is skipped outright, the
     zone-map/partition-statistics idea applied to graph shards. One
@@ -1104,9 +1079,9 @@ def nsw_stats_write(
 
     ``numeric_attrs`` (r10): numeric payload columns to aggregate
     per-shard (vmin, vmax, n_present) zone maps for — the
-    ``_shard_numeric_stats`` sidecar behind ``nsw_read_topk(
-    prune_range=...)``, which makes pruning sound under §2.3's
-    leq/geq/</> range predicates (reference acorn.py:176-185,
+    ``_shard_numeric_stats`` sidecar behind the range terms of
+    ``nsw_read_topk(prune_conj=...)``, which makes pruning sound under
+    §2.3's leq/geq/</> range predicates (reference acorn.py:176-185,
     item_weight/model_year — its class-2/3 queries are range-shaped):
     a shard whose whole [vmin, vmax] passes contributes its exact
     present count to the τ cover, one whose whole range fails is
@@ -1210,7 +1185,6 @@ def prune_plan(
     qmat: np.ndarray,
     k: int,
     *,
-    skip_empty: bool = False,
     possible: np.ndarray | None = None,
 ) -> list[np.ndarray]:
     """Per query: the sound kept-shard set. For shard s with centroid
@@ -1222,25 +1196,22 @@ def prune_plan(
     than k points in the whole store ⇒ keep everything (that still
     counts).
 
-    ``skip_empty`` (r9b, the predicate-aware form): ``counts`` are the
-    PASSING-member counts for an exact-match predicate — the ball
-    bounds still hold for every member, so ordering by ub and covering
-    k PASSING members bounds the kth PASSING distance; shards with
-    zero passing members can never contribute and are dropped even
-    when the cover falls short of k.
-
-    ``possible`` (r10, the numeric zone-map form): a boolean mask of
-    shards that MAY contain a passing member, when ``counts`` are only
-    LOWER bounds of the true passing counts (a min/max zone map proves
-    all-pass or none-pass per shard; a straddling shard contributes
-    certain count 0 but must stay searchable). Soundness carries:
-    under-counting only grows the τ cover prefix (τ never shrinks
-    below the exact-count τ, so the kept set only widens), a shard
-    outside ``possible`` provably has no passing member, and a cover
-    falling short of k keeps every possible shard. Defaults to
-    ``counts > 0`` under ``skip_empty`` (exact counts), else all."""
+    ``possible`` (the predicate-aware form, r9b/r10): a boolean mask
+    of shards that MAY contain a passing member, with ``counts`` the
+    CERTAIN passing counts per shard — exact for exact-match value
+    counts (``possible = counts > 0``: a zero-passing shard is dropped
+    even when the cover falls short of k), only LOWER bounds for a
+    min/max zone map (which proves all-pass or none-pass per shard; a
+    straddling shard contributes certain count 0 but must stay
+    searchable). The ball bounds hold for every member, so covering k
+    passing members bounds the kth passing distance, and soundness
+    carries: under-counting only grows the τ cover prefix (τ never
+    shrinks below the exact-count τ, so the kept set only widens), a
+    shard outside ``possible`` provably has no passing member, and a
+    cover falling short of k keeps every possible shard.
+    Defaults to all shards."""
     if possible is None:
-        possible = counts > 0 if skip_empty else np.ones(len(parts), bool)
+        possible = np.ones(len(parts), bool)
     out = []
     for qi in range(qmat.shape[0]):
         d = np.sqrt(((cents - qmat[qi]) ** 2).sum(axis=1))
@@ -1530,8 +1501,6 @@ def nsw_read_topk(
     strategy: str = "traverse_all",
     subgraph_m: int = 8,
     prune: bool = False,
-    prune_match: "tuple[str, Any] | Mapping[int, tuple[str, Any]] | None" = None,
-    prune_range: "tuple[str, str, float] | None" = None,
     prune_conj: "Mapping[str, Sequence] | Mapping[int, Mapping[str, Sequence]] | None" = None,
     id_col: str = "vec_id",
     dist_col: str = "dist",
@@ -1601,70 +1570,49 @@ def nsw_read_topk(
     bit-identical but a pruned shard no longer contributes its
     beyond-τ candidates.
 
-    ``prune_match`` (r9b, the ACORN×SPANN composition): ``(attr,
-    value)`` — an exact-match predicate that pruning IS sound under,
-    because the ``_shard_attr_stats`` sidecar (``nsw_stats_write(
-    attrs=[attr])``) holds exact per-shard PASSING counts: the τ
-    cover prefix counts passing members only (ball bounds hold for
-    every member, so covering k passing members bounds the kth
-    passing distance), and zero-passing shards are skipped outright —
-    the zone-map idea on graph shards. The match also rides the walk
-    as the usual Catalyst ``_pass`` mask (traversed-never-returned,
-    or the γ-subgraph walk under ``strategy='subgraph'``), so at full
-    beam the result answers the exact pre-filter oracle. Values are
-    compared on their canonical string form (the sidecar stores
-    ``CAST(value AS STRING)``) — intended for categorical payloads.
-    Mutually exclusive with ``predicate``/``predicates``; requires
-    ``prune=True``.
+    ``prune_conj`` (r9b-r11, the ACORN×SPANN composition):
+    ``{attr: (op, value)}`` — a CONJUNCTION of exact-match, substring
+    and range (``< <= > >=``, ``leq``/``geq`` — §2.3's spelling)
+    terms, the reference's class-2/3 query shape (``item_weight < 2 ∧
+    brand exact …``, acorn.py:176-185, 296-298), and the only
+    predicate that pruning is sound under. Exact and substring terms
+    read the exact per-shard value counts of the ``_shard_attr_stats``
+    sidecar (``nsw_stats_write(attrs=[attr])``; values compare on
+    their canonical string form, so intended for categorical
+    payloads); range terms read the per-shard (vmin, vmax, n_present)
+    zone maps of ``_shard_numeric_stats`` (``nsw_stats_write(
+    numeric_attrs=[attr])``), where a shard whose whole range passes
+    certifies its present count, one whose whole range fails holds no
+    passing member, and a straddling one may pass but certifies
+    nothing. Both sidecars must be fresh and cover every constrained
+    attr. ``_conj_shard_stats`` combines the terms: a shard where ANY
+    term is none-pass is provably empty of passing members and its
+    directory is never read, and the τ cover counts the certain lower
+    bound ``max(0, n − Σ(n − lb_i))`` per shard — the ball bounds hold
+    for every member, so covering k passing members bounds the kth
+    passing distance, and under-counting only widens the kept set
+    (``prune_plan(possible=...)``), so full beam stays provably
+    exact. The conjunction rides the walk as ONE Catalyst mask
+    (traversed-never-returned, or the γ-subgraph walk under
+    ``strategy='subgraph'``; NULL/missing attr rejects, §2.3), so at
+    full beam the result answers the exact pre-filter oracle. A
+    one-term conjunction is the plain exact-match or range prune: its
+    counts and ``possible`` mask are the term's own verdicts (for an
+    exact term ``possible = counts > 0``), and its walk mask is
+    ``F.col(attr) == F.lit(value)`` or ``range_pred_col(attr, op,
+    value)`` — so its kept sets, rows and ``dist`` bits are those of a
+    dedicated exact-match or range prune by construction.
 
-    ``prune_match`` as a MAPPING ``query_id → (attr, value)`` (r10,
-    the serving shape mirroring r8b's per-query ``predicates``): every
-    query in the batch prunes and filters on its OWN exact match, all
-    from ONE store read — per-query kept sets already exist in the
-    prune plan, the attr sidecar already stores per-value counts, and
-    each match becomes one Catalyst ``_pass_<qid>`` boolean on the
-    shared node scan. Queries absent from the mapping prune on plain
-    ball bounds and walk unfiltered. Every referenced attr must be
-    covered by the ``_shard_attr_stats`` sidecar.
-
-    ``prune_range`` (r10): ``(attr, op, value)`` with op one of
-    ``< <= > >=`` (``leq``/``geq`` accepted — §2.3's spelling): a
-    RANGE predicate that pruning is sound under via the numeric
-    zone-map sidecar (``nsw_stats_write(numeric_attrs=[attr])``): a
-    shard whose whole [vmin, vmax] passes contributes its exact
-    present count to the τ cover, one whose whole range fails is
-    provably empty of passing members and its directory is never
-    read, and a straddling shard stays searchable but certifies
-    nothing (``prune_plan(possible=...)`` — under-counting only
-    widens the kept set, so exactness holds at full beam). The range
-    rides the walk as the usual Catalyst mask (NULL/missing attr
-    rejects, §2.3). Mutually exclusive with ``prune_match`` and
-    ``predicate``/``predicates``; requires ``prune=True``.
-
-    ``prune_conj`` (r11, VERDICT r10 ask #3): ``{attr: (op, value)}``
-    — a CONJUNCTION of exact-match and/or range constraints, the
-    reference's literal class-2 query shape (``item_weight < 2 ∧
-    brand exact …``, acorn.py:296-298). Pruning is sound under the
-    conjunction via the Bonferroni bound over the per-attr zone maps
-    (``_conj_shard_stats``): a shard where ANY constraint is
-    none-pass is provably empty of passing members and its directory
-    is never read; the τ cover counts the certain lower bound
-    ``max(0, n − Σ(n − lb_i))`` per shard, and under-counting only
-    widens the kept set — full beam stays provably exact. Every
-    exact-constrained attr must be covered by a fresh
-    ``_shard_attr_stats`` sidecar, every range-constrained attr by a
-    fresh ``_shard_numeric_stats`` sidecar. The conjunction rides the
-    walk as ONE Catalyst mask. As a MAPPING ``query_id → {attr: (op,
-    value)}`` every query in the batch prunes and filters on its OWN
-    conjunction from one store read (the ``prune_match`` mapping
-    contract — absent queries prune on plain ball bounds and walk
-    unfiltered); this is also the serving shape the router's batched
-    dispatch (``ann_search_batch``) folds ALL pruned rungs into.
-    Mutually exclusive with ``prune_match``/``prune_range`` and
-    ``predicate``/``predicates``; requires ``prune=True``. A
-    single-entry conjunction is exactly ``prune_match`` (op 'exact')
-    or ``prune_range`` (range op) — identical counts, verdicts and
-    masks by construction (pytest-pinned)."""
+    ``prune_conj`` as a MAPPING ``query_id → {attr: (op, value)}``
+    (r10, the serving shape mirroring r8b's per-query ``predicates``):
+    every query in the batch prunes and filters on its OWN conjunction
+    from ONE store read — each query's own bounds drive its own τ
+    cover, and each conjunction becomes that query's Catalyst
+    ``_pass_<qid>`` boolean on the shared node scan. Queries absent
+    from the mapping prune on plain ball bounds and walk unfiltered;
+    the router's batched dispatch (``ann_search_batch``) folds all
+    pruned rungs into this shape. Mutually exclusive with
+    ``predicate``/``predicates``; requires ``prune=True``."""
     qids, qmat = query_batch_matrix(queries)
     blocked_set = frozenset(int(b) for b in (blocked or ()))
     out_schema = f"query_id long, {id_col} long, {dist_col} double"
@@ -1679,45 +1627,16 @@ def nsw_read_topk(
     if strategy not in ("traverse_all", "subgraph"):
         raise ValueError(f"unknown strategy: {strategy!r}")
     if strategy == "subgraph" and not (
-        has_pred
-        or pred_qids
-        or prune_match is not None
-        or prune_range is not None
-        or prune_conj is not None
+        has_pred or pred_qids or prune_conj is not None
     ):
         raise ValueError(
             "strategy='subgraph' is the ACORN-γ predicate-subgraph walk "
-            "— it requires predicate, predicates, prune_match, "
-            "prune_range, or prune_conj"
+            "— it requires predicate, predicates, or prune_conj"
         )
 
-    if prune_match is not None and not prune:
-        raise ValueError("prune_match requires prune=True")
-    if prune_range is not None and not prune:
-        raise ValueError("prune_range requires prune=True")
     if prune_conj is not None and not prune:
         raise ValueError("prune_conj requires prune=True")
-    if sum(x is not None for x in (prune_match, prune_range, prune_conj)) > 1:
-        raise ValueError(
-            "pass at most one of prune_match / prune_range / prune_conj "
-            "— one predicate drives both the zone-map prune and the "
-            "walk mask"
-        )
-    match_by_qid: "dict[int, tuple] | None" = None
-    if prune_match is not None and not isinstance(prune_match, tuple):
-        match_by_qid = {
-            int(q): (a, v) for q, (a, v) in dict(prune_match).items()
-        }
-        if not match_by_qid:
-            raise ValueError(
-                "empty prune_match mapping — pass None for an unfiltered "
-                "pruned search, or a (attr, value) tuple for one shared "
-                "match"
-            )
-        if unknown := [q for q in sorted(match_by_qid) if q not in qset]:
-            raise ValueError(
-                f"prune_match for ids not in the batch: {unknown}"
-            )
+    stored = read_parquet(spark, path)
     conj_shared: "dict[str, tuple] | None" = None
     conj_by_qid: "dict[int, dict[str, tuple]] | None" = None
     if prune_conj is not None:
@@ -1728,17 +1647,16 @@ def nsw_read_topk(
                 "search, or a {attr: (op, value)} conjunction"
             )
         if all(isinstance(ck, str) for ck in conj_keys):
-            conj_shared = normalize_conj(prune_conj)
+            conj_shared = normalize_conj(prune_conj, stored)
         else:
             conj_by_qid = {
-                int(q): normalize_conj(c)
+                int(q): normalize_conj(c, stored)
                 for q, c in dict(prune_conj).items()
             }
             if unknown := [q for q in sorted(conj_by_qid) if q not in qset]:
                 raise ValueError(
                     f"prune_conj for ids not in the batch: {unknown}"
                 )
-    stored = read_parquet(spark, path)
     tomb = read_tombstones(spark, path)
     allowed: dict[int, np.ndarray] | None = None
     if prune:
@@ -1749,8 +1667,8 @@ def nsw_read_topk(
                 "prune=True is sound for plain top-k only — arbitrary "
                 "predicates and blocked sets change which kth distance "
                 "bounds the search, so ball-bound shard pruning could "
-                "drop a shard holding a passing point (an exact-match "
-                "predicate with per-shard counts IS sound: prune_match)"
+                "drop a shard holding a passing point (a conjunction "
+                "backed by per-shard zone maps IS sound: prune_conj)"
             )
         if tomb is not None and tomb.limit(1).count() > 0:
             raise ValueError(
@@ -1799,116 +1717,18 @@ def nsw_read_topk(
                 f"stats — run nsw_stats_write"
             )
         possible = None
-        per_query_counts: "list[np.ndarray] | None" = None
-        per_query_possible: "list[np.ndarray | None] | None" = None
-        if prune_match is not None:
-            need = (
-                sorted({a for a, _ in match_by_qid.values()})
-                if match_by_qid is not None
-                else [prune_match[0]]
-            )
-            attr_counts = _zone_map(spark, path, "attrs", need, "prune_match")
-
-            def _match_counts(a: str, v) -> np.ndarray:
-                by_part = attr_counts[a]
-                return np.asarray(
-                    [
-                        canon_value_count(by_part.get(int(p), {}), v)
-                        for p in stat_parts
-                    ],
-                    dtype=np.int64,
-                )
-
-            if match_by_qid is None:
-                m_attr, m_val = prune_match
-                counts = _match_counts(m_attr, m_val)
-                # the match is also the walk's filter-functor mask
-                predicate = F.col(m_attr) == F.lit(m_val)
-                has_pred = True
-            else:
-                # per-query serving shape: each query's own passing
-                # counts drive its own τ cover; unmatched queries keep
-                # the plain all-member counts. Each match also becomes
-                # that query's Catalyst _pass_<qid> walk mask (the r8b
-                # predicates machinery, reused verbatim downstream).
-                per_query_counts = [
-                    _match_counts(*match_by_qid[q])
-                    if q in match_by_qid
-                    else counts
-                    for q in qids
-                ]
-                preds = {
-                    q: F.col(a) == F.lit(v)
-                    for q, (a, v) in match_by_qid.items()
-                }
-                pred_qids = sorted(preds)
-        elif prune_range is not None:
-            r_attr, r_op_raw, r_val = prune_range
-            r_op = RANGE_OPS.get(r_op_raw)
-            if r_op is None:
-                raise ValueError(
-                    f"prune_range op must be one of "
-                    f"{sorted(RANGE_OPS)}, got {r_op_raw!r} — zone "
-                    f"maps prove all-pass/none-pass for half-open "
-                    f"ranges only (exact-match is prune_match)"
-                )
-            zones = _zone_map(
-                spark, path, "numeric_attrs", [r_attr], "prune_range"
-            )[r_attr]
-            verdicts = [
-                range_shard_verdict(
-                    *zones.get(int(p), (None, None, 0)), r_op, float(r_val)
-                )
-                for p in stat_parts
+        per_query: "list[tuple] | None" = None
+        if prune_conj is not None:
+            # exact and substring terms read the per-shard value counts
+            # (substring is decidable exactly over the distinct keys);
+            # range terms read the numeric zone maps
+            terms = [
+                (a, c_op)
+                for c in ([conj_shared] if conj_by_qid is None else conj_by_qid.values())
+                for a, (c_op, _) in c.items()
             ]
-            counts = np.asarray([c for c, _ in verdicts], dtype=np.int64)
-            possible = np.asarray([m for _, m in verdicts], dtype=bool)
-            predicate = range_pred_col(r_attr, r_op, r_val)
-            has_pred = True
-        elif conj_shared is not None or conj_by_qid is not None:
-            conj_dicts = (
-                [conj_shared]
-                if conj_shared is not None
-                else list(conj_by_qid.values())
-            )
-            # substring is defined on STRINGS (§2.3 containment); on a
-            # numeric store column the walk mask would implicitly
-            # stringify while build_predicate's grammar IGNORES the
-            # constraint — the same divergence the IVF batch form
-            # refuses (ann.py), so refuse it here symmetrically
-            col_types = {
-                f.name: f.dataType.simpleString()
-                for f in stored.schema.fields
-            }
-            for c in conj_dicts:
-                for a, (c_op, _) in c.items():
-                    if c_op == "substring" and col_types.get(a) != "string":
-                        raise ValueError(
-                            f"substring constraint on non-string column "
-                            f"{a!r} ({col_types.get(a, 'absent')}) — the "
-                            f"§2.3 grammar ignores substring on "
-                            f"non-string kinds, so pruning by it would "
-                            f"change results"
-                        )
-            # exact AND substring constraints read the per-shard value
-            # counts (substring is decidable exactly over the distinct
-            # keys); range constraints read the numeric zone maps
-            need_exact = sorted(
-                {
-                    a
-                    for c in conj_dicts
-                    for a, (c_op, _) in c.items()
-                    if c_op in ("exact", "substring")
-                }
-            )
-            need_range = sorted(
-                {
-                    a
-                    for c in conj_dicts
-                    for a, (c_op, _) in c.items()
-                    if c_op not in ("exact", "substring")
-                }
-            )
+            need_exact = sorted({a for a, c_op in terms if c_op in ("exact", "substring")})
+            need_range = sorted({a for a, c_op in terms if c_op not in ("exact", "substring")})
             attr_counts = (
                 _zone_map(spark, path, "attrs", need_exact, "prune_conj")
                 if need_exact else {}
@@ -1924,48 +1744,33 @@ def nsw_read_topk(
                 predicate = conj_pred_col(conj_shared)
                 has_pred = True
             else:
-                # per-query serving shape (the prune_match mapping
-                # contract): each query's own Bonferroni lower bounds
-                # and may-pass mask drive its own τ cover; unmatched
-                # queries prune on plain ball bounds and walk unfiltered
-                per_query_counts = []
-                per_query_possible = []
-                for q in qids:
-                    if q in conj_by_qid:
-                        lb, poss = _conj_shard_stats(
-                            conj_by_qid[q], attr_counts, num_stats,
-                            stat_parts, counts,
-                        )
-                    else:
-                        lb, poss = counts, None
-                    per_query_counts.append(lb)
-                    per_query_possible.append(poss)
+                # per-query serving shape: each query's own Bonferroni
+                # lower bounds and may-pass mask drive its own τ cover;
+                # unmatched queries prune on plain ball bounds and walk
+                # unfiltered
+                per_query = [
+                    _conj_shard_stats(
+                        conj_by_qid[q], attr_counts, num_stats, stat_parts, counts
+                    )
+                    if q in conj_by_qid
+                    else (counts, None)
+                    for q in qids
+                ]
                 preds = {
                     q: conj_pred_col(c) for q, c in conj_by_qid.items()
                 }
                 pred_qids = sorted(preds)
-        if per_query_counts is not None:
-            kept = []
-            for qi, q in enumerate(qids):
-                kept.extend(
-                    prune_plan(
-                        stat_parts, cents, radii, per_query_counts[qi],
-                        qmat[qi : qi + 1], k,
-                        skip_empty=(
-                            match_by_qid is not None and q in match_by_qid
-                        ),
-                        possible=(
-                            per_query_possible[qi]
-                            if per_query_possible is not None
-                            else None
-                        ),
-                    )
-                )
+        if per_query is not None:
+            kept = [
+                prune_plan(
+                    stat_parts, cents, radii, lb, qmat[qi : qi + 1], k,
+                    possible=poss,
+                )[0]
+                for qi, (lb, poss) in enumerate(per_query)
+            ]
         else:
             kept = prune_plan(
-                stat_parts, cents, radii, counts, qmat, k,
-                skip_empty=prune_match is not None,
-                possible=possible,
+                stat_parts, cents, radii, counts, qmat, k, possible=possible
             )
         allowed = {}
         for qi, parts in enumerate(kept):

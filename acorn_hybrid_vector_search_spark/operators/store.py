@@ -617,11 +617,15 @@ def substring_value_count(vals: "dict[str, int]", needle) -> int:
     return sum(n for k, n in vals.items() if k is not None and s in k)
 
 
-def normalize_conj(conj) -> "dict[str, tuple]":
+def normalize_conj(conj, stored: DataFrame) -> "dict[str, tuple]":
     """Validate and normalize one conjunction ``{attr: (op, value)}``
-    (specs may arrive as §2.3 ``[op, value]`` lists). Every op must be
-    exact, substring or a range spelling — zone maps prove nothing
-    about other ops, so pruning under them would be unsound."""
+    over the columns of ``stored`` (specs may arrive as §2.3 ``[op,
+    value]`` lists). Every op must be exact, substring or a range
+    spelling — zone maps prove nothing about other ops, so pruning under
+    them would be unsound. A substring term must name a string column:
+    the §2.3 grammar ignores substring on other kinds while the Catalyst
+    mask would stringify the column, so pruning by it would change
+    results."""
     if not conj:
         raise ValueError(
             "empty prune_conj conjunction — pass None for an unfiltered "
@@ -637,7 +641,39 @@ def normalize_conj(conj) -> "dict[str, tuple]":
                 f"maps prove nothing about other ops"
             )
         out[str(attr)] = (op, value)
+    if any(op == "substring" for op, _ in out.values()):
+        kinds = {f.name: f.dataType.simpleString() for f in stored.schema.fields}
+        for attr, (op, _) in out.items():
+            if op == "substring" and kinds.get(attr) != "string":
+                raise ValueError(
+                    f"substring constraint on non-string column {attr!r} "
+                    f"({kinds.get(attr, 'absent')}) — the §2.3 grammar "
+                    f"ignores substring on non-string kinds, so pruning by "
+                    f"it would change results"
+                )
     return out
+
+
+def term_verdicts(op: str, value, zone: dict, parts) -> "tuple[np.ndarray, np.ndarray]":
+    """(certain passing count, may pass) per partition in ``parts`` for
+    one conjunction term ``attr <op> value``. ``zone`` is the attr's
+    zone map: ``{part: {value_str: n}}`` value counts for exact and
+    substring terms (exact counts, so a partition may pass iff its
+    count is positive), ``{part: (vmin, vmax, n_present)}`` for a range
+    op (``range_shard_verdict``). A partition missing from the map holds
+    no passing member."""
+    if op in ("exact", "substring"):
+        count = canon_value_count if op == "exact" else substring_value_count
+        passing = np.asarray([count(zone.get(int(p), {}), value) for p in parts], dtype=np.int64)
+        return passing, passing > 0
+    verdicts = [
+        range_shard_verdict(*zone.get(int(p), (None, None, 0)), RANGE_OPS[op], float(value))
+        for p in parts
+    ]
+    return (
+        np.asarray([c for c, _ in verdicts], dtype=np.int64),
+        np.asarray([m for _, m in verdicts], dtype=bool),
+    )
 
 
 def range_pred_col(attr: str, op: str, value):

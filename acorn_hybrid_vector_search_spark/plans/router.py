@@ -251,6 +251,12 @@ def _flat_passthrough(
 _ROUTABLE_RANGE_OPS = ("leq", "geq", "<", ">")
 
 
+def _conj_of(predicates: Predicates) -> dict:
+    """§2.3 predicates as the zone-map conjunction ``{attr: (op,
+    value)}`` that ``nsw_read_topk(prune_conj=...)`` takes."""
+    return {attr: (list(spec)[0], list(spec)[1]) for attr, spec in dict(predicates).items()}
+
+
 @dataclass
 class AnnRoute:
     strategy: str  # "prefilter" | "exact" | "ivf_exact" | "nsw" | "nsw_gamma" | "ivf" | "nsw_pruned" | "nsw_pruned_match" | "nsw_pruned_range" | "nsw_pruned_conj"
@@ -467,30 +473,30 @@ class StrategyRouter:
            > ``kept_fraction_cutoff`` of the rows pays the stats
            machinery for no skipped I/O, so it falls back to
            ``ivf_exact`` when that index exists.
-        6. r10: an exact-match SINGLE-attribute predicate whose attr
-           has FRESH per-shard value counts on the clustered store
-           (``pruned_attrs``, from ``graph_ann.pruned_match_attrs``)
-           → ``nsw_pruned_match``: the zone-map-pruned hybrid walk —
-           provably exact under the match (the τ cover counts PASSING
-           members; zero-passing shard dirs never read) and measured
-           up to 1.8× over the filter-only walk (BENCH_LADDER
-           ``nsw_prune`` match columns). Outranks the selective
-           prefilter rule: at scale the prefilter scan still touches
-           every row group of the base table while the zone maps skip
-           whole shard directories. Range / substring / multi-attr
-           predicates and uncovered attrs still refuse (pruning is
-           only sound where per-shard passing statistics exist). A
-           sub-1.0 recall budget with a γ store still prefers the
-           cheaper budgeted subgraph walk. r10b: the rung has a RANGE
-           arm — a single-attribute ``leq/geq/</>`` predicate (exactly
-           the op spellings build_predicate enforces)
-           whose attr has FRESH numeric min/max zone maps
-           (``pruned_range_attrs``, from
-           ``graph_ann.pruned_range_attrs``) routes to
-           ``nsw_pruned_range`` (sound via all-pass/none-pass/straddle
-           verdicts — the reference's class-2/3 queries are exactly
-           this shape, acorn.py:176-185); substring and multi-attr
-           conjunctions still refuse.
+        6. r10-r11: a predicate whose EVERY term is covered by a FRESH
+           zone map of the clustered store — exact terms by per-shard
+           value counts (``pruned_attrs``, from
+           ``graph_ann.pruned_match_attrs``), ``leq/geq/</>`` terms
+           (exactly the op spellings build_predicate enforces) by
+           numeric min/max zone maps (``pruned_range_attrs``, from
+           ``graph_ann.pruned_range_attrs``), substring terms on
+           string-kind passthrough accessors by the value counts
+           (``pruned_substr_attrs``) — routes to the zone-map-pruned
+           hybrid walk, provably exact under the conjunction (the τ
+           cover counts certain PASSING members; provably-empty shard
+           dirs are never read) and measured up to 1.8× over the
+           filter-only walk (BENCH_LADDER ``nsw_prune`` match
+           columns). The label names the shape: ``nsw_pruned_match``
+           (one exact term), ``nsw_pruned_range`` (one range term —
+           the reference's class-2/3 shape, acorn.py:176-185) or
+           ``nsw_pruned_conj`` (one substring term or several terms,
+           acorn.py:296-298). Outranks the selective prefilter rule:
+           at scale the prefilter scan still touches every row group
+           of the base table while the zone maps skip whole shard
+           directories. Any other op or an uncovered attr refuses
+           (pruning is only sound where per-shard passing statistics
+           exist). A sub-1.0 recall budget with a γ store still
+           prefers the cheaper budgeted subgraph walk.
         """
         sel = estimate_selectivity(self.stats, predicates)
         n = self.stats.n_rows
@@ -526,26 +532,16 @@ class StrategyRouter:
                 # depend on sidecar freshness — review r10)
                 return op in _ROUTABLE_RANGE_OPS and attr in range_cover
 
-            if len(predicates) == 1:
-                ((attr, spec),) = dict(predicates).items()
-                op = list(spec)[0]
-                if op == "exact" and attr in match_cover:
+            # every constrained attr must be covered by the matching
+            # fresh sidecar; the label names the predicate's shape, and
+            # so the sidecar that serves it
+            conj = _conj_of(predicates)
+            if all(_conj_term_ok(attr, op) for attr, (op, _) in conj.items()):
+                ops = [op for op, _ in conj.values()]
+                if ops == ["exact"]:
                     return AnnRoute("nsw_pruned_match", sel)
-                if op in _ROUTABLE_RANGE_OPS and attr in range_cover:
+                if len(ops) == 1 and ops[0] in _ROUTABLE_RANGE_OPS:
                     return AnnRoute("nsw_pruned_range", sel)
-                # r11b: a lone substring constraint routes through the
-                # conjunction rung — the reference's class-3 brand
-                # substring query shape (acorn.py:296-298)
-                if op == "substring" and attr in substr_cover:
-                    return AnnRoute("nsw_pruned_conj", sel)
-            # r11 CONJUNCTION arm (VERDICT r10 ask #3 — the reference's
-            # LITERAL class-2 query shape: ``item_weight < 2 ∧ brand
-            # substring Amazon``, acorn.py:296-298): every constrained
-            # attr must be covered by the matching fresh sidecar.
-            elif all(
-                _conj_term_ok(attr, list(spec)[0])
-                for attr, spec in dict(predicates).items()
-            ):
                 return AnnRoute("nsw_pruned_conj", sel)
         if predicates and sel <= selective_cutoff:
             return AnnRoute("prefilter", sel)
@@ -737,13 +733,15 @@ class StrategyRouter:
         conjunction in the scan; nsw/nsw_gamma evaluate it in CATALYST
         on the stored node table (filter-functor / subgraph walk);
         ``ivf`` applies it after the nprobe pruning (``ivf_search``'s
-        predicate param); an exact-match single-attr predicate over a
-        clustered store with fresh zone maps dispatches to the
-        ``nsw_pruned_match`` rung (r10 — provably exact under the
-        match). Any OTHER exact-required query with predicates falls
-        back to the exact prefilter scan rather than ``ivf_search_exact``
-        (whose ball-bound executor is predicate-less) — exactness is
-        never traded for a prune."""
+        predicate param); a predicate whose every term is covered by a
+        fresh zone map of the clustered store dispatches to one
+        ``nsw_read_topk(prune=True, prune_conj=...)`` read (the
+        ``nsw_pruned_match`` / ``nsw_pruned_range`` / ``nsw_pruned_conj``
+        rungs — provably exact under the conjunction). Any OTHER
+        exact-required query with predicates falls back to the exact
+        prefilter scan; ``ivf_search_exact`` runs only predicate-free,
+        since its ``conj`` pruning needs per-list zone maps the router
+        does not track — exactness is never traded for a prune."""
         acc = accessors or abo_accessors()
         (
             prunable, pruned_attrs, range_attrs, substr_attrs, est_kept,
@@ -811,25 +809,13 @@ class StrategyRouter:
             # shard size, and a missing sidecar falls through to
             # nsw_read_topk's guard
             ef = pruned_full_beam(df.sparkSession, pruned_path, k)
-            prune_match = None
-            prune_range = None
-            prune_conj = None
-            if route.strategy == "nsw_pruned_match":
-                ((attr, spec),) = dict(predicates).items()
-                prune_match = (attr, list(spec)[1])
-            elif route.strategy == "nsw_pruned_range":
-                ((attr, spec),) = dict(predicates).items()
-                op, value = list(spec)[0], list(spec)[1]
-                prune_range = (attr, op, value)
-            elif route.strategy == "nsw_pruned_conj":
-                prune_conj = {
-                    attr: (list(spec)[0], list(spec)[1])
-                    for attr, spec in dict(predicates).items()
-                }
             return nsw_read_topk(
                 df.sparkSession, pruned_path, [(0, list(query_vec))], k,
-                ef=ef, prune=True, prune_match=prune_match,
-                prune_range=prune_range, prune_conj=prune_conj,
+                ef=ef, prune=True,
+                prune_conj=(
+                    None if route.strategy == "nsw_pruned"
+                    else _conj_of(predicates)
+                ),
                 id_col=id_col,
             ).drop("query_id")
         if route.strategy == "ivf":
@@ -1089,9 +1075,8 @@ class StrategyRouter:
           always scans the full store);
         - ALL pruned rungs (plain ball-bound, exact-match, range,
           conjunction) FOLD INTO ONE ``nsw_read_topk(prune=True,
-          prune_conj={qid: …})`` store read — a single-constraint
-          conjunction is exactly the match/range arm (identical
-          verdicts by construction), and queries routed to plain
+          prune_conj={qid: …})`` store read — each query passes the
+          same conjunction ``ann_search`` would, and queries routed to plain
           ``nsw_pruned`` simply stay out of the mapping, pruning on
           ball bounds alone; the shared full beam keeps every group
           member provably exact. The dense rule never touches this
@@ -1239,13 +1224,11 @@ class StrategyRouter:
                     pruned_full_beam,
                 )
 
-                conj_map = {}
-                for qid, _, preds_ in d.queries:
-                    if routes[int(qid)].strategy != "nsw_pruned":
-                        conj_map[int(qid)] = {
-                            attr: (list(spec)[0], list(spec)[1])
-                            for attr, spec in dict(preds_).items()
-                        }
+                conj_map = {
+                    int(qid): _conj_of(preds_)
+                    for qid, _, preds_ in d.queries
+                    if routes[int(qid)].strategy != "nsw_pruned"
+                }
                 parts.append(
                     nsw_read_topk(
                         spark, pruned_path,

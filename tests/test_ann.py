@@ -781,8 +781,8 @@ def test_ivf_write_rejects_remote_paths(spark):
 
 def test_ivf_search_exact_match_skips_zero_passing_lists(spark, tmp_path):
     """r10 IVF zone-map symmetry (one shared contract with the graph
-    store's prune_match): per-list exact value counts let
-    ivf_search_exact(match=...) skip zero-passing lists at every
+    store's exact-match pruning): per-list exact value counts let
+    ivf_search_exact(conj={attr: ('exact', v)}) skip zero-passing lists at every
     stage, run phase 1 in the nearest list that HOLDS passing members,
     and stay provably exact (ball lower bounds apply to the passing
     subset). Persisted counts survive the write/read roundtrip, stay
@@ -841,18 +841,18 @@ def test_ivf_search_exact_match_skips_zero_passing_lists(spark, tmp_path):
             )[:kq]
         ]
 
-    got = ivf_search_exact(idx, q, 5, match=("label", 3)).collect()
+    got = ivf_search_exact(idx, q, 5, conj={"label": ("exact", 3)}).collect()
     assert [r["vec_id"] for r in got] == brute(lambda i, b: b == 3)
     # guards: uncovered attr, absent value
     with pytest.raises(ValueError, match="stats_attrs"):
-        ivf_search_exact(idx, q, 5, match=("nope", 1))
-    assert ivf_search_exact(idx, q, 5, match=("label", 99)).count() == 0
+        ivf_search_exact(idx, q, 5, conj={"nope": ("exact", 1)})
+    assert ivf_search_exact(idx, q, 5, conj={"label": ("exact", 99)}).count() == 0
     # persistence roundtrip keeps the counts + the result
     path = str(tmp_path / "ivf")
     ivf_write(idx, path)
     loaded = ivf_read(spark, path)
     assert loaded.attr_counts == idx.attr_counts
-    got2 = ivf_search_exact(loaded, q, 5, match=("label", 3)).collect()
+    got2 = ivf_search_exact(loaded, q, 5, conj={"label": ("exact", 3)}).collect()
     assert [r["vec_id"] for r in got2] == brute(lambda i, b: b == 3)
     # tombstones: persisted counts stay (stale-high is sound — zero
     # stays zero) and the search answers the LIVE filtered subset
@@ -860,7 +860,7 @@ def test_ivf_search_exact_match_skips_zero_passing_lists(spark, tmp_path):
     ivf_delete(spark, path, [want_live[0]])
     loaded2 = ivf_read(spark, path)
     assert loaded2.attr_counts == idx.attr_counts  # not recomputed
-    got3 = ivf_search_exact(loaded2, q, 5, match=("label", 3)).collect()
+    got3 = ivf_search_exact(loaded2, q, 5, conj={"label": ("exact", 3)}).collect()
     assert [r["vec_id"] for r in got3] == brute(
         lambda i, b: b == 3 and i != want_live[0]
     )
@@ -879,7 +879,7 @@ def test_ivf_search_exact_match_skips_zero_passing_lists(spark, tmp_path):
     invalidate()
     loaded3 = ivf_read(spark, path)
     assert loaded3.attr_counts != idx.attr_counts  # recomputed
-    got4 = ivf_search_exact(loaded3, q, 1, match=("label", 3)).head()
+    got4 = ivf_search_exact(loaded3, q, 1, conj={"label": ("exact", 3)}).head()
     assert got4["vec_id"] == 9000 and got4["dist"] < 1e-12
 
 
@@ -962,7 +962,7 @@ def test_router_prune_match_rung_decision_matrix():
 def test_ann_search_dispatches_prune_match_rung(spark, tmp_path):
     """r10: ann_search derives zone-map coverage + the kept-fraction
     estimate from the store itself and EXECUTES the nsw_pruned_match
-    rung — dispatched ≡ the direct nsw_read_topk(prune_match=...) call
+    rung — dispatched ≡ the direct one-term nsw_read_topk(prune_conj=...) call
     ≡ the exact pre-filter brute force; a STALE attr sidecar silently
     (and correctly) falls back to the exact prefilter scan instead of
     routing into the staleness guard."""
@@ -1027,7 +1027,7 @@ def test_ann_search_dispatches_prune_match_rung(spark, tmp_path):
         nsw_read_topk(
             spark, store, [(0, list(q))], 5,
             ef=pruned_full_beam(spark, store, 5),
-            prune=True, prune_match=("label", 3),
+            prune=True, prune_conj={"label": ("exact", 3)},
         )
         .drop("query_id")
         .collect()
@@ -1094,7 +1094,7 @@ def test_router_prune_range_rung_matrix_and_dispatch(spark, tmp_path):
     with fresh numeric zone maps routes to nsw_pruned_range (the
     reference's class-2/3 query shape); uncovered attrs, substring and
     multi-attr still refuse; ann_search dispatch ≡ the direct
-    prune_range call ≡ the exact pre-filter brute force."""
+    one-term range prune_conj call ≡ the exact pre-filter brute force."""
     import random
 
     from acorn_hybrid_vector_search_spark.functions.predicates import (
@@ -1191,7 +1191,7 @@ def test_router_prune_range_rung_matrix_and_dispatch(spark, tmp_path):
         nsw_read_topk(
             spark, store, [(0, list(q))], 5,
             ef=pruned_full_beam(spark, store, 5),
-            prune=True, prune_range=("weight", "leq", 12),
+            prune=True, prune_conj={"weight": ("leq", 12)},
         )
         .drop("query_id")
         .collect()
@@ -1207,7 +1207,7 @@ def test_router_prune_range_rung_matrix_and_dispatch(spark, tmp_path):
 
 
 def test_ivf_search_exact_range_pred_zone_maps(spark, tmp_path):
-    """r10b IVF numeric zone maps (the graph store's prune_range on
+    """r10b IVF numeric zone maps (the graph store's range pruning on
     the inverted lists — one shared verdict helper): per-list
     (vmin, vmax, n_present) skip provably-failing lists, straddling
     lists stay scanned, results equal the exact filtered brute force
@@ -1256,13 +1256,13 @@ def test_ivf_search_exact_range_pred_zone_maps(spark, tmp_path):
         ]
 
     cases = [
-        (("weight", "<", 10), lambda w: w < 10),
-        (("weight", "leq", 12), lambda w: w <= 12),
-        (("weight", ">", 30), lambda w: w > 30),
-        (("weight", ">=", 33), lambda w: w >= 33),
+        ({"weight": ("<", 10)}, lambda w: w < 10),
+        ({"weight": ("leq", 12)}, lambda w: w <= 12),
+        ({"weight": (">", 30)}, lambda w: w > 30),
+        ({"weight": (">=", 33)}, lambda w: w >= 33),
     ]
     for rp, py in cases:
-        got = ivf_search_exact(idx, q, 5, range_pred=rp).collect()
+        got = ivf_search_exact(idx, q, 5, conj=rp).collect()
         assert [r["vec_id"] for r in got] == brute(py), rp
     # provably-failing lists exist for weight < 10
     from acorn_hybrid_vector_search_spark.operators.store import (
@@ -1277,16 +1277,12 @@ def test_ivf_search_exact_range_pred_zone_maps(spark, tmp_path):
     ]
     assert fails
     # empty result (nothing passes), not an error
-    assert ivf_search_exact(idx, q, 5, range_pred=("weight", ">", 99)).count() == 0
+    assert ivf_search_exact(idx, q, 5, conj={"weight": (">", 99)}).count() == 0
     # guards
-    with pytest.raises(ValueError, match="at most one"):
-        ivf_search_exact(
-            idx, q, 5, match=("weight", 0), range_pred=("weight", "<", 10)
-        )
-    with pytest.raises(ValueError, match="op must be one of"):
-        ivf_search_exact(idx, q, 5, range_pred=("weight", "==", 10))
+    with pytest.raises(ValueError, match="op must be"):
+        ivf_search_exact(idx, q, 5, conj={"weight": ("==", 10)})
     with pytest.raises(ValueError, match="numeric_stats_attrs"):
-        ivf_search_exact(idx, q, 5, range_pred=("nope", "<", 10))
+        ivf_search_exact(idx, q, 5, conj={"nope": ("<", 10)})
     with pytest.raises(ValueError, match="non-numeric"):
         ivf_build(df, n_clusters=4, numeric_stats_attrs=["embedding"])
     # persistence roundtrip
@@ -1294,7 +1290,7 @@ def test_ivf_search_exact_range_pred_zone_maps(spark, tmp_path):
     ivf_write(idx, path)
     loaded = ivf_read(spark, path)
     assert loaded.numeric_stats == idx.numeric_stats
-    got2 = ivf_search_exact(loaded, q, 5, range_pred=("weight", "leq", 12)).collect()
+    got2 = ivf_search_exact(loaded, q, 5, conj={"weight": ("leq", 12)}).collect()
     assert [r["vec_id"] for r in got2] == brute(lambda w: w <= 12)
 
 
@@ -1592,8 +1588,7 @@ def test_ivf_search_exact_batch_equals_per_query_loop(spark):
     identically to the single-query two-phase scan — per-query match,
     per-query range, and unconstrained queries mixed in ONE batch (two
     list scans total); queries whose constraint passes nowhere come
-    back empty; guard matrix (both-mappings overlap, unknown qid,
-    uncovered attr)."""
+    back empty; guard matrix (unknown qid, uncovered attr)."""
     import random as _random
 
     import pytest
@@ -1628,22 +1623,19 @@ def test_ivf_search_exact_batch_equals_per_query_loop(spark):
         stats_attrs=["label"], numeric_stats_attrs=["weight"],
     )
     queries = [(100 + j, rows[j][1]) for j in range(4)]
-    match = {100: ("label", 3), 101: ("label", 99)}  # 101: passes nowhere
-    range_pred = {102: ("weight", "<", 23)}
-    got = ivf_search_exact_batch(
-        idx, queries, 5, match=match, range_pred=range_pred
-    ).collect()
+    conj = {
+        100: {"label": ("exact", 3)},
+        101: {"label": ("exact", 99)},  # passes nowhere
+        102: {"weight": ("<", 23)},
+    }
+    got = ivf_search_exact_batch(idx, queries, 5, conj=conj).collect()
     by_q: dict = {}
     for r in got:
         by_q.setdefault(int(r["query_id"]), []).append(
             (r["vec_id"], round(r["dist"], 9))
         )
     for qid, qv in queries:
-        kw = {}
-        if qid in match:
-            kw["match"] = match[qid]
-        if qid in range_pred:
-            kw["range_pred"] = range_pred[qid]
+        kw = {"conj": conj[qid]} if qid in conj else {}
         single = [
             (r["vec_id"], round(r["dist"], 9))
             for r in ivf_search_exact(idx, qv, 5, **kw).collect()
@@ -1653,20 +1645,19 @@ def test_ivf_search_exact_batch_equals_per_query_loop(spark):
     # plan shape: one knn_batch scan of the probed lists, the queries
     # never joined to the corpus
     plan = ivf_search_exact_batch(
-        idx, queries, 5, match=match, range_pred=range_pred
+        idx, queries, 5, conj=conj
     )._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" in plan
     assert "Join" not in plan
     # guards
-    with pytest.raises(ValueError, match="both match and range_pred"):
-        ivf_search_exact_batch(
-            idx, queries, 5,
-            match={100: ("label", 3)}, range_pred={100: ("weight", "<", 2)},
-        )
     with pytest.raises(ValueError, match="not in the batch"):
-        ivf_search_exact_batch(idx, queries, 5, match={999: ("label", 3)})
+        ivf_search_exact_batch(
+            idx, queries, 5, conj={999: {"label": ("exact", 3)}}
+        )
     with pytest.raises(ValueError, match="value counts"):
-        ivf_search_exact_batch(idx, queries, 5, match={100: ("nope", 3)})
+        ivf_search_exact_batch(
+            idx, queries, 5, conj={100: {"nope": ("exact", 3)}}
+        )
 
 
 def test_ann_search_batch_folds_pruned_arms_and_matches_single(spark, tmp_path):
@@ -1781,7 +1772,7 @@ def test_ivf_exact_match_boolean_payload(spark):
     """VERDICT r11 ask #7 — the IVF twin of the graph store's boolean
     zone-map pin: Spark's CAST(boolcol AS STRING) spells 'true'/'false'
     while str(True) is 'True'; `canon_value_count` canonicalizes, so
-    `ivf_search_exact(match=('flag', True))` over a boolean payload
+    `ivf_search_exact(conj={'flag': ('exact', True)})` over a boolean payload
     answers the exact filtered oracle end-to-end instead of reading
     every zero-passing list as empty-of-evidence (or, worse, pruning
     every list and returning nothing)."""
@@ -1811,7 +1802,7 @@ def test_ivf_exact_match_boolean_payload(spark):
         got = [
             r["vec_id"]
             for r in ivf_search_exact(
-                idx, q, 5, match=("flag", want_flag)
+                idx, q, 5, conj={"flag": ("exact", want_flag)}
             ).collect()
         ]
         brute = [
@@ -2366,7 +2357,7 @@ def test_ivf_exact_batch_enforces_le_ge_spellings(spark, tmp_path):
     queries = [(0, rows[0][1]), (1, rows[1][1])]
     got = ivf_search_exact_batch(
         idx, queries, 5,
-        range_pred={0: ("weight", "<=", 12), 1: ("weight", ">=", 20)},
+        conj={0: {"weight": ("<=", 12)}, 1: {"weight": (">=", 20)}},
     ).collect()
     by_q: dict = {}
     for r in got:
@@ -2374,12 +2365,12 @@ def test_ivf_exact_batch_enforces_le_ge_spellings(spark, tmp_path):
             (r["vec_id"], round(r["dist"], 9))
         )
     for qid, qv, rp in (
-        (0, rows[0][1], ("weight", "<=", 12)),
-        (1, rows[1][1], ("weight", ">=", 20)),
+        (0, rows[0][1], {"weight": ("<=", 12)}),
+        (1, rows[1][1], {"weight": (">=", 20)}),
     ):
         single = [
             (r["vec_id"], round(r["dist"], 9))
-            for r in ivf_search_exact(idx, qv, 5, range_pred=rp).collect()
+            for r in ivf_search_exact(idx, qv, 5, conj=rp).collect()
         ]
         assert by_q.get(qid, []) == single, qid
     # every returned row actually satisfies its query's predicate
@@ -2554,14 +2545,14 @@ def test_ivf_search_exact_conj_and_batch_conj(spark, tmp_path):
     range) answers the exact filtered oracle — the two-phase ball
     bound needs no Bonferroni counts, only ANY-none-pass list skipping
     — and the batch form's per-query conj mapping ≡ the single-query
-    loop. Guards: at-most-one constraint shape, substring on a
-    non-string column refuses in the batch, uncovered attr raises."""
+    loop. Guards: substring on a non-string column refuses in the
+    single-query and the batch form, uncovered attr raises."""
     import random as _random
 
     import pytest
 
     from acorn_hybrid_vector_search_spark.operators.ann import (
-        _ivf_passing_lists,
+        _ivf_conj,
         ivf_build,
         ivf_search_exact,
         ivf_search_exact_batch,
@@ -2621,7 +2612,7 @@ def test_ivf_search_exact_conj_and_batch_conj(spark, tmp_path):
     ]
     assert got2 == brute(lambda r: "nd3" in r[4] and r[3] < 32)
     # provably-failing lists exist for the substring term
-    mask = _ivf_passing_lists(idx, ("tag", "substring", "nd3"))
+    mask, _ = _ivf_conj(idx, {"tag": ("substring", "nd3")})
     assert (~mask).any()
     # unsatisfiable → empty
     assert (
@@ -2650,14 +2641,16 @@ def test_ivf_search_exact_conj_and_batch_conj(spark, tmp_path):
         ]
         assert by_q.get(qid, []) == single, qid
     # guards
-    with pytest.raises(ValueError, match="at most one"):
-        ivf_search_exact(
-            idx, q, 5, match=("label", 3), conj={"label": ("exact", 3)}
-        )
-    with pytest.raises(ValueError, match="non-string"):
+    # substring on a non-string column refuses in BOTH forms: the §2.3
+    # grammar ignores it while the Catalyst mask would stringify the
+    # column, so the single-query scan must not answer what the batch
+    # scan refuses
+    with pytest.raises(ValueError, match="non-string column 'weight'"):
         ivf_search_exact_batch(
             idx, queries, 5, conj={0: {"weight": ("substring", "2")}}
         )
+    with pytest.raises(ValueError, match="non-string column 'label'"):
+        ivf_search_exact(idx, q, 5, conj={"label": ("substring", "3")})
     with pytest.raises(ValueError, match="value counts"):
         ivf_search_exact(idx, q, 5, conj={"nope": ("exact", 1)})
 

@@ -1289,7 +1289,7 @@ def test_prune_match_sound_and_prunes_by_passing_counts(spark, tmp_path):
     q = rows[1][1]  # a blob-1 point; search for label 3 (the FAR blob)
     got = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_match=("label", 3),
+        prune=True, prune_conj={"label": ("exact", 3)},
     ).collect()
     exact = sorted(
         (sum((a - b) ** 2 for a, b in zip(r[1], q)), r[0])
@@ -1313,24 +1313,24 @@ def test_prune_match_sound_and_prunes_by_passing_counts(spark, tmp_path):
     assert (pc == 0).any()  # zero-passing shards exist
     qm = np.asarray([q], dtype=np.float64)
     plain = prune_plan(parts, cents, radii, counts, qm, 5)[0]
-    match = prune_plan(parts, cents, radii, pc, qm, 5, skip_empty=True)[0]
+    match = prune_plan(parts, cents, radii, pc, qm, 5, possible=pc > 0)[0]
     assert len(match) < len(plain), (len(match), len(plain))
     assert set(match.tolist()) <= {
         int(p) for p, c in zip(parts, pc) if c > 0
     }
     # guards
     with pytest.raises(ValueError, match="requires prune"):
-        nsw_read_topk(spark, path, [(0, list(q))], 5, prune_match=("label", 3))
+        nsw_read_topk(spark, path, [(0, list(q))], 5, prune_conj={"label": ("exact", 3)})
     with pytest.raises(ValueError, match="cover"):
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, prune=True,
-            prune_match=("nope", 3),
+            prune_conj={"nope": ("exact", 3)},
         )
     # absent value everywhere → empty result, not an error
     assert (
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, ef=10**6,
-            prune=True, prune_match=("label", 99),
+            prune=True, prune_conj={"label": ("exact", 99)},
         ).count()
         == 0
     )
@@ -1341,13 +1341,13 @@ def test_prune_match_sound_and_prunes_by_passing_counts(spark, tmp_path):
     with pytest.raises(ValueError, match="stale"):
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, prune=True,
-            prune_match=("label", 3),
+            prune_conj={"label": ("exact", 3)},
         )
     # refresh restores service
     nsw_stats_write(spark, path, attrs=["label"])
     got2 = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_match=("label", 3),
+        prune=True, prune_conj={"label": ("exact", 3)},
     ).collect()
     assert [r["vec_id"] for r in got2] == [i for _, i in exact]
 
@@ -1524,7 +1524,7 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
     # weight < 10: only blob 0 passes — blob 1-3 shards are none-pass
     got = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_range=("weight", "<", 10),
+        prune=True, prune_conj={"weight": ("<", 10)},
     ).collect()
     assert [r["vec_id"] for r in got] == brute(lambda w: w < 10)
     # zone-map verdicts: none-pass shards exist and are excluded
@@ -1546,7 +1546,7 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
     # straddling ranges stay exact: weight < 12 splits blob 1's shards
     got2 = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_range=("weight", "leq", 12),
+        prune=True, prune_conj={"weight": ("leq", 12)},
     ).collect()
     assert [r["vec_id"] for r in got2] == brute(lambda w: w <= 12)
     v2 = [range_shard_verdict(*zones[int(p)], "<=", 12.0) for p in parts]
@@ -1555,35 +1555,30 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
     # nothing passes → empty result, not an error
     got3 = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_range=("weight", ">=", -1),
+        prune=True, prune_conj={"weight": (">=", -1)},
     ).collect()
     assert [r["vec_id"] for r in got3] == brute(lambda w: True)
     assert (
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, ef=10**6,
-            prune=True, prune_range=("weight", ">", 999),
+            prune=True, prune_conj={"weight": (">", 999)},
         ).count()
         == 0
     )
     # guard matrix
     with pytest.raises(ValueError, match="requires prune"):
         nsw_read_topk(
-            spark, path, [(0, list(q))], 5, prune_range=("weight", "<", 10)
+            spark, path, [(0, list(q))], 5, prune_conj={"weight": ("<", 10)}
         )
-    with pytest.raises(ValueError, match="op must be one of"):
+    with pytest.raises(ValueError, match="op must be"):
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, prune=True,
-            prune_range=("weight", "==", 10),
+            prune_conj={"weight": ("==", 10)},
         )
     with pytest.raises(ValueError, match="does not cover"):
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, prune=True,
-            prune_range=("nope", "<", 10),
-        )
-    with pytest.raises(ValueError, match="at most one"):
-        nsw_read_topk(
-            spark, path, [(0, list(q))], 5, prune=True,
-            prune_range=("weight", "<", 10), prune_match=("weight", 0),
+            prune_conj={"nope": ("<", 10)},
         )
     with pytest.raises(ValueError, match="non-numeric"):
         nsw_stats_write(spark, path, numeric_attrs=["vector"])
@@ -1595,22 +1590,23 @@ def test_prune_range_zone_maps_sound_and_skip_fail_shards(spark, tmp_path):
     with pytest.raises(ValueError, match="stale _shard"):
         nsw_read_topk(
             spark, path, [(0, list(q))], 5, prune=True,
-            prune_range=("weight", "<", 10),
+            prune_conj={"weight": ("<", 10)},
         )
     nsw_stats_write(spark, path, numeric_attrs=["weight"])
     got4 = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_range=("weight", "<", 10),
+        prune=True, prune_conj={"weight": ("<", 10)},
     ).collect()
     assert [r["vec_id"] for r in got4] == brute(lambda w: w < 10)
 
 
 def test_prune_match_per_query_batch_equals_loop(spark, tmp_path):
-    """r10 per-query prune_match: a mapping query_id → (attr, value)
-    gives every query its OWN zone-map prune + walk mask from ONE
-    store read; each query's rows equal (a) the exact pre-filter
-    brute force for its match and (b) the single-query tuple-form
-    call — and unmatched queries prune/walk plain."""
+    """r10 per-query exact-match pruning: a prune_conj mapping
+    query_id → {attr: ('exact', value)} gives every query its OWN
+    zone-map prune + walk mask from ONE store read; each query's rows
+    equal (a) the exact pre-filter brute force for its match and (b)
+    the single-query shared-conjunction call — and unmatched queries
+    prune/walk plain."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_read_topk,
         nsw_write_clustered,
@@ -1625,9 +1621,9 @@ def test_prune_match_per_query_batch_equals_loop(spark, tmp_path):
         df, path, n_shards=8, payload_cols=["label"], stats_attrs=["label"]
     )
     qs = [(0, rows[1][1]), (1, rows[2][1]), (2, rows[3][1])]
-    matches = {0: ("label", 3), 1: ("label", 0)}  # qid 2: unfiltered
+    matches = {0: {"label": ("exact", 3)}, 1: {"label": ("exact", 0)}}  # qid 2: unfiltered
     got = nsw_read_topk(
-        spark, path, qs, 5, ef=10**6, prune=True, prune_match=matches,
+        spark, path, qs, 5, ef=10**6, prune=True, prune_conj=matches,
     ).collect()
     by_q = {}
     for r in got:
@@ -1646,12 +1642,12 @@ def test_prune_match_per_query_batch_equals_loop(spark, tmp_path):
     assert by_q[0] == brute(qs[0][1], lambda b: b == 3)
     assert by_q[1] == brute(qs[1][1], lambda b: b == 0)
     assert by_q[2] == brute(qs[2][1], lambda b: True)
-    # batch ≡ per-query loop (tuple form / plain prune)
+    # batch ≡ per-query loop (shared conjunction / plain prune)
     for qid, qv in qs:
         if qid in matches:
             solo = nsw_read_topk(
                 spark, path, [(qid, qv)], 5, ef=10**6,
-                prune=True, prune_match=matches[qid],
+                prune=True, prune_conj=matches[qid],
             ).collect()
         else:
             solo = nsw_read_topk(
@@ -1661,10 +1657,11 @@ def test_prune_match_per_query_batch_equals_loop(spark, tmp_path):
     # guards: unknown qid, empty mapping
     with pytest.raises(ValueError, match="not in the batch"):
         nsw_read_topk(
-            spark, path, qs, 5, prune=True, prune_match={9: ("label", 1)},
+            spark, path, qs, 5, prune=True,
+            prune_conj={9: {"label": ("exact", 1)}},
         )
-    with pytest.raises(ValueError, match="empty prune_match"):
-        nsw_read_topk(spark, path, qs, 5, prune=True, prune_match={})
+    with pytest.raises(ValueError, match="empty prune_conj"):
+        nsw_read_topk(spark, path, qs, 5, prune=True, prune_conj={})
 
 
 def test_nsw_recluster_restores_prunability_after_growth(spark, tmp_path):
@@ -1672,7 +1669,8 @@ def test_nsw_recluster_restores_prunability_after_growth(spark, tmp_path):
     mutually destructive'): write_clustered → append (breaks cluster
     purity, stats go stale) → delete → nsw_recluster → pruned search
     hash-equals brute force over the live corpus, shards actually
-    prune again, and the attr sidecar is refreshed for prune_match."""
+    prune again, and the attr sidecar is refreshed for exact-match
+    pruning."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
         nsw_delete,
         nsw_read_topk,
@@ -1736,10 +1734,10 @@ def test_nsw_recluster_restores_prunability_after_growth(spark, tmp_path):
     parts, cents, radii, counts = load_stats(spark, stats_path(path))
     kept = prune_plan(parts, cents, radii, counts, np.asarray([q]), 5)[0]
     assert len(kept) < len(parts), (len(kept), len(parts))
-    # the refreshed attr sidecar serves prune_match immediately
+    # the refreshed attr sidecar serves exact-match pruning immediately
     got_m = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_match=("label", 3),
+        prune=True, prune_conj={"label": ("exact", 3)},
     ).collect()
     assert [r["vec_id"] for r in got_m] == brute(q, lambda b: b == 3)
     # deletions are permanent (the nsw_compact contract): a deleted id
@@ -1849,7 +1847,7 @@ def test_prune_match_canonical_value_lookup(spark, tmp_path):
     # and the counts lookup must agree
     got = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_match=("label", 3.0),
+        prune=True, prune_conj={"label": ("exact", 3.0)},
     ).collect()
     assert [r["vec_id"] for r in got] == want
 
@@ -2003,7 +2001,7 @@ def test_canon_value_count_booleans(spark, tmp_path):
     """ADVICE r10 (medium): Spark's CAST(boolcol AS STRING) spells
     'true'/'false' while str(True) is 'True' — a boolean predicate
     value must find the lowercase key, must NOT cross over to a
-    numeric column's '1' key, and the end-to-end prune_match over a
+    numeric column's '1' key, and the end-to-end exact-match prune over a
     boolean payload answers the exact filtered oracle instead of
     silently pruning every shard."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
@@ -2032,7 +2030,7 @@ def test_canon_value_count_booleans(spark, tmp_path):
     q = rows[1][1]
     got = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6,
-        prune=True, prune_match=("flag", True),
+        prune=True, prune_conj={"flag": ("exact", True)},
     ).collect()
     exact = sorted(
         (sum((a - b) ** 2 for a, b in zip(r[1], q)), r[0])
@@ -2122,8 +2120,7 @@ def _conj_brute(rows, q, k, pred):
 
 def test_prune_conj_exact_and_bonferroni_sound(spark, conj_store):
     """Full-beam conjunction-pruned search answers the exact filtered
-    oracle for exact∧range, exact∧exact-shaped single dicts, and the
-    verdict arithmetic holds: shards where ANY constraint is none-pass
+    oracle for exact∧range, and the verdict arithmetic holds: shards where ANY constraint is none-pass
     are outside every kept set, and the Bonferroni lower bounds under-
     count (never over-count) the true per-shard passing members."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
@@ -2170,30 +2167,6 @@ def test_prune_conj_exact_and_bonferroni_sound(spark, conj_store):
         if not may:
             assert true_pass[int(p)] == 0  # none-pass is provable
     assert (~possible).any()  # provably-failing shards exist on blobs
-
-    # all-range and all-exact single-entry dicts ≡ the dedicated arms
-    one_r = nsw_read_topk(
-        spark, path, [(0, list(q))], 5, ef=10**6, prune=True,
-        prune_conj={"weight": ("<", 23)},
-    ).collect()
-    arm_r = nsw_read_topk(
-        spark, path, [(0, list(q))], 5, ef=10**6, prune=True,
-        prune_range=("weight", "<", 23),
-    ).collect()
-    assert [(r["vec_id"], r["dist"]) for r in one_r] == [
-        (r["vec_id"], r["dist"]) for r in arm_r
-    ]
-    one_m = nsw_read_topk(
-        spark, path, [(0, list(q))], 5, ef=10**6, prune=True,
-        prune_conj={"label": ("exact", 3)},
-    ).collect()
-    arm_m = nsw_read_topk(
-        spark, path, [(0, list(q))], 5, ef=10**6, prune=True,
-        prune_match=("label", 3),
-    ).collect()
-    assert [(r["vec_id"], r["dist"]) for r in one_m] == [
-        (r["vec_id"], r["dist"]) for r in arm_m
-    ]
 
     # unsatisfiable conjunction → empty result, not an error
     assert (
@@ -2243,7 +2216,7 @@ def test_prune_conj_per_query_mapping(spark, conj_store):
 
 
 def test_prune_conj_guard_matrix(spark, conj_store):
-    """requires prune; at-most-one prune predicate; empty dict refuses;
+    """requires prune; empty dict refuses;
     non-zone-map ops refuse; uncovered attrs refuse; unknown qids
     refuse; stale sidecars refuse."""
     from acorn_hybrid_vector_search_spark.operators.graph_ann import (
@@ -2255,16 +2228,11 @@ def test_prune_conj_guard_matrix(spark, conj_store):
     conj = {"label": ("exact", 3), "weight": ("<", 32)}
     with pytest.raises(ValueError, match="requires prune"):
         nsw_read_topk(spark, path, q, 5, prune_conj=conj)
-    with pytest.raises(ValueError, match="at most one"):
-        nsw_read_topk(
-            spark, path, q, 5, prune=True,
-            prune_conj=conj, prune_match=("label", 3),
-        )
     with pytest.raises(ValueError, match="empty prune_conj"):
         nsw_read_topk(spark, path, q, 5, prune=True, prune_conj={})
     # substring on a NUMERIC column refuses (r11b: the walk mask would
     # implicitly stringify while build_predicate's grammar ignores the
-    # constraint — same refusal as the IVF batch form); bogus ops still
+    # constraint — same refusal as both IVF forms); bogus ops still
     # refuse at normalization
     with pytest.raises(ValueError, match="non-string column"):
         nsw_read_topk(
@@ -2544,7 +2512,7 @@ def test_nsw_float32_clustered_prune_and_recluster(spark, tmp_path):
     assert [r["vec_id"] for r in got] == brute(lambda i: True)
     got_m = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6, prune=True,
-        prune_match=("label", 2),
+        prune_conj={"label": ("exact", 2)},
     ).collect()
     assert [r["vec_id"] for r in got_m] == brute(lambda i: rows[i][2] == 2)
 
@@ -2556,7 +2524,7 @@ def test_nsw_float32_clustered_prune_and_recluster(spark, tmp_path):
     )
     got2 = nsw_read_topk(
         spark, path, [(0, list(q))], 5, ef=10**6, prune=True,
-        prune_match=("label", 2),
+        prune_conj={"label": ("exact", 2)},
     ).collect()
     assert [r["vec_id"] for r in got2] == brute(lambda i: rows[i][2] == 2)
 

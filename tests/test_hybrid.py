@@ -416,7 +416,7 @@ def _batch_fns(df):
     idx = ivf_build(df, n_clusters=3, with_radii=True, stats_attrs=["label"])
 
     def exact_match(preds):
-        return {"match": ("label", preds["label"][1])} if preds else {}
+        return {"conj": {"label": ("exact", preds["label"][1])}} if preds else {}
 
     return [
         ("knn_batch",
@@ -443,7 +443,7 @@ def _batch_fns(df):
         ("ivf_exact",
          lambda qs, k: ivf_search_exact_batch(
              idx, [(q, v) for q, v, _ in qs], k,
-             match={q: ("label", p["label"][1]) for q, _, p in qs if p}),
+             conj={q: {"label": ("exact", p["label"][1])} for q, _, p in qs if p}),
          lambda v, p, k: ivf_search_exact(idx, v, k, **exact_match(p))),
     ]
 

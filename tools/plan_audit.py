@@ -196,7 +196,7 @@ AUDIT: dict[str, list[str]] = {
         "PartitionFilters", "_pass_2", "_pass_4", "_pass_8",
     ],
     # round 10: the routed rung builds the IDENTICAL plan as the direct
-    # prune_match call — rule-6 dispatch changes which plan is built,
+    # one-term exact prune_conj call — rule-6 dispatch changes which plan is built,
     # never the plan itself
     "routed_pruned_match_topk": [
         "FlatMapGroupsInPandas", "WindowGroupLimit",
@@ -217,7 +217,7 @@ AUDIT: dict[str, list[str]] = {
         "FlatMapGroupsInPandas", "WindowGroupLimit", "PartitionFilters",
     ],
     # round 10b: the routed range arm builds the identical plan as the
-    # direct prune_range call — kept-set partition filter + the range
+    # direct one-term range prune_conj call — kept-set partition filter + the range
     # riding the walk as the Catalyst _pass mask
     "routed_pruned_range_topk": [
         "FlatMapGroupsInPandas", "WindowGroupLimit",
@@ -891,7 +891,7 @@ def _acorn_gamma_section() -> None:
 
 def _nsw_prune_section() -> None:
     """Ball-bound shard pruning ladder (r9), regenerated from
-    BENCH_LADDER.json's nsw_prune block (tools/bench_nsw_prune.py)."""
+    BENCH_LADDER.json's nsw_prune block (a frozen r9 measurement)."""
     import json
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -952,7 +952,7 @@ def _nsw_prune_section() -> None:
         "way; at 100 TB the rows-walked column IS the bytes-read "
         "column, and 1.6% of the store read instead of 100% is the "
         "claim that matters. The MATCH columns are the r9b "
-        "predicate-aware form (prune_match over the exact per-shard "
+        "predicate-aware form (a one-term exact prune_conj over the exact per-shard "
         "label counts, matching ~1/64 of rows): passing-count τ + "
         "zero-passing skip prunes even where the BALL bounds are dead "
         "— at 16 fat shards plain pruning keeps ~93% of rows, the "
@@ -966,7 +966,8 @@ def _nsw_prune_section() -> None:
         "derives a clustered one. Guards keep the bound sound: "
         "arbitrary predicates/blocked sets, tombstones, and stale "
         "stats (ball OR attr-count sidecars) all refuse to prune "
-        "(test_prune_guards, test_prune_match_*).\n"
+        "(test_prune_guards and the zone-map pruning tests of "
+        "tests/test_graph_ann.py).\n"
     )
 
 
@@ -1030,7 +1031,7 @@ def _nsw_prune_dim_section() -> None:
         f"when the estimate exceeds "
         f"{sec['kept_fraction_cutoff']:.0%} and an IVF index exists "
         f"(plans/router.py; pinned by "
-        f"test_router_prune_match_rung_decision_matrix). Wall-time "
+        f"the rule-5/6 decision-matrix test in tests/test_ann.py). Wall-time "
         f"speedups at this toy scale sit on the local job floor "
         f"either way — rows-walked is the bytes-read story that "
         f"scales.\n"
